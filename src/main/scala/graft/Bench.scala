@@ -1,11 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.queries.Q
+import graft.zarr.SparkSessions
 
 /** Per-round benchmark: times every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Queries execute
   * end-to-end into the noop sink so sorts/limits aren't optimized
-  * away the way a bare count() would allow.
+  * away the way a bare count() would allow. After the suite it re-runs
+  * the slowest queries in fresh sessions and runs every [[Rehearsals]]
+  * entry, in registry order, reporting each under its bench key
+  * (`graft.Rehearse <bench-key>` runs one of them alone). Every
+  * session comes from [[graft.zarr.SparkSessions.local]] on
+  * `SPARK_GRAFT_CPUS` cores.
   *
   * Reporting hygiene: each query runs SPARK_GRAFT_BENCH_RUNS times
   * (default 3) and reports the per-query MEDIAN — this host shows
@@ -24,30 +31,51 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config(graft.zarr.SparkSessions.tunedLocalFs._1, graft.zarr.SparkSessions.tunedLocalFs._2)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+  /** Run `body` in a new session, then tear the context down fully
+    * (stop, clear the active and default session, full GC) so the next
+    * session starts from a clean JVM state.
+    */
+  private def withFreshSession[A](body: SparkSession => A): A = {
+    val s = SparkSessions.local(SparkSessions.cpus, "graft-bench")
+    try body(s)
+    finally {
+      s.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      System.gc()
+    }
   }
+
+  /** Median seconds of `runs` executions of `q` into the noop sink;
+    * -1 when every run fails.
+    */
+  private def timeQuery(spark: SparkSession, q: Q, sfDir: String, runs: Int, tag: String): Double =
+    median((1 to runs).flatMap { _ =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[$tag] ${q.name} failed: ${e.getMessage}")
+          false
+        }
+      val dt = (System.nanoTime() - t0) / 1e9
+      // drop per-query persisted state so runs don't pay for each
+      // other's cached blocks. catalog.clearCache() misses eager
+      // localCheckpoint blocks (they live on persisted RDDs, not in
+      // the cache manager) — without the RDD-level drop those
+      // accumulate across the suite and distort later queries'
+      // timings via memory pressure (t48 read 9× its isolated time
+      // in round 3). The result DataFrames are discarded, so
+      // freeing their checkpoint backing is safe here.
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+      if (ok) Some(dt) else None
+    })
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = newSession(cpus)
-
-    // warm the JVM + parquet footers once so timings measure the
-    // queries, not first-touch class loading
-    Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
 
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run for local iteration
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -59,33 +87,17 @@ object Bench {
       require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names not registered: ${unknown.mkString(", ")}")
     }
     val selected = only.fold(SparkEntry.all)(names => SparkEntry.all.filter(q => names(q.name)))
-    val results = selected.map { q =>
-      val times = (1 to runs).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
-            false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // drop per-query persisted state so runs don't pay for each
-        // other's cached blocks. catalog.clearCache() misses eager
-        // localCheckpoint blocks (they live on persisted RDDs, not in
-        // the cache manager) — without the RDD-level drop those
-        // accumulate across the suite and distort later queries'
-        // timings via memory pressure (t48 read 9× its isolated time
-        // in round 3). The result DataFrames are discarded, so
-        // freeing their checkpoint backing is safe here.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        if (ok) Some(dt) else None
+    val results = withFreshSession { spark =>
+      // warm the JVM + parquet footers once so timings measure the
+      // queries, not first-touch class loading
+      Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
+      selected.map { q =>
+        val t = timeQuery(spark, q, sfDir, runs, "bench")
+        // SPARK_GRAFT_BENCH_GC=1 adds a full GC between queries for
+        // maximum isolation (off by default: it costs ~0.1 s per query)
+        if (sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")) System.gc()
+        q.name -> t
       }
-      // SPARK_GRAFT_BENCH_GC=1 adds a full GC between queries for
-      // maximum isolation (off by default: it costs ~0.1 s per query)
-      if (sys.env.get("SPARK_GRAFT_BENCH_GC").contains("1")) System.gc()
-      q.name -> median(times)
     }
 
     // In-suite numbers can overstate a query's cost through
@@ -95,45 +107,22 @@ object Bench {
     // each (full context teardown between), so every round carries
     // like-with-like numbers next to the in-suite ones.
     val isolatedN = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED", "8").toInt
-    spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    val byName = selected.map(q => q.name -> q).toMap
     val isolated: Seq[(String, Double)] =
-      if (isolatedN <= 0) Seq.empty
-      else {
-        val slowest = results.filter(_._2 >= 0).sortBy(-_._2)
-          .take(isolatedN).map(_._1)
-        val byName = selected.map(q => q.name -> q).toMap
-        slowest.map { name =>
-          val q = byName(name)
-          val s = newSession(cpus)
+      results.filter(_._2 >= 0).sortBy(-_._2).take(isolatedN).map { case (name, _) =>
+        withFreshSession { s =>
           Tables.names.foreach(n => Tables.load(s, sfDir, n).count())
-          val times = (1 to runs).flatMap { _ =>
-            val t0 = System.nanoTime()
-            val ok =
-              try { q.run(s, sfDir).write.format("noop").mode("overwrite").save(); true }
-              catch { case e: Throwable =>
-                System.err.println(s"[bench-isolated] $name failed: ${e.getMessage}")
-                false
-              }
-            val dt = (System.nanoTime() - t0) / 1e9
-            s.catalog.clearCache()
-            s.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = false))
-            if (ok) Some(dt) else None
-          }
-          s.stop()
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-          System.gc()
-          name -> median(times)
+          name -> timeQuery(s, byName(name), sfDir, runs, "bench-isolated")
         }
       }
-    // High-variance rehearsal keys (s_ann1m's 12–104 s host envelope;
-    // the skew-dedup pair) repeat n=3 in FRESH sessions and report
-    // the in-run median, so the pinned window shrinks to something a
-    // regression can't hide inside. SPARK_GRAFT_BENCH_NVAR overrides
-    // (set 1 for quick iterations).
+
+    // The at-scale rehearsals (see Rehearsals), each in a FRESH
+    // session. High-variance keys repeat SPARK_GRAFT_BENCH_NVAR times
+    // (default 3; set 1 for quick iterations) and report the in-run
+    // median, so the pinned window shrinks to something a regression
+    // can't hide inside. All are skipped when SPARK_GRAFT_BENCH_ONLY
+    // filters the suite (that's a query A/B session, not a round
+    // report) or when their opt-out variable is 0.
     val nVar = sys.env.get("SPARK_GRAFT_BENCH_NVAR").map(_.toInt).getOrElse(3)
     // per-key success counts for the medianed rehearsals: a key whose
     // repeats PARTIALLY fail must not report its surviving run as a
@@ -147,280 +136,24 @@ object Bench {
     // window shows up as a contiguous time band across whichever keys
     // it hit, independent of source order.
     val keyT0 = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def stamp(key: String): Unit =
-      keyT0.getOrElseUpdate(key, System.currentTimeMillis() / 1000L)
-    def medianRehearsal(key: String, optOut: String, n: Int)(
-        body: SparkSession => Double): Double =
-      if (only.nonEmpty || sys.env.get(optOut).contains("0")) -1.0
+    val rehearsed: Seq[(String, Double)] = Rehearsals.all.flatMap { r =>
+      if (only.nonEmpty || sys.env.get(r.optOut).contains("0")) r.reportKeys.map(_ -> -1.0)
       else {
-        stamp(key)
-        val times = (1 to n).flatMap { _ =>
-          val s = newSession(cpus)
-          val t =
-            try Some(body(s))
+        keyT0(r.key) = System.currentTimeMillis() / 1000L
+        val done = (1 to (if (r.medianed) nVar else 1)).flatMap { _ =>
+          withFreshSession { s =>
+            try Some(r.run(s))
             catch { case e: Throwable =>
-              System.err.println(s"[bench] $key failed: ${e.getMessage}")
+              System.err.println(s"[bench] ${r.key} failed: ${e.getMessage}")
               None
             }
-          s.stop()
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-          System.gc()
-          t
-        }
-        nVarOk(key) = times.length
-        median(times)
-      }
-    // One-shot rehearsal in a fresh session (keys cheap/stable enough
-    // that n=3 would triple bench wall time for no attribution value).
-    def oneShot(key: String, optOut: String)(body: SparkSession => Double): Double =
-      if (only.nonEmpty || sys.env.get(optOut).contains("0")) -1.0
-      else {
-        stamp(key)
-        val s = newSession(cpus)
-        val t =
-          try body(s)
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $key failed: ${e.getMessage}")
-            -1.0
           }
-        s.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        t
-      }
-
-    // Imaging-at-scale rehearsal (one shot, not medianed — it runs
-    // ~20 s): 512³ distributed gen → 3-level cascade → sharded write →
-    // re-read → checksum parity, reported as its own key so rounds
-    // track pyramid wall time alongside query times. Opt out with
-    // SPARK_GRAFT_BENCH_PYRAMID=0 for quick local iterations; it is
-    // skipped automatically when SPARK_GRAFT_BENCH_ONLY filters the
-    // suite (that's a query A/B session, not a round report).
-    val pyramidSec: Double =
-      oneShot("i_pyramid512", "SPARK_GRAFT_BENCH_PYRAMID")(s =>
-        graft.operators.PyramidRehearsal.run(s))
-
-    // Gaussian-at-volume rehearsal (one shot): same 512³ cascade but
-    // through the halo-exchange gaussian path — the plan with a second
-    // chunk-aligned strip exchange per level — reported as its own key
-    // (`i_pyramid512_gauss`) so the heavy imaging plan has a tracked
-    // wall time, not just a 256² spec. Same opt-outs as the pyramid.
-    val pyramidGaussSec: Double =
-      oneShot("i_pyramid512_gauss", "SPARK_GRAFT_BENCH_PYRAMID")(s =>
-        graft.operators.PyramidRehearsal.run(s,
-          method = graft.meta.Model.Method.ItkwasmGaussian))
-
-    // Text-dedup-at-scale rehearsal (one shot): 200k synthetic docs
-    // with planted near-dups through the full MinHash→LSH→verify→CC→
-    // canonical cascade, recovery-checked against the plant. Its own
-    // key (`t_dedup200k`) so rounds track dedup-at-scale wall time;
-    // same opt-outs as the pyramid.
-    val dedupSec: Double =
-      oneShot("t_dedup200k", "SPARK_GRAFT_BENCH_DEDUP")(s =>
-        graft.ops.DedupRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_DEDUP_N").map(_.toLong).getOrElse(200000L)))
-
-    // Skewed dedup rehearsal (one shot): same 200k corpus plus a
-    // 3000-doc identical-boilerplate clique — sized past the AUTO
-    // hot-bucket threshold max(64, ⌈√(2·rows)⌉) ≈ 2550 at this scale —
-    // so the salted skew path arms AT REHEARSAL SCALE (asserted inside
-    // the run, along with exact clique recovery). Its own key
-    // (`t_dedup200k_skew`); same opt-outs as the uniform rehearsal.
-    // High-variance → n=3 in-run median.
-    val dedupSkewSec: Double =
-      medianRehearsal("t_dedup200k_skew", "SPARK_GRAFT_BENCH_DEDUP", nVar) { s =>
-        graft.ops.DedupRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_DEDUP_N").map(_.toLong).getOrElse(200000L),
-          boilerplate = sys.env.get("SPARK_GRAFT_BENCH_DEDUP_BOILER")
-            .map(_.toLong).getOrElse(3000L))
-      }
-
-    // Collapsed-pipeline twin of the skewed rehearsal (one shot):
-    // exact-collapse before LSH so the boilerplate clique never
-    // materializes its C(B,2) pairs — tracked as its own key so the
-    // direct-vs-collapsed ratio is a round-over-round number.
-    // High-variance → n=3 in-run median.
-    val dedupSkewCollapsedSec: Double =
-      medianRehearsal("t_dedup200k_skew_collapsed", "SPARK_GRAFT_BENCH_DEDUP", nVar) { s =>
-        graft.ops.DedupRehearsal.runCollapsed(s,
-          sys.env.get("SPARK_GRAFT_BENCH_DEDUP_N").map(_.toLong).getOrElse(200000L),
-          boilerplate = sys.env.get("SPARK_GRAFT_BENCH_DEDUP_BOILER")
-            .map(_.toLong).getOrElse(3000L))
-      }
-
-    // IO/shuffle-bound host CONTROL (n=3 median): fixed-size shuffle
-    // + parquet write/read of deterministic synthetic rows with an
-    // exact content check — the complement of the CPU-bound
-    // ccl/edt/bpe controls, which r11's final bench proved blind to
-    // an IO episode that hit every shuffle/spill-heavy key 2.2–4.3×.
-    // Placed here, in the heart of the IO-heavy rehearsal window
-    // (skew pair above, crawl below), so a hot band hits it too.
-    // Key `x_ioshuffle4m`; opt out with SPARK_GRAFT_BENCH_IOCTL=0.
-    val ioCtlSec: Double =
-      medianRehearsal("x_ioshuffle4m", "SPARK_GRAFT_BENCH_IOCTL", nVar) { s =>
-        graft.tools.IoControlRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_IOCTL_N").map(_.toLong).getOrElse(4000000L))
-      }
-
-    // Crawl-pipeline rehearsal: 200k pages written as 64
-    // per-record-gzip WARC archives by distributed tasks, then
-    // WARC scan → HTTP split → HTML extract → boilerplate line-dedup
-    // → exact dedup, every stage structurally asserted (byte-exact
-    // extraction, chrome-only line cuts, planted copies recovered).
-    // Its own key (`t_crawl200k`); opt out with SPARK_GRAFT_BENCH_CRAWL=0.
-    // Phase-split: the gzip fixture WRITE (19–44 s variance envelope,
-    // not the surface under test) and the read path report as
-    // `t_crawl200k_write` / `t_crawl200k_read` so read-path drift
-    // can't hide inside writer noise. n=3 in-run median per phase —
-    // r11's one-shot read-phase spike (22.7 s vs a 10 s pin) was
-    // unactionable without repeats.
-    val crawlPhases: Seq[(Double, Double)] =
-      if (only.nonEmpty || sys.env.get("SPARK_GRAFT_BENCH_CRAWL").contains("0")) Seq.empty
-      else {
-        stamp("t_crawl200k")
-        val runsDone = (1 to nVar).flatMap { _ =>
-          val s = newSession(cpus)
-          val t =
-            try Some(graft.sources.CrawlRehearsal.runPhases(s,
-              sys.env.get("SPARK_GRAFT_BENCH_CRAWL_N").map(_.toLong).getOrElse(200000L)))
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] t_crawl200k failed: ${e.getMessage}")
-              None
-            }
-          s.stop()
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-          System.gc()
-          t
         }
-        nVarOk("t_crawl200k") = runsDone.length
-        runsDone
+        if (r.medianed) nVarOk(r.key) = done.length
+        r.reportKeys.zip(median(done.map(_.sum)) +: r.phases.indices.map(i => median(done.map(_(i)))))
       }
-    val crawlWriteSec: Double =
-      if (crawlPhases.isEmpty) -1.0 else median(crawlPhases.map(_._1))
-    val crawlReadSec: Double =
-      if (crawlPhases.isEmpty) -1.0 else median(crawlPhases.map(_._2))
-    val crawlSec: Double =
-      if (crawlPhases.isEmpty) -1.0 else median(crawlPhases.map(p => p._1 + p._2))
-
-    // Image-dedup-at-scale rehearsal: 1M perceptual hashes through
-    // the collapsed dupClusters path — 100k planted 5-variant
-    // families recovered exactly, a 10k identical-hash clique that
-    // must collapse to ONE banded representative. Key `m_imgdedup1m`;
-    // opt out with SPARK_GRAFT_BENCH_IMGDEDUP=0. First-run-slow
-    // profile (13.2→28.9 s single samples across rounds) → joined the
-    // n=3 in-run median set alongside s_ann1m.
-    val imgDedupSec: Double =
-      medianRehearsal("m_imgdedup1m", "SPARK_GRAFT_BENCH_IMGDEDUP", nVar) { s =>
-        graft.ops.ImgDedupRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_IMGDEDUP_N").map(_.toLong).getOrElse(1000000L))
-      }
-
-    // Decontamination-at-scale rehearsal (one shot): 200k docs
-    // screened against a 1k benchmark — the ratio that ARMS the bloom
-    // semi-join plan (asserted), planted quotes recovered exactly by
-    // both the bag-of-grams screen and the overlap-run metric. Key
-    // `t_decon200k`; opt out with SPARK_GRAFT_BENCH_DECON=0.
-    val deconSec: Double =
-      oneShot("t_decon200k", "SPARK_GRAFT_BENCH_DECON")(s =>
-        graft.ops.DeconRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_DECON_N").map(_.toLong).getOrElse(200000L)))
-
-    // CCL-at-scale rehearsal (one shot): 4096² supercritical mask —
-    // one giant component through all 256 chunks — labeled
-    // distributed and fingerprint-checked EXACTLY against a
-    // single-node union-find over the same hash. Key `i_ccl16m`;
-    // opt out with SPARK_GRAFT_BENCH_CCL=0.
-    val cclSec: Double =
-      oneShot("i_ccl16m", "SPARK_GRAFT_BENCH_CCL")(s =>
-        graft.operators.CclRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_CCL_SIDE").map(_.toInt).getOrElse(4096)))
-
-    // EDT-at-scale rehearsal (one shot): 4096² hash mask through the
-    // banded two-exchange separable EDT, fingerprint-checked EXACTLY
-    // against a single-node run of the same kernels. Key `i_edt16m`;
-    // opt out with SPARK_GRAFT_BENCH_EDT=0.
-    val edtSec: Double =
-      oneShot("i_edt16m", "SPARK_GRAFT_BENCH_EDT")(s =>
-        graft.operators.EdtRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_EDT_SIDE").map(_.toInt).getOrElse(4096)))
-
-    // Hole-filling-at-scale rehearsal (one shot): the 4096² hash mask
-    // through complement-CCL fill, checked EXACTLY against a
-    // single-node border flood fill. Key `i_fill16m`; opt out with
-    // SPARK_GRAFT_BENCH_FILL=0.
-    val fillSec: Double =
-      oneShot("i_fill16m", "SPARK_GRAFT_BENCH_FILL")(s =>
-        graft.operators.FillRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_FILL_SIDE").map(_.toInt).getOrElse(4096)))
-
-    // k-core-at-scale rehearsal (one shot): 1M-vertex hash graph +
-    // planted 2000-node community peeled at k=12, checked EXACTLY
-    // against a single-node sequential peel. Key `g_kcore1m`; opt out
-    // with SPARK_GRAFT_BENCH_KCORE=0.
-    val kcoreSec: Double =
-      oneShot("g_kcore1m", "SPARK_GRAFT_BENCH_KCORE")(s =>
-        graft.ops.KcoreRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_KCORE_N").map(_.toLong).getOrElse(1000000L)))
-
-    // ANN-at-scale rehearsal (one shot): 1M clustered vectors through
-    // the IVF cascade, recall-checked against distributed brute force
-    // on the same queries — the embedding analogue of the pyramid and
-    // dedup rehearsals. Opt out with SPARK_GRAFT_BENCH_ANN=0; size
-    // with SPARK_GRAFT_BENCH_ANN_N. High-variance (12–104 s host
-    // envelope) → n=3 in-run median.
-    val annSec: Double =
-      medianRehearsal("s_ann1m", "SPARK_GRAFT_BENCH_ANN", nVar) { s =>
-        graft.ops.AnnRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_ANN_N").map(_.toLong).getOrElse(1000000L))
-      }
-
-    // BPE-training-at-scale rehearsal (one shot): 1000 merges over a
-    // 200k-doc Zipf-ish corpus through the capped-histogram driver
-    // trainer, head-pinned against the distributed spec trainer.
-    // Key `t_bpe200k`; opt out with SPARK_GRAFT_BENCH_BPE=0.
-    val bpeSec: Double =
-      oneShot("t_bpe200k", "SPARK_GRAFT_BENCH_BPE")(s =>
-        graft.ops.BpeRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_BPE_N").map(_.toLong).getOrElse(200000L),
-          sys.env.get("SPARK_GRAFT_BENCH_BPE_MERGES").map(_.toInt).getOrElse(1000)))
-
-    // HCS-at-scale rehearsal (one shot): 384 wells × 9 fields through
-    // the streaming foreachBatch merge-upsert under a planted arrival
-    // shuffle + cross-batch replays, structure-asserted (plate JSON
-    // equality, per-well image lists, pixel parity sample). Wall time
-    // is job-scheduling-bound (one write job per field) — the shape a
-    // real cluster overlaps with execution. Key `h_plate384`; opt out
-    // with SPARK_GRAFT_BENCH_HCS=0. IO-heavy and one-shot-spiky
-    // (r11: 62.2 s vs a 26.1 s pin, unactionable) → n=3 in-run median.
-    val hcsSec: Double =
-      medianRehearsal("h_plate384", "SPARK_GRAFT_BENCH_HCS", nVar) { s =>
-        graft.hcs.HcsRehearsal.run(s)
-      }
-
-    // Covariance-at-scale rehearsal (one shot): 1M vectors at d=256
-    // through the partition-local Gram accumulation + pcaWhiten —
-    // planted paired-dim correlations recovered at ±0.01, whitened
-    // output re-measured as identity. The regime the former
-    // explode-based plan could not finish. Key `s_cov1m`; opt out
-    // with SPARK_GRAFT_BENCH_COV=0.
-    val covSec: Double =
-      oneShot("s_cov1m", "SPARK_GRAFT_BENCH_COV")(s =>
-        graft.ops.CovRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_COV_N").map(_.toLong).getOrElse(1000000L),
-          sys.env.get("SPARK_GRAFT_BENCH_COV_DIM").map(_.toInt).getOrElse(256)))
-
-    // DICOM-ingest rehearsal (one shot): 256 slices x 256^2 int16
-    // cycling ALL SIX lossless transfer syntaxes, written by one
-    // distributed job and read back through the two-pass series
-    // design with an exact closed-form checksum — the pure-JVM codec
-    // fleet's decode throughput under task parallelism. Key
-    // `i_dicom256`; opt out with SPARK_GRAFT_BENCH_DICOM=0.
-    val dicomSec: Double =
-      oneShot("i_dicom256", "SPARK_GRAFT_BENCH_DICOM")(s =>
-        graft.operators.DicomRehearsal.run(s,
-          sys.env.get("SPARK_GRAFT_BENCH_DICOM_N").map(_.toInt).getOrElse(256)))
+    }
+    val rehearsalSec = rehearsed.toMap
 
     // millisecond precision keeps the line short: wrappers that
     // tail-capture stdout (the driver keeps only the last few KB)
@@ -459,14 +192,16 @@ object Bench {
     // class means the HOST ran hot — the spike attributes to
     // disposition, not to a plan regression, without a separate
     // standalone controls session.
-    val controlPins = Seq(("i_ccl16m", 4.6, cclSec), ("i_edt16m", 2.3, edtSec),
-      ("t_bpe200k", 4.4, bpeSec))
-    val controlRatios = controlPins.collect { case (k, pin, v) if v > 0 => (k, v / pin) }
+    val controlPins = Seq(("i_ccl16m", 4.6), ("i_edt16m", 2.3), ("t_bpe200k", 4.4))
+    val controlRatios = controlPins.collect {
+      case (k, pin) if rehearsalSec(k) > 0 => (k, rehearsalSec(k) / pin)
+    }
     // IO control pin: r12 in-bench n=3 medians read 1.31 (mid-round)
     // and 1.48 (healthy-host final) — pin the midpoint; the ~6.6 s
     // standalone reading is cold-JVM context, never comparable to
     // the bench-tail ratio this certifies (see BENCH_BASELINE.md)
     val ioCtlPin = 1.4
+    val ioCtlSec = rehearsalSec("x_ioshuffle4m")
     val ioRatio = if (ioCtlSec > 0) ioCtlSec / ioCtlPin else -1.0
     val hostControlsJson =
       (controlRatios ++ (if (ioRatio > 0) Seq(("x_ioshuffle4m", ioRatio)) else Nil))
@@ -475,12 +210,13 @@ object Bench {
     val hostDisposition =
       if (controlRatios.isEmpty) -1.0
       else math.exp(controlRatios.map { case (_, r) => math.log(r) }.sum / controlRatios.size)
+    val rehearsalJson = rehearsed.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString(",")
     val keyT0Json = keyT0.map { case (k, t) => "\"" + k + "\":" + t }
       .mkString("{", ",", "}")
     val hostJson =
       s""""host_controls":$hostControlsJson,"host_disposition":${fmt(hostDisposition)},"host_disposition_io":${fmt(ioRatio)},"rehearsal_t0":$keyT0Json"""
     val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","headline_sec":${fmt(headlineTotal)},"runs_per_query":$runs,"stat":"median","failed":$failedJson,"isolated":$isoJson,"i_pyramid512":${fmt(pyramidSec)},"i_pyramid512_gauss":${fmt(pyramidGaussSec)},"t_dedup200k":${fmt(dedupSec)},"t_dedup200k_skew":${fmt(dedupSkewSec)},"t_dedup200k_skew_collapsed":${fmt(dedupSkewCollapsedSec)},"t_crawl200k":${fmt(crawlSec)},"t_crawl200k_write":${fmt(crawlWriteSec)},"t_crawl200k_read":${fmt(crawlReadSec)},"t_decon200k":${fmt(deconSec)},"m_imgdedup1m":${fmt(imgDedupSec)},"s_ann1m":${fmt(annSec)},"i_ccl16m":${fmt(cclSec)},"i_edt16m":${fmt(edtSec)},"i_fill16m":${fmt(fillSec)},"g_kcore1m":${fmt(kcoreSec)},"t_bpe200k":${fmt(bpeSec)},"h_plate384":${fmt(hcsSec)},"s_cov1m":${fmt(covSec)},"i_dicom256":${fmt(dicomSec)},"x_ioshuffle4m":${fmt(ioCtlSec)},"n_var_runs":$nVar,"n_var_ok":$nVarOkJson,$hostJson,"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","headline_sec":${fmt(headlineTotal)},"runs_per_query":$runs,"stat":"median","failed":$failedJson,"isolated":$isoJson,$rehearsalJson,"n_var_runs":$nVar,"n_var_ok":$nVarOkJson,$hostJson,"queries":$qs,"sf":"$sfDir"}"""
     println(json)
     // The driver records only the LAST ~2000 chars of stdout; the full
     // 96-query line above overflows that window (r5's BENCH json was
@@ -492,7 +228,7 @@ object Bench {
     val slowJson = slowest.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val compact =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","headline_sec":${fmt(headlineTotal)},"runs_per_query":$runs,"stat":"median","n_queries":${results.size},"failed":$failedJson,"isolated":$isoJson,"i_pyramid512":${fmt(pyramidSec)},"i_pyramid512_gauss":${fmt(pyramidGaussSec)},"t_dedup200k":${fmt(dedupSec)},"t_dedup200k_skew":${fmt(dedupSkewSec)},"t_dedup200k_skew_collapsed":${fmt(dedupSkewCollapsedSec)},"t_crawl200k":${fmt(crawlSec)},"t_crawl200k_write":${fmt(crawlWriteSec)},"t_crawl200k_read":${fmt(crawlReadSec)},"t_decon200k":${fmt(deconSec)},"m_imgdedup1m":${fmt(imgDedupSec)},"s_ann1m":${fmt(annSec)},"i_ccl16m":${fmt(cclSec)},"i_edt16m":${fmt(edtSec)},"i_fill16m":${fmt(fillSec)},"g_kcore1m":${fmt(kcoreSec)},"t_bpe200k":${fmt(bpeSec)},"h_plate384":${fmt(hcsSec)},"s_cov1m":${fmt(covSec)},"i_dicom256":${fmt(dicomSec)},"x_ioshuffle4m":${fmt(ioCtlSec)},"n_var_runs":$nVar,"n_var_ok":$nVarOkJson,$hostJson,"slowest":$slowJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","headline_sec":${fmt(headlineTotal)},"runs_per_query":$runs,"stat":"median","n_queries":${results.size},"failed":$failedJson,"isolated":$isoJson,$rehearsalJson,"n_var_runs":$nVar,"n_var_ok":$nVarOkJson,$hostJson,"slowest":$slowJson,"sf":"$sfDir"}"""
     println(compact)
     // The driver's stdout tail keeps ~2000 chars, so the full
     // per-query line above never reaches its comparator (PERF r11/r12

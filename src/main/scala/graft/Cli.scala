@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.meta.Model._
 import graft.meta.Converters
 import graft.operators.{ChunkOps, MultiscaleBuilder, OmeZarrIO}
+import graft.zarr.SparkSessions
 
 /** S14 — the conversion pipeline driver app (the reference's CLI,
   * `py/ngff_zarr/cli.py:164-450`, re-expressed as a spark-submit
@@ -47,15 +48,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Cli <input> <output> [--method=..] [--version=..]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-cli")
-      .config(graft.zarr.SparkSessions.tunedLocalFs._1, graft.zarr.SparkSessions.tunedLocalFs._2)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkSessions.local(SparkSessions.cpus, "graft-cli")
     try run(spark, args)
     finally spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.zarr.SparkSessions
 
 /** Dump `explain("formatted")` for a set of gate queries — the
   * regenerator for PLANS.md. Usage:
@@ -26,14 +26,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultSet
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-plans")
-      .config(graft.zarr.SparkSessions.tunedLocalFs._1, graft.zarr.SparkSessions.tunedLocalFs._2)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 8 cores pinned: PLANS.md's shuffle partition counts stay put
+    val spark = SparkSessions.local(8, "graft-plans")
     spark.sparkContext.setLogLevel("ERROR")
     val byName = SparkEntry.all.map(q => q.name -> q).toMap
     names.foreach { n =>

@@ -1,63 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.zarr.SparkSessions
 
-/** Standalone runner for the at-scale rehearsals — the same code
-  * paths [[Bench]] reports per round (`i_pyramid512`,
-  * `i_pyramid512_gauss`, `t_dedup200k`, `t_dedup200k_skew`), invocable
-  * one at a time for local iteration without paying for the full
-  * query suite:
+/** Standalone runner for one at-scale rehearsal, by its [[Bench]] key:
+  * the same [[Rehearsals]] entry, sizes and session config the bench
+  * runs, in a fresh JVM with no query suite ahead of it, so a
+  * tail-context reading can be told apart from a plan regression.
   *
-  *   runMain graft.Rehearse pyramid_gauss [edge] [chunk]
-  *   runMain graft.Rehearse dedup_skew [nDocs] [boilerplate]
+  *   runMain graft.Rehearse <bench-key>     (e.g. i_ccl16m, t_dedup200k_skew)
   *
-  * Prints one `{"rehearsal":name,"sec":t}` JSON line; a failed
-  * invariant (checksum, recall, arming) throws and exits non-zero.
+  * Sizes follow the bench's `SPARK_GRAFT_BENCH_*` overrides and cores
+  * follow `SPARK_GRAFT_CPUS`. Prints one `{"rehearsal":key,"sec":t}`
+  * JSON line (a phased key prints the phase sum); a failed invariant
+  * (checksum, recall, arming) throws and exits non-zero.
   */
 object Rehearse {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty,
-      "usage: Rehearse pyramid|pyramid_gauss|dedup|dedup_skew [size] [chunk|boilerplate]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-rehearse")
-      .config(graft.zarr.SparkSessions.tunedLocalFs._1, graft.zarr.SparkSessions.tunedLocalFs._2)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.meta.Model.Method
-    val sec = args(0) match {
-      case "pyramid" =>
-        operators.PyramidRehearsal.run(spark,
-          args.lift(1).map(_.toInt).getOrElse(512),
-          args.lift(2).map(_.toInt).getOrElse(128))
-      case "pyramid_gauss" =>
-        operators.PyramidRehearsal.run(spark,
-          args.lift(1).map(_.toInt).getOrElse(512),
-          args.lift(2).map(_.toInt).getOrElse(128),
-          method = Method.ItkwasmGaussian)
-      case "dedup" =>
-        ops.DedupRehearsal.run(spark,
-          args.lift(1).map(_.toLong).getOrElse(200000L))
-      case "dedup_skew" =>
-        ops.DedupRehearsal.run(spark,
-          args.lift(1).map(_.toLong).getOrElse(200000L),
-          boilerplate = args.lift(2).map(_.toLong).getOrElse(3000L))
-      case "crawl" =>
-        sources.CrawlRehearsal.run(spark,
-          args.lift(1).map(_.toLong).getOrElse(200000L),
-          args.lift(2).map(_.toInt).getOrElse(64))
-      case "imgdedup" =>
-        ops.ImgDedupRehearsal.run(spark,
-          args.lift(1).map(_.toLong).getOrElse(1000000L),
-          args.lift(2).map(_.toLong).getOrElse(10000L))
-      case other => throw new IllegalArgumentException(s"unknown rehearsal: $other")
-    }
-    println(s"""{"rehearsal":"${args(0)}","sec":${BigDecimal(sec)
+    require(args.length == 1, s"usage: Rehearse <${Rehearsals.keys.mkString("|")}>")
+    val rehearsal = Rehearsals(args(0))
+    val spark = SparkSessions.local(SparkSessions.cpus, "graft-rehearse")
+    val sec = try rehearsal.run(spark).sum finally spark.stop()
+    println(s"""{"rehearsal":"${rehearsal.key}","sec":${BigDecimal(sec)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP)}}""")
-    spark.stop()
   }
 }

@@ -34,16 +34,6 @@ object HcsRehearsal {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val t0 = System.nanoTime()
-    var tLast = t0
-    // stage timing gated behind the same env check as the per-task
-    // timing in Streams — silent in gate runs, opt-in when profiling
-    val timing = sys.env.contains("GRAFT_HCS_TIMING")
-    def stage(name: String): Unit = {
-      val now = System.nanoTime()
-      if (timing)
-        System.err.println(f"[hcs-rehearsal] $name: ${(now - tLast) / 1e9}%.1f s")
-      tLast = now
-    }
 
     val rowNames = (0 until nRows).map(r => ('A' + r).toChar.toString)
     val colNames = (1 to nCols).map(_.toString)
@@ -82,7 +72,6 @@ object HcsRehearsal {
     mem.addData(shuffled.take(perBatch / 2).map(arriving))
     q.processAllAvailable()
     q.stop()
-    stage("ingest")
 
     // --- structural verification against the plant
     val back = Hcs.fromHcsZarr(dir)
@@ -99,10 +88,8 @@ object HcsRehearsal {
       require(well.images.forall(_.acquisition.contains(0)),
         s"well ${wi.path} lost acquisition ids in the merge")
     }
-    stage("verify-wells")
     require(back.imagesDf(spark).count() == wells.size.toLong * nFields,
       "plate image catalog count drifted from wells x fields")
-    stage("verify-catalog")
     // pixel parity on a deterministic sample, through the full read path
     Seq(0, wells.size / 3, wells.size - 1).foreach { w =>
       val f = w % nFields
@@ -112,7 +99,6 @@ object HcsRehearsal {
       require(got == fieldValues(w, f, side).toSeq,
         s"pixel drift in well ${wells(w).path} field $f")
     }
-    stage("verify-pixels")
     (System.nanoTime() - t0) / 1e9
   }
 }

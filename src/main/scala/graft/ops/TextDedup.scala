@@ -1157,17 +1157,19 @@ object TextDedup {
     // sorted kept-index rebuild); a doc with EVERY line boilerplate
     // filters to an empty array → n_kept 0, clean_text "" (the old
     // missing-keptIdx-row case), and a doc with NO boilerplate line
-    // has no dropped row → the null guard keeps every line.
+    // has no dropped row → the null guard keeps every line. A null
+    // text keeps nothing: n_kept 0, clean_text "".
     val droppedIdx = lines.join(boiler, Seq("lh"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("line_idx"))).as("dropped"))
     docs.select(col(idCol).as("doc_id"), split(col(textCol), "\n").as("ls"))
       .join(droppedIdx, Seq("doc_id"), "left")
       .select(col("doc_id"), size(col("ls")).cast("long").as("n_lines"),
-        (size(col("ls")) - coalesce(size(col("dropped")), lit(0)))
-          .cast("long").as("n_kept"),
-        array_join(filter(col("ls"), (_, i) =>
-          coalesce(!array_contains(col("dropped"), i), lit(true))), "\n")
+        when(col("ls").isNull, lit(0L)).otherwise(
+          (size(col("ls")) - coalesce(size(col("dropped")), lit(0))).cast("long"))
+          .as("n_kept"),
+        coalesce(array_join(filter(col("ls"), (_, i) =>
+          coalesce(!array_contains(col("dropped"), i), lit(true))), "\n"), lit(""))
           .as("clean_text"))
   }
 

@@ -775,22 +775,13 @@ object Streams {
         // batch either way.
         val hconf = Some(graft.zarr.SerializableHadoopConf.fromActiveSession())
         val pp = platePath
-        val taskTiming = sys.env.contains("GRAFT_HCS_TIMING")
-        val tJob = System.nanoTime()
         val descriptors = uniq.mapPartitions { (it: Iterator[ArrivingField]) =>
           val st = new graft.zarr.ZarrStore(pp, hconf)
-          var nF = 0
-          var tMetaT = 0L
-          var tChunkT = 0L
-          val tTask0 = System.nanoTime()
-          val out = scala.collection.mutable.ArrayBuffer.empty[FieldDescriptor]
-          it.foreach { f =>
+          it.map { f =>
             val meta = f.descriptor.meta
-            val t0 = System.nanoTime()
             graft.operators.OmeZarrIO.writeSingleLevelMetaV2(
               new graft.zarr.ZarrStore(s"$pp/${f.wellPath}/${f.imagePath}", hconf),
               meta, Method.ItkwasmBinShrink)
-            val t1 = System.nanoTime()
             val arrayPath = s"${f.wellPath}/${f.imagePath}/scale0/image"
             ChunkOps.decompose(f.values, meta).foreach { c =>
               val key = graft.zarr.ZarrStore.chunkKey(2, arrayPath, c.chunkIdx)
@@ -798,14 +789,8 @@ object Streams {
                 graft.operators.OmeZarrIO.padToFull(c, meta.chunks, meta.dtype),
                 typesize = graft.meta.Dtypes.itemSize(meta.dtype)))
             }
-            val t2 = System.nanoTime()
-            nF += 1; tMetaT += t1 - t0; tChunkT += t2 - t1
-            out += f.descriptor
+            f.descriptor
           }
-          if (taskTiming && nF > 0) System.err.println(
-            f"[hcs-task] fields=$nF meta=${tMetaT / 1e9}%.2fs chunks=${tChunkT / 1e9}%.2fs " +
-              f"wall=${(System.nanoTime() - tTask0) / 1e9}%.2fs")
-          out.iterator
         }.collect() // pixel-free descriptors only — metadata-scale
         if (descriptors.nonEmpty) {
           // driver metadata pass: row/well group docs + well-attrs
@@ -813,9 +798,6 @@ object Streams {
           // not atomic under concurrency on all stores)
           Hcs.upsertWellsMeta(platePath,
             descriptors.toSeq.map(d => (d.wellPath, d.imagePath, d.acquisition)))
-          if (taskTiming) System.err.println(
-            f"[hcs] n=${descriptors.length} " +
-              f"job+meta=${(System.nanoTime() - tJob) / 1e9}%.2fs")
         }
       }
       .start()

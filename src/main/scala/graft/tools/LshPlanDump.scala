@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.zarr.SparkSessions
 
 /** Dump the REAL pre-checkpoint plan of the salted hot-bucket LSH
   * candidate pipeline (plan-diff evidence for the skew-path work: the
@@ -14,14 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object LshPlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-lsh-plan-dump")
-      .config(graft.zarr.SparkSessions.tunedLocalFs._1,
-        graft.zarr.SparkSessions.tunedLocalFs._2)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkSessions.local(8, "graft-lsh-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val boiler = "the quick brown fox jumps over the lazy dog again and again"

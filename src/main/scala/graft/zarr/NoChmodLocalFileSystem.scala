@@ -8,25 +8,29 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Without libhadoop (`NativeIO` unavailable — the common case in
   * containers and minimal images), `RawLocalFileSystem.setPermission`
   * shells out to `/bin/chmod` — one process fork per created file and
-  * per created directory. Measured here (graft.tools.StoreProbe):
-  * 16.4 ms per small-object write through the stock local FS vs
-  * 0.36 ms with the chmod skipped — a 45× tax on every metadata doc,
-  * zarr chunk, WARC archive, checkpoint and commit file the engine
-  * writes locally.
+  * per created directory. Measured without libhadoop: 16.4 ms per
+  * small-object write through the stock local FS vs 0.36 ms with the
+  * chmod skipped — a 45× tax on every metadata doc, zarr chunk, WARC
+  * archive, checkpoint and commit file the engine writes locally. The
+  * benchmark's traced run tracks the per-object cost as
+  * `zarr.put_ms_p50`.
   *
   * The skip is scoped to the REDUNDANT case (r13, per ADVICE): a
   * `setPermission` whose requested mode equals the umask-applied
-  * default for a fresh file (666 & ~umask) or directory (777 & ~umask)
-  * is a no-op by construction — the OS already created the inode with
+  * default for the path's type — a fresh file's (666 & ~umask) on a
+  * file, a fresh directory's (777 & ~umask) on a directory — is a
+  * no-op by construction — the OS already created the inode with
   * exactly those bits, and Hadoop's create/mkdirs paths apply the
   * umask to the default permission BEFORE calling setPermission, so
   * the entire per-create chmod storm matches this test under ANY
   * process umask. Every other request (an explicit 700 on a private
   * dir, a caller chmodding an existing file) delegates to the stock
-  * fork — explicit permissions stay effective. The one residual
-  * divergence from stock Hadoop: explicitly chmodding a PRE-EXISTING
-  * file to exactly the fresh-create default mode is skipped; nothing
-  * in the engine (or Spark's local write paths) does that.
+  * fork — explicit permissions stay effective, including a file set
+  * to the directory default (755 under umask 022) or a directory set
+  * to the file default. The one residual divergence from stock Hadoop:
+  * explicitly chmodding a PRE-EXISTING file or directory to exactly
+  * the fresh-create default of its own type is skipped; nothing in the
+  * engine (or Spark's local write paths) does that.
   *
   * Registered per session via `spark.hadoop.fs.file.impl` (see
   * [[SparkSessions.tunedLocalFs]]); remote schemes (`s3a`, `mockfs`,
@@ -44,21 +48,10 @@ final class NoChmodRawLocalFileSystem extends RawLocalFileSystem {
   }
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     val (fileDefault, dirDefault) = defaults
-    if (permission != fileDefault && permission != dirDefault)
-      super.setPermission(p, permission)
+    val typeDefault = if (pathToFile(p).isDirectory) dirDefault else fileDefault
+    if (permission != typeDefault) super.setPermission(p, permission)
   }
 }
 
 final class NoChmodLocalFileSystem
     extends LocalFileSystem(new NoChmodRawLocalFileSystem)
-
-object SparkSessions {
-  /** Hadoop-side key/value: route the `file` scheme through
-    * [[NoChmodLocalFileSystem]].
-    */
-  val localFsKey: String = "fs.file.impl"
-  val localFsImpl: String = classOf[NoChmodLocalFileSystem].getName
-
-  /** (key, value) for Spark session builders (spark.hadoop. prefix). */
-  val tunedLocalFs: (String, String) = (s"spark.hadoop.$localFsKey", localFsImpl)
-}

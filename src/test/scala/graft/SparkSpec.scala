@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs: one SparkSession per suite. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config(graft.zarr.SparkSessions.tunedLocalFs._1, graft.zarr.SparkSessions.tunedLocalFs._2)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.zarr.SparkSessions.local(4, "graft-test")
 
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -36,18 +36,4 @@ class FunctionsSpec extends SparkSpec {
     assert(df.queryExecution.executedPlan.toString.contains("cosine_similarity") ||
       df.head.getDouble(0) == 1.0)
   }
-
-  test("weighted mode aggregator: argmax with smallest-label ties") {
-    import spark.implicits._
-    val ds = Seq(
-      (1L, 5.0, 1.0), (1L, 5.0, 1.0), (1L, 3.0, 1.5),
-      (2L, 7.0, 1.0), (2L, 2.0, 1.0) // tie by weight → smallest label 2.0
-    ).toDF("g", "label", "w").as[(Long, Double, Double)]
-    val got = ds.groupByKey(_._1)
-      .mapValues(t => (t._2, t._3))
-      .agg(WeightedModeAgg.toColumn.name("mode"))
-      .collect().toMap
-    assert(got(1L) == 5.0) // weight 2.0 beats 1.5
-    assert(got(2L) == 2.0) // tie → smallest
-  }
 }

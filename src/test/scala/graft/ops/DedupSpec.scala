@@ -399,6 +399,20 @@ class DedupSpec extends SparkSpec {
     assert(out(4L).getAs[String]("clean_text") == "standalone line")
   }
 
+  test("lineDedup null text keeps nothing: n_kept 0, clean_text empty") {
+    import spark.implicits._
+    val df = Seq[(Long, String)](
+      (1L, "COOKIE BANNER\nbody one"),
+      (2L, "COOKIE BANNER\nbody two"),
+      (3L, null)).toDF("doc_id", "text")
+    val out = TextDedup.lineDedup(df, minDocs = 2).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r).toMap
+    // boxed read: a null n_kept must not unbox to a passing 0
+    assert(out(3L).getAs[java.lang.Long]("n_kept") == 0L)
+    assert(out(3L).getAs[String]("clean_text") == "")
+    assert(out(1L).getAs[String]("clean_text") == "body one")
+  }
+
   test("lineDedup within-doc repeats do not arm the corpus threshold") {
     import spark.implicits._
     // "SAME" appears 3 times but only in one distinct document

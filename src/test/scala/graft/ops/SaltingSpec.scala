@@ -1,39 +1,15 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 class SaltingSpec extends SparkSpec {
 
-  test("salted join equals plain join on skewed data") {
-    val li = Tables.load(spark, sfDir, "lineitem") // l_suppkey is low-cardinality → skew-ish
-    val sup = Tables.load(spark, sfDir, "supplier")
-      .select(col("s_suppkey").as("l_suppkey"), col("s_name"))
-    val plain = li.join(sup, "l_suppkey")
-      .groupBy(col("s_name")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Salting.saltedJoin(li, sup, "l_suppkey", buckets = 4,
-        leftSaltBy = Seq("l_orderkey", "l_linenumber"))
-      .groupBy(col("s_name")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
-  test("salted two-phase count equals direct count") {
-    val li = Tables.load(spark, sfDir, "lineitem")
-    val direct = li.groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Salting.saltedCount(li, "l_returnflag", buckets = 8,
-        saltBy = Seq("l_orderkey"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == direct)
-  }
-
   test("AQE splits a skewed sort-merge join at runtime (the no-code skew path)") {
     import spark.implicits._
-    // the complementary skew strategy to manual salting: AQE detects
-    // the oversized post-shuffle partition and splits it — this test
-    // pins that the engine's conf surface actually triggers it
+    // the no-code skew strategy: AQE detects the oversized
+    // post-shuffle partition and splits it — this test pins that the
+    // engine's conf surface actually triggers it
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.adaptive.enabled",

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the pinned per-gate shuffle-budget table for
   * `PlanInvariantsSpec`. Run with
   * `sbt "Test/runMain graft.queries.ShuffleBudgetGen"` and paste the
@@ -12,15 +10,8 @@ import org.apache.spark.sql.SparkSession
   */
 object ShuffleBudgetGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-shuffle-budget-gen")
-      .config(graft.zarr.SparkSessions.tunedLocalFs._1, graft.zarr.SparkSessions.tunedLocalFs._2)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+    val spark = graft.zarr.SparkSessions.local(4, "graft-shuffle-budget-gen")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     graft.SparkEntry.all.sortBy(_.name).foreach { q =>
       val n = PlanInvariantsSpec.countShuffles(q.run(spark, sfDir))

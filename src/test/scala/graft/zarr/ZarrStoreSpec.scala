@@ -164,6 +164,20 @@ class ZarrStoreSpec extends AnyFunSuite {
     val d1 = new Path(s"$dir/privdir")
     fs.mkdirs(d1, new FsPermission("700"))
     assert(fs.getFileStatus(d1).getPermission == new FsPermission("700"))
+    // the skip compares against the default for the path's TYPE: a
+    // file set to the directory default (755 under umask 022) and a
+    // directory set to the file default are real changes and land
+    val fileDefault = FsPermission.getFileDefault.applyUMask(umask)
+    val dirDefault = FsPermission.getDirDefault.applyUMask(umask)
+    val f3 = new Path(s"$dir/dirmode.bin")
+    val out3 = fs.create(f3, true)
+    out3.write(1); out3.close()
+    fs.setPermission(f3, dirDefault)
+    assert(fs.getFileStatus(f3).getPermission == dirDefault)
+    val d2 = new Path(s"$dir/filemodedir")
+    fs.mkdirs(d2)
+    fs.setPermission(d2, fileDefault)
+    assert(fs.getFileStatus(d2).getPermission == fileDefault)
   }
 
   test("complex dtype decode/encode round-trips interleaved (re, im)") {
