@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import graft.meta.Model._
-import graft.meta.{Dtypes, Validation, ZarrJson}
-import graft.zarr.{Codecs, SerializableHadoopConf, ZarrStore}
+import graft.meta.Validation
+import graft.zarr.{SerializableHadoopConf, Sharding, ZarrArray, ZarrStore}
 import ChunkOps.ChunkRow
 
 /** OME-Zarr store read/write over the chunk table (SURVEY S1/S4):
@@ -14,11 +15,10 @@ import ChunkOps.ChunkRow
   * array docs, root attrs, consolidated metadata (S8). No pixel data
   * ever moves through the driver.
   *
-  * Read: the driver parses metadata only; chunk keys are listed
-  * combinatorially from the grid and fetched lazily by executors
-  * (`spark.range(nChunks).mapPartitions` — the PartitionReader half).
-  * `graft.sources.OmeZarrTableProvider` exposes the same path as
-  * `spark.read.format("omezarr")` with chunk-pruning pushdown.
+  * Read: the driver parses metadata only ([[ZarrArray.openPyramid]]);
+  * each level is the `spark.read.format("omezarr")` scan of its scale
+  * (`graft.sources.OmeZarrTableProvider`), one partition per stored
+  * chunk or shard object, fetched and decoded lazily by executors.
   */
 object OmeZarrIO {
 
@@ -28,8 +28,9 @@ object OmeZarrIO {
     * `chunkStore`: separate storage for chunk/shard objects — metadata
     * documents stay in `path` (reference `to_ngff_zarr.py:982-1035`
     * `chunk_store` parity; cache/tiering setups put bulk pixels on a
-    * different tier than the tiny hot metadata docs). Readers pass the
-    * same pair to [[readMultiscales]].
+    * different tier than the tiny hot metadata docs). The reader takes
+    * one store, as the reference's does: serve the pair as one (merge
+    * the trees, or layer them) to read it back.
     *
     * `enabledRfcs`: RFC 4 anatomical-orientation metadata is STRIPPED
     * from the written axes unless 4 is enabled — the reference's
@@ -50,122 +51,37 @@ object OmeZarrIO {
       store.delete("")
       if (chunkStore.isDefined) new ZarrStore(chunkPath, hconf).delete("")
     }
-    val zarrFormat = if (version == "0.5") 3 else 2
     val metaFull = ms.metadata(name, version)
     val meta =
       if (enabledRfcs.contains(4)) metaFull
       else metaFull.copy(axes = metaFull.axes.map(_.copy(orientation = None)))
 
-    // driver: root group + attrs
-    if (zarrFormat == 3) {
-      store.writeString("zarr.json", ZarrJson.groupDoc(3,
-        Some(ZarrJson.mapper.readTree(ZarrJson.rootAttrs(meta)))))
-    } else {
-      store.writeString(".zgroup", ZarrJson.groupDoc(2))
-      store.writeString(".zattrs", ZarrJson.rootAttrs(meta))
-    }
-
-    val counts = ms.levels.zipWithIndex.map { case (lvl, i) =>
-      val arrayPath = s"scale$i/$name"
-      // per-scale parent group + array metadata (driver)
-      if (zarrFormat == 3 && chunksPerShard.isDefined) {
-        val cps = chunksPerShard.get
-        val shardShape = lvl.meta.chunks.zip(cps).map { case (c, n) => c * n }
-        store.writeString(s"scale$i/zarr.json", ZarrJson.groupDoc(3))
-        store.writeString(s"$arrayPath/zarr.json", ZarrJson.zarrayV3Sharded(
-          lvl.meta.shape, shardShape, lvl.meta.chunks, lvl.meta.dtype,
-          compressor, lvl.meta.dims))
-        writeSharded(spark, chunkPath, arrayPath, lvl, cps, compressor, hconf)
-      } else {
-        if (zarrFormat == 3) {
-          store.writeString(s"scale$i/zarr.json", ZarrJson.groupDoc(3))
-          store.writeString(s"$arrayPath/zarr.json", ZarrJson.zarrayV3(
-            lvl.meta.shape, lvl.meta.chunks, lvl.meta.dtype, compressor, lvl.meta.dims))
-        } else {
-          store.writeString(s"scale$i/.zgroup", ZarrJson.groupDoc(2))
-          store.writeString(s"$arrayPath/.zarray", ZarrJson.zarrayV2(
-            lvl.meta.shape, lvl.meta.chunks, lvl.meta.dtype, compressor))
-          // xarray-compatible dimension labels (`to_ngff_zarr.py:1079-1081`)
-          store.writeString(s"$arrayPath/.zattrs",
-            s"""{"_ARRAY_DIMENSIONS": [${lvl.meta.dims.map(d => "\"" + d + "\"").mkString(", ")}]}""")
-        }
-        // executors: one object per chunk; count rides an accumulator
-        // so the (possibly uncached) pipeline executes exactly once
-        val comp = compressor
-        val zf = zarrFormat
-        val fullChunks = lvl.meta.chunks
-        val dtype = lvl.meta.dtype
-        val acc = spark.sparkContext.longAccumulator(s"chunks:$arrayPath")
-        val cp = chunkPath
-        lvl.chunks.foreachPartition { (it: Iterator[ChunkRow]) =>
-          val st = new ZarrStore(cp, hconf)
-          it.foreach { c =>
-            val key = ZarrStore.chunkKey(zf, arrayPath, c.chunkIdx)
-            st.writeBytes(key, Codecs.compress(comp, padToFull(c, fullChunks, dtype),
-              typesize = Dtypes.itemSize(dtype)))
-            acc.add(1)
+    // executors: chunk or shard objects; counts ride an accumulator so
+    // the (possibly uncached) pipeline executes exactly once
+    val zf = if (version == "0.5") 3 else 2
+    val counts = meta.datasets.zip(ms.levels).map { case (d, lvl) =>
+      val arrayPath = d.path
+      chunksPerShard match {
+        case Some(cps) => writeSharded(spark, chunkPath, arrayPath, lvl, cps, compressor, hconf)
+        case None =>
+          val (fullChunks, dtype, comp) = (lvl.meta.chunks, lvl.meta.dtype, compressor)
+          val acc = spark.sparkContext.longAccumulator(s"chunks:$arrayPath")
+          lvl.chunks.foreachPartition { (it: Iterator[ChunkRow]) =>
+            val st = new ZarrStore(chunkPath, hconf)
+            it.foreach { c =>
+              st.writeBytes(ZarrStore.chunkKey(zf, arrayPath, c.chunkIdx),
+                ZarrArray.encodeChunk(c.shape, c.data, fullChunks, dtype, comp))
+              acc.add(1)
+            }
           }
-        }
-        acc.value.longValue()
+          acc.value.longValue()
       }
     }
-
-    // driver: consolidated metadata (S8; both zarr versions)
-    if (zarrFormat == 2) writeConsolidated(store, ms.levels.indices, name)
-    else writeConsolidatedV3(store, ms.levels.indices, name)
+    // driver: every metadata document, after the chunk jobs
+    ZarrArray.metadataDocs(meta, ms.levels.map(_.meta), compressor, chunksPerShard)
+      .foreach { case (k, v) => store.writeString(k, v) }
     counts
   }
-
-  /** Driver-side metadata tree for a single-level zarr-v2 pyramid:
-    * every JSON document [[writeMultiscales]] would emit for one base
-    * level — root group + multiscales attrs, scale group, `.zarray`,
-    * `_ARRAY_DIMENSIONS`, consolidated `.zmetadata` — without touching
-    * chunk payloads. The HCS batch ingest writes ALL fields' chunk
-    * objects of a micro-batch in one distributed job and calls this
-    * per field for the (metadata-scale) JSON tree, instead of
-    * scheduling a filter+write Spark job per field. Executor-safe
-    * (pure function of `meta` + store puts; Jackson mappers are
-    * thread-safe), so the HCS ingest runs it INSIDE the chunk-write
-    * task — the driver never does per-field work. The consolidated
-    * doc composes from the in-memory strings, not a store readback.
-    */
-  private[graft] def writeSingleLevelMetaV2(store: ZarrStore, meta: ImageMeta,
-      method: Method, name: String = "image",
-      compressor: Option[String] = Some("zstd")): Unit = {
-    val msMeta0 = MultiscaleBuilder
-      .Multiscale(Seq(MultiscaleBuilder.Level(meta, null)), method)
-      .metadata(name, "0.4")
-    val msMeta = msMeta0.copy(axes = msMeta0.axes.map(_.copy(orientation = None)))
-    val docs = Seq(
-      ".zgroup" -> ZarrJson.groupDoc(2),
-      ".zattrs" -> ZarrJson.rootAttrs(msMeta),
-      "scale0/.zgroup" -> ZarrJson.groupDoc(2),
-      s"scale0/$name/.zarray" ->
-        ZarrJson.zarrayV2(meta.shape, meta.chunks, meta.dtype, compressor),
-      s"scale0/$name/.zattrs" ->
-        s"""{"_ARRAY_DIMENSIONS": [${meta.dims.map(d => "\"" + d + "\"").mkString(", ")}]}""")
-    docs.foreach { case (k, v) => store.writeString(k, v) }
-    val mapper = ZarrJson.mapper
-    val consolidated = mapper.createObjectNode()
-    consolidated.put("zarr_consolidated_format", 1)
-    val m = consolidated.putObject("metadata")
-    docs.foreach { case (k, v) =>
-      m.set[com.fasterxml.jackson.databind.JsonNode](k, mapper.readTree(v))
-    }
-    store.writeString(".zmetadata",
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(consolidated))
-  }
-
-  /** Zarr stores edge chunks padded to the full chunk shape. */
-  private[graft] def padToFull(c: ChunkRow, fullChunks: Seq[Int], dtype: String): Array[Byte] =
-    if (c.shape == fullChunks) c.data
-    else {
-      val full = new Array[Double](fullChunks.product)
-      ChunkOps.placeBlock(full, fullChunks.toArray,
-        Array.fill(fullChunks.length)(0), c.shape.toArray,
-        ZarrStore.decodeToDoubles(c.data, dtype))
-      ZarrStore.encodeFromDoubles(full, dtype)
-    }
 
   /** S6 — sharded write: group inner chunks by their shard, each task
     * packs + writes whole shard objects (inner chunks individually
@@ -175,7 +91,6 @@ object OmeZarrIO {
       lvl: MultiscaleBuilder.Level, cps: Seq[Int], compressor: Option[String],
       hconf: Option[SerializableHadoopConf]): Long = {
     import spark.implicits._
-    import graft.zarr.Sharding
     val fullChunks = lvl.meta.chunks
     val dtype = lvl.meta.dtype
     val nInner = cps.product
@@ -187,8 +102,7 @@ object OmeZarrIO {
         val encoded = it.map { c =>
           val rel = c.chunkIdx.zip(shardIdx).zip(cps).map { case ((i, s), n) => i - s * n }
           Sharding.innerFlatIndex(rel, cps) ->
-            Codecs.compress(compressor, padToFull(c, fullChunks, dtype),
-              typesize = Dtypes.itemSize(dtype))
+            ZarrArray.encodeChunk(c.shape, c.data, fullChunks, dtype, compressor)
         }.toMap
         acc.add(encoded.size)
         (shardIdx, Sharding.buildShard(nInner, encoded))
@@ -202,266 +116,31 @@ object OmeZarrIO {
     acc.value.longValue()
   }
 
-  /** S8 — consolidated metadata for Zarr v2 stores: every metadata
-    * document inlined into one `.zmetadata` key. Shared by the
-    * function writer and the DSv2 commit path.
-    */
-  private[graft] def writeConsolidated(store: ZarrStore, levelIndices: Seq[Int],
-      name: String): Unit = {
-    val mapper = ZarrJson.mapper
-    val consolidated = mapper.createObjectNode()
-    consolidated.put("zarr_consolidated_format", 1)
-    val m = consolidated.putObject("metadata")
-    (".zgroup" :: ".zattrs" ::
-      levelIndices.flatMap(i => Seq(s"scale$i/.zgroup",
-        s"scale$i/$name/.zarray", s"scale$i/$name/.zattrs")).toList)
-      .foreach(k => m.set[com.fasterxml.jackson.databind.JsonNode](
-        k, mapper.readTree(store.readString(k))))
-    store.writeString(".zmetadata",
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(consolidated))
-  }
-
-  /** S8 for Zarr v3: node metadata inlined into the root group doc's
-    * `consolidated_metadata` (the zarr-python 3 layout,
-    * `must_understand: false` so ignorant readers stay correct).
-    * Readers that understand it open a whole pyramid with ONE
-    * metadata GET.
-    */
-  private[graft] def writeConsolidatedV3(store: ZarrStore, levelIndices: Seq[Int],
-      name: String): Unit = {
-    val mapper = ZarrJson.mapper
-    val root = mapper.readTree(store.readString("zarr.json"))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val cm = root.putObject("consolidated_metadata")
-    cm.put("kind", "inline")
-    cm.put("must_understand", false)
-    val m = cm.putObject("metadata")
-    levelIndices.foreach { i =>
-      m.set[com.fasterxml.jackson.databind.JsonNode](s"scale$i",
-        mapper.readTree(store.readString(s"scale$i/zarr.json")))
-      m.set[com.fasterxml.jackson.databind.JsonNode](s"scale$i/$name",
-        mapper.readTree(store.readString(s"scale$i/$name/zarr.json")))
-    }
-    store.writeString("zarr.json",
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
-  }
-
   /** Read an OME-Zarr store → multiscale levels with lazy chunk
-    * tables. `validate=true` runs structural + RFC4 validation (V1/V2).
-    * `chunkStore`: fetch chunk/shard objects from a separate store
-    * while metadata documents come from `path` (the writer's
-    * `chunkStore` pair).
+    * tables: the metadata open, then per level the `omezarr` scan of
+    * that scale projected to [[ChunkRow]]. `validate=true` runs
+    * structural + RFC4 validation (V1/V2).
     */
   def readMultiscales(spark: SparkSession, path: String,
-      validate: Boolean = false,
-      chunkStore: Option[String] = None): MultiscaleBuilder.Multiscale = {
+      validate: Boolean = false): MultiscaleBuilder.Multiscale = {
     import spark.implicits._
-    val hconf = Some(SerializableHadoopConf.fromActiveSession())
-    val store = new ZarrStore(path, hconf)
-    val chunkPath = chunkStore.getOrElse(path)
-    // consolidated metadata (S8) lets one root GET serve every level
-    // doc below; absent → per-level GET fallback
-    val (rootJson, consolidated) =
-      if (store.exists(".zattrs")) {
-        val cons =
-          if (store.exists(".zmetadata"))
-            ZarrJson.parseConsolidatedV2(store.readString(".zmetadata"))
-          else Map.empty[String, String]
-        (store.readString(".zattrs"), cons)
-      } else if (store.exists("zarr.json")) {
-        val raw = store.readString("zarr.json")
-        val n = ZarrJson.mapper.readTree(raw)
-        (ZarrJson.mapper.writeValueAsString(n.path("attributes")),
-          ZarrJson.parseConsolidatedV3(raw))
-      } else throw new IllegalArgumentException(s"no OME-Zarr metadata at $path")
-    val meta = ZarrJson.parseMultiscales(rootJson)
-    if (validate) {
-      val schemaErrs =
-        if (Validation.SchemaVersions.contains(meta.version))
-          Validation.validateSchema(rootJson, meta.version)
-        else Nil
-      val errs = schemaErrs ++
-        Validation.validateMultiscales(meta) ++ Validation.validateRfc4(meta.axes)
-      require(errs.isEmpty, s"validation failed: ${errs.mkString("; ")}")
-    }
-    val zarrFormat = if (store.exists(".zattrs")) 2 else 3
+    val (meta, arrays) = ZarrArray.openPyramid(
+      new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession())), validate)
     val dims = meta.axes.map(_.name)
-
-    val levels = meta.datasets.map { d =>
-      // the array doc reads ONCE per level — every parse below reuses
-      // it (an object store would otherwise pay a GET per parse); the
-      // consolidated map (keyed by node path for v3, by document key
-      // for v2) skips even that one GET.
-      //
-      // PRECEDENCE (zarr-python parity): a consolidated copy WINS over
-      // the live per-level doc — a store mutated by a writer that did
-      // not re-consolidate silently reads stale metadata on the fast
-      // path. `validate=true` makes that hazard loud: it pays the
-      // per-level GET anyway, cross-checks the consolidated copy
-      // against the live doc, and refuses on divergence.
-      val consKey = if (zarrFormat == 3) d.path else s"${d.path}/.zarray"
-      val liveKey = if (zarrFormat == 3) s"${d.path}/zarr.json" else s"${d.path}/.zarray"
-      val arrayDoc = consolidated.get(consKey) match {
-        case Some(cons) if validate =>
-          val live = store.readString(liveKey)
-          require(ZarrJson.mapper.readTree(cons) == ZarrJson.mapper.readTree(live),
-            s"consolidated metadata for '$liveKey' diverges from the live document " +
-              "(store mutated without re-consolidating?) — re-consolidate or drop " +
-              "the consolidated copy")
-          cons
-        case Some(cons) => cons
-        case None => store.readString(liveKey)
-      }
-      val v3Doc = if (zarrFormat == 3) Some(arrayDoc) else None
-      val (shape, chunks, dtypeRaw, comp, sepOrDims, keyEnc) =
-        if (zarrFormat == 2) {
-          val (s, c, dt, cp, sep) = ZarrJson.parseZarrayV2(arrayDoc)
-          (s, c, dt, cp, sep, "default")
-        } else {
-          val (s, c, dt, cp, _) = ZarrJson.parseZarrayV3(arrayDoc)
-          // honor the array's chunk_key_encoding
-          val (encName, encSep) = ZarrJson.parseChunkKeyEncodingV3(arrayDoc)
-          (s, c, dt, cp, encSep, encName)
-        }
-      // sparse stores omit uniform chunks: absent object = fill_value
-      val fillValue = ZarrJson.parseFillValue(arrayDoc)
-      // v2 numcodecs filter chain — decode runs it reversed after the
-      // compressor stage; unknown ids refuse here at metadata time
-      val v2Filters: Seq[graft.zarr.NumcodecsFilters.V2Filter] =
-        if (zarrFormat == 2) ZarrJson.parseFiltersV2(arrayDoc) else Nil
-      // v3: endianness, compressor and the optional transpose
-      // permutation live in the codec chain. The OUTER chain always
-      // parses (validating it — unknown codecs refuse the store);
-      // sharded arrays then decode per chunk with the INNER chain.
-      val outerChain = v3Doc.map(ZarrJson.parseCodecsV3)
-      val innerChain = v3Doc.flatMap(ZarrJson.parseShardingInnerV3)
-      // a transpose or whole-shard compressor OUTSIDE sharding_indexed
-      // would be silently dropped when decode switches to the inner
-      // chain — refuse at metadata time, not with a misleading crc32c
-      // failure on an executor
-      require(innerChain.isEmpty || outerChain.forall(c =>
-          c.transposeOrder.isEmpty && c.compressor.isEmpty),
-        "zarr v3 transpose or compressor OUTSIDE sharding_indexed is unsupported")
-      val effChain = innerChain.orElse(outerChain)
-      val bigEndian = effChain.map(_.bigEndian).getOrElse(Dtypes.isBigEndian(dtypeRaw))
-      // v2 F-order chunks are C-order chunks of the reversed dims —
-      // the same inverse-permute path as the v3 transpose codec
-      val fOrderPerm: Option[Seq[Int]] =
-        if (zarrFormat == 2 && ZarrJson.parseOrderV2(arrayDoc) == "F")
-          Some(shape.indices.reverse)
-        else None
-      val transposeOrder = effChain.flatMap(_.transposeOrder).orElse(fOrderPerm)
-        .map(_.toArray)
-      // v3 decode trusts the validated chain's compressor (zarr v2
-      // keeps the .zarray compressor id)
-      val compEff = if (zarrFormat == 3) effChain.flatMap(_.compressor) else comp
-      val dtype = Dtypes.normalize(dtypeRaw)
-      // sharded arrays: grid chunks = shard shape; the chunk table
-      // exposes the INNER chunks
-      val sharding = v3Doc.flatMap(ZarrJson.parseShardingV3)
-      val innerChunks = sharding.map(_._1).getOrElse(chunks)
+    val levels = meta.datasets.zip(arrays).map { case (d, (i, a)) =>
       val scale = d.coordinateTransformations.collectFirst { case ScaleT(s) => s }
         .getOrElse(Seq.fill(dims.length)(1.0))
       val translation = d.coordinateTransformations.collectFirst { case TranslationT(t) => t }
         .getOrElse(Seq.fill(dims.length)(0.0))
-      val imgMeta = ImageMeta(dims, shape, innerChunks, dtype,
+      val imgMeta = ImageMeta(dims, a.shape, a.chunks, a.dtype,
         dims.zip(scale).toMap, dims.zip(translation).toMap,
         name = meta.name.getOrElse("image"),
         axesUnits = meta.axes.flatMap(a => a.unit.map(a.name -> _)).toMap,
         axesOrientations = meta.axes.flatMap(a => a.orientation.map(a.name -> _)).toMap)
-
-      // lazy chunk scan: enumerate the grid on the driver (metadata
-      // only), fetch+decode on executors
-      val grid = ZarrStore.chunkGrid(shape, chunks)
-      val positions = ZarrStore.gridPositions(grid).toSeq
-      val arrayPath = d.path
-      val sep = sepOrDims
-      val zf = zarrFormat
-      val shapeB = shape
-      val chunksB = chunks
-      val shardingB = sharding
-      val innerB = innerChunks
-      val ds = spark.createDataset(positions)
-        .repartition(math.max(1, math.min(positions.size, 32)))
-        .mapPartitions { it =>
-          import graft.zarr.Sharding
-          val st = new ZarrStore(chunkPath, hconf)
-          def decodeChunk(raw: Array[Byte], idx: Seq[Int]): ChunkRow = {
-            val cShape = ZarrStore.chunkShapeAt(shapeB, innerB, idx)
-            // zarr stores chunks at FULL chunk shape (edge chunks padded)
-            val stored =
-              if (v2Filters.nonEmpty)
-                graft.zarr.NumcodecsFilters.decodeToDoubles(raw, v2Filters, dtypeRaw)
-              else ZarrStore.decodeToDoubles(raw, dtype, bigEndian)
-            // transpose codec: the stored buffer is the chunk permuted
-            // by `order` — invert it back to the declared dim order
-            val full = transposeOrder match {
-              case Some(o) => graft.operators.NdKernels.permuteFlat(
-                stored, o.map(innerB(_)), graft.operators.NdKernels.inversePerm(o))
-              case None => stored
-            }
-            val clipped =
-              if (cShape == innerB) full
-              else ChunkOps.sliceBlock(full, innerB.toArray,
-                Array.fill(innerB.length)(0), cShape.toArray)
-            ChunkRow(idx, ZarrStore.chunkOriginAt(innerB, idx), cShape,
-              ZarrStore.encodeFromDoubles(clipped, dtype))
-          }
-          // decompressed size hint: the compressor saw the FILTERED
-          // (astype-encoded) representation, not the array dtype
-          val fullSize = innerB.product *
-            graft.zarr.NumcodecsFilters.encodedItemSize(v2Filters, dtypeRaw)
-          shardingB match {
-            case None => it.map { idx =>
-              val key = ZarrStore.chunkKey(zf, arrayPath, idx, sep, keyEnc)
-              st.readBytesIfExists(key) match {
-                case Some(bytes) =>
-                  decodeChunk(Codecs.decompress(compEff, bytes, fullSize), idx)
-                case None => // absent object: a uniform fill_value chunk
-                  val cShape = ZarrStore.chunkShapeAt(shapeB, innerB, idx)
-                  ChunkRow(idx, ZarrStore.chunkOriginAt(innerB, idx), cShape,
-                    ZarrStore.encodeFromDoubles(
-                      Array.fill(cShape.product)(fillValue), dtype))
-              }
-            }
-            case Some((inner, _)) => it.flatMap { shardIdx =>
-              // positions enumerate the SHARD grid here; compEff IS
-              // the inner chain's compressor for sharded arrays
-              val cps = chunksB.zip(inner).map { case (s, c) => s / c }
-              val key = ZarrStore.chunkKey(3, arrayPath, shardIdx, sep, keyEnc)
-              def fillChunk(idx: Seq[Int]): ChunkRow = {
-                val cShape = ZarrStore.chunkShapeAt(shapeB, innerB, idx)
-                ChunkRow(idx, ZarrStore.chunkOriginAt(innerB, idx), cShape,
-                  ZarrStore.encodeFromDoubles(
-                    Array.fill(cShape.product)(fillValue), dtype))
-              }
-              def innerIdx(flat: Int): Seq[Int] = {
-                val rel = Sharding.innerPosition(flat, cps)
-                shardIdx.zip(cps).zip(rel).map { case ((s, n), r) => s * n + r }
-              }
-              // edge shards of a non-divisible array enumerate inner
-              // slots past the array boundary — not chunks, never rows
-              def slots: Iterator[(Int, Seq[Int])] =
-                (0 until cps.product).iterator.map(f => (f, innerIdx(f)))
-                  .filter { case (_, idx) =>
-                    ZarrStore.inArrayGrid(shapeB, innerB, idx) }
-              st.readBytesIfExists(key) match {
-                case None => // absent shard: every inner chunk is fill
-                  slots.map { case (_, idx) => fillChunk(idx) }
-                case Some(bytes) =>
-                  val present = Sharding.parseShard(bytes, cps.product).toMap
-                  slots.map { case (f, idx) =>
-                    present.get(f) match {
-                      case Some(enc) => decodeChunk(
-                        Codecs.decompress(compEff, enc, fullSize), idx)
-                      case None => fillChunk(idx) // index hole = fill
-                    }
-                  }
-              }
-            }
-          }
-        }
-      MultiscaleBuilder.Level(imgMeta, ds)
+      val chunks = spark.read.format("omezarr").load(path).where(col("scale") === i)
+        .select(col("chunk_idx").as("chunkIdx"), col("origin"), col("shape"), col("data"))
+        .as[ChunkRow]
+      MultiscaleBuilder.Level(imgMeta, chunks)
     }
     MultiscaleBuilder.Multiscale(levels,
       meta.`type`.flatMap(Method.fromValue).getOrElse(Method.ItkwasmGaussian),

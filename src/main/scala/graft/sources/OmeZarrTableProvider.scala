@@ -1,6 +1,8 @@
 package graft.sources
 
 import java.util
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -11,9 +13,8 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, Greate
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.meta.{Dtypes, ZarrJson}
-import graft.zarr.{Codecs, ZarrStore}
-import graft.operators.ChunkOps
+import graft.meta.Dtypes
+import graft.zarr.{SerializableHadoopConf, ZarrArray, ZarrStore}
 
 import scala.jdk.CollectionConverters._
 
@@ -22,7 +23,9 @@ import scala.jdk.CollectionConverters._
   * {{{ spark.read.format("omezarr").load("/path/img.zarr") }}}
   *
   * → the chunk table `(scale, chunk_idx, origin, shape, dtype, data)`,
-  * one InputPartition per Zarr chunk.
+  * one InputPartition per stored chunk or shard object. This is the one
+  * OME-Zarr read path: `OmeZarrIO.readMultiscales` reads each level
+  * through it.
   *
   * Scale-pruning: predicates on `scale` push into partition planning
   * (`SupportsPushDownFilters`), so `WHERE scale = 3` lists only that
@@ -68,59 +71,73 @@ class OmeZarrTable(path: String) extends Table
     new OmeZarrWriteBuilder(path, info.options.asScala.toMap)
 }
 
-/** One unit of scan work: a plain chunk, or — when `sharding` is set —
-  * a whole shard whose reader emits one row per present inner chunk.
-  * `chunks` is the grid chunk shape (= shard shape when sharded);
-  * `sharding` carries (innerChunkShape, innerCompressor).
+/** One unit of scan work: one stored object of `array` at grid
+  * position `idx` — a plain chunk, or a whole shard whose reader emits
+  * one row per in-array inner chunk.
   */
-final case class OmeZarrInputPartition(scale: Int, idx: Seq[Int], arrayPath: String,
-    shape: Seq[Long], chunks: Seq[Int], dtype: String, bigEndian: Boolean,
-    compressor: Option[String], separator: String, zarrFormat: Int,
-    path: String, sharding: Option[(Seq[Int], Option[String])],
-    transposeOrder: Option[Seq[Int]] = None,
-    keyEncoding: String = "default",
-    fillValue: Double = 0.0,
-    filters: Seq[graft.zarr.NumcodecsFilters.V2Filter] = Nil) extends InputPartition
+final case class OmeZarrInputPartition(scale: Int, idx: Seq[Int], array: ZarrArray)
+    extends InputPartition
 
 class OmeZarrScanBuilder(path: String)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
-  private var pushedScale: Option[Int => Boolean] = None
   private var pushed: Array[Filter] = Array.empty
   private var requiredSchema: StructType = OmeZarrTable.Schema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, rest) = filters.partition {
-      case EqualTo("scale", _: Number) | GreaterThan("scale", _: Number) |
-           LessThan("scale", _: Number) | GreaterThanOrEqual("scale", _: Number) |
-           LessThanOrEqual("scale", _: Number) | In("scale", _) => true
-      case _ => false
-    }
-    pushed = supported
-    val preds: Seq[Int => Boolean] = supported.toSeq.map {
-      case EqualTo("scale", v: Number) => (s: Int) => s == v.intValue()
-      case GreaterThan("scale", v: Number) => (s: Int) => s > v.intValue()
-      case LessThan("scale", v: Number) => (s: Int) => s < v.intValue()
-      case GreaterThanOrEqual("scale", v: Number) => (s: Int) => s >= v.intValue()
-      case LessThanOrEqual("scale", v: Number) => (s: Int) => s <= v.intValue()
-      case In("scale", vs) =>
-        val set = vs.collect { case n: Number => n.intValue() }.toSet
-        (s: Int) => set.contains(s)
-    }
-    if (preds.nonEmpty) pushedScale = Some(s => preds.forall(_(s)))
+    pushed = filters.filter(OmeZarrScan.scalePredicate(_).isDefined)
     // scale predicates are fully handled by partition pruning, but we
     // leave them in the post-scan filter too (cheap, keeps planner honest)
-    rest ++ supported
+    filters
   }
 
   override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(required: StructType): Unit = { requiredSchema = required }
 
-  override def build(): Scan = new OmeZarrScan(path, pushedScale, requiredSchema)
+  override def build(): Scan = new OmeZarrScan(path, pushed.toSeq, requiredSchema)
 }
 
-class OmeZarrScan(path: String, scalePred: Option[Int => Boolean],
+object OmeZarrScan {
+  /** The partition-pruning form of a pushable `scale` predicate. */
+  def scalePredicate(f: Filter): Option[Int => Boolean] = f match {
+    case EqualTo("scale", v: Number) => Some(_ == v.intValue())
+    case GreaterThan("scale", v: Number) => Some(_ > v.intValue())
+    case LessThan("scale", v: Number) => Some(_ < v.intValue())
+    case GreaterThanOrEqual("scale", v: Number) => Some(_ >= v.intValue())
+    case LessThanOrEqual("scale", v: Number) => Some(_ <= v.intValue())
+    case In("scale", vs) =>
+      val set = vs.collect { case n: Number => n.intValue() }.toSet
+      Some(set.contains)
+    case _ => None
+  }
+
+  private var shared: Option[(SparkContext, Map[String, String], Broadcast[SerializableHadoopConf])] =
+    None
+
+  /** The session's Hadoop conf as a broadcast, made once per distinct
+    * conf. The reader factory is deserialized with every task and a
+    * scan runs one task per stored object; deserializing the conf
+    * (~1000 entries, ~100 KB) would dominate a small chunk's task, and a
+    * broadcast per scan would pile copies up on the heap. Compared by
+    * content, so a changed setting (an object store credential) is
+    * broadcast anew.
+    */
+  private def hadoopConf(): Broadcast[SerializableHadoopConf] = synchronized {
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val entries = sc.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue).toMap
+    shared match {
+      case Some((c, e, b)) if (c eq sc) && e == entries => b
+      case _ =>
+        val b = sc.broadcast(new SerializableHadoopConf(
+          new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration)))
+        shared = Some((sc, entries, b))
+        b
+    }
+  }
+}
+
+class OmeZarrScan(path: String, val pushedFilters: Seq[Filter],
     required: StructType) extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -135,30 +152,19 @@ class OmeZarrScan(path: String, scalePred: Option[Int => Boolean],
     * no chunk object is touched.
     */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val parts = planned
     val wantPayload = required.fieldNames.contains("data")
     var rows = 0L
     var bytes = 0L
-    parts.foreach { p0 =>
+    planned.foreach { p0 =>
       val p = p0.asInstanceOf[OmeZarrInputPartition]
-      // clipped per-shard inner count: edge shards of a non-divisible
-      // array only contribute the slots inside the array grid
-      val innerRows = p.sharding.fold(1L) { case (inner, _) =>
-        val cps = p.chunks.zip(inner).map { case (s, c) => s / c }
-        val total = ZarrStore.chunkGrid(p.shape, inner)
-        p.idx.indices.map { d =>
-          math.max(0L, math.min(cps(d).toLong,
-            total(d).toLong - p.idx(d).toLong * cps(d)))
-        }.product
-      }
-      val innerShape = p.sharding.fold(p.chunks) { case (inner, _) => inner }
+      val a = p.array
+      val objRows = a.slots(p.idx).size.toLong
       val payloadBytes =
-        if (!wantPayload) 0L
-        else innerShape.map(_.toLong).product * Dtypes.itemSize(p.dtype)
-      rows += innerRows
+        if (!wantPayload) 0L else a.chunks.map(_.toLong).product * Dtypes.itemSize(a.dtype)
+      rows += objRows
       // ~64 B of metadata columns per row (scale, idx, origin, shape,
       // dtype) + the decoded payload when selected
-      bytes += innerRows * (64L + payloadBytes)
+      bytes += objRows * (64L + payloadBytes)
     }
     val rowsF = rows
     val bytesF = math.max(1L, bytes)
@@ -170,205 +176,51 @@ class OmeZarrScan(path: String, scalePred: Option[Int => Boolean],
     }
   }
 
-  private lazy val planned: Array[InputPartition] = planInputPartitions0()
+  /** One partition per stored object of every level the pushed
+    * `scale` predicates keep.
+    */
+  private lazy val planned: Array[InputPartition] = {
+    val store = new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession()))
+    val keep = (s: Int) => pushedFilters.forall(OmeZarrScan.scalePredicate(_).forall(_(s)))
+    ZarrArray.openPyramid(store, scales = keep)._2.flatMap { case (i, a) =>
+      a.objects.map(idx => OmeZarrInputPartition(i, idx, a): InputPartition)
+    }.toArray
+  }
 
   override def planInputPartitions(): Array[InputPartition] = planned
 
-  private def planInputPartitions0(): Array[InputPartition] = {
-    val hconf = graft.zarr.SerializableHadoopConf.fromActiveSession()
-    val store = new ZarrStore(path, Some(hconf))
-    val zarrFormat = if (store.exists(".zattrs")) 2 else 3
-    // consolidated metadata (S8) serves level docs from the root GET
-    val (rootJson, consolidated) =
-      if (zarrFormat == 2) {
-        val cons =
-          if (store.exists(".zmetadata"))
-            ZarrJson.parseConsolidatedV2(store.readString(".zmetadata"))
-          else Map.empty[String, String]
-        (store.readString(".zattrs"), cons)
-      } else {
-        val raw = store.readString("zarr.json")
-        (ZarrJson.mapper.writeValueAsString(
-          ZarrJson.mapper.readTree(raw).path("attributes")),
-          ZarrJson.parseConsolidatedV3(raw))
-      }
-    val meta = ZarrJson.parseMultiscales(rootJson)
-    meta.datasets.zipWithIndex
-      .filter { case (_, i) => scalePred.forall(_(i)) }
-      .flatMap { case (d, i) =>
-        // the array doc reads ONCE per level — codec parsing and
-        // parseFillValue below reuse it (an object store would
-        // otherwise pay an extra GET per level per scan); the
-        // consolidated map skips even that one. Precedence follows
-        // zarr-python: a consolidated copy WINS over the live doc —
-        // use OmeZarrIO.readMultiscales(validate=true) to cross-check
-        // a store that foreign writers may have mutated
-        val doc = consolidated.getOrElse(
-          if (zarrFormat == 2) s"${d.path}/.zarray" else d.path,
-          store.readString(
-            if (zarrFormat == 2) s"${d.path}/.zarray" else s"${d.path}/zarr.json"))
-        val (shape, chunks, dtypeRaw, comp, sep, sharding, chain, keyEnc) =
-          if (zarrFormat == 2) {
-            val (s, c, dt, cp, sp) = ZarrJson.parseZarrayV2(doc)
-            // F-order: reversed-dims transpose, like the v3 codec
-            val fPerm = if (ZarrJson.parseOrderV2(doc) == "F")
-              Some(ZarrJson.V3CodecChain(Some(s.indices.reverse),
-                Dtypes.isBigEndian(dt), cp))
-            else None
-            (s, c, dt, cp, sp, None, fPerm, "default")
-          } else {
-            val (s, c, dt, _, _) = ZarrJson.parseZarrayV3(doc)
-            // endianness, compressor + transpose ride the codec chain
-            // in v3 (the INNER chain when the array is sharded). The
-            // OUTER chain always parses — validating it — first.
-            val outer = ZarrJson.parseCodecsV3(doc)
-            val innerCh = ZarrJson.parseShardingInnerV3(doc)
-            // outer transpose/compressor would be dropped when decode
-            // switches to the inner chain — refuse at metadata time
-            require(innerCh.isEmpty ||
-                (outer.transposeOrder.isEmpty && outer.compressor.isEmpty),
-              "zarr v3 transpose or compressor OUTSIDE sharding_indexed is unsupported")
-            val ch = innerCh.getOrElse(outer)
-            val (encName, encSep) = ZarrJson.parseChunkKeyEncodingV3(doc)
-            (s, c, dt, ch.compressor, encSep,
-              ZarrJson.parseShardingV3(doc), Some(ch), encName)
-          }
-        val bigEndian = chain.map(_.bigEndian).getOrElse(Dtypes.isBigEndian(dtypeRaw))
-        val fill = ZarrJson.parseFillValue(doc)
-        // one partition per grid object: a chunk, or a whole shard
-        val v2Filters =
-          if (zarrFormat == 2) ZarrJson.parseFiltersV2(doc) else Nil
-        ZarrStore.gridPositions(ZarrStore.chunkGrid(shape, chunks)).map { idx =>
-          OmeZarrInputPartition(i, idx, d.path, shape, chunks,
-            Dtypes.normalize(dtypeRaw), bigEndian, comp, sep,
-            zarrFormat, path, sharding, chain.flatMap(_.transposeOrder), keyEnc, fill,
-            v2Filters)
-        }
-      }.toArray
-  }
-
   override def createReaderFactory(): PartitionReaderFactory =
-    // the factory is serialized once per scan — the Hadoop conf rides
-    // here instead of bloating every InputPartition
-    new OmeZarrReaderFactory(required,
-      graft.zarr.SerializableHadoopConf.fromActiveSession())
+    new OmeZarrReaderFactory(path, required, OmeZarrScan.hadoopConf())
 }
 
-class OmeZarrReaderFactory(required: StructType,
-    hconf: graft.zarr.SerializableHadoopConf) extends PartitionReaderFactory {
+class OmeZarrReaderFactory(path: String, required: StructType,
+    hconf: Broadcast[SerializableHadoopConf]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[OmeZarrInputPartition]
+    val a = p.array
+    // metadata-only scans (`data` pruned) touch no object at all: fill
+    // semantics make every in-array chunk a row
+    val needData = required.fieldNames.contains("data")
+    val rows: Iterator[(Seq[Int], Array[Byte])] =
+      if (needData) a.read(new ZarrStore(path, Some(hconf.value)), p.idx)
+      else a.slots(p.idx).map { case (_, idx) => (idx, null) }
     new PartitionReader[InternalRow] {
-      import graft.zarr.Sharding
-      private val needData = required.fieldNames.contains("data")
-      private lazy val st = new ZarrStore(p.path, Some(hconf))
-
-      /** Where one emitted row's payload comes from: a lazy per-chunk
-        * fetch (plain chunks — column pruning skips the read
-        * entirely), bytes already decompressed out of a shard, or the
-        * array's fill_value (absent chunk object / shard-index hole —
-        * the chunk logically EXISTS, so the row always does too).
-        */
-      private sealed trait Src
-      private case object LazyFetch extends Src
-      private case object FillSrc extends Src
-      private final case class Loaded(raw: Array[Byte]) extends Src
-
-      private val rows: Iterator[(Seq[Int], Src)] = p.sharding match {
-        case None => Iterator((p.idx, LazyFetch))
-        case Some((inner, _)) => // p.compressor IS the inner chain's
-          val cps = p.chunks.zip(inner).map { case (s, c) => s / c }
-          val key = ZarrStore.chunkKey(3, p.arrayPath, p.idx, p.separator, p.keyEncoding)
-          def innerIdx(flat: Int): Seq[Int] = {
-            val rel = Sharding.innerPosition(flat, cps)
-            p.idx.zip(cps).zip(rel).map { case ((s, n), r) => s * n + r }
-          }
-          // edge shards of a non-divisible array enumerate inner slots
-          // past the array boundary — not chunks, never rows
-          def slots: Iterator[(Int, Seq[Int])] =
-            (0 until cps.product).iterator.map(f => (f, innerIdx(f)))
-              .filter { case (_, idx) =>
-                ZarrStore.inArrayGrid(p.shape, inner, idx) }
-          if (!needData)
-            // metadata-only: the clipped inner grid, no object I/O at
-            // all (fill semantics make every in-grid inner chunk a row)
-            slots.map { case (_, idx) => (idx, FillSrc) }
-          else st.readBytesIfExists(key) match {
-            case None => // absent shard: every inner chunk is fill
-              slots.map { case (_, idx) => (idx, FillSrc) }
-            case Some(bytes) =>
-              val present = Sharding.parseShard(bytes, cps.product).toMap
-              slots.map { case (f, idx) =>
-                present.get(f) match {
-                  case Some(enc) => (idx, Loaded(Codecs.decompress(
-                    p.compressor, enc, inner.product * Dtypes.itemSize(p.dtype))))
-                  case None => (idx, FillSrc) // index hole
-                }
-              }
-          }
-      }
-
-      private val innerChunks: Seq[Int] = p.sharding.map(_._1).getOrElse(p.chunks)
-      private var current: (Seq[Int], Src) = _
+      private var current: (Seq[Int], Array[Byte]) = _
 
       override def next(): Boolean = {
         if (rows.hasNext) { current = rows.next(); true } else false
       }
 
       override def get(): InternalRow = {
-        val (idx, src) = current
-        val cShape = ZarrStore.chunkShapeAt(p.shape, innerChunks, idx)
-        val origin = ZarrStore.chunkOriginAt(innerChunks, idx)
-        val values: Map[String, Any] = Map(
-          "scale" -> p.scale,
-          "chunk_idx" -> ArrayData.toArrayData(idx.toArray),
-          "origin" -> ArrayData.toArrayData(origin.toArray),
-          "shape" -> ArrayData.toArrayData(cShape.toArray),
-          "dtype" -> UTF8String.fromString(p.dtype)) ++
-          (if (needData) Map("data" -> payload(idx, cShape, src)) else Map.empty)
-        new GenericInternalRow(required.fieldNames.map(values(_)).toArray[Any])
-      }
-
-      /** Decompress + clip a chunk payload — only invoked when the
-        * `data` column survives pruning.
-        */
-      private def payload(idx: Seq[Int], cShape: Seq[Int], src: Src): Array[Byte] = {
-        // decompressed size hint: with v2 filters the compressor saw
-        // the FILTERED (astype-encoded) representation
-        val fullSize = innerChunks.product *
-          graft.zarr.NumcodecsFilters.encodedItemSize(p.filters, p.dtype)
-        val raw = src match {
-          case Loaded(r) => r
-          case FillSrc => return ZarrStore.encodeFromDoubles(
-            Array.fill(cShape.product)(p.fillValue), p.dtype)
-          case LazyFetch =>
-            val key = ZarrStore.chunkKey(p.zarrFormat, p.arrayPath, idx,
-              p.separator, p.keyEncoding)
-            // sparse stores omit uniform chunks: absent = fill_value
-            // (single round-trip — no exists() pre-check)
-            st.readBytesIfExists(key) match {
-              case Some(bytes) => Codecs.decompress(p.compressor, bytes, fullSize)
-              case None => return ZarrStore.encodeFromDoubles(
-                Array.fill(cShape.product)(p.fillValue), p.dtype)
-            }
-        }
-        val stored =
-          if (p.filters.nonEmpty)
-            graft.zarr.NumcodecsFilters.decodeToDoubles(raw, p.filters,
-              p.dtype, p.bigEndian)
-          else ZarrStore.decodeToDoubles(raw, p.dtype, p.bigEndian)
-        // transpose codec: stored buffer is permuted by `order`
-        val full = p.transposeOrder match {
-          case Some(o) => graft.operators.NdKernels.permuteFlat(
-            stored, o.map(innerChunks(_)).toArray,
-            graft.operators.NdKernels.inversePerm(o.toArray))
-          case None => stored
-        }
-        val clipped =
-          if (cShape == innerChunks) full
-          else ChunkOps.sliceBlock(full, innerChunks.toArray,
-            Array.fill(innerChunks.length)(0), cShape.toArray)
-        ZarrStore.encodeFromDoubles(clipped, p.dtype)
+        val (idx, data) = current
+        new GenericInternalRow(required.fieldNames.map[Any] {
+          case "scale" => p.scale
+          case "chunk_idx" => ArrayData.toArrayData(idx.toArray)
+          case "origin" => ArrayData.toArrayData(ZarrStore.chunkOriginAt(a.chunks, idx).toArray)
+          case "shape" => ArrayData.toArrayData(ZarrStore.chunkShapeAt(a.shape, a.chunks, idx).toArray)
+          case "dtype" => UTF8String.fromString(a.dtype)
+          case "data" => data
+        })
       }
 
       override def close(): Unit = ()

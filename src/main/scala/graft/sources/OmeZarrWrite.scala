@@ -4,8 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import graft.meta.{Dtypes, ZarrJson}
 import graft.meta.Model._
-import graft.zarr.{Codecs, SerializableHadoopConf, ZarrStore}
-import graft.operators.ChunkOps
+import graft.zarr.{SerializableHadoopConf, ZarrArray, ZarrStore}
 import scala.jdk.CollectionConverters._
 
 /** DataSource V2 write path (SURVEY S4/M4):
@@ -87,45 +86,20 @@ class OmeZarrWrite(path: String, options: Map[String, String],
         s"omezarr target $path already exists — appending to a pyramid is not " +
           "defined; use mode(\"overwrite\")")
     new OmeZarrDataWriterFactory(path, name, version, compressor,
-      levels.map(m => (m.chunks, m.shape)),
+      levels.map(_.chunks),
       dtype, SerializableHadoopConf.fromActiveSession())
   }
 
   /** Driver-side metadata commit, after every task succeeded. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val store = new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession()))
-    val zarrFormat = if (version == "0.5") 3 else 2
-    val axes = dims.map(d => Axis(d, axisType(d)))
     val datasets = levels.zipWithIndex.map { case (m, i) =>
       DatasetMeta(s"scale$i/$name", Seq(
         ScaleT(dims.map(m.scale)), TranslationT(dims.map(m.translation))))
     }
-    val meta = MultiscalesMeta(axes, datasets, version, Some(name))
-    if (zarrFormat == 3) {
-      store.writeString("zarr.json", ZarrJson.groupDoc(3,
-        Some(ZarrJson.mapper.readTree(ZarrJson.rootAttrs(meta)))))
-    } else {
-      store.writeString(".zgroup", ZarrJson.groupDoc(2))
-      store.writeString(".zattrs", ZarrJson.rootAttrs(meta))
-    }
-    levels.zipWithIndex.foreach { case (m, i) =>
-      val arrayPath = s"scale$i/$name"
-      if (zarrFormat == 3) {
-        store.writeString(s"scale$i/zarr.json", ZarrJson.groupDoc(3))
-        store.writeString(s"$arrayPath/zarr.json",
-          ZarrJson.zarrayV3(m.shape, m.chunks, dtype, compressor, dims))
-      } else {
-        store.writeString(s"scale$i/.zgroup", ZarrJson.groupDoc(2))
-        store.writeString(s"$arrayPath/.zarray",
-          ZarrJson.zarrayV2(m.shape, m.chunks, dtype, compressor))
-        store.writeString(s"$arrayPath/.zattrs",
-          s"""{"_ARRAY_DIMENSIONS": [${dims.map(d => "\"" + d + "\"").mkString(", ")}]}""")
-      }
-    }
-    if (zarrFormat == 2)
-      graft.operators.OmeZarrIO.writeConsolidated(store, levels.indices, name)
-    else
-      graft.operators.OmeZarrIO.writeConsolidatedV3(store, levels.indices, name)
+    val meta = MultiscalesMeta(dims.map(d => Axis(d, axisType(d))), datasets, version, Some(name))
+    ZarrArray.metadataDocs(meta, levels, compressor)
+      .foreach { case (k, v) => store.writeString(k, v) }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -134,7 +108,7 @@ class OmeZarrWrite(path: String, options: Map[String, String],
 }
 
 class OmeZarrDataWriterFactory(path: String, name: String, version: String,
-    compressor: Option[String], levelChunks: Seq[(Seq[Int], Seq[Long])],
+    compressor: Option[String], levelChunks: Seq[Seq[Int]],
     dtype: String, hconf: SerializableHadoopConf) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -148,12 +122,8 @@ class OmeZarrDataWriterFactory(path: String, name: String, version: String,
         val scale = row.getInt(0)
         val idx = row.getArray(1).toIntArray().toSeq
         val cShape = row.getArray(3).toIntArray().toSeq
-        val data = row.getBinary(5)
-        val (fullChunks, _) = levelChunks(scale)
-        val payload = graft.operators.OmeZarrIO.padToFull(
-          ChunkOps.ChunkRow(idx, Seq.empty, cShape, data), fullChunks, dtype)
         st.writeBytes(ZarrStore.chunkKey(zarrFormat, s"scale$scale/$name", idx),
-          Codecs.compress(compressor, payload, typesize = Dtypes.itemSize(dtype)))
+          ZarrArray.encodeChunk(cShape, row.getBinary(5), levelChunks(scale), dtype, compressor))
         n += 1
       }
 

@@ -779,15 +779,17 @@ object Streams {
           val st = new graft.zarr.ZarrStore(pp, hconf)
           it.map { f =>
             val meta = f.descriptor.meta
-            graft.operators.OmeZarrIO.writeSingleLevelMetaV2(
-              new graft.zarr.ZarrStore(s"$pp/${f.wellPath}/${f.imagePath}", hconf),
-              meta, Method.ItkwasmBinShrink)
-            val arrayPath = s"${f.wellPath}/${f.imagePath}/scale0/image"
+            val image = s"${f.wellPath}/${f.imagePath}"
+            // the image's one-level v0.4 metadata tree, consolidated copy
+            // included (task-private: no other field shares its keys)
+            graft.zarr.ZarrArray.metadataDocs(
+              MultiscaleBuilder.Multiscale(Seq(MultiscaleBuilder.Level(meta, null)),
+                Method.ItkwasmBinShrink).metadata(),
+              Seq(meta), Some("zstd"))
+              .foreach { case (k, v) => st.writeString(s"$image/$k", v) }
             ChunkOps.decompose(f.values, meta).foreach { c =>
-              val key = graft.zarr.ZarrStore.chunkKey(2, arrayPath, c.chunkIdx)
-              st.writeBytes(key, graft.zarr.Codecs.compress(Some("zstd"),
-                graft.operators.OmeZarrIO.padToFull(c, meta.chunks, meta.dtype),
-                typesize = graft.meta.Dtypes.itemSize(meta.dtype)))
+              st.writeBytes(graft.zarr.ZarrStore.chunkKey(2, s"$image/scale0/image", c.chunkIdx),
+                graft.zarr.ZarrArray.encodeChunk(c.shape, c.data, meta.chunks, meta.dtype, Some("zstd")))
             }
             f.descriptor
           }

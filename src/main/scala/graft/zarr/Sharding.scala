@@ -74,7 +74,9 @@ object Sharding {
   }
 
   /** Parse a shard: returns innerPosition → encoded bytes. Verifies
-    * the index checksum.
+    * the index checksum, and refuses an entry whose byte range is
+    * negative or leaves the payload region (a range reaching into the
+    * index, or past the object, would decode as wrong voxels).
     */
   def parseShard(shard: Array[Byte], nInner: Int): Map[Int, Array[Byte]] = {
     val indexSize = nInner * 16 + 4
@@ -90,7 +92,12 @@ object Sharding {
       val off = bb.getLong()
       val len = bb.getLong()
       if (off == Missing) None
-      else Some(i -> java.util.Arrays.copyOfRange(shard, off.toInt, (off + len).toInt))
+      else {
+        require(off >= 0 && len >= 0 && len <= idxStart && off <= idxStart - len,
+          s"shard index entry $i (offset $off, length $len) leaves the " +
+            s"$idxStart-byte payload region")
+        Some(i -> java.util.Arrays.copyOfRange(shard, off.toInt, (off + len).toInt))
+      }
     }.toMap
   }
 

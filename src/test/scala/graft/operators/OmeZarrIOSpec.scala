@@ -839,8 +839,9 @@ class OmeZarrIOSpec extends SparkSpec {
     assert(!new java.io.File(s"$metaDir/scale0/image/0").exists())
     assert(new java.io.File(s"$chunkDir/scale0/image/0/0").exists())
     assert(!new java.io.File(s"$chunkDir/scale0/image/.zarray").exists())
-    val back = OmeZarrIO.readMultiscales(spark, metaDir, validate = true,
-      chunkStore = Some(chunkDir))
+    // the pair merged into one tree is the complete store
+    graft.zarr.TestStores.mergeInto(chunkDir, metaDir)
+    val back = OmeZarrIO.readMultiscales(spark, metaDir, validate = true)
     assert(ChunkOps.toArray(back.levels.head.chunks, back.levels.head.meta).toSeq
       == vals.toSeq)
     // sharded v0.5 pair: shard objects in B too
@@ -850,8 +851,8 @@ class OmeZarrIOSpec extends SparkSpec {
       chunksPerShard = Some(Seq(2, 2)), chunkStore = Some(chunkDir3))
     assert(new java.io.File(s"$chunkDir3/scale0/image/c/0/0").exists())
     assert(!new java.io.File(s"$metaDir3/scale0/image/c").exists())
-    val back3 = OmeZarrIO.readMultiscales(spark, metaDir3,
-      chunkStore = Some(chunkDir3))
+    graft.zarr.TestStores.mergeInto(chunkDir3, metaDir3)
+    val back3 = OmeZarrIO.readMultiscales(spark, metaDir3)
     assert(ChunkOps.toArray(back3.levels.head.chunks, back3.levels.head.meta).toSeq
       == vals.toSeq)
   }

@@ -3,16 +3,20 @@ package graft.sources
 import graft.SparkSpec
 import graft.meta.Model._
 import graft.operators.{ChunkOps, MultiscaleBuilder, OmeZarrIO}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-class OmeZarrDsv2Spec extends SparkSpec {
+class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private val storeVals = Array.tabulate(64 * 64)(i => (i % 1000).toDouble)
 
   private lazy val storePath: String = {
     val m = ImageMeta(Seq("y", "x"), Seq(64, 64), Seq(32, 32), "uint16",
       Map("y" -> 1.0, "x" -> 1.0), Map("y" -> 0.0, "x" -> 0.0))
-    val vals = Array.tabulate(64 * 64)(i => (i % 1000).toDouble)
-    val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
+    val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, storeVals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base,
       Some(Seq(Map("y" -> 2, "x" -> 2))), Method.ItkwasmBinShrink, cache = false)
     val dir = Files.createTempDirectory("dsv2").toString + "/img.zarr"
@@ -123,18 +127,36 @@ class OmeZarrDsv2Spec extends SparkSpec {
       ChunkOps.toArray(ds1, m1).toSeq)
   }
 
-  test("voxel values through DSv2 match the direct reader") {
-    val viaDsv2 = spark.read.format("omezarr").load(storePath)
-      .filter(col("scale") === 0)
-      .select(sum(length(col("data"))))
-      .head.getLong(0) // total payload bytes
-    assert(viaDsv2 == 4 * 32 * 32 * 2)
-    val direct = OmeZarrIO.readMultiscales(spark, storePath)
-    val sumDirect = ChunkOps.toArray(direct.levels.head.chunks, direct.levels.head.meta).sum
-    // decode DSv2 payloads via the same element codec and compare checksums
+  test("voxel values through DSv2 match the written values") {
     val rows = spark.read.format("omezarr").load(storePath).filter(col("scale") === 0).collect()
-    val sumDsv2 = rows.map(r => graft.zarr.ZarrStore
-      .decodeToDoubles(r.getAs[Array[Byte]]("data"), r.getAs[String]("dtype")).sum).sum
-    assert(sumDsv2 == sumDirect)
+    assert(rows.map(_.getAs[Array[Byte]]("data").length).sum == 4 * 32 * 32 * 2)
+    // each 32² chunk's decoded sum equals the sum of the voxels written there
+    val sums = rows.map { r =>
+      val idx = r.getAs[scala.collection.Seq[Int]]("chunk_idx").toSeq
+      idx -> graft.zarr.ZarrStore.decodeToDoubles(
+        r.getAs[Array[Byte]]("data"), r.getAs[String]("dtype")).sum
+    }.toMap
+    val written = (for (cy <- 0 until 2; cx <- 0 until 2) yield Seq(cy, cx) ->
+      (for (y <- 0 until 32; x <- 0 until 32)
+        yield storeVals((cy * 32 + y) * 64 + cx * 32 + x)).sum).toMap
+    assert(sums == written)
+  }
+
+  test("readMultiscales levels are the omezarr scan: one pushed-down BatchScan, no exchange") {
+    val lvl = OmeZarrIO.readMultiscales(spark, storePath).levels(1)
+    val plan = lvl.chunks.queryExecution.executedPlan
+    val scans = collect(plan) { case b: BatchScanExec => b }
+    assert(scans.size == 1, plan.toString)
+    val scan = scans.head.scan.asInstanceOf[OmeZarrScan]
+    assert(scan.pushedFilters.exists(_.references.contains("scale")), plan.toString)
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, plan.toString)
+    assert(lvl.chunks.count() == 1)
+  }
+
+  test("a directory with no OME-Zarr metadata fails naming the path") {
+    val empty = Files.createTempDirectory("dsv2empty").toString
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("omezarr").load(empty).collect())
+    assert(e.getMessage.contains(s"no OME-Zarr metadata at $empty"))
   }
 }

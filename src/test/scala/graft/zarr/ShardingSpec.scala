@@ -23,6 +23,26 @@ class ShardingSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](Sharding.parseShard(corrupted, 4))
   }
 
+  test("parseShard refuses an index entry whose range leaves the payload region") {
+    val shard = Sharding.buildShard(4, Map(0 -> Array[Byte](1, 2, 3), 2 -> Array[Byte](9, 8)))
+    val idxStart = shard.length - Sharding.indexSize(4)
+    // stretch entry 2 (offset 3, length 2) one byte into the index, and
+    // re-sign the index so only the range check can catch it
+    def tampered(entry: Int, length: Long): Array[Byte] = {
+      val out = shard.clone()
+      val bb = java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.putLong(idxStart + entry * 16 + 8, length)
+      val crc = new java.util.zip.CRC32C
+      crc.update(out, idxStart, 4 * 16)
+      bb.putInt(out.length - 4, crc.getValue.toInt)
+      out
+    }
+    assert(Sharding.parseShard(tampered(2, 2), 4)(2).toSeq == Seq[Byte](9, 8))
+    assertThrows[IllegalArgumentException](Sharding.parseShard(tampered(2, idxStart - 3 + 1), 4))
+    assertThrows[IllegalArgumentException](Sharding.parseShard(tampered(2, -2), 4))
+    assertThrows[IllegalArgumentException](Sharding.parseShard(tampered(0, 1L << 40), 4))
+  }
+
   test("inner index math round-trips") {
     val cps = Seq(2, 4)
     for (a <- 0 until 2; b <- 0 until 4) {
