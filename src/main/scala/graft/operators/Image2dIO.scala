@@ -23,7 +23,7 @@ object Image2dIO {
   def read(spark: SparkSession, path: String,
       chunkShape: Option[Seq[Int]] = None): VolumeFormats.VolumeImage = {
     val store = new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession()))
-    val size = store.objectSize("")
+    val size = store.size("")
     require(size <= MaxBytes,
       s"$path is $size bytes — 2-D bitmap decode is driver-side and " +
         s"capped at $MaxBytes; convert to TIFF or zarr for parallel ingest")

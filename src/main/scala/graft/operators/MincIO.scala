@@ -197,7 +197,7 @@ object MincIO {
     val gz = path.toLowerCase.endsWith(".gz")
     val headerBytes =
       if (gz) VolumeFormats.gunzip(store.readBytes(""))
-      else store.readRange("", 0L, math.min(store.objectSize(""), 1 << 20).toInt)
+      else store.readRange("", 0L, math.min(store.size(""), 1 << 20).toInt)
     // a .mnc with the HDF5 signature is MINC2 — route to the HDF5
     // subset reader instead of refusing (gz MINC2 stays out of scope:
     // the HDF5 path positioned-reads, which gzip can't serve)

@@ -17,8 +17,9 @@ import ChunkOps.ChunkRow
   *
   * Read: the driver parses metadata only ([[ZarrArray.openPyramid]]);
   * each level is the `spark.read.format("omezarr")` scan of its scale
-  * (`graft.sources.OmeZarrTableProvider`), one partition per stored
-  * chunk or shard object, fetched and decoded lazily by executors.
+  * (`graft.sources.OmeZarrTableProvider`), whose partitions each hold a
+  * run of the level's stored chunk or shard objects, packed by Spark's
+  * file-split rule and fetched and decoded lazily by executors.
   */
 object OmeZarrIO {
 

@@ -97,7 +97,7 @@ object ScannerFormats {
       chunkShape: Option[Seq[Int]] = None): VolumeImage = {
     val hconf = Some(SerializableHadoopConf.fromActiveSession())
     val store = new ZarrStore(path, hconf)
-    val size = store.objectSize("")
+    val size = store.size("")
     val h = parsePicHeader(store.readRange("", 0L, math.min(size, 76L).toInt))
     val itemSize = if (h.uint8) 1 else 2
     val dataEnd = 76L + h.nx.toLong * h.ny * h.npic * itemSize
@@ -208,7 +208,7 @@ object ScannerFormats {
       chunkShape: Option[Seq[Int]] = None): VolumeImage = {
     val hconf = Some(SerializableHadoopConf.fromActiveSession())
     val store = new ZarrStore(path, hconf)
-    val size = store.objectSize("")
+    val size = store.size("")
     val (fields, _) = parseFdfFields(store.readRange("", 0L, math.min(size, 32 * 1024L).toInt))
     val matrix = fdfList(fields.getOrElse("matrix",
       throw new IllegalArgumentException("FDF without matrix[] field")))

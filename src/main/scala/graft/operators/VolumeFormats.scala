@@ -495,7 +495,7 @@ object VolumeFormats {
     */
   private[operators] def probeHeader(spark: SparkSession, path: String): Array[Byte] = {
     val store = new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession()))
-    val size = store.objectSize("")
+    val size = store.size("")
     val n = math.min(size, 64 * 1024L).toInt
     store.readRange("", 0L, n)
   }

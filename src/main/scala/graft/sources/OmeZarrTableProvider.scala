@@ -3,12 +3,15 @@ package graft.sources
 import java.util
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -22,10 +25,11 @@ import scala.jdk.CollectionConverters._
   *
   * {{{ spark.read.format("omezarr").load("/path/img.zarr") }}}
   *
-  * → the chunk table `(scale, chunk_idx, origin, shape, dtype, data)`,
-  * one InputPartition per stored chunk or shard object. This is the one
-  * OME-Zarr read path: `OmeZarrIO.readMultiscales` reads each level
-  * through it.
+  * → the chunk table `(scale, chunk_idx, origin, shape, dtype, data)`.
+  * Each InputPartition holds a run of one level's stored chunk or shard
+  * objects, packed by the split rule of Spark's file scans (see
+  * [[OmeZarrScan]]). This is the one OME-Zarr read path:
+  * `OmeZarrIO.readMultiscales` reads each level through it.
   *
   * Scale-pruning: predicates on `scale` push into partition planning
   * (`SupportsPushDownFilters`), so `WHERE scale = 3` lists only that
@@ -71,11 +75,11 @@ class OmeZarrTable(path: String) extends Table
     new OmeZarrWriteBuilder(path, info.options.asScala.toMap)
 }
 
-/** One unit of scan work: one stored object of `array` at grid
-  * position `idx` — a plain chunk, or a whole shard whose reader emits
-  * one row per in-array inner chunk.
+/** One unit of scan work: the stored objects of `array` at grid
+  * positions `objs`, in row-major order — plain chunks, or whole shards
+  * whose reader emits one row per in-array inner chunk.
   */
-final case class OmeZarrInputPartition(scale: Int, idx: Seq[Int], array: ZarrArray)
+final case class OmeZarrInputPartition(scale: Int, objs: Seq[Seq[Int]], array: ZarrArray)
     extends InputPartition
 
 class OmeZarrScanBuilder(path: String)
@@ -116,15 +120,15 @@ object OmeZarrScan {
     None
 
   /** The session's Hadoop conf as a broadcast, made once per distinct
-    * conf. The reader factory is deserialized with every task and a
-    * scan runs one task per stored object; deserializing the conf
-    * (~1000 entries, ~100 KB) would dominate a small chunk's task, and a
-    * broadcast per scan would pile copies up on the heap. Compared by
-    * content, so a changed setting (an object store credential) is
-    * broadcast anew.
+    * conf. The reader factory is deserialized with every task, and a
+    * small scan (one tile, one well field) is one task over one or two
+    * objects; deserializing the conf (~1000 entries, ~100 KB) would
+    * dominate it, and a broadcast per scan would pile copies up on the
+    * heap. Compared by content, so a changed setting (an object store
+    * credential) is broadcast anew.
     */
   private def hadoopConf(): Broadcast[SerializableHadoopConf] = synchronized {
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val sc = SparkSession.active.sparkContext
     val entries = sc.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue).toMap
     shared match {
       case Some((c, e, b)) if (c eq sc) && e == entries => b
@@ -158,7 +162,7 @@ class OmeZarrScan(path: String, val pushedFilters: Seq[Filter],
     planned.foreach { p0 =>
       val p = p0.asInstanceOf[OmeZarrInputPartition]
       val a = p.array
-      val objRows = a.slots(p.idx).size.toLong
+      val objRows = p.objs.map(a.slots(_).size.toLong).sum
       val payloadBytes =
         if (!wantPayload) 0L else a.chunks.map(_.toLong).product * Dtypes.itemSize(a.dtype)
       rows += objRows
@@ -176,14 +180,29 @@ class OmeZarrScan(path: String, val pushedFilters: Seq[Filter],
     }
   }
 
-  /** One partition per stored object of every level the pushed
-    * `scale` predicates keep.
+  /** The stored objects of every level the pushed `scale` predicates
+    * keep, packed into partitions by the rule Spark's file scans use
+    * (`FilePartition.maxSplitBytes` / `getFilePartitions`): an object
+    * weighs its decoded bytes (grid-chunk volume × item size, known
+    * from metadata) plus `spark.sql.files.openCostInBytes`; the split
+    * size is the total over the leaf parallelism, capped by
+    * `spark.sql.files.maxPartitionBytes`; objects are walked in
+    * row-major order and a partition closes when the next object would
+    * pass the split size, or at a level's end. Every object of a level
+    * weighs the same, so the walk is a fixed group size per level.
     */
   private lazy val planned: Array[InputPartition] = {
     val store = new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession()))
     val keep = (s: Int) => pushedFilters.forall(OmeZarrScan.scalePredicate(_).forall(_(s)))
-    ZarrArray.openPyramid(store, scales = keep)._2.flatMap { case (i, a) =>
-      a.objects.map(idx => OmeZarrInputPartition(i, idx, a): InputPartition)
+    val levels = ZarrArray.openPyramid(store, scales = keep)._2
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val objBytes = (a: ZarrArray) => a.gridChunks.map(_.toLong).product * Dtypes.itemSize(a.dtype)
+    val maxSplit = FilePartition.maxSplitBytes(SparkSession.active,
+      levels.map { case (_, a) => a.objects.size * (objBytes(a) + openCost) }.sum)
+    levels.flatMap { case (i, a) =>
+      val perPart = math.max(1L, (maxSplit - objBytes(a)) / (objBytes(a) + openCost) + 1)
+      a.objects.grouped(math.min(perPart, Int.MaxValue).toInt)
+        .map(objs => OmeZarrInputPartition(i, objs, a): InputPartition)
     }.toArray
   }
 
@@ -202,8 +221,10 @@ class OmeZarrReaderFactory(path: String, required: StructType,
     // semantics make every in-array chunk a row
     val needData = required.fieldNames.contains("data")
     val rows: Iterator[(Seq[Int], Array[Byte])] =
-      if (needData) a.read(new ZarrStore(path, Some(hconf.value)), p.idx)
-      else a.slots(p.idx).map { case (_, idx) => (idx, null) }
+      if (needData) {
+        val store = new ZarrStore(path, Some(hconf.value))
+        p.objs.iterator.flatMap(a.read(store, _))
+      } else p.objs.iterator.flatMap(a.slots(_).map { case (_, idx) => (idx, null) })
     new PartitionReader[InternalRow] {
       private var current: (Seq[Int], Array[Byte]) = _
 

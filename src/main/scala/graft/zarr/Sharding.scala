@@ -22,11 +22,11 @@ object Sharding {
     */
   def buildShard(nInner: Int, encoded: Map[Int, Array[Byte]]): Array[Byte] = {
     val payloadSize = encoded.values.map(_.length.toLong).sum
-    val indexSize = nInner * 16 + 4
-    require(payloadSize + indexSize <= Int.MaxValue,
-      s"shard of ${payloadSize + indexSize} bytes exceeds the 2 GiB single-object " +
+    val total = payloadSize + indexSize(nInner)
+    require(total <= Int.MaxValue,
+      s"shard of $total bytes exceeds the 2 GiB single-object " +
         "limit of this writer — reduce chunks_per_shard or the chunk size")
-    val out = ByteBuffer.allocate((payloadSize + indexSize).toInt)
+    val out = ByteBuffer.allocate(total.toInt)
       .order(ByteOrder.LITTLE_ENDIAN)
     val offsets = new Array[Long](nInner)
     val sizes = new Array[Long](nInner)
@@ -53,35 +53,15 @@ object Sharding {
   /** Byte length of a shard index (+crc32c footer). */
   def indexSize(nInner: Int): Int = nInner * 16 + 4
 
-  /** Parse just a shard index footer (as returned by
-    * `ZarrStore.readTail(key, indexSize(n))`): the flat positions of
-    * PRESENT inner chunks, without touching payload bytes.
-    */
-  def presentPositions(footer: Array[Byte], nInner: Int): Seq[Int] = {
-    require(footer.length == indexSize(nInner), s"bad footer size ${footer.length}")
-    // same integrity bar as parseShard: a corrupt index must fail the
-    // metadata path too, not silently yield a wrong row set
-    val crc = new CRC32C
-    crc.update(footer, 0, nInner * 16)
-    val stored = ByteBuffer.wrap(footer, nInner * 16, 4)
-      .order(ByteOrder.LITTLE_ENDIAN).getInt
-    require(crc.getValue.toInt == stored, "shard index crc32c mismatch")
-    val bb = ByteBuffer.wrap(footer, 0, nInner * 16).order(ByteOrder.LITTLE_ENDIAN)
-    (0 until nInner).flatMap { i =>
-      val off = bb.getLong(); bb.getLong()
-      if (off == Missing) None else Some(i)
-    }
-  }
-
   /** Parse a shard: returns innerPosition → encoded bytes. Verifies
     * the index checksum, and refuses an entry whose byte range is
     * negative or leaves the payload region (a range reaching into the
     * index, or past the object, would decode as wrong voxels).
     */
   def parseShard(shard: Array[Byte], nInner: Int): Map[Int, Array[Byte]] = {
-    val indexSize = nInner * 16 + 4
-    require(shard.length >= indexSize, s"shard too small: ${shard.length} < $indexSize")
-    val idxStart = shard.length - indexSize
+    require(shard.length >= indexSize(nInner),
+      s"shard too small: ${shard.length} < ${indexSize(nInner)}")
+    val idxStart = shard.length - indexSize(nInner)
     val bb = ByteBuffer.wrap(shard, idxStart, nInner * 16).order(ByteOrder.LITTLE_ENDIAN)
     val crc = new CRC32C
     crc.update(shard, idxStart, nInner * 16)

@@ -59,6 +59,9 @@ final class ZarrStore(val root: String, hconf: Option[SerializableHadoopConf] = 
 
   def exists(key: String): Boolean = fs.exists(p(key))
 
+  /** Object length in bytes — header probes on large raw volumes cap
+    * their first range read to this instead of reading blind.
+    */
   def size(key: String): Long = fs.getFileStatus(p(key)).getLen
 
   def readBytes(key: String): Array[Byte] = {
@@ -81,11 +84,6 @@ final class ZarrStore(val root: String, hconf: Option[SerializableHadoopConf] = 
     try Some(readBytes(key))
     catch { case _: java.io.FileNotFoundException => None }
 
-  /** Object length in bytes — header probes on large raw volumes cap
-    * their first range read to this instead of reading blind.
-    */
-  def objectSize(key: String): Long = fs.getFileStatus(p(key)).getLen
-
   /** Positioned range read — executors pull just their slice of a
     * large object (NIfTI chunk ingest, shard interiors) instead of the
     * whole file.
@@ -95,21 +93,6 @@ final class ZarrStore(val root: String, hconf: Option[SerializableHadoopConf] = 
     try {
       val buf = new Array[Byte](length)
       in.readFully(offset, buf)
-      buf
-    } finally in.close()
-  }
-
-  /** Read the trailing `length` bytes of an object (seek + readFully)
-    * — shard indexes live in the footer, so metadata-only scans never
-    * pull chunk payloads.
-    */
-  def readTail(key: String, length: Int): Array[Byte] = {
-    val status = fs.getFileStatus(p(key))
-    val in = fs.open(p(key))
-    try {
-      val off = math.max(0L, status.getLen - length)
-      val buf = new Array[Byte](math.min(length.toLong, status.getLen).toInt)
-      in.readFully(off, buf)
       buf
     } finally in.close()
   }

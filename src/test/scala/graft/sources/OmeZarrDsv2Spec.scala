@@ -6,6 +6,7 @@ import graft.operators.{ChunkOps, MultiscaleBuilder, OmeZarrIO}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -35,15 +36,92 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(r.getAs[Array[Byte]]("data").length == 32 * 32 * 2)
   }
 
+  /** The input partitions the physical scan of `df` plans. */
+  private def plannedParts(df: DataFrame): Seq[OmeZarrInputPartition] =
+    collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }.head
+      .scan.toBatch.planInputPartitions().toSeq.map(_.asInstanceOf[OmeZarrInputPartition])
+
+  private def leafParallelism: Int =
+    spark.conf.getOption("spark.sql.leafNodeDefaultParallelism").map(_.toInt)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+
+  /** A one-level v0.4 uint16 store `side`² with 32² chunks: (path, voxels). */
+  private def singleLevelStore(side: Int): (String, Array[Double]) = {
+    val m = ImageMeta(Seq("y", "x"), Seq(side, side), Seq(32, 32), "uint16",
+      Map("y" -> 1.0, "x" -> 1.0), Map("y" -> 0.0, "x" -> 0.0))
+    val vals = Array.tabulate(side * side)(i => (i % 4093).toDouble)
+    val ms = MultiscaleBuilder.Multiscale(Seq(
+      MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))), Method.ItkwasmBinShrink)
+    val dir = Files.createTempDirectory("dsv2pack").toString + "/img.zarr"
+    OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4")
+    (dir, vals)
+  }
+
   test("scale predicate prunes partitions (pushdown)") {
     val df = spark.read.format("omezarr").load(storePath).filter(col("scale") === 0)
     assert(df.count() == 4)
-    // the physical scan itself must plan only scale-0 partitions
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.get
-    assert(scan.inputRDD.getNumPartitions == 4,
-      s"expected 4 pruned partitions, got ${scan.inputRDD.getNumPartitions}")
+    // the physical scan itself plans only scale-0 objects, each once
+    val parts = plannedParts(df)
+    assert(parts.forall(_.scale == 0), parts)
+    val objs = parts.flatMap(_.objs)
+    assert(objs.size == 4 && objs.toSet == Set(Seq(0, 0), Seq(0, 1), Seq(1, 0), Seq(1, 1)), objs)
+  }
+
+  test("scan packs a 64-object level into at most leaf-parallelism partitions, row-major") {
+    val (dir, vals) = singleLevelStore(256)
+    val df = spark.read.format("omezarr").load(dir)
+    val parts = plannedParts(df)
+    assert(parts.size <= leafParallelism, s"${parts.size} partitions for $leafParallelism cores")
+    // every object in exactly one partition, partitions in row-major order
+    assert(parts.flatMap(_.objs) == graft.zarr.ZarrStore.gridPositions(Seq(8, 8)).toSeq)
+    val rows = df.collect()
+    assert(rows.length == 64)
+    val sums = rows.map { r =>
+      r.getAs[scala.collection.Seq[Int]]("chunk_idx").toSeq -> graft.zarr.ZarrStore
+        .decodeToDoubles(r.getAs[Array[Byte]]("data"), r.getAs[String]("dtype")).sum
+    }.toMap
+    val written = (for (cy <- 0 until 8; cx <- 0 until 8) yield Seq(cy, cx) ->
+      (for (y <- 0 until 32; x <- 0 until 32)
+        yield vals((cy * 32 + y) * 256 + cx * 32 + x)).sum).toMap
+    assert(sums == written)
+  }
+
+  test("spark.sql.files.maxPartitionBytes below one object's size plans one object per partition") {
+    val (dir, vals) = singleLevelStore(256)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, (32 * 32 * 2 / 2).toString) // half a decoded 32² uint16 chunk
+    try {
+      val df = spark.read.format("omezarr").load(dir)
+      val parts = plannedParts(df)
+      assert(parts.size == 64 && parts.forall(_.objs.size == 1), parts.map(_.objs.size))
+      assert(df.count() == 64)
+      assert(df.collect().map(r => graft.zarr.ZarrStore.decodeToDoubles(
+        r.getAs[Array[Byte]]("data"), r.getAs[String]("dtype")).sum).sum == vals.sum)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("packed sharded scan with clipped edge shards: estimated rows equal count") {
+    // 100×76, 16² chunks, 2×2 chunks/shard → 4×3 shards of 32², whose
+    // edge shards hold slots past the array; 7×5 = 35 inner chunks
+    val m = ImageMeta(Seq("y", "x"), Seq(100, 76), Seq(16, 16), "uint16",
+      Map("y" -> 1.0, "x" -> 1.0), Map("y" -> 0.0, "x" -> 0.0))
+    val vals = Array.tabulate(100 * 76)(i => (i % 3001).toDouble)
+    val ms = MultiscaleBuilder.Multiscale(Seq(
+      MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))), Method.ItkwasmBinShrink)
+    val dir = Files.createTempDirectory("dsv2packshard").toString + "/img.zarr"
+    OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
+      compressor = Some("zstd"), chunksPerShard = Some(Seq(2, 2)))
+    val df = spark.read.format("omezarr").load(dir)
+    val parts = plannedParts(df)
+    assert(parts.flatMap(_.objs).size == 12)
+    if (leafParallelism < 12) assert(parts.exists(_.objs.size > 1), parts.map(_.objs.size))
+    val b = new OmeZarrScanBuilder(dir)
+    b.pruneColumns(OmeZarrTable.Schema)
+    val est = b.build().asInstanceOf[OmeZarrScan].estimateStatistics().numRows().getAsLong
+    assert(df.count() == 35 && est == 35)
+    assert(df.collect().map(r => graft.zarr.ZarrStore.decodeToDoubles(
+      r.getAs[Array[Byte]]("data"), r.getAs[String]("dtype")).sum).sum == vals.sum)
   }
 
   test("column pruning skips payload fetch") {

@@ -13,10 +13,6 @@ class ShardingSpec extends SparkSpec {
     val back = Sharding.parseShard(shard, 4)
     assert(back.keySet == Set(0, 2))
     assert(back(0).toSeq == Seq[Byte](1, 2, 3) && back(2).toSeq == Seq[Byte](9, 8))
-    // footer-only present-chunk listing (sparse-shard tooling reads
-    // just indexSize bytes from the object tail, never the payload)
-    val footer = shard.takeRight(Sharding.indexSize(4))
-    assert(Sharding.presentPositions(footer, 4) == Seq(0, 2))
     // corrupt the index → crc failure
     val corrupted = shard.clone()
     corrupted(shard.length - 10) = (corrupted(shard.length - 10) ^ 0xff).toByte

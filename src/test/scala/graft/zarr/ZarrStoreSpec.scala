@@ -61,7 +61,6 @@ class ZarrStoreSpec extends AnyFunSuite {
     assert(st.size("a/0/0") == 100)
     assert(st.readBytes("a/0/0").toSeq == (0 until 100).map(_.toByte))
     assert(st.readRange("a/0/0", 10, 5).toSeq == (10 until 15).map(_.toByte))
-    assert(st.readTail("a/0/0", 4).toSeq == (96 until 100).map(_.toByte))
     assert(st.readString(".zgroup").contains("zarr_format"))
     assert(st.list("").toSet == Set(".zgroup", "a/0/0"))
     st.delete("a")
@@ -87,7 +86,6 @@ class ZarrStoreSpec extends AnyFunSuite {
       assert(st.size("a/0/0") == 100)
       assert(st.readBytes("a/0/0").toSeq == (0 until 100).map(_.toByte))
       assert(st.readRange("a/0/0", 10, 5).toSeq == (10 until 15).map(_.toByte))
-      assert(st.readTail("a/0/0", 4).toSeq == (96 until 100).map(_.toByte))
       assert(st.list("").toSet == Set(".zgroup", "a/0/0"))
     } finally st.delete("")
   }
