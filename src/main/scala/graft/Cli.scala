@@ -19,7 +19,10 @@ import graft.zarr.SparkSessions
   *       [--scale=x=1.4,y=1.4] [--translation=x=0.0,y=0.0]
   *       [--units=x=micrometer,y=micrometer]
   *       [--chunks=64,64] [--output-scale=0] [--validate=true]
-  *       [--enable-rfc=4] [--chunk-store=<path>]
+  *       [--enable-rfc=4] [--ome-series=0] [--hdf5-dataset=<name>]
+  *
+  * Any other flag is refused with an error that names it and lists
+  * the flags above.
   *
   * Flag parity with the reference CLI's metadata/processing groups
   * (`cli.py:178-266`): `--dims` renames axes positionally; `--scale`
@@ -35,6 +38,11 @@ import graft.zarr.SparkSessions
   * absent here (Converters documents the boundary).
   */
 object Cli {
+
+  /** The `--key=value` flags the convert path reads. */
+  private val ConvertFlags = Seq("method", "version", "compressor", "chunks-per-shard",
+    "dims", "name", "scale", "translation", "units", "chunks", "output-scale", "validate",
+    "enable-rfc", "ome-series", "hdf5-dataset")
 
   /** Parse "x=1.4,y=2" into an ordered map. */
   private def kvMap(s: String): Seq[(String, String)] =
@@ -239,10 +247,11 @@ object Cli {
 
     val input = args(0)
     val output = args(1)
-    val opts = args.drop(2).flatMap { a =>
+    val opts = args.drop(2).map { a =>
       a.stripPrefix("--").split("=", 2) match {
-        case Array(k, v) => Some(k -> v)
-        case _ => None
+        case Array(k, v) if a.startsWith("--") && ConvertFlags.contains(k) => k -> v
+        case _ => throw new IllegalArgumentException(s"unknown flag '$a'; the convert " +
+          s"path reads ${ConvertFlags.map(f => s"--$f=").mkString(", ")}")
       }
     }.toMap
 
@@ -429,7 +438,6 @@ object Cli {
       version = opts.getOrElse("version", "0.4"),
       compressor = Some(opts.getOrElse("compressor", "zstd")),
       chunksPerShard = opts.get("chunks-per-shard").map(_.split(",").map(_.toInt).toSeq),
-      chunkStore = opts.get("chunk-store"),
       enabledRfcs = enabledRfcs)
     println(s"wrote ${counts.length} scales (${counts.sum} chunks) to $output")
   }

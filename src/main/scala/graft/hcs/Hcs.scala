@@ -16,8 +16,9 @@ import scala.jdk.CollectionConverters._
   * DataFrames joined to the image catalog — keyed lookup is a
   * broadcast-joinable filter instead of the reference's linear scan +
   * LRU cache (Spark's block manager caches hot metadata instead).
-  * `writeWellImage` is the incremental at-least-once upsert the
-  * streaming ingest path (graft.streaming.HcsIngest) drives per batch.
+  * `upsertWellsMeta` is the incremental at-least-once well-metadata
+  * upsert the streaming ingest (`graft.streaming.Streams.hcsIngest`)
+  * runs once per micro-batch.
   */
 object Hcs {
 
@@ -173,30 +174,6 @@ object Hcs {
     val store = openStore(path)
     store.writeString(".zgroup", ZarrJson.groupDoc(2))
     store.writeString(".zattrs", plateAttrs(plate))
-  }
-
-  /** Upsert one field-of-view image into a well: merge the image into
-    * the well's image list (last-writer-wins on path — the reference's
-    * implicit semantics), then write the pyramid under
-    * `<well>/<image>/`. Idempotent: re-running with the same field
-    * converges to the same state (at-least-once safe).
-    */
-  def writeWellImage(spark: SparkSession, path: String, wellPath: String,
-      imagePath: String, ms: MultiscaleBuilder.Multiscale,
-      acquisition: Option[Int] = None): Unit = {
-    val store = openStore(path)
-    // ensure row + well group docs
-    val rowGroup = wellPath.split("/").head
-    store.writeString(s"$rowGroup/.zgroup", ZarrJson.groupDoc(2))
-    store.writeString(s"$wellPath/.zgroup", ZarrJson.groupDoc(2))
-    // merge-upsert well attrs image list
-    val existing = readWellMeta(store, wellPath).getOrElse(Well(Seq.empty))
-    val merged = Well(
-      existing.images.filterNot(_.path == imagePath) :+ WellImage(imagePath, acquisition),
-      existing.version)
-    store.writeString(s"$wellPath/.zattrs", wellAttrs(merged))
-    // nested pyramid write
-    OmeZarrIO.writeMultiscales(spark, s"$path/$wellPath/$imagePath", ms)
   }
 
   /** Batch well-metadata upsert: one driver pass covering every field

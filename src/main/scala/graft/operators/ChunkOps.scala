@@ -40,28 +40,11 @@ object ChunkOps {
     * ingest of whole-field payloads without driver materialization).
     */
   def decompose(values: Array[Double], meta: ImageMeta): Seq[ChunkRow] = {
-    val grid = ZarrStore.chunkGrid(meta.shape, meta.chunks)
-    val shapeArr = meta.shape.toArray
-    val strides = NdKernels.strides(shapeArr.map(_.toInt))
-    ZarrStore.gridPositions(grid).map { idx =>
+    val shape = meta.shape.map(_.toInt).toArray
+    ZarrStore.gridPositions(ZarrStore.chunkGrid(meta.shape, meta.chunks)).map { idx =>
       val cShape = ZarrStore.chunkShapeAt(meta.shape, meta.chunks, idx)
       val cOrigin = ZarrStore.chunkOriginAt(meta.chunks, idx)
-      val block = new Array[Double](cShape.product)
-      var flat = 0
-      val pos = new Array[Int](cShape.length)
-      while (flat < block.length) {
-        var src = 0
-        var d = 0
-        while (d < pos.length) { src += (cOrigin(d).toInt + pos(d)) * strides(d); d += 1 }
-        block(flat) = values(src)
-        var dd = pos.length - 1
-        var carry = true
-        while (carry && dd >= 0) {
-          pos(dd) += 1
-          if (pos(dd) == cShape(dd)) { pos(dd) = 0; dd -= 1 } else carry = false
-        }
-        flat += 1
-      }
+      val block = sliceBlock(values, shape, cOrigin.map(_.toInt).toArray, cShape.toArray)
       ChunkRow(idx, cOrigin, cShape, ZarrStore.encodeFromDoubles(block, meta.dtype))
     }.toSeq
   }
@@ -78,25 +61,10 @@ object ChunkOps {
   /** Collect a chunk table back to one C-order array (tests only). */
   def toArray(ds: Dataset[ChunkRow], meta: ImageMeta): Array[Double] = {
     val out = new Array[Double](meta.shape.product.toInt)
-    val strides = NdKernels.strides(meta.shape.map(_.toInt).toArray)
+    val shape = meta.shape.map(_.toInt).toArray
     ds.collect().foreach { c =>
-      val vals = ZarrStore.decodeToDoubles(c.data, meta.dtype)
-      val cShape = c.shape.toArray
-      var flat = 0
-      val pos = new Array[Int](cShape.length)
-      while (flat < vals.length) {
-        var dst = 0
-        var d = 0
-        while (d < pos.length) { dst += (c.origin(d).toInt + pos(d)) * strides(d); d += 1 }
-        out(dst) = vals(flat)
-        var dd = pos.length - 1
-        var carry = true
-        while (carry && dd >= 0) {
-          pos(dd) += 1
-          if (pos(dd) == cShape(dd)) { pos(dd) = 0; dd -= 1 } else carry = false
-        }
-        flat += 1
-      }
+      placeBlock(out, shape, c.origin.map(_.toInt).toArray, c.shape.toArray,
+        ZarrStore.decodeToDoubles(c.data, meta.dtype))
     }
     out
   }
@@ -225,41 +193,11 @@ object ChunkOps {
     // `force` re-blocks even when sizes match — used to restore the
     // regular grid after ops that rebase origins (slice)
     if (newChunks == meta.chunks && !force) return (meta, ds)
-    val outMeta = meta.copy(chunks = newChunks)
-    val shape = meta.shape
-    val dtype = meta.dtype
-    val nd = shape.length
-    val pieces = ds.flatMap { chunk =>
-      val vals = ZarrStore.decodeToDoubles(chunk.data, dtype)
-      // target chunk index range intersecting this chunk, per dim
-      val lo = Array.tabulate(nd)(d => (chunk.origin(d) / newChunks(d)).toInt)
-      val hi = Array.tabulate(nd)(d =>
-        ((chunk.origin(d) + chunk.shape(d) - 1) / newChunks(d)).toInt)
-      ZarrStore.gridPositions(Array.tabulate(nd)(d => hi(d) - lo(d) + 1)).map { rel =>
-        val tIdx = Array.tabulate(nd)(d => lo(d) + rel(d))
-        // overlap region in global coords
-        val gLo = Array.tabulate(nd)(d => math.max(chunk.origin(d), tIdx(d).toLong * newChunks(d)))
-        val gHi = Array.tabulate(nd)(d => math.min(chunk.origin(d) + chunk.shape(d),
-          math.min(shape(d), (tIdx(d) + 1).toLong * newChunks(d))))
-        val pShape = Array.tabulate(nd)(d => (gHi(d) - gLo(d)).toInt)
-        val srcOff = Array.tabulate(nd)(d => (gLo(d) - chunk.origin(d)).toInt)
-        val destPos = Array.tabulate(nd)(d => (gLo(d) - tIdx(d).toLong * newChunks(d)).toInt)
-        val sub = sliceBlock(vals, chunk.shape.toArray, srcOff, pShape)
-        Piece(tIdx.mkString(","), tIdx.toSeq, destPos.toSeq, pShape.toSeq,
-          ZarrStore.encodeFromDoubles(sub, dtype))
-      }
-    }
-    val assembled = pieces.groupByKey(_.targetKey).mapGroups { (_, it) =>
-      val ps = it.toSeq
-      val tIdx = ps.head.targetIdx
-      val tShape = ZarrStore.chunkShapeAt(shape, newChunks, tIdx)
-      val tOrigin = ZarrStore.chunkOriginAt(newChunks, tIdx)
-      val block = new Array[Double](tShape.product)
-      ps.foreach(p => placeBlock(block, tShape.toArray, p.destPos.toArray, p.shape.toArray,
-        ZarrStore.decodeToDoubles(p.data, dtype)))
-      ChunkRow(tIdx, tOrigin, tShape, ZarrStore.encodeFromDoubles(block, dtype))
-    }
-    (outMeta, assembled)
+    val (shape, dtype) = (meta.shape, meta.dtype)
+    val assembled = ds.flatMap(cutPieces(_, shape, newChunks, dtype))
+      .groupByKey(_.targetKey)
+      .mapGroups((_, ps) => assemble(ps.toSeq, shape, newChunks, dtype))
+    (meta.copy(chunks = newChunks), assembled)
   }
 
   /** Re-block directly into a key-partitioned RDD — the stencil path's
@@ -275,82 +213,91 @@ object ChunkOps {
     val outMeta = meta.copy(chunks = newChunks)
     if (newChunks == meta.chunks)
       return (outMeta, ds.rdd.map(c => (c.chunkIdx.mkString(","), c)).partitionBy(part))
-    val shape = meta.shape
-    val dtype = meta.dtype
-    val nd = shape.length
-    val pieces = ds.rdd.flatMap { chunk =>
-      val vals = ZarrStore.decodeToDoubles(chunk.data, dtype)
-      val lo = Array.tabulate(nd)(d => (chunk.origin(d) / newChunks(d)).toInt)
-      val hi = Array.tabulate(nd)(d =>
-        ((chunk.origin(d) + chunk.shape(d) - 1) / newChunks(d)).toInt)
-      ZarrStore.gridPositions(Array.tabulate(nd)(d => hi(d) - lo(d) + 1)).map { rel =>
-        val tIdx = Array.tabulate(nd)(d => lo(d) + rel(d))
-        val gLo = Array.tabulate(nd)(d => math.max(chunk.origin(d), tIdx(d).toLong * newChunks(d)))
-        val gHi = Array.tabulate(nd)(d => math.min(chunk.origin(d) + chunk.shape(d),
-          math.min(shape(d), (tIdx(d) + 1).toLong * newChunks(d))))
-        val pShape = Array.tabulate(nd)(d => (gHi(d) - gLo(d)).toInt)
-        val srcOff = Array.tabulate(nd)(d => (gLo(d) - chunk.origin(d)).toInt)
-        val destPos = Array.tabulate(nd)(d => (gLo(d) - tIdx(d).toLong * newChunks(d)).toInt)
-        val sub = sliceBlock(vals, chunk.shape.toArray, srcOff, pShape)
-        val key = tIdx.mkString(",")
-        key -> Piece(key, tIdx.toSeq, destPos.toSeq, pShape.toSeq,
-          ZarrStore.encodeFromDoubles(sub, dtype))
-      }
-    }
-    val assembled = pieces.groupByKey(part).mapValues { ps0 =>
-      val ps = ps0.toSeq
-      val tIdx = ps.head.targetIdx
-      val tShape = ZarrStore.chunkShapeAt(shape, newChunks, tIdx)
-      val tOrigin = ZarrStore.chunkOriginAt(newChunks, tIdx)
-      val block = new Array[Double](tShape.product)
-      ps.foreach(p => placeBlock(block, tShape.toArray, p.destPos.toArray, p.shape.toArray,
-        ZarrStore.decodeToDoubles(p.data, dtype)))
-      ChunkRow(tIdx, tOrigin, tShape, ZarrStore.encodeFromDoubles(block, dtype))
-    }
+    val (shape, dtype) = (meta.shape, meta.dtype)
+    val assembled = ds.rdd
+      .flatMap(cutPieces(_, shape, newChunks, dtype).map(p => p.targetKey -> p))
+      .groupByKey(part)
+      .mapValues(ps => assemble(ps.toSeq, shape, newChunks, dtype))
     (outMeta, assembled)
+  }
+
+  /** The re-block's cut: the pieces of `chunk` that fall in each chunk
+    * of the `newChunks` grid it overlaps, dtype-encoded.
+    */
+  private def cutPieces(chunk: ChunkRow, shape: Seq[Long], newChunks: Seq[Int],
+      dtype: String): Iterator[Piece] = {
+    val nd = shape.length
+    val vals = ZarrStore.decodeToDoubles(chunk.data, dtype)
+    // target chunk index range intersecting this chunk, per dim
+    val lo = Array.tabulate(nd)(d => (chunk.origin(d) / newChunks(d)).toInt)
+    val hi = Array.tabulate(nd)(d =>
+      ((chunk.origin(d) + chunk.shape(d) - 1) / newChunks(d)).toInt)
+    ZarrStore.gridPositions(Array.tabulate(nd)(d => hi(d) - lo(d) + 1)).map { rel =>
+      val tIdx = Array.tabulate(nd)(d => lo(d) + rel(d))
+      // overlap region in global coords
+      val gLo = Array.tabulate(nd)(d => math.max(chunk.origin(d), tIdx(d).toLong * newChunks(d)))
+      val gHi = Array.tabulate(nd)(d => math.min(chunk.origin(d) + chunk.shape(d),
+        math.min(shape(d), (tIdx(d) + 1).toLong * newChunks(d))))
+      val pShape = Array.tabulate(nd)(d => (gHi(d) - gLo(d)).toInt)
+      val srcOff = Array.tabulate(nd)(d => (gLo(d) - chunk.origin(d)).toInt)
+      val destPos = Array.tabulate(nd)(d => (gLo(d) - tIdx(d).toLong * newChunks(d)).toInt)
+      val sub = sliceBlock(vals, chunk.shape.toArray, srcOff, pShape)
+      Piece(tIdx.mkString(","), tIdx.toSeq, destPos.toSeq, pShape.toSeq,
+        ZarrStore.encodeFromDoubles(sub, dtype))
+    }
+  }
+
+  /** The re-block's assembly: one target chunk from all its pieces. */
+  private def assemble(ps: Seq[Piece], shape: Seq[Long], newChunks: Seq[Int],
+      dtype: String): ChunkRow = {
+    val tIdx = ps.head.targetIdx
+    val tShape = ZarrStore.chunkShapeAt(shape, newChunks, tIdx)
+    val tOrigin = ZarrStore.chunkOriginAt(newChunks, tIdx)
+    val block = new Array[Double](tShape.product)
+    ps.foreach(p => placeBlock(block, tShape.toArray, p.destPos.toArray, p.shape.toArray,
+      ZarrStore.decodeToDoubles(p.data, dtype)))
+    ChunkRow(tIdx, tOrigin, tShape, ZarrStore.encodeFromDoubles(block, dtype))
   }
 
   /** Copy a sub-block out of a C-order array. */
   def sliceBlock(in: Array[Double], shape: Array[Int], off: Array[Int],
       outShape: Array[Int]): Array[Double] = {
-    val str = NdKernels.strides(shape)
     val out = new Array[Double](outShape.product)
-    val pos = new Array[Int](shape.length)
-    var flat = 0
-    while (flat < out.length) {
-      var src = 0
-      var d = 0
-      while (d < pos.length) { src += (off(d) + pos(d)) * str(d); d += 1 }
-      out(flat) = in(src)
-      var dd = pos.length - 1
-      var carry = true
-      while (carry && dd >= 0) {
-        pos(dd) += 1
-        if (pos(dd) == outShape(dd)) { pos(dd) = 0; dd -= 1 } else carry = false
-      }
-      flat += 1
-    }
+    copyBox(in, shape, off, out, outShape, out.length, place = false)
     out
   }
 
   /** Place a sub-block into a C-order array at `pos0`. */
   def placeBlock(dst: Array[Double], dstShape: Array[Int], pos0: Array[Int],
-      blockShape: Array[Int], values: Array[Double]): Unit = {
-    val str = NdKernels.strides(dstShape)
-    val pos = new Array[Int](dstShape.length)
+      blockShape: Array[Int], values: Array[Double]): Unit =
+    copyBox(dst, dstShape, pos0, values, blockShape, values.length, place = true)
+
+  /** The block odometer: walks the `box`-shaped region at `off` inside
+    * the C-order `region` of `shape`, row-major, one innermost row at a
+    * time, and copies its first `n` values out into the dense `block`
+    * or, with `place`, from `block` into it.
+    */
+  private def copyBox(region: Array[Double], shape: Array[Int], off: Array[Int],
+      block: Array[Double], box: Array[Int], n: Int, place: Boolean): Unit = {
+    val nd = box.length
+    val row = box(nd - 1)
+    val str = NdKernels.strides(shape)
+    val pos = new Array[Int](nd)
     var flat = 0
-    while (flat < values.length) {
-      var di = 0
+    while (flat < n && row > 0) {
+      var i = 0
       var d = 0
-      while (d < pos.length) { di += (pos0(d) + pos(d)) * str(d); d += 1 }
-      dst(di) = values(flat)
-      var dd = pos.length - 1
+      while (d < nd) { i += (off(d) + pos(d)) * str(d); d += 1 }
+      val len = math.min(row, n - flat)
+      if (place) System.arraycopy(block, flat, region, i, len)
+      else System.arraycopy(region, i, block, flat, len)
+      flat += len
+      var dd = nd - 2
       var carry = true
       while (carry && dd >= 0) {
         pos(dd) += 1
-        if (pos(dd) == blockShape(dd)) { pos(dd) = 0; dd -= 1 } else carry = false
+        if (pos(dd) == box(dd)) { pos(dd) = 0; dd -= 1 } else carry = false
       }
-      flat += 1
     }
   }
 }

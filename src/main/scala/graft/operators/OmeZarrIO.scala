@@ -9,11 +9,12 @@ import ChunkOps.ChunkRow
 
 /** OME-Zarr store read/write over the chunk table (SURVEY S1/S4):
   *
-  * Write: executors encode+compress+put their chunk objects directly
-  * against the store (`foreachPartition` — the DataWriter half of a
-  * DSv2 BatchWrite), then the driver commits metadata: group docs,
-  * array docs, root attrs, consolidated metadata (S8). No pixel data
-  * ever moves through the driver.
+  * Write: one Spark job puts every stored object of every level — a
+  * plain array's chunks, or a sharded array's shards, each built by
+  * one task from its inner chunks — straight from the executors (the
+  * DataWriter half of a DSv2 BatchWrite); then the driver commits
+  * metadata: group docs, array docs, root attrs, consolidated metadata
+  * (S8). No pixel data ever moves through the driver.
   *
   * Read: the driver parses metadata only ([[ZarrArray.openPyramid]]);
   * each level is the `spark.read.format("omezarr")` scan of its scale
@@ -26,12 +27,15 @@ object OmeZarrIO {
   /** Write a multiscale pyramid as OME-Zarr v0.4 (Zarr v2) or v0.5
     * (Zarr v3). Returns the per-level chunk counts.
     *
-    * `chunkStore`: separate storage for chunk/shard objects — metadata
-    * documents stay in `path` (reference `to_ngff_zarr.py:982-1035`
-    * `chunk_store` parity; cache/tiering setups put bulk pixels on a
-    * different tier than the tiny hot metadata docs). The reader takes
-    * one store, as the reference's does: serve the pair as one (merge
-    * the trees, or layer them) to read it back.
+    * Every level's chunks are encoded where they sit and keyed by
+    * (level, stored object, shard slot): on a plain array the object
+    * is the chunk itself, with `chunksPerShard` it is the chunk's
+    * shard (S6), and the encoded inner chunks are grouped by that key
+    * so each shard is built and written exactly once by one task. The
+    * levels are unioned, so one `foreachPartition` puts every object
+    * of the pyramid; its result stage adds each level's chunks to that
+    * level's accumulator, and the (possibly uncached) pipeline runs
+    * exactly once.
     *
     * `enabledRfcs`: RFC 4 anatomical-orientation metadata is STRIPPED
     * from the written axes unless 4 is enabled — the reference's
@@ -41,80 +45,49 @@ object OmeZarrIO {
       ms: MultiscaleBuilder.Multiscale, name: String = "image",
       version: String = "0.4", compressor: Option[String] = Some("zstd"),
       overwrite: Boolean = true, chunksPerShard: Option[Seq[Int]] = None,
-      chunkStore: Option[String] = None,
       enabledRfcs: Seq[Int] = Nil): Seq[Long] = {
     val errs = Validation.validateWriterParams(version, chunksPerShard)
     require(errs.isEmpty, errs.mkString("; "))
     val hconf = Some(SerializableHadoopConf.fromActiveSession())
     val store = new ZarrStore(path, hconf)
-    val chunkPath = chunkStore.getOrElse(path)
-    if (overwrite) {
-      store.delete("")
-      if (chunkStore.isDefined) new ZarrStore(chunkPath, hconf).delete("")
-    }
+    if (overwrite) store.delete("")
     val metaFull = ms.metadata(name, version)
     val meta =
       if (enabledRfcs.contains(4)) metaFull
       else metaFull.copy(axes = metaFull.axes.map(_.copy(orientation = None)))
 
-    // executors: chunk or shard objects; counts ride an accumulator so
-    // the (possibly uncached) pipeline executes exactly once
+    val sc = spark.sparkContext
     val zf = if (version == "0.5") 3 else 2
-    val counts = meta.datasets.zip(ms.levels).map { case (d, lvl) =>
-      val arrayPath = d.path
-      chunksPerShard match {
-        case Some(cps) => writeSharded(spark, chunkPath, arrayPath, lvl, cps, compressor, hconf)
-        case None =>
-          val (fullChunks, dtype, comp) = (lvl.meta.chunks, lvl.meta.dtype, compressor)
-          val acc = spark.sparkContext.longAccumulator(s"chunks:$arrayPath")
-          lvl.chunks.foreachPartition { (it: Iterator[ChunkRow]) =>
-            val st = new ZarrStore(chunkPath, hconf)
-            it.foreach { c =>
-              st.writeBytes(ZarrStore.chunkKey(zf, arrayPath, c.chunkIdx),
-                ZarrArray.encodeChunk(c.shape, c.data, fullChunks, dtype, comp))
-              acc.add(1)
-            }
-          }
-          acc.value.longValue()
+    val arrayPaths = meta.datasets.map(_.path)
+    val accs = arrayPaths.map(p => sc.longAccumulator(s"chunks:$p"))
+    val encoded = sc.union(ms.levels.zipWithIndex.map { case (lvl, l) =>
+      val (fullChunks, dtype) = (lvl.meta.chunks, lvl.meta.dtype)
+      lvl.chunks.rdd.map { c =>
+        val (obj, slot) = chunksPerShard match {
+          case Some(cps) => (c.chunkIdx.zip(cps).map { case (i, n) => i / n },
+            Sharding.innerFlatIndex(c.chunkIdx.zip(cps).map { case (i, n) => i % n }, cps))
+          case None => (c.chunkIdx, 0)
+        }
+        ((l, obj), (slot, ZarrArray.encodeChunk(c.shape, c.data, fullChunks, dtype, compressor)))
+      }
+    })
+    val objects = chunksPerShard match {
+      case Some(cps) => encoded.groupByKey(sc.defaultParallelism).mapValues { inner =>
+        (inner.size.toLong, Sharding.buildShard(cps.product, inner.toMap))
+      }
+      case None => encoded.mapValues { case (_, bytes) => (1L, bytes) }
+    }
+    objects.foreachPartition { it =>
+      val st = new ZarrStore(path, hconf)
+      it.foreach { case ((l, obj), (nChunks, bytes)) =>
+        st.writeBytes(ZarrStore.chunkKey(zf, arrayPaths(l), obj), bytes)
+        accs(l).add(nChunks)
       }
     }
-    // driver: every metadata document, after the chunk jobs
+    // driver: every metadata document, after the object job
     ZarrArray.metadataDocs(meta, ms.levels.map(_.meta), compressor, chunksPerShard)
       .foreach { case (k, v) => store.writeString(k, v) }
-    counts
-  }
-
-  /** S6 — sharded write: group inner chunks by their shard, each task
-    * packs + writes whole shard objects (inner chunks individually
-    * compressed, row-major index + crc32c footer).
-    */
-  private def writeSharded(spark: SparkSession, chunkPath: String, arrayPath: String,
-      lvl: MultiscaleBuilder.Level, cps: Seq[Int], compressor: Option[String],
-      hconf: Option[SerializableHadoopConf]): Long = {
-    import spark.implicits._
-    val fullChunks = lvl.meta.chunks
-    val dtype = lvl.meta.dtype
-    val nInner = cps.product
-    val acc = spark.sparkContext.longAccumulator(s"chunks:$arrayPath")
-    lvl.chunks
-      .groupByKey(c => c.chunkIdx.zip(cps).map { case (i, n) => i / n }.mkString(","))
-      .mapGroups { (key, it) =>
-        val shardIdx = key.split(",").map(_.toInt).toSeq
-        val encoded = it.map { c =>
-          val rel = c.chunkIdx.zip(shardIdx).zip(cps).map { case ((i, s), n) => i - s * n }
-          Sharding.innerFlatIndex(rel, cps) ->
-            ZarrArray.encodeChunk(c.shape, c.data, fullChunks, dtype, compressor)
-        }.toMap
-        acc.add(encoded.size)
-        (shardIdx, Sharding.buildShard(nInner, encoded))
-      }
-      .foreachPartition { (it: Iterator[(Seq[Int], Array[Byte])]) =>
-        val st = new ZarrStore(chunkPath, hconf)
-        it.foreach { case (shardIdx, bytes) =>
-          st.writeBytes(ZarrStore.chunkKey(3, arrayPath, shardIdx), bytes)
-        }
-      }
-    acc.value.longValue()
+    accs.map(_.value.longValue())
   }
 
   /** Read an OME-Zarr store → multiscale levels with lazy chunk

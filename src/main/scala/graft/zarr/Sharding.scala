@@ -2,6 +2,7 @@ package graft.zarr
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.CRC32C
+import graft.operators.NdKernels
 
 /** Zarr v3 `sharding_indexed` codec (SURVEY S6 —
   * `py/ngff_zarr/to_ngff_zarr.py:446-489,661-703`): many chunks pack
@@ -85,12 +86,11 @@ object Sharding {
     * chunks-per-shard grid.
     */
   def innerFlatIndex(rel: Seq[Int], chunksPerShard: Seq[Int]): Int =
-    rel.zip(NdKernels2.strides(chunksPerShard)).map { case (p, s) => p * s }.sum
+    rel.zip(NdKernels.strides(chunksPerShard.toArray)).map { case (p, s) => p * s }.sum
 
   def innerPosition(flat: Int, chunksPerShard: Seq[Int]): Seq[Int] = {
-    val str = NdKernels2.strides(chunksPerShard)
     var rem = flat
-    str.map { s => val q = rem / s; rem %= s; q }
+    NdKernels.strides(chunksPerShard.toArray).toSeq.map { s => val q = rem / s; rem %= s; q }
   }
 
   /** `zarr.json` codec entry for sharding_indexed. */
@@ -131,12 +131,4 @@ object Sharding {
     cfg.put("index_location", "end")
     mapper.writeValueAsString(n)
   }
-}
-
-/** Shared stride math without pulling the operators package into the
-  * zarr layer.
-  */
-private[zarr] object NdKernels2 {
-  def strides(shape: Seq[Int]): Seq[Int] =
-    shape.scanRight(1)((d, acc) => d * acc).tail
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.meta.Model._
 import graft.operators.{ChunkOps, MultiscaleBuilder, OmeZarrIO}
-import java.nio.file.Files
 
 /** Drives Cli.run end-to-end with the reference CLI's metadata and
   * processing flags (S14 parity, `cli.py:178-266`).
@@ -17,14 +16,14 @@ class CliSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base,
       Some(Seq(Map("y" -> 2, "x" -> 2))), Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("cli-in").toString + "/in.ome.zarr"
+    val dir = tempDir("cli-in").toString + "/in.ome.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4")
     (dir, vals)
   }
 
   test("metadata overrides: scale, translation, units, name flow to the output store") {
     val (in, vals) = writeInput()
-    val out = Files.createTempDirectory("cli-out").toString + "/out.ome.zarr"
+    val out = tempDir("cli-out").toString + "/out.ome.zarr"
     Cli.run(spark, Array(in, out,
       "--scale=x=1.4,y=2.5", "--translation=x=10.0",
       "--units=x=micrometer,y=micrometer", "--name=renamed",
@@ -41,7 +40,7 @@ class CliSpec extends SparkSpec {
 
   test("--chunks rechunks the base image; --dims renames axes positionally") {
     val (in, vals) = writeInput()
-    val out = Files.createTempDirectory("cli-out").toString + "/out.ome.zarr"
+    val out = tempDir("cli-out").toString + "/out.ome.zarr"
     Cli.run(spark, Array(in, out, "--chunks=16,64", "--dims=z,y"))
     val back = OmeZarrIO.readMultiscales(spark, out)
     val l0 = back.levels.head
@@ -52,7 +51,7 @@ class CliSpec extends SparkSpec {
 
   test("override validation: non-canonical or duplicate dims and typo'd keys refuse") {
     val (in, _) = writeInput()
-    val out = Files.createTempDirectory("cli-out").toString + "/out.ome.zarr"
+    val out = tempDir("cli-out").toString + "/out.ome.zarr"
     // arbitrary labels would disable the spatial plan — refused
     assertThrows[IllegalArgumentException](
       Cli.run(spark, Array(in, out, "--dims=j,i")))
@@ -67,7 +66,7 @@ class CliSpec extends SparkSpec {
 
   test("--output-scale selects one level of a multiscale input") {
     val (in, _) = writeInput()
-    val out = Files.createTempDirectory("cli-out").toString + "/out.ome.zarr"
+    val out = tempDir("cli-out").toString + "/out.ome.zarr"
     Cli.run(spark, Array(in, out, "--output-scale=1"))
     val back = OmeZarrIO.readMultiscales(spark, out)
     // scale 1 of the 64² input is 32² — the cascade starts from there
@@ -77,23 +76,23 @@ class CliSpec extends SparkSpec {
       Cli.run(spark, Array(in, out + "2", "--output-scale=9")))
   }
 
-  test("--chunk-store splits chunk objects from metadata; the merged pair round-trips") {
-    val (in, vals) = writeInput()
-    val out = Files.createTempDirectory("cli-out").toString + "/out.ome.zarr"
-    val chunks = Files.createTempDirectory("cli-chunks").toString + "/chunks"
-    Cli.run(spark, Array(in, out, s"--chunk-store=$chunks"))
-    assert(new java.io.File(s"$out/scale0/image/.zarray").exists())
-    assert(!new java.io.File(s"$out/scale0/image/0").exists())
-    assert(new java.io.File(s"$chunks/scale0/image/0/0").exists())
-    graft.zarr.TestStores.mergeInto(chunks, out)
-    val back = OmeZarrIO.readMultiscales(spark, out)
-    assert(ChunkOps.toArray(back.levels.head.chunks, back.levels.head.meta).toSeq
-      == vals.toSeq)
+  test("convert refuses an unknown flag, naming it and the flags it reads") {
+    val (in, _) = writeInput()
+    val out = tempDir("cli-out").toString + "/out.ome.zarr"
+    val chunks = tempDir("cli-chunks").toString + "/chunks"
+    val e = intercept[IllegalArgumentException](
+      Cli.run(spark, Array(in, out, s"--chunk-store=$chunks")))
+    assert(e.getMessage.contains(s"--chunk-store=$chunks"))
+    assert(e.getMessage.contains("--chunks-per-shard=") && e.getMessage.contains("--version="))
+    // a flag without a value, or without the dashes, is refused too
+    assertThrows[IllegalArgumentException](Cli.run(spark, Array(in, out, "--validate")))
+    assertThrows[IllegalArgumentException](Cli.run(spark, Array(in, out, "version=0.5")))
+    assert(!new java.io.File(out).exists(), "a refused run must write nothing")
   }
 
   test("NRRD input converts end-to-end (VolumeFormats route)") {
     val fx = "src/test/resources/fixtures/vol/vol.nrrd"
-    val out = Files.createTempDirectory("cli-out").toString + "/out.ome.zarr"
+    val out = tempDir("cli-out").toString + "/out.ome.zarr"
     Cli.run(spark, Array(fx, out))
     val back = OmeZarrIO.readMultiscales(spark, out)
     val l0 = back.levels.head
@@ -107,7 +106,7 @@ class CliSpec extends SparkSpec {
 
   test("multi-series OME-TIFF converts the --ome-series-selected Image") {
     val fx = "src/test/resources/fixtures/multiseries.ome.tif"
-    val out = Files.createTempDirectory("cli-out").toString + "/s1.ome.zarr"
+    val out = tempDir("cli-out").toString + "/s1.ome.zarr"
     Cli.run(spark, Array(fx, out, "--ome-series=1"))
     val back = OmeZarrIO.readMultiscales(spark, out)
     val l0 = back.levels.head
@@ -120,7 +119,7 @@ class CliSpec extends SparkSpec {
 
   test("PNG series glob converts end-to-end to a (z, y, x) store") {
     val w = 6; val h = 4; val nz = 3
-    val dir = Files.createTempDirectory("cli-series")
+    val dir = tempDir("cli-series")
     (0 until nz).foreach { z =>
       val buf = new java.awt.image.BufferedImage(w, h,
         java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
@@ -130,7 +129,7 @@ class CliSpec extends SparkSpec {
       val os = java.nio.file.Files.newOutputStream(dir.resolve(f"sl$z%02d.png"))
       javax.imageio.ImageIO.write(buf, "png", os); os.close()
     }
-    val out = Files.createTempDirectory("cli-out").toString + "/series.ome.zarr"
+    val out = tempDir("cli-out").toString + "/series.ome.zarr"
     Cli.run(spark, Array(s"$dir/*.png", out))
     val back = OmeZarrIO.readMultiscales(spark, out)
     val l0 = back.levels.head
@@ -143,9 +142,9 @@ class CliSpec extends SparkSpec {
   }
 
   test("corpus-build subcommand runs the crawl pipeline end to end") {
-    val crawl = java.nio.file.Files.createTempDirectory("cli_crawl").toString
+    val crawl = tempDir("cli_crawl").toString
     graft.sources.CrawlRehearsal.writeCrawl(spark, crawl, 100L, nArchives = 2)
-    val out = java.nio.file.Files.createTempDirectory("cli_shards").toString
+    val out = tempDir("cli_shards").toString
     graft.Cli.run(spark, Array("corpus-build", crawl, out,
       "--shards=2", "--quality=false", "--boilerplate-min-docs=50"))
     val hconf = graft.zarr.SerializableHadoopConf.fromActiveSession()
@@ -160,31 +159,31 @@ class CliSpec extends SparkSpec {
 
   test("tokenize subcommand routes all three tokenizer families") {
     import spark.implicits._
-    val docsDir = java.nio.file.Files.createTempDirectory("cli_tok_in").toString
+    val docsDir = tempDir("cli_tok_in").toString
     Seq((1L, "data window"), (2L, "xyz data"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(docsDir)
     // wordpiece with a vocab file
-    val wpVocab = java.nio.file.Files.createTempFile("wp", ".vocab")
+    val wpVocab = tempFile("wp", ".vocab")
     java.nio.file.Files.writeString(wpVocab,
       Seq("data", "win", "##dow").mkString("\n"))
-    val wpOut = java.nio.file.Files.createTempDirectory("cli_tok_wp").toString
+    val wpOut = tempDir("cli_tok_wp").toString
     graft.Cli.run(spark, Array("tokenize", docsDir, wpOut,
       "--tokenizer=wordpiece", s"--vocab-file=$wpVocab"))
     val wp = spark.read.parquet(wpOut).orderBy("doc_id").collect()
     assert(wp(0).getAs[String]("token_str") == "data win ##dow")
     assert(wp(1).getAs[Int]("n_unk") == 1) // xyz
     // unigram with piece<TAB>cost lines
-    val ulVocab = java.nio.file.Files.createTempFile("ul", ".vocab")
+    val ulVocab = tempFile("ul", ".vocab")
     java.nio.file.Files.writeString(ulVocab,
       Seq("data\t800", "win\t800", "dow\t700").mkString("\n"))
-    val ulOut = java.nio.file.Files.createTempDirectory("cli_tok_ul").toString
+    val ulOut = tempDir("cli_tok_ul").toString
     graft.Cli.run(spark, Array("tokenize", docsDir, ulOut,
       "--tokenizer=unigram", s"--vocab-file=$ulVocab"))
     val ul = spark.read.parquet(ulOut).orderBy("doc_id").collect()
     assert(ul(0).getAs[String]("token_str") == "data win dow")
     assert(ul(0).getAs[Long]("total_cost") == 800L + 1500L)
     // bpe trains on the corpus itself
-    val bpeOut = java.nio.file.Files.createTempDirectory("cli_tok_bpe").toString
+    val bpeOut = tempDir("cli_tok_bpe").toString
     graft.Cli.run(spark, Array("tokenize", docsDir, bpeOut,
       "--tokenizer=bpe", "--merges=3"))
     assert(spark.read.parquet(bpeOut).count() == 2)
@@ -193,15 +192,15 @@ class CliSpec extends SparkSpec {
   test("decontaminate subcommand joins screen verdicts with overlap runs") {
     import spark.implicits._
     val passage = "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10"
-    val docsDir = java.nio.file.Files.createTempDirectory("cli_dec_docs").toString
+    val docsDir = tempDir("cli_dec_docs").toString
     Seq(
       (1L, s"intro words $passage closing words here"), // quotes the benchmark
       (2L, "totally clean text with no benchmark overlap at all in sight"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(docsDir)
-    val benchDir = java.nio.file.Files.createTempDirectory("cli_dec_bench").toString
+    val benchDir = tempDir("cli_dec_bench").toString
     Seq((100L, s"bench padding $passage more padding"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(benchDir)
-    val outDir = java.nio.file.Files.createTempDirectory("cli_dec_out").toString
+    val outDir = tempDir("cli_dec_out").toString
     graft.Cli.run(spark, Array("decontaminate", docsDir, benchDir, outDir,
       "--ngram=8", "--max-frac=0.1", "--flag-tokens=10"))
     val out = spark.read.parquet(outDir).orderBy("doc_id").collect()
@@ -216,7 +215,7 @@ class CliSpec extends SparkSpec {
 
   test("label subcommand: CCL over a real OME-Zarr store matches local BFS") {
     val (dir, vals) = writeInput()
-    val outDir = java.nio.file.Files.createTempDirectory("cli_label_out").toString
+    val outDir = tempDir("cli_label_out").toString
     graft.Cli.run(spark, Array("label", dir, outDir, "--threshold=128"))
     val got = spark.read.parquet(outDir).orderBy("comp").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -244,10 +243,10 @@ class CliSpec extends SparkSpec {
 
   test("profile subcommand writes column stats; --columns restricts") {
     import spark.implicits._
-    val inDir = java.nio.file.Files.createTempDirectory("cli_prof_in").toString
+    val inDir = tempDir("cli_prof_in").toString
     Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0))
       .toDF("id", "tag", "score").write.mode("overwrite").parquet(inDir)
-    val outDir = java.nio.file.Files.createTempDirectory("cli_prof_out").toString
+    val outDir = tempDir("cli_prof_out").toString
     graft.Cli.run(spark, Array("profile", inDir, outDir))
     val all = spark.read.parquet(outDir).collect()
       .map(r => r.getAs[String]("col_name") -> r).toMap
@@ -255,7 +254,7 @@ class CliSpec extends SparkSpec {
     assert(all("tag").getAs[Long]("n_distinct") == 2L)
     assert(all("tag").getAs[String]("top_val") == "a")
     assert(all("id").getAs[String]("max_s") == "3")
-    val outDir2 = java.nio.file.Files.createTempDirectory("cli_prof_out2").toString
+    val outDir2 = tempDir("cli_prof_out2").toString
     graft.Cli.run(spark, Array("profile", inDir, outDir2, "--columns=tag"))
     assert(spark.read.parquet(outDir2).collect().map(_.getString(0)).toSeq == Seq("tag"))
   }

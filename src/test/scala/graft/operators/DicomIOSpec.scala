@@ -114,7 +114,7 @@ class DicomIOSpec extends SparkSpec {
   }
 
   test("JPEG-LS series mixes with explicit-LE; JVM T.87 encoder round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("dcm_jls")
+    val dir = tempDir("dcm_jls")
     for (z <- 0 until 3) {
       val px = Array.tabulate[Short](NY * NX) { p =>
         (v(p % NX, p / NX, z) - 30).toShort // negatives again
@@ -140,7 +140,7 @@ class DicomIOSpec extends SparkSpec {
   }
 
   test("four lossless syntaxes mix in one series, bit-identical") {
-    val dir = java.nio.file.Files.createTempDirectory("dcm_mix4")
+    val dir = tempDir("dcm_mix4")
     val enc = Seq[(Int, Int, Array[Short]) => Array[Byte]](
       (z, inst, px) => DicomIO.encodeSliceInt16(NY, NX, inst, z * 2.0, (1.0, 1.0), 2.0, px),
       (z, inst, px) => DicomIO.encodeSliceRleInt16(NY, NX, inst, z * 2.0, (1.0, 1.0), 2.0, px),
@@ -212,7 +212,7 @@ class DicomIOSpec extends SparkSpec {
   }
 
   test("JVM RGB encoder round-trips both planar configurations") {
-    val dir = java.nio.file.Files.createTempDirectory("dcm_rgb")
+    val dir = tempDir("dcm_rgb")
     val px = Array.tabulate[Byte](NY * NX * 3) { i =>
       val c = i % 3; val p = i / 3
       rgbv(p % NX, p / NX, c).toByte
@@ -236,7 +236,7 @@ class DicomIOSpec extends SparkSpec {
       val c = i % 3; val p = i / 3
       blockRgb(p % cols, p / cols, c).toByte
     }
-    val f = java.nio.file.Files.createTempFile("dcm_jpegrgb", ".dcm")
+    val f = tempFile("dcm_jpegrgb", ".dcm")
     java.nio.file.Files.write(f,
       DicomIO.encodeSliceJpegRgb(rows, cols, 1, 0.0, (1.0, 1.0), 1.0, px))
     val img = DicomIO.read(spark, f.toString)
@@ -258,7 +258,7 @@ class DicomIOSpec extends SparkSpec {
   }
 
   test("RLE series mixes with explicit-LE slices; JVM RLE encoder round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("dcm_rle")
+    val dir = tempDir("dcm_rle")
     for (z <- 0 until 3) {
       val px = Array.tabulate[Short](NY * NX) { p =>
         v(p % NX, p / NX, z).toShort
@@ -282,7 +282,7 @@ class DicomIOSpec extends SparkSpec {
       if (p < 12) 0x1234.toShort else ((p % 3) << 5).toShort
     }
     val bytes = DicomIO.encodeSliceRleInt16(NY, NX, 1, 0.0, (1.0, 1.0), 1.0, px)
-    val p = java.nio.file.Files.createTempFile("rle", ".dcm")
+    val p = tempFile("rle", ".dcm")
     java.nio.file.Files.write(p, bytes)
     val img = DicomIO.read(spark, p.toString)
     val got = ChunkOps.toArray(img.chunks, img.meta)
@@ -299,7 +299,7 @@ class DicomIOSpec extends SparkSpec {
       (40 + b * 50).toByte
     }
     val bytes = DicomIO.encodeSliceJpegBaseline(rows, cols, 1, 0.0, (1.0, 1.0), 1.0, px)
-    val f = java.nio.file.Files.createTempFile("jb", ".dcm")
+    val f = tempFile("jb", ".dcm")
     java.nio.file.Files.write(f, bytes)
     val img = DicomIO.read(spark, f.toString)
     assert(img.meta.dtype == "uint8")
@@ -313,7 +313,7 @@ class DicomIOSpec extends SparkSpec {
   }
 
   test("JVM encoder round-trips through the reader (series of 3)") {
-    val dir = java.nio.file.Files.createTempDirectory("dcm")
+    val dir = tempDir("dcm")
     for (z <- 0 until 3) {
       val px = Array.tabulate[Short](NY * NX)(i => v(i % NX, i / NX, z).toShort)
       java.nio.file.Files.write(dir.resolve(s"z$z.dcm"),
@@ -326,7 +326,7 @@ class DicomIOSpec extends SparkSpec {
   }
 
   test("series z spacing: uniform IPP deltas beat the thickness tags (ITK rule)") {
-    val dir = java.nio.file.Files.createTempDirectory("dcm_ipp")
+    val dir = tempDir("dcm_ipp")
     for (z <- 0 until 3) {
       val px = Array.tabulate[Short](NY * NX)(p => v(p % NX, p / NX, z).toShort)
       // SliceThickness says 2.0, but the slices actually sit 2.5 apart
@@ -336,7 +336,7 @@ class DicomIOSpec extends SparkSpec {
     val img = DicomIO.readSeriesDir(spark, dir.toString)
     assert(img.meta.scale("z") == 2.5)
     // non-uniform IPP deltas fall back to the tags
-    val dir2 = java.nio.file.Files.createTempDirectory("dcm_ipp2")
+    val dir2 = tempDir("dcm_ipp2")
     for ((zp, i) <- Seq(0.0, 2.5, 6.0).zipWithIndex) {
       val px = Array.tabulate[Short](NY * NX)(p => v(p % NX, p / NX, i).toShort)
       java.nio.file.Files.write(dir2.resolve(s"s$i.dcm"),

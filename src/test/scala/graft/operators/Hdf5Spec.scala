@@ -61,7 +61,7 @@ class Hdf5Spec extends SparkSpec {
   }
 
   test("a .mnc file with the HDF5 signature routes through the MINC2 reader") {
-    val tmp = java.nio.file.Files.createTempDirectory("h5").resolve("vol.mnc")
+    val tmp = tempDir("h5").resolve("vol.mnc")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$fx/vol.mnc2"), tmp)
     val img = MincIO.read(spark, tmp.toString)
     assert(img.meta.scale("z") == 3.5)
@@ -104,7 +104,7 @@ class Hdf5Spec extends SparkSpec {
     }
     val bytes = Hdf5.encodeMinc2Uint8(Seq(nz, ny, nx),
       steps = Seq(-2.0, 1.25, 0.75), starts = Seq(7.0, -2.0, 3.0), vals)
-    val p = java.nio.file.Files.createTempDirectory("h5").resolve("rt.mnc2")
+    val p = tempDir("h5").resolve("rt.mnc2")
     java.nio.file.Files.write(p, bytes)
     val img = Hdf5IO.readMinc2(spark, p.toString)
     assert(img.meta.dims == Seq("x", "y", "z"))

@@ -12,7 +12,7 @@ class Image2dIOSpec extends SparkSpec {
   test(".j2c 2-D bitmaps read as (y,x) volumes through the J2K codec") {
     val w = 14; val h = 10
     val img = Array.tabulate(w * h)(i => (i * 29 + 3) % 256)
-    val f = java.nio.file.Files.createTempFile("img2d", ".j2c")
+    val f = tempFile("img2d", ".j2c")
     java.nio.file.Files.write(f,
       Jpeg2kEncode.encode(Seq(img), w, h, 8, levels = 1, cbw = 8, cbh = 8))
     val vol = Image2dIO.read(spark, f.toString)
@@ -30,7 +30,7 @@ class Image2dIOSpec extends SparkSpec {
     val want = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/test/resources/fixtures/j2k/rpcl_tiles.raw"))
       .map(_ & 0xff)
-    val f = java.nio.file.Files.createTempFile("img2d", ".j2c")
+    val f = tempFile("img2d", ".j2c")
     java.nio.file.Files.copy(src, f,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     val vol = Image2dIO.read(spark, f.toString)
@@ -48,7 +48,7 @@ class Image2dIOSpec extends SparkSpec {
     bb.putInt(16).putInt(0).putInt(0).putInt(0).putInt(0)
     bb.put(Array[Byte](1, 2, 3, 4, 5, 6, 0, 0))
     bb.put(Array[Byte](7, 8, 9, 10, 11, 12, 0, 0))
-    val p = java.nio.file.Files.createTempFile("img", ".bmp")
+    val p = tempFile("img", ".bmp")
     java.nio.file.Files.write(p, bb.array())
     val img = Image2dIO.read(spark, p.toString)
     assert(img.meta.dims == Seq("y", "x", "c"))
@@ -68,7 +68,7 @@ class Image2dIOSpec extends SparkSpec {
       val b = (x + y * 31) % 256
       buf.setRGB(x, y, (r << 16) | (g << 8) | b)
     }
-    val p = java.nio.file.Files.createTempFile("img", ".png")
+    val p = tempFile("img", ".png")
     val os = java.nio.file.Files.newOutputStream(p)
     javax.imageio.ImageIO.write(buf, "png", os); os.close()
     val img = Image2dIO.read(spark, p.toString)
@@ -83,7 +83,7 @@ class Image2dIOSpec extends SparkSpec {
   }
 
   test("unrecognized payload refuses loudly") {
-    val p = java.nio.file.Files.createTempFile("junk", ".bmp")
+    val p = tempFile("junk", ".bmp")
     java.nio.file.Files.write(p, Array[Byte](1, 2, 3, 4))
     intercept[UnsupportedOperationException](Image2dIO.read(spark, p.toString))
   }
@@ -100,7 +100,7 @@ class Image2dIOSpec extends SparkSpec {
 
   test("series glob stacks slices to (z, y, x) in sorted filename order") {
     val w = 5; val h = 4
-    val dir = java.nio.file.Files.createTempDirectory("series")
+    val dir = tempDir("series")
     // write out of order; the glob must stack sorted (s00, s01, s02)
     Seq(2, 0, 1).foreach { z =>
       writeGrayPng(dir, f"s$z%02d.png", w, h, (x, y) => (x * 3 + y * 7 + z * 31) % 256)
@@ -118,7 +118,7 @@ class Image2dIOSpec extends SparkSpec {
 
   test("explicit slice list keeps the caller's order; directory input stacks sorted") {
     val w = 3; val h = 2
-    val dir = java.nio.file.Files.createTempDirectory("series2")
+    val dir = tempDir("series2")
     Seq(0, 1).foreach { z =>
       writeGrayPng(dir, s"a$z.png", w, h, (x, y) => z * 100 + y * w + x)
     }
@@ -133,7 +133,7 @@ class Image2dIOSpec extends SparkSpec {
   }
 
   test("ragged series and empty globs refuse loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("series3")
+    val dir = tempDir("series3")
     writeGrayPng(dir, "s0.png", 4, 3, (x, y) => x + y)
     writeGrayPng(dir, "s1.png", 5, 3, (x, y) => x + y) // wrong width
     val ragged = Image2dIO.readSeries(spark, Seq(s"$dir/*.png"))

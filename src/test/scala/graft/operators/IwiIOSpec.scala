@@ -68,7 +68,7 @@ class IwiIOSpec extends SparkSpec {
     val vals = expected.toArray
     val framed = IwiIO.encodeIwiCborZst(Seq(NX, NY, NZ), Seq(1.5, 2.5, 3.5),
       Seq(10.0, 20.0, 30.0), "uint8", fortranOf(vals))
-    val p = java.nio.file.Files.createTempDirectory("iwi").resolve("vol.iwi.cbor.zst")
+    val p = tempDir("iwi").resolve("vol.iwi.cbor.zst")
     java.nio.file.Files.write(p, framed)
     val img = IwiIO.read(spark, p.toString)
     assert(img.meta.dtype == "uint8")
@@ -89,7 +89,7 @@ class IwiIOSpec extends SparkSpec {
     val dataV = doc.asInstanceOf[graft.meta.Cbor.CMap].get("data").get
     assert(dataV.asInstanceOf[graft.meta.Cbor.CTag].v
       .isInstanceOf[graft.meta.Cbor.CBytesRef])
-    val p = java.nio.file.Files.createTempDirectory("iwi").resolve("big.iwi.cbor")
+    val p = tempDir("iwi").resolve("big.iwi.cbor")
     java.nio.file.Files.write(p, bytes)
     val img = IwiIO.read(spark, p.toString)
     assert(img.meta.shape == Seq(n.toLong, n, n))
@@ -103,7 +103,7 @@ class IwiIOSpec extends SparkSpec {
     val vals = expected.toArray
     val bytes = IwiIO.encodeIwiCbor(Seq(NX, NY, NZ), Seq(1.5, 2.5, 3.5),
       Seq(10.0, 20.0, 30.0), "int32", fortranOf(vals), name = "rt")
-    val p = java.nio.file.Files.createTempDirectory("iwi").resolve("rt.iwi.cbor")
+    val p = tempDir("iwi").resolve("rt.iwi.cbor")
     java.nio.file.Files.write(p, bytes)
     val img = IwiIO.read(spark, p.toString)
     assert(img.meta.name == "rt")
@@ -112,7 +112,7 @@ class IwiIOSpec extends SparkSpec {
   }
 
   test("writeIwiDir round-trips through the directory reader") {
-    val d = java.nio.file.Files.createTempDirectory("iwi").resolve("rt.iwi")
+    val d = tempDir("iwi").resolve("rt.iwi")
     IwiIO.writeIwiDir(d, Seq(NX, NY, NZ), Seq(0.5, 0.6, 0.7), Seq(1, 2, 3),
       "float64", fortranOf(expected.toArray))
     val img = IwiIO.read(spark, d.toString)
@@ -134,7 +134,7 @@ class IwiIOSpec extends SparkSpec {
         CText("size") -> CArray(Vector(CInt(2))),
         CText("data") -> dataEntry)))
     def readOf(bytes: Array[Byte]): Unit = {
-      val p = java.nio.file.Files.createTempDirectory("iwi").resolve("bad.iwi.cbor")
+      val p = tempDir("iwi").resolve("bad.iwi.cbor")
       java.nio.file.Files.write(p, bytes)
       IwiIO.read(spark, p.toString)
     }

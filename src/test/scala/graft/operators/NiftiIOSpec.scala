@@ -119,14 +119,14 @@ class NiftiIOSpec extends SparkSpec {
   test("a bare .nii with Analyze-blank magic still refuses") {
     val raw = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$fx/pair.hdr"))
-    val p = java.nio.file.Files.createTempFile("blank", ".nii")
+    val p = tempFile("blank", ".nii")
     java.nio.file.Files.write(p, raw ++ new Array[Byte](6 * 5 * 4 * 2))
     val e = intercept[IllegalArgumentException](NiftiIO.read(spark, p.toString))
     assert(e.getMessage.contains("magic"))
   }
 
   test(".hdr without a sibling payload refuses with a precise error") {
-    val dir = java.nio.file.Files.createTempDirectory("lonehdr")
+    val dir = tempDir("lonehdr")
     val p = dir.resolve("lone.hdr")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$fx/pair.hdr"), p)
     val e = intercept[IllegalArgumentException](NiftiIO.read(spark, p.toString))
@@ -138,7 +138,7 @@ class NiftiIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(img.meta, img.chunks)
     val ms = MultiscaleBuilder.toMultiscales(spark, base,
       Some(Seq(Map("x" -> 2, "y" -> 2))), Method.ItkwasmBinShrink, cache = false)
-    val dir = java.nio.file.Files.createTempDirectory("nifti2zarr").toString + "/img.zarr"
+    val dir = tempDir("nifti2zarr").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4", compressor = Some("blosc"))
     val back = OmeZarrIO.readMultiscales(spark, dir, validate = true)
     assert(back.levels.head.meta.shape == Seq(16L, 8L, 4L))

@@ -23,7 +23,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base,
       Some(Seq(Map("y" -> 2, "x" -> 2))), Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr").toString + "/img.zarr"
+    val dir = tempDir("omezarr").toString + "/img.zarr"
     val counts = OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4")
     assert(counts == Seq(4L, 1L))
 
@@ -43,12 +43,60 @@ class OmeZarrIOSpec extends SparkSpec {
       ChunkOps.toArray(ms.levels(1).chunks, ms.levels(1).meta).toSeq)
   }
 
+  test("writeMultiscales puts every level's objects in one Spark job, plain and sharded") {
+    val m = ImageMeta(Seq("y", "x"), Seq(64, 64), Seq(16, 16), "uint16",
+      Map("y" -> 1.0, "x" -> 1.0), Map("y" -> 0.0, "x" -> 0.0))
+    val r = new scala.util.Random(7)
+    val vals = Array.fill(64 * 64)(r.nextInt(65536).toDouble)
+    val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
+    val ms = MultiscaleBuilder.toMultiscales(spark, base,
+      Some(Seq(Map("y" -> 2, "x" -> 2), Map("y" -> 4, "x" -> 4))),
+      Method.ItkwasmBinShrink, cache = false)
+    // persisted levels: the write's own jobs are the only ones left
+    ms.levels.foreach(_.chunks.persist().count())
+    val want = ms.levels.map(l => ChunkOps.toArray(l.chunks, l.meta).toSeq)
+    val sc = spark.sparkContext
+    val group = "pyramid-write"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      for ((version, cps) <- Seq("0.4" -> None, "0.5" -> Some(Seq(2, 2)))) {
+        jobs.set(0)
+        val dir = tempDir("onejob").toString + "/img.zarr"
+        sc.setJobGroup(group, s"write v$version")
+        val counts =
+          try OmeZarrIO.writeMultiscales(spark, dir, ms, version = version,
+            chunksPerShard = cps)
+          finally sc.clearJobGroup()
+        assert(counts == Seq(16L, 4L, 1L))
+        // listener events are async: poll until the job count settles
+        var last = -1
+        var waited = 0
+        while ((jobs.get() != last || jobs.get() == 0) && waited < 10000) {
+          last = jobs.get(); Thread.sleep(300); waited += 300
+        }
+        assert(jobs.get() == 1, s"v$version: ${jobs.get()} jobs put the pyramid's objects")
+        val back = OmeZarrIO.readMultiscales(spark, dir, validate = true)
+        assert(back.levels.map(_.meta.shape) == Seq(Seq(64L, 64L), Seq(32L, 32L), Seq(16L, 16L)))
+        assert(back.levels.map(l => ChunkOps.toArray(l.chunks, l.meta).toSeq) == want)
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      ms.levels.foreach(_.chunks.unpersist())
+    }
+  }
+
   test("v0.5 (zarr v3) write/read round-trip with c/ chunk keys") {
     val (m, vals) = mkImage()
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base,
       Some(Seq(Map("y" -> 2, "x" -> 2))), Method.ItkwasmGaussian, cache = false)
-    val dir = Files.createTempDirectory("omezarr3").toString + "/img.zarr"
+    val dir = tempDir("omezarr3").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5", compressor = Some("gzip"))
     assert(new java.io.File(s"$dir/scale0/image/c/0/0").exists())
     assert(new java.io.File(s"$dir/zarr.json").exists())
@@ -65,7 +113,7 @@ class OmeZarrIOSpec extends SparkSpec {
     for ((version, comp) <- Seq("0.4" -> "blosc", "0.5" -> "blosc:zstd:3",
         "0.4" -> "blosc:blosclz", "0.5" -> "blosc:blosclz:5:bit",
         "0.4" -> "blosc:lz4:5:bit")) {
-      val dir = Files.createTempDirectory("omezarr").toString + "/img.zarr"
+      val dir = tempDir("omezarr").toString + "/img.zarr"
       OmeZarrIO.writeMultiscales(spark, dir, ms, version = version,
         compressor = Some(comp))
       // the store advertises blosc in its metadata, with zarr-python's shape
@@ -89,7 +137,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base,
       Some(Seq(Map("y" -> 2, "x" -> 2))), Method.ItkwasmBinShrink, cache = false)
-    val local = Files.createTempDirectory("omezarr-remote").toString
+    val local = tempDir("omezarr-remote").toString
     val dir = s"mockfs://bucket$local/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4",
       compressor = Some("blosc"))
@@ -126,7 +174,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-transpose").toString + "/img.zarr"
+    val dir = tempDir("omezarr-transpose").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5", compressor = Some("gzip"))
 
     // rewrite scale0 the way a foreign writer with
@@ -197,7 +245,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-sparse").toString + "/img.zarr"
+    val dir = tempDir("omezarr-sparse").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5", compressor = Some("gzip"))
 
     // drop chunk (1,1) and declare fill_value 7 — the sparse-store form
@@ -238,7 +286,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-shard-tr").toString + "/img.zarr"
+    val dir = tempDir("omezarr-shard-tr").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
       compressor = Some("gzip"), chunksPerShard = Some(Seq(2, 2)))
 
@@ -293,7 +341,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-sparse-shard").toString + "/img.zarr"
+    val dir = tempDir("omezarr-sparse-shard").toString + "/img.zarr"
     // 2×2 inner chunks per shard → one shard object for the level
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
       compressor = Some("gzip"), chunksPerShard = Some(Seq(2, 2)))
@@ -337,7 +385,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-forder").toString + "/img.zarr"
+    val dir = tempDir("omezarr-forder").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4", compressor = Some("gzip"))
 
     // rewrite chunks in Fortran order and declare order: "F"
@@ -388,7 +436,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-filters").toString + "/img.zarr"
+    val dir = tempDir("omezarr-filters").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4", compressor = Some("gzip"))
 
     // re-encode every chunk the way numcodecs does: delta in <i4, then
@@ -442,7 +490,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-fso").toString + "/img.zarr"
+    val dir = tempDir("omezarr-fso").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4", compressor = Some("zstd"))
 
     val arr = java.nio.file.Paths.get(dir, "scale0", "image")
@@ -484,7 +532,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-crc").toString + "/img.zarr"
+    val dir = tempDir("omezarr-crc").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5", compressor = Some("gzip"))
 
     // foreign writer layout: append crc32c after gzip in the chain and
@@ -530,7 +578,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-keyenc").toString + "/img.zarr"
+    val dir = tempDir("omezarr-keyenc").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5", compressor = Some("gzip"))
 
     // rewrite scale0 the way a v2-converted store keys its chunks:
@@ -585,7 +633,7 @@ class OmeZarrIOSpec extends SparkSpec {
       val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
       val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
         Method.ItkwasmBinShrink, cache = false)
-      val dir = Files.createTempDirectory(s"omezarr-fuzz$round").toString + "/img.zarr"
+      val dir = tempDir(s"omezarr-fuzz$round").toString + "/img.zarr"
       OmeZarrIO.writeMultiscales(spark, dir, ms, version = version,
         compressor = Some("gzip"))
 
@@ -721,7 +769,7 @@ class OmeZarrIOSpec extends SparkSpec {
         if (version == "0.5" && rnd.nextBoolean())
           Some(Seq(1 + rnd.nextInt(3), 1 + rnd.nextInt(3)))
         else None
-      val dir = Files.createTempDirectory("omezarr-fuzz").toString + "/img.zarr"
+      val dir = tempDir("omezarr-fuzz").toString + "/img.zarr"
       OmeZarrIO.writeMultiscales(spark, dir, ms, version = version,
         compressor = comp, chunksPerShard = cps)
       val back = OmeZarrIO.readMultiscales(spark, dir)
@@ -743,7 +791,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq(Map("y" -> 2, "x" -> 2))),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-consv3").toString + "/img.zarr"
+    val dir = tempDir("omezarr-consv3").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5")
     val rootDoc = new String(Files.readAllBytes(
       java.nio.file.Paths.get(dir, "zarr.json")))
@@ -767,7 +815,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-stale").toString + "/img.zarr"
+    val dir = tempDir("omezarr-stale").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5")
     // a fresh consolidated store cross-checks clean under validate
     assert(OmeZarrIO.readMultiscales(spark, dir, validate = true).levels.nonEmpty)
@@ -794,7 +842,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarr-consv2").toString + "/img.zarr"
+    val dir = tempDir("omezarr-consv2").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4")
     Files.delete(java.nio.file.Paths.get(dir, "scale0", "image", ".zarray"))
     val back = OmeZarrIO.readMultiscales(spark, dir)
@@ -808,7 +856,7 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base, Some(Seq.empty),
       Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("omezarrc").toString + "/img.zarr"
+    val dir = tempDir("omezarrc").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4")
     val zm = new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/.zmetadata")))
     assert(zm.contains("zarr_consolidated_format"))
@@ -823,40 +871,6 @@ class OmeZarrIOSpec extends SparkSpec {
     assert(ds2.collect().map(_.shape).toSet == Set(Seq(48, 16), Seq(16, 16)))
   }
 
-  test("chunk_store: chunks land in store B, metadata in store A, reads serve the pair") {
-    val (m, vals) = mkImage()
-    val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
-    val ms = MultiscaleBuilder.toMultiscales(spark, base,
-      Some(Seq(Map("y" -> 2, "x" -> 2))), Method.ItkwasmBinShrink, cache = false)
-    val metaDir = Files.createTempDirectory("czmeta").toString + "/img.zarr"
-    val chunkDir = Files.createTempDirectory("czchunk").toString + "/chunks"
-    val counts = OmeZarrIO.writeMultiscales(spark, metaDir, ms, version = "0.4",
-      chunkStore = Some(chunkDir))
-    assert(counts == Seq(4L, 1L))
-    // the stores really are split: metadata docs only in A, chunk
-    // objects only in B
-    assert(new java.io.File(s"$metaDir/scale0/image/.zarray").exists())
-    assert(!new java.io.File(s"$metaDir/scale0/image/0").exists())
-    assert(new java.io.File(s"$chunkDir/scale0/image/0/0").exists())
-    assert(!new java.io.File(s"$chunkDir/scale0/image/.zarray").exists())
-    // the pair merged into one tree is the complete store
-    graft.zarr.TestStores.mergeInto(chunkDir, metaDir)
-    val back = OmeZarrIO.readMultiscales(spark, metaDir, validate = true)
-    assert(ChunkOps.toArray(back.levels.head.chunks, back.levels.head.meta).toSeq
-      == vals.toSeq)
-    // sharded v0.5 pair: shard objects in B too
-    val metaDir3 = Files.createTempDirectory("czmeta3").toString + "/img.zarr"
-    val chunkDir3 = Files.createTempDirectory("czchunk3").toString + "/chunks"
-    OmeZarrIO.writeMultiscales(spark, metaDir3, ms, version = "0.5",
-      chunksPerShard = Some(Seq(2, 2)), chunkStore = Some(chunkDir3))
-    assert(new java.io.File(s"$chunkDir3/scale0/image/c/0/0").exists())
-    assert(!new java.io.File(s"$metaDir3/scale0/image/c").exists())
-    graft.zarr.TestStores.mergeInto(chunkDir3, metaDir3)
-    val back3 = OmeZarrIO.readMultiscales(spark, metaDir3)
-    assert(ChunkOps.toArray(back3.levels.head.chunks, back3.levels.head.meta).toSeq
-      == vals.toSeq)
-  }
-
   test("RFC 4 writer parity: orientations stripped by default, preserved under enabledRfcs=4") {
     val m = ImageMeta(Seq("y", "x"), Seq(8, 8), Seq(8, 8), "uint8",
       Map("y" -> 1.0, "x" -> 1.0), Map("y" -> 0.0, "x" -> 0.0),
@@ -867,14 +881,14 @@ class OmeZarrIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.Multiscale(Seq(base), Method.ItkwasmBinShrink, None)
     // default (reference `to_ngff_zarr.py:48-63`): orientation popped
-    val plain = Files.createTempDirectory("rfc4off").toString + "/img.zarr"
+    val plain = tempDir("rfc4off").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, plain, ms, version = "0.4")
     assert(!new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$plain/.zattrs"))).contains("orientation"))
     assert(OmeZarrIO.readMultiscales(spark, plain)
       .levels.head.meta.axesOrientations.isEmpty)
     // RFC 4 enabled: orientation preserved and round-trips
-    val rfc4 = Files.createTempDirectory("rfc4on").toString + "/img.zarr"
+    val rfc4 = tempDir("rfc4on").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, rfc4, ms, version = "0.4",
       enabledRfcs = Seq(4))
     assert(OmeZarrIO.readMultiscales(spark, rfc4, validate = true)

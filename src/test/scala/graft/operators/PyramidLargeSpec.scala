@@ -59,7 +59,7 @@ class PyramidLargeSpec extends SparkSpec {
     // sharded v3 write: scale0 = 4³ chunks packed 2³ per shard → 8
     // shard objects; the 64³ tail level exercises the clipped
     // edge-shard path (array smaller than one shard)
-    val dir = Files.createTempDirectory("pyr512").toString + "/img.zarr"
+    val dir = tempDir("pyr512").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
       compressor = Some("zstd"), chunksPerShard = Some(Seq(2, 2, 2)))
 

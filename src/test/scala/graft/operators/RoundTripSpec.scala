@@ -45,7 +45,7 @@ class RoundTripSpec extends SparkSpec {
     val ms = MultiscaleBuilder.Multiscale(Seq(
       MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, new Array[Double](256), m))),
       Method.ItkwasmBinShrink, Some(omero))
-    val dir = Files.createTempDirectory("omero").toString + "/img.zarr"
+    val dir = tempDir("omero").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms)
     val back = OmeZarrIO.readMultiscales(spark, dir, validate = true)
     assert(back.omero.contains(omero))
@@ -60,7 +60,7 @@ class RoundTripSpec extends SparkSpec {
     val vals = Array.tabulate(256 * 256)(i => (i % 251).toDouble)
     val ms = MultiscaleBuilder.Multiscale(Seq(
       MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))), Method.ItkwasmGaussian)
-    val dir = Files.createTempDirectory("refshard").toString + "/img.zarr"
+    val dir = tempDir("refshard").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
       chunksPerShard = Some(Seq(2, 2)))
     val doc = new String(Files.readAllBytes(

@@ -42,7 +42,7 @@ class ScannerFormatsSpec extends SparkSpec {
     // strip the note records and clear the notes flag -> bare image
     val bare = bytes.take(76 + NX * NY * NZ)
     bare(10) = 0; bare(11) = 0; bare(12) = 0; bare(13) = 0
-    val p = java.nio.file.Files.createTempFile("bare", ".pic")
+    val p = tempFile("bare", ".pic")
     java.nio.file.Files.write(p, bare)
     val img = ScannerFormats.readPic(spark, p.toString)
     assert(img.meta.scale == Map("x" -> 1.0, "y" -> 1.0, "z" -> 1.0))
@@ -52,7 +52,7 @@ class ScannerFormatsSpec extends SparkSpec {
   }
 
   test("PIC refuses a wrong file_id magic") {
-    val p = java.nio.file.Files.createTempFile("bad", ".pic")
+    val p = tempFile("bad", ".pic")
     java.nio.file.Files.write(p, new Array[Byte](76))
     val e = intercept[IllegalArgumentException](ScannerFormats.readPic(spark, p.toString))
     assert(e.getMessage.contains("12345"))
@@ -72,7 +72,7 @@ class ScannerFormatsSpec extends SparkSpec {
     val bytes = ScannerFormats.encodeIsqInt16(Seq(2, 2, 2), Seq(2000, 2000, 2000),
       Array.fill(8)(1))
     bytes(16) = 7 // not 1/3
-    val p = java.nio.file.Files.createTempFile("bad", ".isq")
+    val p = tempFile("bad", ".isq")
     java.nio.file.Files.write(p, bytes)
     val e = intercept[UnsupportedOperationException](ScannerFormats.readIsq(spark, p.toString))
     assert(e.getMessage.contains("data type"))
@@ -98,14 +98,14 @@ class ScannerFormatsSpec extends SparkSpec {
       "char  *storage = \"double\";\nfloat  bits = 12;\n" +
       "float  matrix[] = {2, 2};\n").getBytes("US-ASCII") ++ Array[Byte](0) ++
       new Array[Byte](16)
-    val p = java.nio.file.Files.createTempFile("bad", ".fdf")
+    val p = tempFile("bad", ".fdf")
     java.nio.file.Files.write(p, hdr)
     val e = intercept[UnsupportedOperationException](ScannerFormats.readFdf(spark, p.toString))
     assert(e.getMessage.contains("storage"))
   }
 
   test("Scanco AIM refuses loudly (no authoritative public layout here)") {
-    val p = java.nio.file.Files.createTempFile("vol", ".aim")
+    val p = tempFile("vol", ".aim")
     java.nio.file.Files.write(p, new Array[Byte](64))
     val e = intercept[UnsupportedOperationException](
       VolumeFormats.read(spark, p.toString))

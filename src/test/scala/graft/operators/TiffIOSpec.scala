@@ -315,7 +315,7 @@ class TiffIOSpec extends SparkSpec {
     assert(info.lsmInfo.exists(_.dimZ == 2))
     val structOff = raw.length - (2 * 48 + 2 * 12) - 88 // planes+thumbs+struct from EOF
     raw(structOff + 16) = 3
-    val p = java.nio.file.Files.createTempFile("bad", ".lsm")
+    val p = tempFile("bad", ".lsm")
     java.nio.file.Files.write(p, raw)
     val e = intercept[IllegalArgumentException](TiffIO.read(spark, p.toString))
     assert(e.getMessage.contains("full-resolution pages"))
@@ -359,7 +359,7 @@ class TiffIOSpec extends SparkSpec {
       }
     }
     val bytes = TiffIO.encodeGray8(w, h, planes, Some(omeXml))
-    val dir = java.nio.file.Files.createTempDirectory("ometiff")
+    val dir = tempDir("ometiff")
     val path = dir.resolve("gen.ome.tif")
     java.nio.file.Files.write(path, bytes)
     val gen = TiffIO.read(spark, path.toString)
@@ -377,7 +377,7 @@ class TiffIOSpec extends SparkSpec {
         """</Image></OME>"""
     val planes = Seq.fill(2)(Array.fill(w * h)(7.toByte))
     def readWith(xml: String): Unit = {
-      val p = java.nio.file.Files.createTempFile("ome-bad", ".ome.tif")
+      val p = tempFile("ome-bad", ".ome.tif")
       java.nio.file.Files.write(p, TiffIO.encodeGray8(w, h, planes, Some(xml)))
       TiffIO.read(spark, p.toString)
     }
@@ -403,7 +403,7 @@ class TiffIOSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(img.meta, img.chunks)
     val ms = MultiscaleBuilder.toMultiscales(spark, base,
       Some(Seq(Map("y" -> 2, "x" -> 2))), Method.ItkwasmBinShrink, cache = false)
-    val dir = java.nio.file.Files.createTempDirectory("tiff2zarr").toString + "/img.zarr"
+    val dir = tempDir("tiff2zarr").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4", compressor = Some("blosc"))
     val back = OmeZarrIO.readMultiscales(spark, dir, validate = true)
     assert(ChunkOps.toArray(back.levels.head.chunks, back.levels.head.meta).toSeq
@@ -421,7 +421,7 @@ class TiffIOSpec extends SparkSpec {
   test("old-style JPEG (compression 6): interchange stream decodes, " +
       "neither-stream-nor-tables refuses") {
     val full = jpegGray(16, 16, blockVal)
-    val path = java.nio.file.Files.createTempFile("oldjpeg", ".tif")
+    val path = tempFile("oldjpeg", ".tif")
     java.nio.file.Files.write(path, buildJpegTiff(16, 16, 16, Seq(full),
       tiled = false, tables = None, oldStyle = true))
     val img = TiffIO.read(spark, path.toString)
@@ -618,7 +618,7 @@ class TiffIOSpec extends SparkSpec {
     val fulls = Seq(0, 8).map(y0 => jpegGray(16, 8, (x, y) => blockVal(x, y + y0)))
     val parts = fulls.map(dissectJpeg)
     val (q, dc, ac, _) = parts.head
-    val path = java.nio.file.Files.createTempFile("oldjpegstrips", ".tif")
+    val path = tempFile("oldjpegstrips", ".tif")
     java.nio.file.Files.write(path, buildJpegTiff(16, 16, 8,
       parts.map(_._4), tiled = false, tables = None,
       oldTagTables = Some((q, dc, ac))))
@@ -643,7 +643,7 @@ class TiffIOSpec extends SparkSpec {
     val want = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/test/resources/fixtures/j2k/g8_l1.raw"))
       .map(_ & 0xff)
-    val path = java.nio.file.Files.createTempFile("j2ktiff", ".tif")
+    val path = tempFile("j2ktiff", ".tif")
     java.nio.file.Files.write(path, buildJpegTiff(19, 13, 13, Seq(j2c),
       tiled = false, tables = None, compOverride = 34712))
     val img = TiffIO.read(spark, path.toString)
@@ -662,7 +662,7 @@ class TiffIOSpec extends SparkSpec {
     val want = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("src/test/resources/fixtures/j2k/lossy97_exp.raw"))
       .map(_ & 0xff)
-    val path = java.nio.file.Files.createTempFile("j2klossytiff", ".tif")
+    val path = tempFile("j2klossytiff", ".tif")
     java.nio.file.Files.write(path, buildJpegTiff(33, 25, 25, Seq(j2c),
       tiled = false, tables = None, compOverride = 33003))
     val img = TiffIO.read(spark, path.toString)
@@ -678,7 +678,7 @@ class TiffIOSpec extends SparkSpec {
     val w = 11; val h = 9
     val img = Array.tabulate(w * h)(i => (i * 4099 + 17) % 65536)
     val j2c = Jpeg2kEncode.encode(Seq(img), w, h, 16, levels = 2, cbw = 8, cbh = 8)
-    val path = java.nio.file.Files.createTempFile("j2k16tiff", ".tif")
+    val path = tempFile("j2k16tiff", ".tif")
     java.nio.file.Files.write(path, buildJpegTiff(w, h, h, Seq(j2c),
       tiled = false, tables = None, compOverride = 34712, bits = 16))
     val tif = TiffIO.read(spark, path.toString)
@@ -695,7 +695,7 @@ class TiffIOSpec extends SparkSpec {
 
   test("JPEG-compressed strips (compression 7) decode within quantization error") {
     val strips = Seq(0, 8).map(y0 => jpegGray(16, 8, (x, y) => blockVal(x, y + y0)))
-    val path = java.nio.file.Files.createTempFile("jpegstrips", ".tif")
+    val path = tempFile("jpegstrips", ".tif")
     java.nio.file.Files.write(path, buildJpegTiff(16, 16, 8, strips,
       tiled = false, tables = None))
     val img = TiffIO.read(spark, path.toString)
@@ -710,7 +710,7 @@ class TiffIOSpec extends SparkSpec {
     // …and the tables blob must carry at least one DQT and one DHT
     assert(tables.sliding(2).exists(s => (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xdb))
     assert(tables.sliding(2).exists(s => (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xc4))
-    val path = java.nio.file.Files.createTempFile("jpegtile", ".tif")
+    val path = tempFile("jpegtile", ".tif")
     java.nio.file.Files.write(path, buildJpegTiff(16, 16, 0, Seq(abbrev),
       tiled = true, tables = Some(tables)))
     val img = TiffIO.read(spark, path.toString)

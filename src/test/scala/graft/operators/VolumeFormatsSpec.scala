@@ -204,7 +204,7 @@ class VolumeFormatsSpec extends SparkSpec {
 
     // truncated payload refuses with byte counts
     val tiny = nrrd(base :+ "encoding: raw": _*) ++ Array[Byte](1, 2, 3)
-    val p = java.nio.file.Files.createTempFile("trunc", ".nrrd")
+    val p = tempFile("trunc", ".nrrd")
     java.nio.file.Files.write(p, tiny)
     val e = intercept[Exception](
       values(VolumeFormats.read(spark, p.toString)))

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.col
 class CorpusBuildSpec extends SparkSpec {
 
   private def writeCrawl(n: Long): String = {
-    val dir = java.nio.file.Files.createTempDirectory("cbuild").toString
+    val dir = tempDir("cbuild").toString
     CrawlRehearsal.writeCrawl(spark, dir, n, nArchives = 4)
     dir
   }
@@ -19,7 +19,7 @@ class CorpusBuildSpec extends SparkSpec {
   test("funnel counts match the planted crawl structure") {
     val n = 400L
     val dir = writeCrawl(n)
-    val out = java.nio.file.Files.createTempDirectory("cbuild_out").toString
+    val out = tempDir("cbuild_out").toString
     val report = CorpusBuild.fromCrawl(spark,
         graft.sources.Warc.listArchives(spark, dir), out,
         nShards = 4, boilerplateMinDocs = 50, qualityGate = false)
@@ -55,7 +55,7 @@ class CorpusBuildSpec extends SparkSpec {
   test("the quality gate drops stopword-free synthetic text; robots can veto all") {
     val n = 100L
     val dir = writeCrawl(n)
-    val out1 = java.nio.file.Files.createTempDirectory("cbuild_q").toString
+    val out1 = tempDir("cbuild_q").toString
     val r1 = CorpusBuild.fromCrawl(spark,
         graft.sources.Warc.listArchives(spark, dir), out1,
         nShards = 2, boilerplateMinDocs = 50, qualityGate = true)
@@ -64,7 +64,7 @@ class CorpusBuildSpec extends SparkSpec {
     assert(r1("quality_gate") === 0L)
     assert(r1("exact_dedup_sharded") === 0L)
 
-    val out2 = java.nio.file.Files.createTempDirectory("cbuild_r").toString
+    val out2 = tempDir("cbuild_r").toString
     val r2 = CorpusBuild.fromCrawl(spark,
         graft.sources.Warc.listArchives(spark, dir), out2,
         nShards = 2, boilerplateMinDocs = 50,

@@ -32,7 +32,7 @@ class ShardsSpec extends SparkSpec {
   test("writeShards round-trips: shard dirs match the plan, order preserved") {
     val df = (0L until 300L).toDF("doc_id")
       .withColumn("text", concat(lit("doc"), col("doc_id")))
-    val path = java.nio.file.Files.createTempDirectory("shards").toString + "/out"
+    val path = tempDir("shards").toString + "/out"
     Shards.writeShards(df, path, nShards = 4)
     val back = spark.read.parquet(path)
     assert(back.count() == 300)
@@ -55,8 +55,8 @@ class ShardsSpec extends SparkSpec {
     val df = (0L until 120L).map(i => (i, s"document number $i " + "x" * (i % 40).toInt))
       .toDF("doc_id", "text")
     val hconf = graft.zarr.SerializableHadoopConf.fromActiveSession()
-    val dirA = java.nio.file.Files.createTempDirectory("tarA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("tarB").toString
+    val dirA = tempDir("tarA").toString
+    val dirB = tempDir("tarB").toString
     Shards.writeTarShards(df, dirA, nShards = 4)
     Shards.writeTarShards(df, dirB, nShards = 4)
     val plan = Shards.shardPlan(df, nShards = 4)
@@ -96,7 +96,7 @@ class ShardsSpec extends SparkSpec {
     val payload = "short".getBytes("UTF-8")
     val full = Shards.tarHeader("000000001.1.txt", payload.length.toLong) ++ payload
     // cut BEFORE the 512-padding completes (and before end blocks)
-    val tmp = java.nio.file.Files.createTempFile("trunc", ".tar")
+    val tmp = tempFile("trunc", ".tar")
     java.nio.file.Files.write(tmp, full ++ new Array[Byte](100))
     val e = intercept[IllegalArgumentException] {
       Shards.readTarShard(tmp.toString, hconf).toList

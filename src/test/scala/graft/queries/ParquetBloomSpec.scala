@@ -12,7 +12,7 @@ class ParquetBloomSpec extends SparkSpec {
 
   test("bloom filter offsets present in the footer; IN probe pushed to scan") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("bloomspec").toString
+    val tmp = tempDir("bloomspec").toString
     (0L until 2000L).map(i => (i, i % 97, i * 3))
       .toDF("id", "probe_key", "payload")
       .coalesce(1)

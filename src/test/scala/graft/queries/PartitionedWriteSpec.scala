@@ -12,7 +12,7 @@ class PartitionedWriteSpec extends SparkSpec {
 
   test("partition predicate prunes directories, not rows") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("partspec").toString
+    val tmp = tempDir("partspec").toString
     (0L until 1000L).map(i => (i, s"p${i % 4}", i * 3))
       .toDF("id", "part", "payload")
       .write.mode("overwrite").partitionBy("part").parquet(tmp)
@@ -49,7 +49,7 @@ class PartitionedWriteSpec extends SparkSpec {
 
   test("dynamic partition overwrite replaces only the written partition") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("dynspec").toString
+    val tmp = tempDir("dynspec").toString
     (0L until 100L).map(i => (i, s"d${i % 2}"))
       .toDF("id", "part")
       .write.mode("overwrite").partitionBy("part").parquet(tmp)

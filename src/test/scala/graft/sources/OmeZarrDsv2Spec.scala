@@ -8,7 +8,6 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -20,7 +19,7 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, storeVals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base,
       Some(Seq(Map("y" -> 2, "x" -> 2))), Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("dsv2").toString + "/img.zarr"
+    val dir = tempDir("dsv2").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4")
     dir
   }
@@ -52,7 +51,7 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     val vals = Array.tabulate(side * side)(i => (i % 4093).toDouble)
     val ms = MultiscaleBuilder.Multiscale(Seq(
       MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))), Method.ItkwasmBinShrink)
-    val dir = Files.createTempDirectory("dsv2pack").toString + "/img.zarr"
+    val dir = tempDir("dsv2pack").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4")
     (dir, vals)
   }
@@ -109,7 +108,7 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     val vals = Array.tabulate(100 * 76)(i => (i % 3001).toDouble)
     val ms = MultiscaleBuilder.Multiscale(Seq(
       MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))), Method.ItkwasmBinShrink)
-    val dir = Files.createTempDirectory("dsv2packshard").toString + "/img.zarr"
+    val dir = tempDir("dsv2packshard").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
       compressor = Some("zstd"), chunksPerShard = Some(Seq(2, 2)))
     val df = spark.read.format("omezarr").load(dir)
@@ -141,7 +140,7 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     val vals = Array.tabulate(128 * 128)(i => (i % 5000).toDouble)
     val ms = MultiscaleBuilder.Multiscale(Seq(
       MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))), Method.ItkwasmBinShrink)
-    val dir = Files.createTempDirectory("dsv2shard").toString + "/img.zarr"
+    val dir = tempDir("dsv2shard").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
       chunksPerShard = Some(Seq(2, 2)))
     val df = spark.read.format("omezarr").load(dir)
@@ -190,7 +189,7 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     val chunkDf = ds0.map(c => (0, c.chunkIdx, c.origin, c.shape, "uint16", c.data))
       .union(ds1.map(c => (1, c.chunkIdx, c.origin, c.shape, "uint16", c.data)))
       .toDF("scale", "chunk_idx", "origin", "shape", "dtype", "data")
-    val dir = Files.createTempDirectory("dsv2w").toString + "/img.zarr"
+    val dir = tempDir("dsv2w").toString + "/img.zarr"
     chunkDf.write.format("omezarr")
       .option("levels", OmeZarrWriteMeta.levelsJson(Seq(m0, m1)))
       .option("dims", "y,x").option("dtype", "uint16")
@@ -232,7 +231,7 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("a directory with no OME-Zarr metadata fails naming the path") {
-    val empty = Files.createTempDirectory("dsv2empty").toString
+    val empty = tempDir("dsv2empty").toString
     val e = intercept[IllegalArgumentException](
       spark.read.format("omezarr").load(empty).collect())
     assert(e.getMessage.contains(s"no OME-Zarr metadata at $empty"))

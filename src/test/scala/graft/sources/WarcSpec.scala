@@ -14,7 +14,7 @@ class WarcSpec extends SparkSpec {
       payload.length.toLong, payload)
 
   test("plain and per-record-gzip archives round-trip identically") {
-    val tmp = java.nio.file.Files.createTempDirectory("warc")
+    val tmp = tempDir("warc")
     val records = (0L until 7L).map { i =>
       rec(i, if (i % 2 == 0) "conversion" else "response",
         (s"payload-$i-" + "x" * i.toInt).getBytes(UTF_8))
@@ -37,7 +37,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("one archive file = one input partition (non-splittable gz posture)") {
-    val tmp = java.nio.file.Files.createTempDirectory("warc")
+    val tmp = tempDir("warc")
     val paths = (0 until 3).map { k =>
       val p = tmp.resolve(s"p$k.warc.gz").toString
       Warc.writeArchive(p, Seq(rec(k, "conversion", s"t$k".getBytes(UTF_8))))
@@ -60,7 +60,7 @@ class WarcSpec extends SparkSpec {
 
   test("httpResponses + wetTexts project the crawl views") {
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("warc")
+    val tmp = tempDir("warc")
     val html = "<html><body>doc body</body></html>".getBytes(UTF_8)
     val http = "HTTP/1.1 404 Not Found\r\nContent-Type: text/html\r\n\r\n"
       .getBytes(US_ASCII) ++ html
@@ -78,7 +78,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("malformed HTTP status lines refuse with record context") {
-    val tmp = java.nio.file.Files.createTempDirectory("warc")
+    val tmp = tempDir("warc")
     def respRec(id: Long, head: String) = {
       val payload = (head + "\r\n\r\nbody").getBytes("US-ASCII")
       Warc.WarcRecord("", "response", s"<urn:uuid:$id>", s"http://t/$id",

@@ -437,7 +437,7 @@ class StreamsSpec extends SparkSpec {
       .select(col("w.start").as("window_start"), col("event_type"), col("n"))
       .collect().map(r => (r.getTimestamp(0), r.getString(1)) -> r.getLong(2)).toMap
     // the file source needs a directory to watch
-    val streamDir = Files.createTempDirectory("events-stream")
+    val streamDir = tempDir("events-stream")
     Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       streamDir.resolve("events.parquet"))
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
@@ -461,7 +461,7 @@ class StreamsSpec extends SparkSpec {
   test("HCS plate: metadata round-trip, keyed lookup, streaming field upsert") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("hcs").toString + "/plate.zarr"
+    val dir = tempDir("hcs").toString + "/plate.zarr"
     val plate = Plate(
       rows = Seq(PlateRow("A"), PlateRow("B")),
       columns = Seq(PlateColumn("1"), PlateColumn("2")),
@@ -470,7 +470,7 @@ class StreamsSpec extends SparkSpec {
     Hcs.toHcsZarr(dir, plate)
 
     val mem = MemoryStream[Streams.ArrivingField]
-    val ckpt = Files.createTempDirectory("hcs-ckpt").toString
+    val ckpt = tempDir("hcs-ckpt").toString
     val q = Streams.hcsIngest(spark, mem.toDS(), dir, ckpt)
     val vals = Array.tabulate(64 * 64)(i => (i % 500).toDouble)
     mem.addData(Streams.ArrivingField("A/1", "0", 64, 64, vals, Some(0)))
@@ -498,7 +498,7 @@ class StreamsSpec extends SparkSpec {
   test("HCS ingest never materializes pixel payloads on the driver") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("hcs-big").toString + "/plate.zarr"
+    val dir = tempDir("hcs-big").toString + "/plate.zarr"
     Hcs.toHcsZarr(dir, Plate(
       rows = Seq(PlateRow("A")), columns = Seq(PlateColumn("1")),
       wells = Seq(PlateWellIndex("A/1", 0, 0)), acquisitions = Seq.empty))
@@ -513,7 +513,7 @@ class StreamsSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val mem = MemoryStream[Streams.ArrivingField]
-      val ckpt = Files.createTempDirectory("hcs-big-ckpt").toString
+      val ckpt = tempDir("hcs-big-ckpt").toString
       val q = Streams.hcsIngest(spark, mem.toDS(), dir, ckpt)
       val h = 1024
       val payloadBytes = h.toLong * h * 8
@@ -642,7 +642,7 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.Warc
-    val tmp = java.nio.file.Files.createTempDirectory("crawlstream")
+    val tmp = tempDir("crawlstream")
     def rec(id: Long, url: String, date: String, body: String) = {
       val html = body.getBytes("UTF-8")
       val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"

@@ -55,7 +55,7 @@ class ShardingSpec extends SparkSpec {
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.toMultiscales(spark, base,
       Some(Seq(Map("y" -> 2, "x" -> 2))), Method.ItkwasmBinShrink, cache = false)
-    val dir = Files.createTempDirectory("shard").toString + "/img.zarr"
+    val dir = tempDir("shard").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
       compressor = Some("zstd"), chunksPerShard = Some(Seq(2, 2)))
     // 128/32 = 4x4 chunk grid packed 2x2 per shard → 2x2 = 4 shard objects
@@ -82,7 +82,7 @@ class ShardingSpec extends SparkSpec {
     val vals = Array.fill(40 * 40)(r.nextInt(60000).toDouble)
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))
     val ms = MultiscaleBuilder.Multiscale(Seq(base), Method.ItkwasmBinShrink)
-    val dir = Files.createTempDirectory("shardedge").toString + "/img.zarr"
+    val dir = tempDir("shardedge").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
       compressor = Some("zstd"), chunksPerShard = Some(Seq(2, 2)))
     // direct path: data parity and exactly ceil(40/16)^2 = 9 chunk rows
@@ -111,7 +111,7 @@ class ShardingSpec extends SparkSpec {
       Map("y" -> 1.0, "x" -> 1.0), Map("y" -> 0.0, "x" -> 0.0))
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, new Array[Double](32 * 32), m))
     val ms = MultiscaleBuilder.Multiscale(Seq(base), Method.ItkwasmBinShrink)
-    val dir = Files.createTempDirectory("shardoutercomp").toString + "/img.zarr"
+    val dir = tempDir("shardoutercomp").toString + "/img.zarr"
     OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.5",
       compressor = Some("zstd"), chunksPerShard = Some(Seq(2, 2)))
     // splice a gzip codec after sharding_indexed in the outer chain
@@ -138,7 +138,7 @@ class ShardingSpec extends SparkSpec {
       Map("y" -> 1.0, "x" -> 1.0), Map("y" -> 0.0, "x" -> 0.0))
     val base = MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, new Array[Double](64), m))
     val ms = MultiscaleBuilder.Multiscale(Seq(base), Method.ItkwasmBinShrink)
-    val dir = Files.createTempDirectory("shardbad").toString + "/img.zarr"
+    val dir = tempDir("shardbad").toString + "/img.zarr"
     assertThrows[IllegalArgumentException](
       OmeZarrIO.writeMultiscales(spark, dir, ms, version = "0.4",
         chunksPerShard = Some(Seq(2, 2))))

@@ -20,18 +20,4 @@ object TestStores {
     }
     java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dir, ".zmetadata"))
   }
-
-  /** Copy every object of store `from` into store `to` (same keys):
-    * the chunk tree of a split `chunkStore` write merged back into its
-    * metadata tree is the complete store.
-    */
-  def mergeInto(from: String, to: String): Unit = {
-    val src = java.nio.file.Paths.get(from)
-    val walk = java.nio.file.Files.walk(src)
-    try walk.filter(java.nio.file.Files.isRegularFile(_)).forEach { f =>
-      val dst = java.nio.file.Paths.get(to).resolve(src.relativize(f).toString)
-      java.nio.file.Files.createDirectories(dst.getParent)
-      java.nio.file.Files.copy(f, dst)
-    } finally walk.close()
-  }
 }

@@ -1,9 +1,8 @@
 package graft.zarr
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-class ZarrStoreSpec extends AnyFunSuite {
+class ZarrStoreSpec extends AnyFunSuite with graft.TempDirs {
 
   test("codecs round-trip gzip/zlib/zstd/blosc/raw") {
     val data = Array.tabulate[Byte](10000)(i => (i * 31 % 251).toByte)
@@ -53,7 +52,7 @@ class ZarrStoreSpec extends AnyFunSuite {
     val wire = new java.io.ObjectInputStream(
       new java.io.ByteArrayInputStream(bos.toByteArray))
       .readObject().asInstanceOf[SerializableHadoopConf]
-    val local = Files.createTempDirectory("mockfs").toString
+    val local = tempDir("mockfs").toString
     val st = new ZarrStore(s"mockfs://bucket$local/store.zarr", Some(wire))
     st.writeString(".zgroup", """{"zarr_format": 2}""")
     st.writeBytes("a/0/0", Array.tabulate[Byte](100)(_.toByte))
@@ -123,7 +122,7 @@ class ZarrStoreSpec extends AnyFunSuite {
   }
 
   test("store read/write/list round-trip on local fs") {
-    val dir = Files.createTempDirectory("graft-zarr").toString
+    val dir = tempDir("graft-zarr").toString
     val store = new ZarrStore(dir)
     store.writeString("a/.zarray", "{}")
     store.writeBytes("a/0/0", Array[Byte](1, 2, 3))
@@ -141,7 +140,7 @@ class ZarrStoreSpec extends AnyFunSuite {
     val conf = new org.apache.hadoop.conf.Configuration()
     val fs = new NoChmodRawLocalFileSystem()
     fs.initialize(new java.net.URI("file:///"), conf)
-    val dir = Files.createTempDirectory("nochmod").toString
+    val dir = tempDir("nochmod").toString
     // default-permission create: the skip path — on-disk mode must be
     // the umask-applied default, exactly what stock Hadoop would chmod
     // to (the umask delta was the ADVICE r12 gap this pins closed)
