@@ -22,7 +22,8 @@ import graft.zarr.SparkSessions
   *       [--enable-rfc=4] [--ome-series=0] [--hdf5-dataset=<name>]
   *
   * Any other flag is refused with an error that names it and lists
-  * the flags above.
+  * the flags above; every subcommand refuses flags it does not read
+  * the same way.
   *
   * Flag parity with the reference CLI's metadata/processing groups
   * (`cli.py:178-266`): `--dims` renames axes positionally; `--scale`
@@ -43,6 +44,20 @@ object Cli {
   private val ConvertFlags = Seq("method", "version", "compressor", "chunks-per-shard",
     "dims", "name", "scale", "translation", "units", "chunks", "output-scale", "validate",
     "enable-rfc", "ome-series", "hdf5-dataset")
+
+  /** Parse `--key=value` flags into a map. A flag whose key is not in
+    * `known`, or an argument without the dashes or the `=`, is refused
+    * with an error that names it and lists what `command` reads.
+    */
+  private def flags(command: String, args: Array[String], known: Seq[String])
+      : Map[String, String] =
+    args.map { a =>
+      a.stripPrefix("--").split("=", 2) match {
+        case Array(k, v) if a.startsWith("--") && known.contains(k) => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"unknown flag '$a'; $command reads ${known.map(f => s"--$f=").mkString(", ")}")
+      }
+    }.toMap
 
   /** Parse "x=1.4,y=2" into an ordered map. */
   private def kvMap(s: String): Seq[(String, String)] =
@@ -72,12 +87,8 @@ object Cli {
       require(args.length >= 3, "usage: Cli corpus-build <warcDir> <outDir> [--flags]")
       val warcIn = args(1)
       val outDir = args(2)
-      val opts = args.drop(3).flatMap { a =>
-        a.stripPrefix("--").split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }
-      }.toMap
+      val opts = flags("corpus-build", args.drop(3),
+        Seq("shards", "quality", "boilerplate-min-docs", "robots-file", "user-agent"))
       val archives =
         if (warcIn.endsWith(".warc") || warcIn.endsWith(".warc.gz")) Seq(warcIn)
         else graft.sources.Warc.listArchives(spark, warcIn)
@@ -105,12 +116,7 @@ object Cli {
     // token_str) — the tokenStats contract of each family.
     if (args(0) == "tokenize") {
       require(args.length >= 3, "usage: Cli tokenize <docsParquet> <outParquet> [--flags]")
-      val opts = args.drop(3).flatMap { a =>
-        a.stripPrefix("--").split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }
-      }.toMap
+      val opts = flags("tokenize", args.drop(3), Seq("tokenizer", "merges", "vocab-file"))
       val docs = spark.read.parquet(args(1))
       def vocabLines(): Seq[String] = {
         val p = opts.getOrElse("vocab-file", throw new IllegalArgumentException(
@@ -153,12 +159,7 @@ object Cli {
     if (args(0) == "decontaminate") {
       require(args.length >= 4,
         "usage: Cli decontaminate <docsParquet> <benchParquet> <outParquet> [--flags]")
-      val opts = args.drop(4).flatMap { a =>
-        a.stripPrefix("--").split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }
-      }.toMap
+      val opts = flags("decontaminate", args.drop(4), Seq("ngram", "max-frac", "flag-tokens"))
       val docs = spark.read.parquet(args(1))
       val bench = spark.read.parquet(args(2))
       val n = opts.get("ngram").map(_.toInt).getOrElse(8)
@@ -182,12 +183,7 @@ object Cli {
     // n_rows, n_nulls, n_distinct, min_s, max_s, top_val, top_n).
     if (args(0) == "profile") {
       require(args.length >= 3, "usage: Cli profile <tableParquet> <outParquet> [--columns=a,b]")
-      val opts = args.drop(3).flatMap { a =>
-        a.stripPrefix("--").split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }
-      }.toMap
+      val opts = flags("profile", args.drop(3), Seq("columns"))
       val df = spark.read.parquet(args(1))
       val cols = opts.get("columns")
         .map(_.split(",").map(_.trim).toSeq)
@@ -208,12 +204,7 @@ object Cli {
     // label pyramids exist to feed.
     if (args(0) == "label") {
       require(args.length >= 3, "usage: Cli label <in.ome.zarr> <outParquet> [--threshold=N] [--scale=K]")
-      val opts = args.drop(3).flatMap { a =>
-        a.stripPrefix("--").split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }
-      }.toMap
+      val opts = flags("label", args.drop(3), Seq("threshold", "scale"))
       val levels = OmeZarrIO.readMultiscales(spark, args(1)).levels
       val idx = opts.get("scale").map(_.toInt).getOrElse(0)
       require(idx >= 0 && idx < levels.length,
@@ -247,13 +238,7 @@ object Cli {
 
     val input = args(0)
     val output = args(1)
-    val opts = args.drop(2).map { a =>
-      a.stripPrefix("--").split("=", 2) match {
-        case Array(k, v) if a.startsWith("--") && ConvertFlags.contains(k) => k -> v
-        case _ => throw new IllegalArgumentException(s"unknown flag '$a'; the convert " +
-          s"path reads ${ConvertFlags.map(f => s"--$f=").mkString(", ")}")
-      }
-    }.toMap
+    val opts = flags("the convert path", args.drop(2), ConvertFlags)
 
     val backend = Converters.detectBackend(Seq(input),
       isZarrArrayDir = p => new java.io.File(p, ".zarray").exists())

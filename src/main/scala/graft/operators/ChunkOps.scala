@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.meta.Model.ImageMeta
@@ -11,12 +12,16 @@ import graft.zarr.ZarrStore
   * Payloads are raw dtype-encoded little-endian C-order bytes;
   * compression exists only at the store boundary.
   *
-  * All heavy operators are chunk-granular Dataset transforms:
+  * All heavy operators are chunk-granular transforms:
   *  - per-chunk kernels → `mapPartitions` (no shuffle);
-  *  - stencil kernels → halo exchange: `flatMap` pieces to target
-  *    chunks → `groupByKey(target)` → assemble + kernel (one shuffle
-  *    keyed by chunk index — the Spark form of dask's map_overlap);
-  *  - `rechunk` (P4) uses the same piece/assemble machinery.
+  *  - stencil kernels → halo exchange ([[Downsample]]): the chunks are
+  *    re-blocked and pinned by `partitionBy` on their chunk key
+  *    ([[rechunkPinned]]), halo strips `partitionBy` the same
+  *    partitioner, and `zipPartitions` assembles each chunk with its
+  *    halos for the kernel — the Spark form of dask's map_overlap;
+  *  - `rechunk` (P4) cuts pieces to target chunks, groups them by
+  *    target and assembles, on the Dataset path; `rechunkPinned` does
+  *    the same on RDDs.
   */
 object ChunkOps {
 
@@ -200,21 +205,23 @@ object ChunkOps {
     (meta.copy(chunks = newChunks), assembled)
   }
 
-  /** Re-block directly into a key-partitioned RDD — the stencil path's
-    * entry: one volume shuffle does both the re-block and the pinning
-    * of chunks onto their key's partition, so the subsequent halo
-    * exchange only moves halo bytes ([[Downsample]]). `mapValues`
-    * after `groupByKey(part)` keeps the partitioner; when the grid is
-    * already right the pin is a single `partitionBy`.
+  /** Re-block directly into a key-partitioned RDD — the pyramid
+    * cascade's re-block. On the stencil path one volume shuffle does
+    * both the re-block and the pinning of chunks onto their key's
+    * partition, so the subsequent halo exchange only moves halo bytes
+    * ([[Downsample]]); the bin-shrink / nearest path and the re-block
+    * to output chunks ([[MultiscaleBuilder]]) take its `values`.
+    * `mapValues` after `groupByKey(part)` keeps the partitioner; when
+    * the grid is already right the pin is a single `partitionBy`.
     */
-  def rechunkPinned(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta,
+  def rechunkPinned(rows: RDD[ChunkRow], meta: ImageMeta,
       newChunks: Seq[Int], part: org.apache.spark.Partitioner)
-      : (ImageMeta, org.apache.spark.rdd.RDD[(String, ChunkRow)]) = {
+      : (ImageMeta, RDD[(String, ChunkRow)]) = {
     val outMeta = meta.copy(chunks = newChunks)
     if (newChunks == meta.chunks)
-      return (outMeta, ds.rdd.map(c => (c.chunkIdx.mkString(","), c)).partitionBy(part))
+      return (outMeta, rows.map(c => (c.chunkIdx.mkString(","), c)).partitionBy(part))
     val (shape, dtype) = (meta.shape, meta.dtype)
-    val assembled = ds.rdd
+    val assembled = rows
       .flatMap(cutPieces(_, shape, newChunks, dtype).map(p => p.targetKey -> p))
       .groupByKey(part)
       .mapValues(ps => assemble(ps.toSeq, shape, newChunks, dtype))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.meta.Model._
 import graft.meta.{Dtypes, ScalePlanner}
@@ -14,14 +16,17 @@ import ChunkOps._
   *  - bin-shrink / nearest: embarrassingly parallel `mapPartitions` —
   *    chunk-aligned factors mean no window ever crosses a chunk
   *    boundary (A10/A6/A13);
-  *  - gaussian / mode / label-gaussian: one halo-exchange shuffle
-  *    (`flatMap` halo pieces → `groupByKey(target)` → JVM kernel),
-  *    the Spark form of map_overlap with boundary="nearest"
-  *    (A5/A7/A9/A12).
+  *  - gaussian / mode / label-gaussian: the chunks are re-blocked and
+  *    pinned on a hash partitioner by their key, halo strips
+  *    `partitionBy` the same partitioner, and `zipPartitions` runs the
+  *    JVM kernel over each chunk plus its halos — the Spark form of
+  *    map_overlap with boundary="nearest" (A5/A7/A9/A12).
   *
   * Inputs are rechunked first when a chunk edge isn't divisible by
-  * its factor (`_align_chunks` parity) — at scale this is the only
-  * extra shuffle, and it's skipped whenever factors divide chunks.
+  * its factor (`_align_chunks` parity) — for bin-shrink / nearest this
+  * is the only shuffle, and it's skipped whenever factors divide
+  * chunks. A step is built on the chunk RDD ([[stepRdd]]), so it only
+  * adds lineage: no Spark job runs until an action pulls its output.
   */
 object Downsample {
 
@@ -46,6 +51,16 @@ object Downsample {
   /** One downsample step. Returns the next level's metadata + chunks. */
   def step(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta,
       dimFactors: Map[String, Int], method: Method): (ImageMeta, Dataset[ChunkRow]) = {
+    import spark.implicits._
+    val (outMeta, out) = stepRdd(spark, ds.rdd, meta, dimFactors, method)
+    (outMeta, spark.createDataset(out))
+  }
+
+  /** [[step]] over the chunk RDD: builds lineage only, so a cascade of
+    * steps submits no job until an action pulls the last level.
+    */
+  private[operators] def stepRdd(spark: SparkSession, rows: RDD[ChunkRow], meta: ImageMeta,
+      dimFactors: Map[String, Int], method: Method): (ImageMeta, RDD[ChunkRow]) = {
 
     val factors0 = meta.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
     // kernel radius per dim (0 for the shuffle-free methods)
@@ -77,15 +92,20 @@ object Downsample {
     }
 
     if (!stencil) {
-      val (m1, ds1) = rechunk(spark, ds, meta, targetChunks)
+      val (m1, rows1) =
+        if (targetChunks == meta.chunks) (meta, rows)
+        else {
+          val (m1, pinned, _) = pin(spark, rows, meta, targetChunks)
+          (m1, pinned.values)
+        }
       val factors = m1.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
       val outMeta = outMetaFor(m1)
       val out = method match {
         case Method.ItkwasmBinShrink | Method.ItkBinShrink =>
-          perChunk(spark, ds1, m1, factors, outMeta)(NdKernels.binShrink(_, _, _,
+          perChunk(rows1, m1, factors, outMeta)(NdKernels.binShrink(_, _, _,
             roundInt = isIntDtype(m1.dtype)))
         case Method.DaskImageNearest =>
-          perChunk(spark, ds1, m1, factors, outMeta)(NdKernels.nearest)
+          perChunk(rows1, m1, factors, outMeta)(NdKernels.nearest)
         case other => throw new IllegalStateException(s"non-stencil method $other")
       }
       (outMeta, out)
@@ -93,18 +113,12 @@ object Downsample {
       // stencil path: ONE volume shuffle re-blocks AND pins chunks on
       // their key's partition; the halo exchange then moves only halo
       // bytes against the pinned side
-      val grid = ZarrStore.chunkGrid(meta.shape, targetChunks)
-      val totalChunks = grid.map(_.toLong).product
-      val numParts = math.max(1, math.min(totalChunks,
-        math.max(ds.rdd.getNumPartitions,
-          spark.sparkContext.defaultParallelism).toLong).toInt)
-      val part = new org.apache.spark.HashPartitioner(numParts)
-      val (m1, pinned) = ChunkOps.rechunkPinned(spark, ds, meta, targetChunks, part)
+      val (m1, pinned, part) = pin(spark, rows, meta, targetChunks)
       val factors = m1.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
       val outMeta = outMetaFor(m1)
       val out = method match {
         case Method.DaskImageMode =>
-          haloExchange(spark, pinned, part, m1, factors, outMeta,
+          haloExchange(pinned, part, m1, factors, outMeta,
             radius = factors.map(identity)) { (ext, extShape, outBlockShape, centerOff) =>
             NdKernels.modeCentered(ext, extShape, factors, outBlockShape, centerOff)
           }
@@ -112,7 +126,7 @@ object Downsample {
           val sigma = factors.map(k => ScalePlanner.computeSigma(Seq(k)).head)
           val truncate = ScalePlanner.getTruncate(m1.shape, sigma.toSeq)
           val radius = ScalePlanner.gaussianBorder(sigma.toSeq, truncate).toArray
-          haloExchange(spark, pinned, part, m1, factors, outMeta, radius) {
+          haloExchange(pinned, part, m1, factors, outMeta, radius) {
             (ext, extShape, outBlockShape, centerOff) =>
               NdKernels.gaussianDownsample(ext, extShape, factors, sigma, radius,
                 outBlockShape, centerOff, roundInt = isIntDtype(m1.dtype))
@@ -120,7 +134,7 @@ object Downsample {
         case Method.ItkwasmLabelImage =>
           val sigma = factors.map(k => ScalePlanner.computeSigma(Seq(k)).head)
           val radius = ScalePlanner.kernelRadius(sigma.toSeq).toArray
-          haloExchange(spark, pinned, part, m1, factors, outMeta, radius) {
+          haloExchange(pinned, part, m1, factors, outMeta, radius) {
             (ext, extShape, outBlockShape, centerOff) =>
               NdKernels.labelGaussianDownsample(ext, extShape, factors, sigma, radius,
                 outBlockShape, centerOff)
@@ -186,21 +200,10 @@ object Downsample {
     require(radius.length == meta.dims.length,
       s"radius arity ${radius.length} != dims ${meta.dims.length}")
     require(radius.forall(_ >= 0), s"negative radius: ${radius.mkString(",")}")
-    val ones = Array.fill(meta.dims.length)(1)
-    val targetChunks = meta.dims.indices.map(d =>
-      planChunk(meta.shape(d), meta.chunks(d), 1, radius(d)))
-    val grid = ZarrStore.chunkGrid(meta.shape, targetChunks)
-    val totalChunks = grid.map(_.toLong).product
-    val numParts = math.max(1, math.min(totalChunks,
-      math.max(ds.rdd.getNumPartitions,
-        spark.sparkContext.defaultParallelism).toLong).toInt)
-    val part = new org.apache.spark.HashPartitioner(numParts)
-    val (m1, pinned) = ChunkOps.rechunkPinned(spark, ds, meta, targetChunks, part)
-    val out = haloExchange(spark, pinned, part, m1, ones, m1, radius) {
+    fullResStencil(spark, ds, meta, radius, meta.dtype) {
       (ext, extShape, outBlockShape, centerOff) =>
         NdKernels.minMaxFilter(ext, extShape, radius, outBlockShape, centerOff, dilate)
     }
-    (m1, out)
   }
 
   /** Squared Sobel gradient magnitude (edge strength) at full
@@ -217,22 +220,10 @@ object Downsample {
     require(meta.dims == Seq("y", "x"), s"2D entry point, got ${meta.dims}")
     require(isIntDtype(meta.dtype),
       s"sobelSq keeps exact integer gradients — integral dtypes only, got ${meta.dtype}")
-    val radius = Array(1, 1)
-    val ones = Array(1, 1)
-    val targetChunks = meta.dims.indices.map(d =>
-      planChunk(meta.shape(d), meta.chunks(d), 1, radius(d)))
-    val grid = ZarrStore.chunkGrid(meta.shape, targetChunks)
-    val numParts = math.max(1, math.min(grid.map(_.toLong).product,
-      math.max(ds.rdd.getNumPartitions,
-        spark.sparkContext.defaultParallelism).toLong).toInt)
-    val part = new org.apache.spark.HashPartitioner(numParts)
-    val (m1, pinned) = ChunkOps.rechunkPinned(spark, ds, meta, targetChunks, part)
-    val outMeta = m1.copy(dtype = "int32")
-    val out = haloExchange(spark, pinned, part, m1, ones, outMeta, radius) {
+    fullResStencil(spark, ds, meta, Array(1, 1), "int32") {
       (ext, extShape, outBlockShape, centerOff) =>
         NdKernels.sobelSq2d(ext, extShape, outBlockShape, centerOff)
     }
-    (outMeta, out)
   }
 
   /** 3×3 median denoise at full resolution — the standard
@@ -249,22 +240,10 @@ object Downsample {
       s"2D/3D entry point, got ${meta.dims}")
     require(isIntDtype(meta.dtype),
       s"medianFilter keeps exact integer medians — integral dtypes only, got ${meta.dtype}")
-    val nd = meta.dims.length
-    val radius = Array.fill(nd)(1)
-    val ones = Array.fill(nd)(1)
-    val targetChunks = meta.dims.indices.map(d =>
-      planChunk(meta.shape(d), meta.chunks(d), 1, radius(d)))
-    val grid = ZarrStore.chunkGrid(meta.shape, targetChunks)
-    val numParts = math.max(1, math.min(grid.map(_.toLong).product,
-      math.max(ds.rdd.getNumPartitions,
-        spark.sparkContext.defaultParallelism).toLong).toInt)
-    val part = new org.apache.spark.HashPartitioner(numParts)
-    val (m1, pinned) = ChunkOps.rechunkPinned(spark, ds, meta, targetChunks, part)
-    val out = haloExchange(spark, pinned, part, m1, ones, m1, radius) {
+    fullResStencil(spark, ds, meta, Array.fill(meta.dims.length)(1), meta.dtype) {
       (ext, extShape, outBlockShape, centerOff) =>
         NdKernels.medianFilterNd(ext, extShape, outBlockShape, centerOff)
     }
-    (m1, out)
   }
 
   /** Adaptive (local-mean) threshold — Bradley/skimage
@@ -282,33 +261,50 @@ object Downsample {
     require(isIntDtype(meta.dtype),
       s"adaptiveThreshold compares exact integer window sums — integral dtypes only, got ${meta.dtype}")
     require(radius >= 1, s"radius must be >= 1, got $radius")
-    val rad = Array(radius, radius)
-    val ones = Array(1, 1)
-    val targetChunks = meta.dims.indices.map(d =>
-      planChunk(meta.shape(d), meta.chunks(d), 1, rad(d)))
-    val grid = ZarrStore.chunkGrid(meta.shape, targetChunks)
-    val numParts = math.max(1, math.min(grid.map(_.toLong).product,
-      math.max(ds.rdd.getNumPartitions,
-        spark.sparkContext.defaultParallelism).toLong).toInt)
-    val part = new org.apache.spark.HashPartitioner(numParts)
-    val (m1, pinned) = ChunkOps.rechunkPinned(spark, ds, meta, targetChunks, part)
-    val outMeta = m1.copy(dtype = "uint8")
-    val out = haloExchange(spark, pinned, part, m1, ones, outMeta, rad) {
+    fullResStencil(spark, ds, meta, Array(radius, radius), "uint8") {
       (ext, extShape, outBlockShape, centerOff) =>
         NdKernels.adaptiveThreshold2d(ext, extShape, outBlockShape, centerOff, radius, c)
     }
-    (outMeta, out)
+  }
+
+  /** A full-resolution (factor 1) stencil filter: re-block so every
+    * chunk spans `radius`, pin, one halo exchange; the output keeps
+    * the re-blocked grid and takes `outDtype`.
+    */
+  private def fullResStencil(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta,
+      radius: Array[Int], outDtype: String)(
+      kernel: (Array[Double], Array[Int], Array[Int], Array[Int]) => Array[Double])
+      : (ImageMeta, Dataset[ChunkRow]) = {
+    import spark.implicits._
+    val targetChunks = meta.dims.indices.map(d =>
+      planChunk(meta.shape(d), meta.chunks(d), 1, radius(d)))
+    val (m1, pinned, part) = pin(spark, ds.rdd, meta, targetChunks)
+    val outMeta = m1.copy(dtype = outDtype)
+    val out = haloExchange(pinned, part, m1, Array.fill(radius.length)(1), outMeta, radius)(kernel)
+    (outMeta, spark.createDataset(out))
+  }
+
+  /** Re-block `rows` to `targetChunks` and pin each chunk on its key's
+    * partition: one volume shuffle, over at least the default
+    * parallelism and at most one partition per chunk.
+    */
+  private def pin(spark: SparkSession, rows: RDD[ChunkRow], meta: ImageMeta,
+      targetChunks: Seq[Int]): (ImageMeta, RDD[(String, ChunkRow)], HashPartitioner) = {
+    val grid = ZarrStore.chunkGrid(meta.shape, targetChunks)
+    val part = new HashPartitioner(math.max(1, math.min(grid.map(_.toLong).product,
+      math.max(rows.getNumPartitions, spark.sparkContext.defaultParallelism).toLong).toInt))
+    val (m1, pinned) = ChunkOps.rechunkPinned(rows, meta, targetChunks, part)
+    (m1, pinned, part)
   }
 
   /** No-halo path: kernel maps each chunk independently. */
-  private def perChunk(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta,
+  private def perChunk(rows: RDD[ChunkRow], meta: ImageMeta,
       factors: Array[Int], outMeta: ImageMeta)(
       kernel: (Array[Double], Array[Int], Array[Int]) => (Array[Double], Array[Int]))
-      : Dataset[ChunkRow] = {
-    import spark.implicits._
+      : RDD[ChunkRow] = {
     val dtype = meta.dtype
     val nOut = outMeta.shape
-    ds.mapPartitions(_.flatMap { chunk =>
+    rows.mapPartitions(_.flatMap { chunk =>
       val vals = ZarrStore.decodeToDoubles(chunk.data, dtype)
       // samples this chunk owns: from origin/k, clipped to global floor(n/k)
       val outCount = chunk.shape.indices.map { d =>
@@ -343,13 +339,11 @@ object Downsample {
     * suffices (the reference's truncate search enforces the same
     * bound).
     */
-  private def haloExchange(spark: SparkSession,
-      pinned0: org.apache.spark.rdd.RDD[(String, ChunkRow)],
+  private def haloExchange(pinned: RDD[(String, ChunkRow)],
       part: org.apache.spark.Partitioner, meta: ImageMeta,
       factors: Array[Int], outMeta: ImageMeta, radius: Array[Int])(
       kernel: (Array[Double], Array[Int], Array[Int], Array[Int]) => Array[Double])
-      : Dataset[ChunkRow] = {
-    import spark.implicits._
+      : RDD[ChunkRow] = {
     val dtype = meta.dtype
     val outDtype = outMeta.dtype
     val shape = meta.shape
@@ -363,12 +357,11 @@ object Downsample {
     }
     val nOut = outMeta.shape
 
-    // no persist: `pinned0` ends in a shuffle (rechunkPinned), and both
+    // no persist: `pinned` ends in a shuffle (rechunkPinned), and both
     // consumers below — the halo flatMap and zipPartitions — read the
     // SAME shuffle output, so upstream computes exactly once and the
     // shuffle files are the materialization (persisting would leak one
     // cached volume per pyramid level for the application lifetime)
-    val pinned = pinned0
 
     // halo pieces only (off != 0) — the bytes that actually cross
     // chunk boundaries
@@ -415,7 +408,7 @@ object Downsample {
 
     // same partitioner both sides → partition i holds chunk AND halos
     // for the same keys; the volume side does not move again
-    val out = pinned.zipPartitions(halos, preservesPartitioning = false) { (chunkIt, haloIt) =>
+    pinned.zipPartitions(halos, preservesPartitioning = false) { (chunkIt, haloIt) =>
       val halosByKey = scala.collection.mutable.HashMap.empty[String, List[Piece]]
       haloIt.foreach { case (k, p) =>
         halosByKey.update(k, p :: halosByKey.getOrElse(k, Nil))
@@ -452,6 +445,5 @@ object Downsample {
         }
       }
     }
-    spark.createDataset(out)
   }
 }

@@ -160,7 +160,7 @@ object Imaging extends QModule {
         val x = f % nx; val y = (f / nx) % ny; val z = f / (nx * ny)
         (x * 17 + y * 5 + z * 23) % 180
       }
-      val dir = java.nio.file.Files.createTempDirectory("i71")
+      val dir = QTables.scratchDir("i71")
       val isqPath = dir.resolve("vol.isq")
       java.nio.file.Files.write(isqPath, ScannerFormats.encodeIsqInt16(
         Seq(nx, ny, nz), Seq(10500, 15000, 17500), fvals)) // -> 1.5/2.5/3.5 mm
@@ -216,7 +216,7 @@ object Imaging extends QModule {
         val x = f % nx; val y = (f / nx) % ny; val z = f / (nx * ny)
         (x * 11 + y * 3 + z * 37) % 256
       }
-      val path = java.nio.file.Files.createTempDirectory("i70").resolve("vol.mnc2")
+      val path = QTables.scratchDir("i70").resolve("vol.mnc2")
       java.nio.file.Files.write(path, Hdf5.encodeMinc2Uint8(
         Seq(nz, ny, nx), steps = Seq(-2.25, 1.75, 0.5), starts = Seq(9.0, -4.0, 1.5), vals))
       val img = Hdf5IO.readMinc2(s, path.toString)
@@ -265,7 +265,7 @@ object Imaging extends QModule {
         val x = f % nx; val y = (f / nx) % ny; val z = f / (nx * ny)
         ((x * 13 + y * 7 + z * 41) % 1000).toDouble
       }
-      val path = java.nio.file.Files.createTempDirectory("i69").resolve("vol.iwi.cbor.zst")
+      val path = QTables.scratchDir("i69").resolve("vol.iwi.cbor.zst")
       java.nio.file.Files.write(path, IwiIO.encodeIwiCborZst(
         Seq(nx, ny, nz), Seq(0.8, 1.6, 2.4), Seq(-4.0, 2.0, 7.5), "uint16", fvals))
       val img = IwiIO.read(s, path.toString)
@@ -311,7 +311,7 @@ object Imaging extends QModule {
     (s, _) => {
       import graft.operators.DicomIO
       val (cols, rows) = (10, 8)
-      val dir = java.nio.file.Files.createTempDirectory("i68")
+      val dir = QTables.scratchDir("i68")
       // one slice per TRANSFER SYNTAX — explicit-LE / RLE-Lossless /
       // JPEG-LS / JPEG-Lossless(SV1) / JPEG 2000 (signed reversible
       // 5/3, MQ-coded) / Deflated-LE: every syntax is lossless, so
@@ -378,7 +378,7 @@ object Imaging extends QModule {
         val x = f % nx; val y = (f / nx) % ny; val z = f / (nx * ny)
         (x * 3 + y * 5 + z * 29) % 256
       }
-      val path = java.nio.file.Files.createTempDirectory("i67").resolve("vol.nrrd")
+      val path = QTables.scratchDir("i67").resolve("vol.nrrd")
       java.nio.file.Files.write(path, VolumeFormats.encodeNrrdInt16(
         Seq(nx, ny, nz), Seq(1.5, 2.5, 3.5), Seq(5.0, -3.0, 0.5), vals))
       val img = VolumeFormats.read(s, path.toString)
@@ -436,7 +436,7 @@ object Imaging extends QModule {
           ((t * 83 + c * 47 + z * 29 + (i / w) * 5 + (i % w) * 3) % 256).toByte
         }
       }
-      val path = java.nio.file.Files.createTempDirectory("i66")
+      val path = QTables.scratchDir("i66")
         .resolve("axes.ome.tif")
       java.nio.file.Files.write(path, TiffIO.encodeGray8(w, h, planes, Some(omeXml)))
       val img = TiffIO.read(s, path.toString)
@@ -507,7 +507,7 @@ object Imaging extends QModule {
         acquisitions = Seq(
           PlateAcquisition(0, Some("acq0"), Some(2)),
           PlateAcquisition(1, Some("acq1"), Some(2))))
-      val storeDir = java.nio.file.Files.createTempDirectory("hcs-gate")
+      val storeDir = QTables.scratchDir("hcs-gate")
         .toString + "/plate.zarr"
       Hcs.toHcsZarr(storeDir, plate)
       val store = Hcs.openStore(storeDir)
@@ -1021,8 +1021,7 @@ object Imaging extends QModule {
     (s, _) => {
       val (w, h, nz) = (12, 10, 6)
       // applicationId-keyed path: bench re-runs overwrite in place
-      val dir = java.nio.file.Paths.get(
-        s"/tmp/graft_i83_${s.sparkContext.applicationId}")
+      val dir = java.nio.file.Paths.get(QTables.appTmp(s, "i83"))
       java.nio.file.Files.createDirectories(dir)
       (0 until nz).foreach { z =>
         val img = new java.awt.image.BufferedImage(w, h,

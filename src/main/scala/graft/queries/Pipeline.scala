@@ -4336,7 +4336,7 @@ object Pipeline extends QModule {
     (s, dir) => {
       // applicationId-keyed path (like q55/q67): repeated bench runs
       // overwrite in place instead of accumulating /tmp ORC copies
-      val tmp = s"/tmp/graft_q53_orc_${s.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val tmp = QTables.appTmp(s, "q53_orc", dir)
       docs(s, dir).write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
         .filter(col("n_chars") >= 200)

@@ -40,16 +40,50 @@ private[queries] object QTables {
   /** applicationId-keyed scratch dir for gates that write local
     * fixtures (WARC archives, tar shards, …): deleted and recreated
     * per call, so repeated bench executions reuse ONE path instead of
-    * leaking a fresh createTempDirectory per run (the q53 lesson).
+    * leaking a fresh createTempDirectory per run (the q53 lesson), and
+    * deleted when the JVM exits.
     */
   def gateTmp(s: SparkSession, key: String): java.nio.file.Path = {
-    val p = java.nio.file.Paths.get(
-      s"/tmp/graft_gate_${key}_${s.sparkContext.applicationId}")
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
+    val p = java.nio.file.Paths.get(appTmp(s, s"gate_$key"))
+    deleteTree(p)
     java.nio.file.Files.createDirectories(p)
   }
+
+  /** `/tmp/graft_<name>_<applicationId>[_<dir>]` (`dir` with every
+    * character outside [a-zA-Z0-9] as `_`), not created here: a
+    * per-application scratch path, so concurrent runs on one host do
+    * not race on overwrite and repeated runs overwrite in place. It is
+    * deleted with everything under it when the JVM exits.
+    */
+  def appTmp(s: SparkSession, name: String, dir: String = ""): String = {
+    val suffix = if (dir.isEmpty) "" else "_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
+    deleteAtExit(java.nio.file.Paths.get(
+      s"/tmp/graft_${name}_${s.sparkContext.applicationId}$suffix")).toString
+  }
+
+  /** A fresh temp directory for a gate's local fixtures, deleted with
+    * everything under it when the JVM exits: the gate DataFrames are
+    * lazy and read their fixtures when an action runs, so the
+    * directory must outlive the query that made it.
+    */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    deleteAtExit(java.nio.file.Files.createTempDirectory(prefix))
+
+  private val atExit = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => atExit.forEach(p => deleteTree(p))))
+
+  private def deleteAtExit(dir: java.nio.file.Path): java.nio.file.Path = {
+    exitHook
+    atExit.add(dir)
+    dir
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(p)
+      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists)
+      finally walk.close()
+    }
 }

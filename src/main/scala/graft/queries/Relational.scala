@@ -773,7 +773,7 @@ object Relational extends QModule {
     (s, dir) => {
       // per-application scratch path: concurrent gate/bench runs on
       // one host must not race on overwrite
-      val tmp = s"/tmp/graft_csv_${s.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val tmp = QTables.appTmp(s, "csv", dir)
       Tables.load(s, dir, "nation")
         .write.mode("overwrite").option("header", "true").csv(tmp)
       s.read.option("header", "true")
@@ -793,7 +793,7 @@ object Relational extends QModule {
   val q38JsonScan = Q(
     "q38_json_scan",
     (s, dir) => {
-      val tmp = s"/tmp/graft_json_${s.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val tmp = QTables.appTmp(s, "json", dir)
       Tables.load(s, dir, "supplier")
         .write.mode("overwrite").json(tmp)
       s.read.schema("s_suppkey LONG, s_name STRING, s_nationkey INT, s_acctbal DOUBLE")
@@ -1180,7 +1180,7 @@ object Relational extends QModule {
   val q55ParquetBloom = Q(
     "q55_parquet_bloom",
     (s, dir) => {
-      val tmp = s"/tmp/graft_bloom_${s.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val tmp = QTables.appTmp(s, "bloom", dir)
       Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
         .write.mode("overwrite")
@@ -1381,7 +1381,7 @@ object Relational extends QModule {
   val q67PartitionedScan = Q(
     "q67_partitioned_scan",
     (s, dir) => {
-      val tmp = s"/tmp/graft_part_${s.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val tmp = QTables.appTmp(s, "part", dir)
       Tables.load(s, dir, "orders")
         .write.mode("overwrite").partitionBy("o_orderpriority").parquet(tmp)
       s.read.parquet(tmp)
@@ -1410,7 +1410,7 @@ object Relational extends QModule {
   val q68DynamicOverwrite = Q(
     "q68_dynamic_overwrite",
     (s, dir) => {
-      val tmp = s"/tmp/graft_dynpart_${s.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val tmp = QTables.appTmp(s, "dynpart", dir)
       val orders = Tables.load(s, dir, "orders")
       orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(tmp)
       val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
@@ -1896,7 +1896,7 @@ object Relational extends QModule {
   val q79SchemaEvolution = Q(
     "q79_schema_evolution",
     (s, dir) => {
-      val tmp = s"/tmp/graft_q79_${s.sparkContext.applicationId}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val tmp = QTables.appTmp(s, "q79", dir)
       val d = QTables.docs(s, dir)
       d.filter(col("doc_id") < 250)
         .select(col("doc_id"), col("n_chars"))

@@ -258,4 +258,21 @@ class CliSpec extends SparkSpec {
     graft.Cli.run(spark, Array("profile", inDir, outDir2, "--columns=tag"))
     assert(spark.read.parquet(outDir2).collect().map(_.getString(0)).toSeq == Seq("tag"))
   }
+
+  // each subcommand with a misspelled flag and one flag it does read;
+  // the inputs need not exist, since flags are parsed before any read
+  for ((args, typo, known) <- Seq(
+      (Seq("corpus-build", "in", "out"), "--shard=2", "--boilerplate-min-docs="),
+      (Seq("tokenize", "in", "out"), "--tokeniser=bpe", "--vocab-file="),
+      (Seq("decontaminate", "docs", "bench", "out"), "--n-gram=8", "--max-frac="),
+      (Seq("profile", "in", "out"), "--colums=a", "--columns="),
+      (Seq("label", "in", "out"), "--treshold=2", "--threshold="))) {
+    test(s"${args.head} refuses a misspelled flag, naming it and the flags it reads") {
+      val e = intercept[IllegalArgumentException](Cli.run(spark, (args :+ typo).toArray))
+      assert(e.getMessage.contains(s"'$typo'") && e.getMessage.contains(known), e.getMessage)
+      // a flag without a value is refused too
+      assertThrows[IllegalArgumentException](
+        Cli.run(spark, (args :+ known.stripSuffix("=")).toArray))
+    }
+  }
 }

@@ -1,0 +1,106 @@
+package graft.operators
+
+import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.SparkSpec
+import graft.meta.Model._
+import graft.zarr.ZarrStore
+
+/** The pyramid cascade is lazy: `toMultiscales` only builds lineage
+  * and submits no Spark job, a build plus its write runs as one job,
+  * and the levels stay Dataset caches that `unpersist` frees.
+  */
+class LazyCascadeSpec extends SparkSpec {
+
+  /** Runs `body` under a fresh job group and returns its result with
+    * the number of jobs started in that group. Listener events arrive
+    * in order, so once a marker job run afterwards has been seen,
+    * every job of `body` has been seen too.
+    */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"lazy-cascade-${UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "lazy cascade")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.contains(marker), "the listener never saw the marker job")
+      (out, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Writes `vals` as a one-level v0.4 store and reads it back, so the
+    * cascade starts from a `readMultiscales` base (an omezarr scan).
+    */
+  private def storedBase(meta: ImageMeta, vals: Array[Double]): MultiscaleBuilder.Level = {
+    val dir = tempDir("lazy-base").toString + "/in.ome.zarr"
+    OmeZarrIO.writeMultiscales(spark, dir, MultiscaleBuilder.Multiscale(
+      Seq(MultiscaleBuilder.Level(meta, ChunkOps.fromArray(spark, vals, meta))),
+      Method.ItkwasmGaussian))
+    OmeZarrIO.readMultiscales(spark, dir).levels.head
+  }
+
+  private def image(shape: Seq[Long], dims: Seq[String], chunks: Seq[Int],
+      dtype: String, seed: Int, max: Int): (ImageMeta, Array[Double]) = {
+    val meta = ImageMeta(dims, shape, chunks, dtype,
+      dims.map(_ -> 1.0).toMap, dims.map(_ -> 0.0).toMap)
+    val r = new scala.util.Random(seed)
+    (meta, Array.fill(shape.product.toInt)(r.nextInt(max).toDouble))
+  }
+
+  private val cases = Seq(
+    // 3-D gaussian: every level is re-blocked back to the 8³ output chunks
+    ("3-D itkwasm_gaussian", image(Seq(32, 32, 32), Seq("z", "y", "x"), Seq(8, 8, 8),
+      "uint16", 5, 65536), Seq(2, 4).map(k => Map("z" -> k, "y" -> k, "x" -> k)),
+      Method.ItkwasmGaussian),
+    ("dask_image_mode", image(Seq(48, 48), Seq("y", "x"), Seq(16, 16), "uint8", 6, 7),
+      Seq(2, 4).map(k => Map("y" -> k, "x" -> k)), Method.DaskImageMode),
+    // 7 is odd: each step re-blocks to 14 before the bin-shrink
+    ("bin-shrink on chunk edges the factor does not divide",
+      image(Seq(30, 30), Seq("y", "x"), Seq(7, 7), "uint8", 7, 256),
+      Seq(2, 4).map(k => Map("y" -> k, "x" -> k)), Method.ItkwasmBinShrink))
+
+  for ((name, (meta, vals), factors, method) <- cases) {
+    test(s"$name: toMultiscales submits no job, and the build plus its write runs as one") {
+      val base = storedBase(meta, vals)
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val (ms, buildJobs) = jobsIn(
+        MultiscaleBuilder.toMultiscales(spark, base, Some(factors), method))
+      try {
+        assert(buildJobs == 0, s"toMultiscales ran $buildJobs Spark jobs")
+        assert(ms.levels.length == 3)
+        val dir = tempDir("lazy-out").toString + "/out.ome.zarr"
+        val (counts, writeJobs) = jobsIn(OmeZarrIO.writeMultiscales(spark, dir, ms,
+          version = "0.5", chunksPerShard = Some(meta.dims.map(_ => 2))))
+        assert(writeJobs == 1, s"the build and its write ran $writeJobs Spark jobs")
+        assert((sc.getPersistentRDDs.keySet -- before).size == 2,
+          "the write should have filled one cache per level above the base")
+        val back = OmeZarrIO.readMultiscales(spark, dir)
+        assert(back.levels.map(l => (l.meta.shape, l.meta.chunks)) ==
+          ms.levels.map(l => (l.meta.shape, l.meta.chunks)))
+        assert(counts == ms.levels.map(l =>
+          ZarrStore.chunkGrid(l.meta.shape, l.meta.chunks).map(_.toLong).product))
+        back.levels.zip(ms.levels).foreach { case (b, l) =>
+          assert(ChunkOps.toArray(b.chunks, b.meta).toSeq == ChunkOps.toArray(l.chunks, l.meta).toSeq,
+            s"re-read voxels of ${l.meta.shape} differ from the in-memory level")
+        }
+      } finally ms.levels.tail.foreach(_.chunks.unpersist(blocking = true))
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"RDDs still persisted after unpersist: ${left.mkString(",")}")
+    }
+  }
+}
