@@ -409,8 +409,10 @@ object Cli {
       MultiscaleBuilder.Level(meta, ds)
     }
 
-    val method = opts.get("method").flatMap(Method.fromValue)
-      .getOrElse(Method.ItkwasmGaussian)
+    val method = opts.get("method").fold[Method](Method.ItkwasmGaussian) { v =>
+      Method.fromValue(v).getOrElse(throw new IllegalArgumentException(
+        s"convert: unknown --method=$v; valid methods: ${Method.all.map(_.value).mkString(", ")}"))
+    }
     val ms = MultiscaleBuilder.toMultiscales(spark, base, method = method)
     // --enable-rfc is repeatable (reference `cli.py:220-226` appends);
     // a Map would collapse repeats, so collect from the raw args

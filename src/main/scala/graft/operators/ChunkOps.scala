@@ -14,14 +14,13 @@ import graft.zarr.ZarrStore
   *
   * All heavy operators are chunk-granular transforms:
   *  - per-chunk kernels → `mapPartitions` (no shuffle);
-  *  - stencil kernels → halo exchange ([[Downsample]]): the chunks are
-  *    re-blocked and pinned by `partitionBy` on their chunk key
-  *    ([[rechunkPinned]]), halo strips `partitionBy` the same
-  *    partitioner, and `zipPartitions` assembles each chunk with its
-  *    halos for the kernel — the Spark form of dask's map_overlap;
-  *  - `rechunk` (P4) cuts pieces to target chunks, groups them by
-  *    target and assembles, on the Dataset path; `rechunkPinned` does
-  *    the same on RDDs.
+  *  - stencil kernels ([[Downsample]]) → one [[exchange]]: every chunk
+  *    is cut against each target block's box extended by the kernel's
+  *    margin, the pieces are grouped by block, and each block is
+  *    assembled with its halo for the kernel — the Spark form of dask's
+  *    map_overlap;
+  *  - `rechunk` (P4) is the same cut with no margin, grouped by target
+  *    and assembled, on the Dataset path; `rechunkRdd` does it on RDDs.
   */
 object ChunkOps {
 
@@ -186,7 +185,7 @@ object ChunkOps {
     spark.createDataset(assembled)
   }
 
-  // ---- rechunk (P4) ----
+  // ---- rechunk (P4) and the exchange ----
 
   /** Re-block the chunk table to a new chunk grid: split every chunk
     * into pieces addressed to target chunks, shuffle on the target
@@ -199,93 +198,162 @@ object ChunkOps {
     // regular grid after ops that rebase origins (slice)
     if (newChunks == meta.chunks && !force) return (meta, ds)
     val (shape, dtype) = (meta.shape, meta.dtype)
-    val assembled = ds.flatMap(cutPieces(_, shape, newChunks, dtype))
+    val noMargin = newChunks.map(_ => 0)
+    val assembled = ds.flatMap(cutPieces(_, shape, newChunks, noMargin, dtype))
       .groupByKey(_.targetKey)
-      .mapGroups((_, ps) => assemble(ps.toSeq, shape, newChunks, dtype))
+      .mapGroups((_, ps) => center(ps.toSeq, shape, newChunks, noMargin, dtype))
     (meta.copy(chunks = newChunks), assembled)
   }
 
-  /** Re-block directly into a key-partitioned RDD — the pyramid
-    * cascade's re-block. On the stencil path one volume shuffle does
-    * both the re-block and the pinning of chunks onto their key's
-    * partition, so the subsequent halo exchange only moves halo bytes
-    * ([[Downsample]]); the bin-shrink / nearest path and the re-block
-    * to output chunks ([[MultiscaleBuilder]]) take its `values`.
-    * `mapValues` after `groupByKey(part)` keeps the partitioner; when
-    * the grid is already right the pin is a single `partitionBy`.
+  /** [[rechunk]] over an RDD, grouped on `part`: the [[exchange]] with
+    * no margin, each block assembled from its pieces.
     */
-  def rechunkPinned(rows: RDD[ChunkRow], meta: ImageMeta,
-      newChunks: Seq[Int], part: org.apache.spark.Partitioner)
-      : (ImageMeta, RDD[(String, ChunkRow)]) = {
+  private[operators] def rechunkRdd(rows: RDD[ChunkRow], meta: ImageMeta, newChunks: Seq[Int],
+      part: org.apache.spark.Partitioner): (ImageMeta, RDD[ChunkRow]) = {
     val outMeta = meta.copy(chunks = newChunks)
-    if (newChunks == meta.chunks)
-      return (outMeta, rows.map(c => (c.chunkIdx.mkString(","), c)).partitionBy(part))
-    val (shape, dtype) = (meta.shape, meta.dtype)
-    val assembled = rows
-      .flatMap(cutPieces(_, shape, newChunks, dtype).map(p => p.targetKey -> p))
-      .groupByKey(part)
-      .mapValues(ps => assemble(ps.toSeq, shape, newChunks, dtype))
-    (outMeta, assembled)
+    val noMargin = newChunks.map(_ => 0)
+    (outMeta, exchange(rows, outMeta, noMargin, part).values
+      .map(center(_, outMeta.shape, newChunks, noMargin, outMeta.dtype)))
   }
 
-  /** The re-block's cut: the pieces of `chunk` that fall in each chunk
-    * of the `newChunks` grid it overlaps, dtype-encoded.
+  /** One exchange onto the grid of `meta.chunks`: every chunk of `rows`
+    * (any grid over the same image) is cut against each block's
+    * extended box ([[extendedBox]]) and the pieces are grouped by block
+    * on `part`. With a zero margin it is a re-block; with a stencil's
+    * margin each group holds a block plus its halo — the Spark form of
+    * dask's `map_overlap`, in one shuffle.
+    */
+  private[operators] def exchange(rows: RDD[ChunkRow], meta: ImageMeta, margin: Seq[Int],
+      part: org.apache.spark.Partitioner): RDD[(String, Iterable[Piece])] = {
+    val (shape, chunks, dtype) = (meta.shape, meta.chunks, meta.dtype)
+    rows.flatMap(cutPieces(_, shape, chunks, margin, dtype).map(p => p.targetKey -> p))
+      .groupByKey(part)
+  }
+
+  /** Block `tIdx` of the `chunks` grid with `margin` voxels added on
+    * every side that is not an image border: its global origin, its
+    * shape and its left margin per dim. A margin never exceeds the
+    * smallest chunk edge, so the box stays inside the image.
+    */
+  private def extendedBox(shape: Seq[Long], chunks: Seq[Int], margin: Seq[Int],
+      tIdx: Seq[Int]): (Array[Long], Array[Int], Array[Int]) = {
+    val nd = shape.length
+    val grid = ZarrStore.chunkGrid(shape, chunks)
+    val tShape = ZarrStore.chunkShapeAt(shape, chunks, tIdx)
+    val lh = Array.tabulate(nd)(d => if (tIdx(d) > 0) margin(d) else 0)
+    val rh = Array.tabulate(nd)(d => if (tIdx(d) < grid(d) - 1) margin(d) else 0)
+    (Array.tabulate(nd)(d => tIdx(d).toLong * chunks(d) - lh(d)),
+      Array.tabulate(nd)(d => lh(d) + tShape(d) + rh(d)), lh)
+  }
+
+  /** The exchange's cut: the piece of `chunk` that falls in the
+    * extended box of each block of the `newChunks` grid it meets,
+    * placed at its position in that box. Pieces are sliced out of the
+    * dtype-encoded bytes, which are never decoded here.
     */
   private def cutPieces(chunk: ChunkRow, shape: Seq[Long], newChunks: Seq[Int],
-      dtype: String): Iterator[Piece] = {
+      margin: Seq[Int], dtype: String): Iterator[Piece] = {
     val nd = shape.length
-    val vals = ZarrStore.decodeToDoubles(chunk.data, dtype)
-    // target chunk index range intersecting this chunk, per dim
-    val lo = Array.tabulate(nd)(d => (chunk.origin(d) / newChunks(d)).toInt)
-    val hi = Array.tabulate(nd)(d =>
-      ((chunk.origin(d) + chunk.shape(d) - 1) / newChunks(d)).toInt)
-    ZarrStore.gridPositions(Array.tabulate(nd)(d => hi(d) - lo(d) + 1)).map { rel =>
-      val tIdx = Array.tabulate(nd)(d => lo(d) + rel(d))
+    val item = Dtypes.itemSize(dtype)
+    // block index range whose extended boxes can meet this chunk, per dim
+    val lo = Array.tabulate(nd)(d =>
+      (math.max(0L, chunk.origin(d) - margin(d)) / newChunks(d)).toInt)
+    val hi = Array.tabulate(nd)(d => (math.min(shape(d) - 1,
+      chunk.origin(d) + chunk.shape(d) - 1 + margin(d)) / newChunks(d)).toInt)
+    ZarrStore.gridPositions(Array.tabulate(nd)(d => hi(d) - lo(d) + 1)).flatMap { rel =>
+      val tIdx = Array.tabulate(nd)(d => lo(d) + rel(d)).toSeq
+      val (bLo, bShape, _) = extendedBox(shape, newChunks, margin, tIdx)
       // overlap region in global coords
-      val gLo = Array.tabulate(nd)(d => math.max(chunk.origin(d), tIdx(d).toLong * newChunks(d)))
-      val gHi = Array.tabulate(nd)(d => math.min(chunk.origin(d) + chunk.shape(d),
-        math.min(shape(d), (tIdx(d) + 1).toLong * newChunks(d))))
+      val gLo = Array.tabulate(nd)(d => math.max(chunk.origin(d), bLo(d)))
+      val gHi = Array.tabulate(nd)(d =>
+        math.min(chunk.origin(d) + chunk.shape(d), bLo(d) + bShape(d)))
       val pShape = Array.tabulate(nd)(d => (gHi(d) - gLo(d)).toInt)
-      val srcOff = Array.tabulate(nd)(d => (gLo(d) - chunk.origin(d)).toInt)
-      val destPos = Array.tabulate(nd)(d => (gLo(d) - tIdx(d).toLong * newChunks(d)).toInt)
-      val sub = sliceBlock(vals, chunk.shape.toArray, srcOff, pShape)
-      Piece(tIdx.mkString(","), tIdx.toSeq, destPos.toSeq, pShape.toSeq,
-        ZarrStore.encodeFromDoubles(sub, dtype))
+      if (pShape.exists(_ <= 0)) None
+      else {
+        val srcOff = Array.tabulate(nd)(d => (gLo(d) - chunk.origin(d)).toInt)
+        val destPos = Array.tabulate(nd)(d => (gLo(d) - bLo(d)).toInt)
+        val bytes =
+          if (pShape.toSeq == chunk.shape) chunk.data
+          else sliceBytes(chunk.data, chunk.shape.toArray, srcOff, pShape, item)
+        Some(Piece(tIdx.mkString(","), tIdx, destPos.toSeq, pShape.toSeq, bytes))
+      }
     }
   }
 
-  /** The re-block's assembly: one target chunk from all its pieces. */
-  private def assemble(ps: Seq[Piece], shape: Seq[Long], newChunks: Seq[Int],
-      dtype: String): ChunkRow = {
+  /** One block's extended box assembled from all its pieces: the
+    * values, the box shape and the left margin per dim.
+    */
+  private[operators] def assembleExtended(ps: Iterable[Piece], shape: Seq[Long], chunks: Seq[Int],
+      margin: Seq[Int], dtype: String): (Array[Double], Array[Int], Array[Int]) = {
+    val item = Dtypes.itemSize(dtype)
+    val (_, extShape, lh) = extendedBox(shape, chunks, margin, ps.head.targetIdx)
+    val ext = new Array[Byte](extShape.product * item)
+    ps.foreach(p => placeBytes(ext, extShape, p.destPos.toArray, p.shape.toArray, p.data, item))
+    (ZarrStore.decodeToDoubles(ext, dtype), extShape, lh)
+  }
+
+  /** One block without its halo, sliced out of its pieces: each piece
+    * contributes only its overlap with the block, so the margin is
+    * never assembled. With no margin this is the re-block's assembly.
+    */
+  private[operators] def center(ps: Iterable[Piece], shape: Seq[Long], chunks: Seq[Int],
+      margin: Seq[Int], dtype: String): ChunkRow = {
     val tIdx = ps.head.targetIdx
-    val tShape = ZarrStore.chunkShapeAt(shape, newChunks, tIdx)
-    val tOrigin = ZarrStore.chunkOriginAt(newChunks, tIdx)
-    val block = new Array[Double](tShape.product)
-    ps.foreach(p => placeBlock(block, tShape.toArray, p.destPos.toArray, p.shape.toArray,
-      ZarrStore.decodeToDoubles(p.data, dtype)))
-    ChunkRow(tIdx, tOrigin, tShape, ZarrStore.encodeFromDoubles(block, dtype))
+    val nd = shape.length
+    val item = Dtypes.itemSize(dtype)
+    val tShape = ZarrStore.chunkShapeAt(shape, chunks, tIdx).toArray
+    val (_, _, lh) = extendedBox(shape, chunks, margin, tIdx)
+    val block = new Array[Byte](tShape.product * item)
+    ps.foreach { p =>
+      // the piece's overlap with the block, in extended-box coords
+      val lo = Array.tabulate(nd)(d => math.max(p.destPos(d), lh(d)))
+      val hi = Array.tabulate(nd)(d => math.min(p.destPos(d) + p.shape(d), lh(d) + tShape(d)))
+      val box = Array.tabulate(nd)(d => hi(d) - lo(d))
+      if (box.forall(_ > 0)) {
+        val inner =
+          if (box.toSeq == p.shape) p.data
+          else sliceBytes(p.data, p.shape.toArray, Array.tabulate(nd)(d => lo(d) - p.destPos(d)),
+            box, item)
+        placeBytes(block, tShape, Array.tabulate(nd)(d => lo(d) - lh(d)), box, inner, item)
+      }
+    }
+    ChunkRow(tIdx, ZarrStore.chunkOriginAt(chunks, tIdx), tShape.toSeq, block)
   }
 
   /** Copy a sub-block out of a C-order array. */
   def sliceBlock(in: Array[Double], shape: Array[Int], off: Array[Int],
       outShape: Array[Int]): Array[Double] = {
     val out = new Array[Double](outShape.product)
-    copyBox(in, shape, off, out, outShape, out.length, place = false)
+    copyBox(in, shape, off, out, outShape, out.length, 1, place = false)
     out
   }
 
   /** Place a sub-block into a C-order array at `pos0`. */
   def placeBlock(dst: Array[Double], dstShape: Array[Int], pos0: Array[Int],
       blockShape: Array[Int], values: Array[Double]): Unit =
-    copyBox(dst, dstShape, pos0, values, blockShape, values.length, place = true)
+    copyBox(dst, dstShape, pos0, values, blockShape, values.length, 1, place = true)
+
+  /** [[sliceBlock]] over dtype-encoded bytes, `item` bytes a voxel. */
+  private def sliceBytes(in: Array[Byte], shape: Array[Int], off: Array[Int],
+      outShape: Array[Int], item: Int): Array[Byte] = {
+    val out = new Array[Byte](outShape.product * item)
+    copyBox(in, shape, off, out, outShape, outShape.product, item, place = false)
+    out
+  }
+
+  /** [[placeBlock]] over dtype-encoded bytes, `item` bytes a voxel. */
+  private def placeBytes(dst: Array[Byte], dstShape: Array[Int], pos0: Array[Int],
+      blockShape: Array[Int], values: Array[Byte], item: Int): Unit =
+    copyBox(dst, dstShape, pos0, values, blockShape, values.length / item, item, place = true)
 
   /** The block odometer: walks the `box`-shaped region at `off` inside
     * the C-order `region` of `shape`, row-major, one innermost row at a
-    * time, and copies its first `n` values out into the dense `block`
-    * or, with `place`, from `block` into it.
+    * time, and copies its first `n` voxels out into the dense `block`
+    * or, with `place`, from `block` into it. Both are arrays of one
+    * primitive type with `item` elements a voxel.
     */
-  private def copyBox(region: Array[Double], shape: Array[Int], off: Array[Int],
-      block: Array[Double], box: Array[Int], n: Int, place: Boolean): Unit = {
+  private def copyBox(region: AnyRef, shape: Array[Int], off: Array[Int],
+      block: AnyRef, box: Array[Int], n: Int, item: Int, place: Boolean): Unit = {
     val nd = box.length
     val row = box(nd - 1)
     val str = NdKernels.strides(shape)
@@ -296,8 +364,8 @@ object ChunkOps {
       var d = 0
       while (d < nd) { i += (off(d) + pos(d)) * str(d); d += 1 }
       val len = math.min(row, n - flat)
-      if (place) System.arraycopy(block, flat, region, i, len)
-      else System.arraycopy(region, i, block, flat, len)
+      if (place) System.arraycopy(block, flat * item, region, i * item, len * item)
+      else System.arraycopy(region, i * item, block, flat * item, len * item)
       flat += len
       var dd = nd - 2
       var carry = true

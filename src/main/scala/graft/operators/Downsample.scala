@@ -16,17 +16,19 @@ import ChunkOps._
   *  - bin-shrink / nearest: embarrassingly parallel `mapPartitions` —
   *    chunk-aligned factors mean no window ever crosses a chunk
   *    boundary (A10/A6/A13);
-  *  - gaussian / mode / label-gaussian: the chunks are re-blocked and
-  *    pinned on a hash partitioner by their key, halo strips
-  *    `partitionBy` the same partitioner, and `zipPartitions` runs the
-  *    JVM kernel over each chunk plus its halos — the Spark form of
-  *    map_overlap with boundary="nearest" (A5/A7/A9/A12).
+  *  - gaussian / mode / label-gaussian ([[Stencil]]): one exchange
+  *    ([[ChunkOps.exchange]]) cuts the chunks against the planned
+  *    grid's blocks, each extended by the kernel's margin, and groups
+  *    the pieces by block; each block is assembled with its halo and
+  *    the JVM kernel maps it — the Spark form of map_overlap with
+  *    boundary="nearest" (A5/A7/A9/A12). The same exchange re-blocks
+  *    to the planned grid, so the step has exactly one shuffle.
   *
-  * Inputs are rechunked first when a chunk edge isn't divisible by
-  * its factor (`_align_chunks` parity) — for bin-shrink / nearest this
-  * is the only shuffle, and it's skipped whenever factors divide
-  * chunks. A step is built on the chunk RDD ([[stepRdd]]), so it only
-  * adds lineage: no Spark job runs until an action pulls its output.
+  * For bin-shrink / nearest the input is rechunked first when a chunk
+  * edge isn't divisible by its factor (`_align_chunks` parity) — the
+  * only shuffle, skipped whenever factors divide chunks. A step is
+  * built on the chunk RDD ([[stepRdd]]), so it only adds lineage: no
+  * Spark job runs until an action pulls its output.
   */
 object Downsample {
 
@@ -52,97 +54,161 @@ object Downsample {
   def step(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta,
       dimFactors: Map[String, Int], method: Method): (ImageMeta, Dataset[ChunkRow]) = {
     import spark.implicits._
-    val (outMeta, out) = stepRdd(spark, ds.rdd, meta, dimFactors, method)
+    val (outMeta, out) = stepRdd(ds.rdd, meta, dimFactors, method)
     (outMeta, spark.createDataset(out))
   }
 
   /** [[step]] over the chunk RDD: builds lineage only, so a cascade of
     * steps submits no job until an action pulls the last level.
     */
-  private[operators] def stepRdd(spark: SparkSession, rows: RDD[ChunkRow], meta: ImageMeta,
-      dimFactors: Map[String, Int], method: Method): (ImageMeta, RDD[ChunkRow]) = {
-
-    val factors0 = meta.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
-    // kernel radius per dim (0 for the shuffle-free methods)
-    val radius0: Array[Int] = method match {
-      case Method.ItkwasmGaussian | Method.ItkGaussian | Method.DaskImageGaussian =>
-        val sigma = factors0.map(k => ScalePlanner.computeSigma(Seq(k)).head)
-        val truncate = ScalePlanner.getTruncate(meta.shape, sigma.toSeq)
-        ScalePlanner.gaussianBorder(sigma.toSeq, truncate).toArray
-      case Method.DaskImageMode => factors0
-      case Method.ItkwasmLabelImage =>
-        val sigma = factors0.map(k => ScalePlanner.computeSigma(Seq(k)).head)
-        ScalePlanner.kernelRadius(sigma.toSeq).toArray
-      case _ => Array.fill(factors0.length)(0)
-    }
-    // 1. re-block so factors divide chunk edges and halos fit
-    val targetChunks = meta.dims.indices.map(d =>
-      planChunk(meta.shape(d), meta.chunks(d), factors0(d), radius0(d)))
-    val stencil = method match {
-      case Method.ItkwasmBinShrink | Method.ItkBinShrink | Method.DaskImageNearest => false
-      case _ => true // radius may still be 0 (factor 1) — halos just stay empty
-    }
-
-    def outMetaFor(m1: ImageMeta): ImageMeta = {
-      val factors = m1.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
-      val outShape = m1.shape.zip(factors).map { case (n, k) => n / k }
-      val outChunks = m1.chunks.zip(factors).map { case (c, k) => math.max(1, c / k) }
-      val (tr, sc) = ScalePlanner.nextScaleMetadata(m1, dimFactors)
-      m1.copy(shape = outShape, chunks = outChunks, scale = sc, translation = tr)
-    }
-
-    if (!stencil) {
-      val (m1, rows1) =
-        if (targetChunks == meta.chunks) (meta, rows)
-        else {
-          val (m1, pinned, _) = pin(spark, rows, meta, targetChunks)
-          (m1, pinned.values)
+  private[operators] def stepRdd(rows: RDD[ChunkRow], meta: ImageMeta,
+      dimFactors: Map[String, Int], method: Method): (ImageMeta, RDD[ChunkRow]) =
+    stencil(meta, dimFactors, method) match {
+      case Some(s) => (s.out, s.run(s.exchange(rows)))
+      case None =>
+        val factors = meta.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
+        // re-block so factors divide chunk edges
+        val targetChunks = meta.dims.indices.map(d =>
+          planChunk(meta.shape(d), meta.chunks(d), factors(d), 0))
+        val (m1, rows1) =
+          if (targetChunks == meta.chunks) (meta, rows)
+          else ChunkOps.rechunkRdd(rows, meta, targetChunks, partitioner(rows, meta.shape, targetChunks))
+        val outMeta = downsampled(m1, dimFactors)
+        val out = method match {
+          case Method.ItkwasmBinShrink | Method.ItkBinShrink =>
+            perChunk(rows1, m1, factors, outMeta)(NdKernels.binShrink(_, _, _,
+              roundInt = isIntDtype(m1.dtype)))
+          case Method.DaskImageNearest =>
+            perChunk(rows1, m1, factors, outMeta)(NdKernels.nearest)
+          case other => throw new IllegalStateException(s"non-stencil method $other")
         }
-      val factors = m1.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
-      val outMeta = outMetaFor(m1)
-      val out = method match {
-        case Method.ItkwasmBinShrink | Method.ItkBinShrink =>
-          perChunk(rows1, m1, factors, outMeta)(NdKernels.binShrink(_, _, _,
-            roundInt = isIntDtype(m1.dtype)))
-        case Method.DaskImageNearest =>
-          perChunk(rows1, m1, factors, outMeta)(NdKernels.nearest)
-        case other => throw new IllegalStateException(s"non-stencil method $other")
-      }
-      (outMeta, out)
-    } else {
-      // stencil path: ONE volume shuffle re-blocks AND pins chunks on
-      // their key's partition; the halo exchange then moves only halo
-      // bytes against the pinned side
-      val (m1, pinned, part) = pin(spark, rows, meta, targetChunks)
-      val factors = m1.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
-      val outMeta = outMetaFor(m1)
-      val out = method match {
-        case Method.DaskImageMode =>
-          haloExchange(pinned, part, m1, factors, outMeta,
-            radius = factors.map(identity)) { (ext, extShape, outBlockShape, centerOff) =>
-            NdKernels.modeCentered(ext, extShape, factors, outBlockShape, centerOff)
-          }
-        case Method.ItkwasmGaussian | Method.ItkGaussian | Method.DaskImageGaussian =>
-          val sigma = factors.map(k => ScalePlanner.computeSigma(Seq(k)).head)
-          val truncate = ScalePlanner.getTruncate(m1.shape, sigma.toSeq)
-          val radius = ScalePlanner.gaussianBorder(sigma.toSeq, truncate).toArray
-          haloExchange(pinned, part, m1, factors, outMeta, radius) {
-            (ext, extShape, outBlockShape, centerOff) =>
-              NdKernels.gaussianDownsample(ext, extShape, factors, sigma, radius,
-                outBlockShape, centerOff, roundInt = isIntDtype(m1.dtype))
-          }
-        case Method.ItkwasmLabelImage =>
-          val sigma = factors.map(k => ScalePlanner.computeSigma(Seq(k)).head)
-          val radius = ScalePlanner.kernelRadius(sigma.toSeq).toArray
-          haloExchange(pinned, part, m1, factors, outMeta, radius) {
-            (ext, extShape, outBlockShape, centerOff) =>
-              NdKernels.labelGaussianDownsample(ext, extShape, factors, sigma, radius,
-                outBlockShape, centerOff)
-          }
-        case other => throw new IllegalStateException(s"non-stencil method $other")
-      }
-      (outMeta, out)
+        (outMeta, out)
     }
+
+  /** The stencil form of one step over `meta`, or None for the
+    * chunk-local methods (bin-shrink, nearest).
+    */
+  private[operators] def stencil(meta: ImageMeta, dimFactors: Map[String, Int],
+      method: Method): Option[Stencil] = {
+    val factors = meta.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
+    def sigma = factors.map(k => ScalePlanner.computeSigma(Seq(k)).head)
+    val kernel: Option[(Array[Int], Kernel)] = method match {
+      case Method.DaskImageMode =>
+        Some((factors, (ext, extShape, outBlockShape, centerOff) =>
+          NdKernels.modeCentered(ext, extShape, factors, outBlockShape, centerOff)))
+      case Method.ItkwasmGaussian | Method.ItkGaussian | Method.DaskImageGaussian =>
+        val s = sigma
+        val truncate = ScalePlanner.getTruncate(meta.shape, s.toSeq)
+        val radius = ScalePlanner.gaussianBorder(s.toSeq, truncate).toArray
+        val roundInt = isIntDtype(meta.dtype)
+        Some((radius, (ext, extShape, outBlockShape, centerOff) =>
+          NdKernels.gaussianDownsample(ext, extShape, factors, s, radius,
+            outBlockShape, centerOff, roundInt)))
+      case Method.ItkwasmLabelImage =>
+        val s = sigma
+        val radius = ScalePlanner.kernelRadius(s.toSeq).toArray
+        Some((radius, (ext, extShape, outBlockShape, centerOff) =>
+          NdKernels.labelGaussianDownsample(ext, extShape, factors, s, radius,
+            outBlockShape, centerOff)))
+      case _ => None
+    }
+    kernel.map { case (radius, k) => plan(meta, factors, radius, downsampled(_, dimFactors), k) }
+  }
+
+  /** The next level's metadata: shape and chunk edges divided by the
+    * factors, scale and translation per the reference.
+    */
+  private def downsampled(m1: ImageMeta, dimFactors: Map[String, Int]): ImageMeta = {
+    val factors = m1.dims.map(d => dimFactors.getOrElse(d, 1)).toArray
+    val outShape = m1.shape.zip(factors).map { case (n, k) => n / k }
+    val outChunks = m1.chunks.zip(factors).map { case (c, k) => math.max(1, c / k) }
+    val (tr, sc) = ScalePlanner.nextScaleMetadata(m1, dimFactors)
+    m1.copy(shape = outShape, chunks = outChunks, scale = sc, translation = tr)
+  }
+
+  /** A stencil kernel: (extended block, its shape, output block shape,
+    * offset of the block's first voxel in the extended block) → the
+    * output block.
+    */
+  private type Kernel = (Array[Double], Array[Int], Array[Int], Array[Int]) => Array[Double]
+
+  /** A stencil step with kernel radius `radius`: re-block so every
+    * chunk spans the radius (and factors divide chunk edges), and give
+    * each block a margin of the radius, capped at the smallest chunk
+    * edge so the halo comes from direct neighbors only.
+    */
+  private def plan(meta: ImageMeta, factors: Array[Int], radius: Array[Int],
+      outMeta: ImageMeta => ImageMeta, kernel: Kernel): Stencil = {
+    val in = meta.copy(chunks = meta.dims.indices.map(d =>
+      planChunk(meta.shape(d), meta.chunks(d), factors(d), radius(d))))
+    val grid = ZarrStore.chunkGrid(in.shape, in.chunks)
+    val margin = in.dims.indices.map { d =>
+      val lastChunk = (in.shape(d) - (grid(d) - 1).toLong * in.chunks(d)).toInt
+      math.max(0, math.min(radius(d), math.min(in.chunks(d), lastChunk)))
+    }
+    new Stencil(in, outMeta(in), factors, margin, kernel)
+  }
+
+  /** A stencil step over `in`, whose chunks are the planned grid: each
+    * block of that grid is read with `margin` voxels of its neighbors
+    * on every side away from the image border, and the kernel maps it
+    * to the output samples it owns in `out`.
+    */
+  private[operators] final class Stencil(val in: ImageMeta, val out: ImageMeta,
+      factors: Array[Int], margin: Seq[Int], kernel: Kernel) extends Serializable {
+
+    /** The step's one exchange: `rows` — the image's chunks on any grid
+      * — cut against every block's extended box and grouped by block.
+      */
+    def exchange(rows: RDD[ChunkRow]): RDD[(String, Iterable[Piece])] =
+      ChunkOps.exchange(rows, in, margin, partitioner(rows, in.shape, in.chunks))
+
+    /** Each block of `in` without its halo, from an [[exchange]]. */
+    def centers(ex: RDD[(String, Iterable[Piece])]): RDD[ChunkRow] = {
+      val (shape, chunks, margin, dtype) = (in.shape, in.chunks, this.margin, in.dtype)
+      ex.values.map(ChunkOps.center(_, shape, chunks, margin, dtype))
+    }
+
+    /** The kernel over each block of an [[exchange]], assembled with its
+      * halo: the output samples the block owns, in `out.dtype`.
+      */
+    def run(ex: RDD[(String, Iterable[Piece])]): RDD[ChunkRow] = {
+      val (shape, chunks, margin, dtype) = (in.shape, in.chunks, this.margin, in.dtype)
+      val (factors, kernel, nOut, outDtype) = (this.factors, this.kernel, out.shape, out.dtype)
+      ex.values.flatMap { ps =>
+        val tIdx = ps.head.targetIdx
+        val tShape = ZarrStore.chunkShapeAt(shape, chunks, tIdx)
+        val tOrigin = ZarrStore.chunkOriginAt(chunks, tIdx)
+        // samples owned by this block
+        val outCount = Array.tabulate(shape.length) { d =>
+          val k = factors(d)
+          math.max(0L, math.min((tOrigin(d) + tShape(d)) / k, nOut(d)) - tOrigin(d) / k).toInt
+        }
+        if (outCount.contains(0)) None
+        else {
+          val (ext, extShape, lh) = ChunkOps.assembleExtended(ps, shape, chunks, margin, dtype)
+          // sample j maps to extended position lh + j*k
+          val block = kernel(ext, extShape, outCount, lh)
+          Some(ChunkRow(
+            tIdx,
+            tOrigin.zipWithIndex.map { case (o, d) => o / factors(d) },
+            outCount.toSeq,
+            // output dtype can widen (Sobel emits squared gradients
+            // far beyond a uint8 input's range)
+            ZarrStore.encodeFromDoubles(block, outDtype)))
+        }
+      }
+    }
+  }
+
+  /** A re-block's partitioner: at least the default parallelism (or
+    * the input's partition count) and at most one partition per block.
+    */
+  private def partitioner(rows: RDD[ChunkRow], shape: Seq[Long],
+      chunks: Seq[Int]): HashPartitioner = {
+    val grid = ZarrStore.chunkGrid(shape, chunks).map(_.toLong).product
+    new HashPartitioner(math.max(1, math.min(grid,
+      math.max(rows.getNumPartitions, rows.sparkContext.defaultParallelism).toLong).toInt))
   }
 
   def isIntDtype(dtype: String): Boolean =
@@ -188,12 +254,11 @@ object Downsample {
   /** Morphological erosion (min) / dilation (max) over a ±radius box
     * — the mask clean-up pass (opening = erode∘dilate) upstream of
     * the CCL surface. Same scale shape as the gaussian path: ONE
-    * volume shuffle pins re-blocked chunks, then only halo strips
-    * move through the second exchange; factors are all 1 so shape,
-    * scale and translation are unchanged. Border rule is
-    * neighborhood∩image (ext-bounds clipping — interior chunk
-    * boundaries always carry a full-radius halo, so clipping only
-    * happens at true image borders).
+    * exchange re-blocks the chunks and brings each block its halo;
+    * factors are all 1 so shape, scale and translation are unchanged.
+    * Border rule is neighborhood∩image (ext-bounds clipping — interior
+    * chunk boundaries always carry a full-radius halo, so clipping
+    * only happens at true image borders).
     */
   def morphology(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta,
       radius: Array[Int], dilate: Boolean): (ImageMeta, Dataset[ChunkRow]) = {
@@ -208,12 +273,11 @@ object Downsample {
 
   /** Squared Sobel gradient magnitude (edge strength) at full
     * resolution — the classic feature pass upstream of thresholding
-    * / quality scoring. Same scale shape as morphology: one volume
-    * shuffle pins 1-halo-capable chunks, then only 1-pixel halo
-    * strips move; output dtype widens to int32 (gx²+gy² ≤ 2·(4·255)²
-    * for uint8 input — exact integers end-to-end). True image
-    * borders emit 0 (no 3×3 support); see
-    * [[NdKernels.sobelSq2d]].
+    * / quality scoring. Same scale shape as morphology: one exchange
+    * re-blocks to 1-halo-capable chunks, each with a 1-pixel halo;
+    * output dtype widens to int32 (gx²+gy² ≤ 2·(4·255)² for uint8
+    * input — exact integers end-to-end). True image borders emit 0
+    * (no 3×3 support); see [[NdKernels.sobelSq2d]].
     */
   def sobelSq(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta)
       : (ImageMeta, Dataset[ChunkRow]) = {
@@ -228,8 +292,8 @@ object Downsample {
 
   /** 3×3 median denoise at full resolution — the standard
     * salt-and-pepper cleanup upstream of thresholding / downsampling.
-    * Same scale shape as [[sobelSq]]: one volume shuffle pins
-    * 1-halo-capable chunks, then only 1-pixel halo strips move.
+    * Same scale shape as [[sobelSq]]: one exchange re-blocks to
+    * 1-halo-capable chunks, each with a 1-pixel halo.
     * Median of 9 integral values IS one of them, so the dtype is
     * preserved and every output value exact; true image borders pass
     * through unchanged (see [[NdKernels.medianFilter2d]]).
@@ -252,8 +316,8 @@ object Downsample {
     * (v + c) · |W| > Σ_W v over its (2r+1)² window clipped to the
     * image, all in exact integer arithmetic (the mean is never
     * materialized as a float). Same scale shape as [[morphology]]:
-    * one volume shuffle pins r-halo-capable chunks, then only
-    * r-pixel halo strips move. Output is a uint8 0/1 mask.
+    * one exchange re-blocks to r-halo-capable chunks, each with an
+    * r-pixel halo. Output is a uint8 0/1 mask.
     */
   def adaptiveThreshold(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta,
       radius: Int, c: Long = 0L): (ImageMeta, Dataset[ChunkRow]) = {
@@ -267,34 +331,15 @@ object Downsample {
     }
   }
 
-  /** A full-resolution (factor 1) stencil filter: re-block so every
-    * chunk spans `radius`, pin, one halo exchange; the output keeps
-    * the re-blocked grid and takes `outDtype`.
+  /** A full-resolution (factor 1) stencil filter: one exchange
+    * re-blocks so every chunk spans `radius` and brings each block its
+    * halo; the output keeps the re-blocked grid and takes `outDtype`.
     */
   private def fullResStencil(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta,
-      radius: Array[Int], outDtype: String)(
-      kernel: (Array[Double], Array[Int], Array[Int], Array[Int]) => Array[Double])
-      : (ImageMeta, Dataset[ChunkRow]) = {
+      radius: Array[Int], outDtype: String)(kernel: Kernel): (ImageMeta, Dataset[ChunkRow]) = {
     import spark.implicits._
-    val targetChunks = meta.dims.indices.map(d =>
-      planChunk(meta.shape(d), meta.chunks(d), 1, radius(d)))
-    val (m1, pinned, part) = pin(spark, ds.rdd, meta, targetChunks)
-    val outMeta = m1.copy(dtype = outDtype)
-    val out = haloExchange(pinned, part, m1, Array.fill(radius.length)(1), outMeta, radius)(kernel)
-    (outMeta, spark.createDataset(out))
-  }
-
-  /** Re-block `rows` to `targetChunks` and pin each chunk on its key's
-    * partition: one volume shuffle, over at least the default
-    * parallelism and at most one partition per chunk.
-    */
-  private def pin(spark: SparkSession, rows: RDD[ChunkRow], meta: ImageMeta,
-      targetChunks: Seq[Int]): (ImageMeta, RDD[(String, ChunkRow)], HashPartitioner) = {
-    val grid = ZarrStore.chunkGrid(meta.shape, targetChunks)
-    val part = new HashPartitioner(math.max(1, math.min(grid.map(_.toLong).product,
-      math.max(rows.getNumPartitions, spark.sparkContext.defaultParallelism).toLong).toInt))
-    val (m1, pinned) = ChunkOps.rechunkPinned(rows, meta, targetChunks, part)
-    (m1, pinned, part)
+    val s = plan(meta, Array.fill(radius.length)(1), radius, _.copy(dtype = outDtype), kernel)
+    (s.out, spark.createDataset(s.run(s.exchange(ds.rdd))))
   }
 
   /** No-halo path: kernel maps each chunk independently. */
@@ -325,125 +370,5 @@ object Downsample {
           ZarrStore.encodeFromDoubles(clipped, dtype)))
       }
     })
-  }
-
-  /** Stencil path with a halo-only shuffle. The chunk table is pinned
-    * by hash-partitioning on its own chunk key; each chunk then ships
-    * at most `radius` voxels to each adjacent neighbor (3^s − 1
-    * targets max) through a second hash partition on the SAME
-    * partitioner, and `zipPartitions` aligns the two sides without
-    * moving the chunks again. Shuffle volume is therefore ∝ halo
-    * surface, not image volume: the old `groupByKey(target)` form
-    * shipped every chunk's full payload (volume + halo per level).
-    * Radii are capped at the chunk edge so one hop of halo always
-    * suffices (the reference's truncate search enforces the same
-    * bound).
-    */
-  private def haloExchange(pinned: RDD[(String, ChunkRow)],
-      part: org.apache.spark.Partitioner, meta: ImageMeta,
-      factors: Array[Int], outMeta: ImageMeta, radius: Array[Int])(
-      kernel: (Array[Double], Array[Int], Array[Int], Array[Int]) => Array[Double])
-      : RDD[ChunkRow] = {
-    val dtype = meta.dtype
-    val outDtype = outMeta.dtype
-    val shape = meta.shape
-    val chunks = meta.chunks
-    val nd = shape.length
-    val grid = ZarrStore.chunkGrid(shape, chunks)
-    // cap radius: one-hop halo must cover it (smallest chunk edge bounds it)
-    val cap = Array.tabulate(nd) { d =>
-      val lastChunk = (shape(d) - (grid(d) - 1).toLong * chunks(d)).toInt
-      math.max(0, math.min(radius(d), math.min(chunks(d), lastChunk)))
-    }
-    val nOut = outMeta.shape
-
-    // no persist: `pinned` ends in a shuffle (rechunkPinned), and both
-    // consumers below — the halo flatMap and zipPartitions — read the
-    // SAME shuffle output, so upstream computes exactly once and the
-    // shuffle files are the materialization (persisting would leak one
-    // cached volume per pyramid level for the application lifetime)
-
-    // halo pieces only (off != 0) — the bytes that actually cross
-    // chunk boundaries
-    val halos = pinned.values.flatMap { chunk =>
-      val vals = ZarrStore.decodeToDoubles(chunk.data, dtype)
-      val offsets = ZarrStore.gridPositions(Array.fill(nd)(3)).map(_.map(_ - 1))
-      offsets.flatMap { off =>
-        val tIdx = chunk.chunkIdx.zip(off).map { case (i, o) => i + o }
-        val valid = off.exists(_ != 0) &&
-          tIdx.zipWithIndex.forall { case (i, d) => i >= 0 && i < grid(d) } &&
-          off.zipWithIndex.forall { case (o, d) => o == 0 || cap(d) > 0 }
-        if (!valid) None
-        else {
-          // region of this chunk the target needs, in local coords
-          val lo = Array.tabulate(nd)(d => off(d) match {
-            case 1 => math.max(0, chunk.shape(d) - cap(d)) // we are target's left halo
-            case _ => 0
-          })
-          val hi = Array.tabulate(nd)(d => off(d) match {
-            case -1 => math.min(cap(d), chunk.shape(d)) // we are target's right halo
-            case _ => chunk.shape(d)
-          })
-          val pShape = Array.tabulate(nd)(d => hi(d) - lo(d))
-          if (pShape.exists(_ <= 0)) None
-          else {
-            // destination position in the target's extended block:
-            // target ext = [leftHalo | targetChunk | rightHalo];
-            // off is target − us, so off=+1 means the target sits
-            // right of us and our last rows are its LEFT halo
-            val tShape = ZarrStore.chunkShapeAt(shape, chunks, tIdx)
-            val lh = Array.tabulate(nd)(d => if (tIdx(d) > 0) cap(d) else 0)
-            val destPos = Array.tabulate(nd)(d => off(d) match {
-              case 1 => 0
-              case 0 => lh(d)
-              case -1 => lh(d) + tShape(d)
-            })
-            val sub = ChunkOps.sliceBlock(vals, chunk.shape.toArray, lo, pShape)
-            Some(Piece(tIdx.mkString(","), tIdx, destPos.toSeq, pShape.toSeq,
-              ZarrStore.encodeFromDoubles(sub, dtype)))
-          }
-        }
-      }
-    }.map(p => (p.targetKey, p)).partitionBy(part)
-
-    // same partitioner both sides → partition i holds chunk AND halos
-    // for the same keys; the volume side does not move again
-    pinned.zipPartitions(halos, preservesPartitioning = false) { (chunkIt, haloIt) =>
-      val halosByKey = scala.collection.mutable.HashMap.empty[String, List[Piece]]
-      haloIt.foreach { case (k, p) =>
-        halosByKey.update(k, p :: halosByKey.getOrElse(k, Nil))
-      }
-      chunkIt.flatMap { case (key, chunk) =>
-        val tIdx = chunk.chunkIdx
-        val tShape = ZarrStore.chunkShapeAt(shape, chunks, tIdx)
-        val tOrigin = ZarrStore.chunkOriginAt(chunks, tIdx)
-        val lh = Array.tabulate(nd)(d => if (tIdx(d) > 0) cap(d) else 0)
-        val rh = Array.tabulate(nd)(d => if (tIdx(d) < grid(d) - 1) cap(d) else 0)
-        val extShape = Array.tabulate(nd)(d => lh(d) + tShape(d) + rh(d))
-        val ext = new Array[Double](extShape.product)
-        ChunkOps.placeBlock(ext, extShape, lh, tShape.toArray,
-          ZarrStore.decodeToDoubles(chunk.data, dtype))
-        halosByKey.getOrElse(key, Nil).foreach(p =>
-          ChunkOps.placeBlock(ext, extShape, p.destPos.toArray, p.shape.toArray,
-            ZarrStore.decodeToDoubles(p.data, dtype)))
-        // samples owned by this chunk
-        val outCount = Array.tabulate(nd) { d =>
-          val k = factors(d)
-          math.max(0L, math.min((tOrigin(d) + tShape(d)) / k, nOut(d)) - tOrigin(d) / k).toInt
-        }
-        if (outCount.contains(0)) None
-        else {
-          val centerOff = lh // sample j maps to ext position lh + j*k
-          val block = kernel(ext, extShape, outCount, centerOff)
-          Some(ChunkRow(
-            tIdx,
-            tOrigin.zipWithIndex.map { case (o, d) => o / factors(d) },
-            outCount.toSeq,
-            // output dtype can widen (Sobel emits squared gradients
-            // far beyond a uint8 input's range)
-            ZarrStore.encodeFromDoubles(block, outDtype)))
-        }
-      }
-    }
   }
 }

@@ -48,8 +48,8 @@ object OmeZarrIO {
       enabledRfcs: Seq[Int] = Nil): Seq[Long] = {
     val errs = Validation.validateWriterParams(version, chunksPerShard)
     require(errs.isEmpty, errs.mkString("; "))
-    val hconf = Some(SerializableHadoopConf.fromActiveSession())
-    val store = new ZarrStore(path, hconf)
+    val hconf = SerializableHadoopConf.broadcast()
+    val store = new ZarrStore(path, Some(hconf.value))
     if (overwrite) store.delete("")
     val metaFull = ms.metadata(name, version)
     val meta =
@@ -78,7 +78,7 @@ object OmeZarrIO {
       case None => encoded.mapValues { case (_, bytes) => (1L, bytes) }
     }
     objects.foreachPartition { it =>
-      val st = new ZarrStore(path, hconf)
+      val st = new ZarrStore(path, Some(hconf.value))
       it.foreach { case ((l, obj), (nChunks, bytes)) =>
         st.writeBytes(ZarrStore.chunkKey(zf, arrayPaths(l), obj), bytes)
         accs(l).add(nChunks)

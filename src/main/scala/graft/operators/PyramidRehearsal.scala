@@ -104,8 +104,8 @@ object PyramidRehearsal {
     * removed on exit.
     *
     * `Method.ItkwasmGaussian` rehearses the halo-exchange path — the
-    * one scale-critical imaging plan with a second chunk-aligned
-    * exchange per level (`ChunkOps.rechunkPinned` + boundary strips,
+    * one scale-critical imaging plan whose exchange per level carries
+    * each block's halo (`ChunkOps.exchange` with the kernel's margin,
     * the Spark form of `py/ngff_zarr/methods/_dask_image.py:107-419`'s
     * overlap depth) — at a volume where a driver-side assembly would
     * already fail. Grid/shape parity with the bin-shrink cascade is

@@ -69,6 +69,18 @@ private[queries] object QTables {
   def scratchDir(prefix: String): java.nio.file.Path =
     deleteAtExit(java.nio.file.Files.createTempDirectory(prefix))
 
+  /** Deletes the directories of the catalog tables `names` when the
+    * JVM exits: a gate that `saveAsTable`s its fixtures returns a lazy
+    * DataFrame over them, so they must outlive the query, but not pile
+    * up in the warehouse one set per application. Tables outside the
+    * local file system are left alone.
+    */
+  def tablesAtExit(s: SparkSession, names: String*): Unit = names.foreach { t =>
+    val location = new java.net.URI(s.sql(s"DESCRIBE TABLE EXTENDED $t")
+      .where(col("col_name") === "Location").head().getString(1))
+    if (location.getScheme == "file") deleteAtExit(java.nio.file.Paths.get(location))
+  }
+
   private val atExit = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
   private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
     new Thread(() => atExit.forEach(p => deleteTree(p))))

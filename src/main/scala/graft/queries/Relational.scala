@@ -1489,6 +1489,7 @@ object Relational extends QModule {
         .selectExpr("l_orderkey", "CAST(round(l_quantity) AS BIGINT) AS qty")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(t2)
+      QTables.tablesAtExit(s, t1, t2)
       s.table(t1).join(s.table(t2), col("o_orderkey") === col("l_orderkey"))
         .groupBy(expr("o_custkey % 100").as("cust_bucket"))
         .agg(count(lit(1)).as("n_lines"), sum(col("qty")).as("sum_qty"))

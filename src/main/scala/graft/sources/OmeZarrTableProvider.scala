@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.util
-import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -115,30 +114,6 @@ object OmeZarrScan {
       Some(set.contains)
     case _ => None
   }
-
-  private var shared: Option[(SparkContext, Map[String, String], Broadcast[SerializableHadoopConf])] =
-    None
-
-  /** The session's Hadoop conf as a broadcast, made once per distinct
-    * conf. The reader factory is deserialized with every task, and a
-    * small scan (one tile, one well field) is one task over one or two
-    * objects; deserializing the conf (~1000 entries, ~100 KB) would
-    * dominate it, and a broadcast per scan would pile copies up on the
-    * heap. Compared by content, so a changed setting (an object store
-    * credential) is broadcast anew.
-    */
-  private def hadoopConf(): Broadcast[SerializableHadoopConf] = synchronized {
-    val sc = SparkSession.active.sparkContext
-    val entries = sc.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue).toMap
-    shared match {
-      case Some((c, e, b)) if (c eq sc) && e == entries => b
-      case _ =>
-        val b = sc.broadcast(new SerializableHadoopConf(
-          new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration)))
-        shared = Some((sc, entries, b))
-        b
-    }
-  }
 }
 
 class OmeZarrScan(path: String, val pushedFilters: Seq[Filter],
@@ -209,7 +184,7 @@ class OmeZarrScan(path: String, val pushedFilters: Seq[Filter],
   override def planInputPartitions(): Array[InputPartition] = planned
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new OmeZarrReaderFactory(path, required, OmeZarrScan.hadoopConf())
+    new OmeZarrReaderFactory(path, required, SerializableHadoopConf.broadcast())
 }
 
 class OmeZarrReaderFactory(path: String, required: StructType,

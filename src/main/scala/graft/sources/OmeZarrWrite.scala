@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import graft.meta.{Dtypes, ZarrJson}
@@ -87,7 +88,7 @@ class OmeZarrWrite(path: String, options: Map[String, String],
           "defined; use mode(\"overwrite\")")
     new OmeZarrDataWriterFactory(path, name, version, compressor,
       levels.map(_.chunks),
-      dtype, SerializableHadoopConf.fromActiveSession())
+      dtype, SerializableHadoopConf.broadcast())
   }
 
   /** Driver-side metadata commit, after every task succeeded. */
@@ -109,11 +110,11 @@ class OmeZarrWrite(path: String, options: Map[String, String],
 
 class OmeZarrDataWriterFactory(path: String, name: String, version: String,
     compressor: Option[String], levelChunks: Seq[Seq[Int]],
-    dtype: String, hconf: SerializableHadoopConf) extends DataWriterFactory {
+    dtype: String, hconf: Broadcast[SerializableHadoopConf]) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private lazy val st = new ZarrStore(path, Some(hconf))
+      private lazy val st = new ZarrStore(path, Some(hconf.value))
       private val zarrFormat = if (version == "0.5") 3 else 2
       private var n = 0L
 

@@ -2,6 +2,9 @@ package graft.zarr
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import scala.jdk.CollectionConverters._
 import java.nio.{ByteBuffer, ByteOrder}
 import graft.meta.Dtypes
 
@@ -29,6 +32,29 @@ object SerializableHadoopConf {
       org.apache.spark.sql.SparkSession.getActiveSession
         .map(_.sparkContext.hadoopConfiguration)
         .getOrElse(new Configuration()))
+
+  private var shared: Option[(SparkContext, Map[String, String], Broadcast[SerializableHadoopConf])] =
+    None
+
+  /** The active session's Hadoop conf as a broadcast, made once per
+    * distinct conf — what the OME-Zarr scan and writers ship to their
+    * tasks. A task deserializes its closure or factory every time, and
+    * deserializing the conf (~1000 entries, ~100 KB) would dominate a
+    * small task (one tile, one well field, a few puts); a broadcast per
+    * call would pile copies up on the heap. Compared by content, so a
+    * changed setting (an object store credential) is broadcast anew.
+    */
+  def broadcast(): Broadcast[SerializableHadoopConf] = synchronized {
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val entries = sc.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue).toMap
+    shared match {
+      case Some((c, e, b)) if (c eq sc) && e == entries => b
+      case _ =>
+        val b = sc.broadcast(new SerializableHadoopConf(new Configuration(sc.hadoopConfiguration)))
+        shared = Some((sc, entries, b))
+        b
+    }
+  }
 }
 
 /** Key-value Zarr store over the Hadoop FileSystem API — the same

@@ -90,6 +90,16 @@ class CliSpec extends SparkSpec {
     assert(!new java.io.File(out).exists(), "a refused run must write nothing")
   }
 
+  test("convert refuses an unknown --method value, naming it and the valid methods") {
+    val (in, _) = writeInput()
+    val out = tempDir("cli-out").toString + "/out.ome.zarr"
+    val e = intercept[IllegalArgumentException](
+      Cli.run(spark, Array(in, out, "--method=itkwasm_bin_shrnk")))
+    assert(e.getMessage.contains("itkwasm_bin_shrnk"))
+    Method.all.foreach(m => assert(e.getMessage.contains(m.value), s"${m.value} not listed"))
+    assert(!new java.io.File(out).exists(), "a refused run must write nothing")
+  }
+
   test("NRRD input converts end-to-end (VolumeFormats route)") {
     val fx = "src/test/resources/fixtures/vol/vol.nrrd"
     val out = tempDir("cli-out").toString + "/out.ome.zarr"
