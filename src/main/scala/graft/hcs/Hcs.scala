@@ -117,7 +117,7 @@ object Hcs {
     if (version == "0.5") root.putObject("ome").put("version", "0.5")
       .asInstanceOf[ObjectNode].set[ObjectNode]("plate", p)
     else root.set[ObjectNode]("plate", p)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
+    ZarrJson.pretty(root)
   }
 
   def parsePlate(json: String): Plate = {
@@ -150,7 +150,7 @@ object Hcs {
     w.put("version", well.version)
     val root = mapper.createObjectNode()
     root.set[ObjectNode]("well", w)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
+    ZarrJson.pretty(root)
   }
 
   def parseWell(json: String): Well = {
@@ -172,7 +172,7 @@ object Hcs {
   /** Write the plate metadata tree (S13, `to_hcs_zarr`). */
   def toHcsZarr(path: String, plate: Plate): Unit = {
     val store = openStore(path)
-    store.writeString(".zgroup", ZarrJson.groupDoc(2))
+    store.writeString(".zgroup", ZarrJson.pretty(ZarrJson.groupDoc(2)))
     store.writeString(".zattrs", plateAttrs(plate))
   }
 
@@ -189,7 +189,7 @@ object Hcs {
       fields: Seq[(String, String, Option[Int])]): Unit = {
     val store = openStore(path)
     fields.map(_._1.split("/").head).distinct.sorted.foreach { rg =>
-      store.writeString(s"$rg/.zgroup", ZarrJson.groupDoc(2))
+      store.writeString(s"$rg/.zgroup", ZarrJson.pretty(ZarrJson.groupDoc(2)))
     }
     // wells are independent of each other (per-WELL ordering is the
     // only merge constraint, and each well appears once here), so the
@@ -197,7 +197,7 @@ object Hcs {
     // store round-trips are latency-bound, not CPU-bound
     val byWell = fields.groupBy(_._1).toSeq.sortBy(_._1)
     def mergeOne(wp: String, fs: Seq[(String, String, Option[Int])]): Unit = {
-      store.writeString(s"$wp/.zgroup", ZarrJson.groupDoc(2))
+      store.writeString(s"$wp/.zgroup", ZarrJson.pretty(ZarrJson.groupDoc(2)))
       val existing = readWellMeta(store, wp).getOrElse(Well(Seq.empty))
       val newPaths = fs.map(_._2).toSet
       val merged = Well(

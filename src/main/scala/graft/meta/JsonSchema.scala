@@ -61,9 +61,6 @@ object JsonSchema {
   def validate(schema: JsonNode, doc: JsonNode): Seq[ValidationError] =
     check(doc, schema, schema, "")
 
-  def validate(schema: JsonNode, json: String): Seq[ValidationError] =
-    validate(schema, mapper.readTree(json))
-
   // `root` is the document the current (sub)schema lives in — fragment
   // $refs resolve against it, and it switches on cross-document refs.
   private def check(node: JsonNode, schema: JsonNode, root: JsonNode,

@@ -105,6 +105,28 @@ object Model {
       omero: Option[Omero] = None,
       coordinateTransformations: Option[Seq[Transform]] = None)
 
+  object MultiscalesMeta {
+
+    /** The multiscales entry of a pyramid whose levels are `levels`,
+      * base first: the base level's axes (with its units and
+      * orientations) and one `scale<i>/<name>` dataset per level with
+      * its scale and translation. `method` records the downsample
+      * provenance (`type` and `metadata`).
+      */
+    def of(levels: Seq[ImageMeta], name: String, version: String,
+        method: Option[Method] = None, omero: Option[Omero] = None): MultiscalesMeta = {
+      val base = levels.head
+      val axes = base.dims.map(d =>
+        Axis(d, axisType(d), base.axesUnits.get(d), base.axesOrientations.get(d)))
+      val datasets = levels.zipWithIndex.map { case (m, i) =>
+        DatasetMeta(s"scale$i/$name",
+          Seq(ScaleT(m.dims.map(m.scale)), TranslationT(m.dims.map(m.translation))))
+      }
+      MultiscalesMeta(axes, datasets, version, Some(name),
+        method.map(_.value), method.map(_.metadata), omero)
+    }
+  }
+
   /** Method provenance recorded into attrs (`methods/_metadata.py:11-90`). */
   final case class MethodMetadata(description: String, method: String, version: String)
 

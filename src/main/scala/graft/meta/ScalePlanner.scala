@@ -120,38 +120,4 @@ object ScalePlanner {
     }.toMap
     (translation, scale)
   }
-
-  /** A15 — output block shape: floor(block/k) on spatial dims. */
-  def nextBlockShape(dims: Seq[String], blockShape: Seq[Long],
-      dimFactors: Map[String, Int]): Seq[Long] =
-    dims.zip(blockShape).map { case (d, s) =>
-      if (SpatialDims.contains(d)) s / dimFactors(d) else s
-    }
-
-  /** Chunk alignment (`methods/_support.py:137-156`): if the chunk
-    * edge isn't divisible by the shrink factor, grow it to
-    * chunk·factor so per-chunk downsampling stays exact.
-    * Reference-parity form; the execution pipeline uses
-    * `Downsample.planChunk`, which applies this rule and additionally
-    * guarantees ragged edge chunks span the stencil radius.
-    */
-  def alignChunks(chunks: Map[String, Int], defaultChunks: Map[String, Int],
-      dimFactors: Map[String, Int]): Map[String, Int] =
-    chunks.map { case (d, c) =>
-      dimFactors.get(d) match {
-        case Some(f) if c % f != 0 => d -> c * f
-        case Some(_) => d -> defaultChunks.getOrElse(d, c)
-        case None => d -> c
-      }
-    }
-
-  /** C1 — memory estimator (`memory_usage.py:8-24`): product of
-    * (chunk size if dim constrained else full dim) × itemsize.
-    */
-  def memoryUsage(image: ImageMeta, constrainedDims: Set[String] = Set.empty): Long = {
-    val itemsize = Dtypes.itemSize(image.dtype)
-    image.dims.zipWithIndex.map { case (d, i) =>
-      if (constrainedDims.contains(d)) image.chunks(i).toLong else image.shape(i)
-    }.product * itemsize
-  }
 }

@@ -1,5 +1,6 @@
 package graft.meta
 
+import com.fasterxml.jackson.databind.JsonNode
 import graft.meta.Model._
 
 /** Metadata validation rules (SURVEY §2.6):
@@ -19,15 +20,15 @@ object Validation {
   /** Versions with packaged schemas (reference `py/ngff_zarr/spec/`). */
   val SchemaVersions: Set[String] = Set("0.1", "0.2", "0.3", "0.4", "0.5")
 
-  /** V1 — validate a raw attrs JSON document against the vendored OME
+  /** V1 — validate a raw attrs JSON tree against the vendored OME
     * JSON Schemas (the same files the reference packages;
     * `py/ngff_zarr/validate.py:32-52`). `model` is "image", "plate",
     * "well", …; `strict` picks the `strict_` schema variant where one
     * exists (0.1/0.3/0.4/0.5).
     */
-  def validateSchema(attrsJson: String, version: String, model: String = "image",
+  def validateSchema(attrs: JsonNode, version: String, model: String = "image",
       strict: Boolean = false): Seq[ValidationError] =
-    JsonSchema.validate(JsonSchema.loadSchema(version, model, strict), attrsJson)
+    JsonSchema.validate(JsonSchema.loadSchema(version, model, strict), attrs)
 
   /** V1 — structural multiscales validation. */
   def validateMultiscales(m: MultiscalesMeta): Seq[ValidationError] = {

@@ -5,9 +5,10 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.meta.Model._
 import scala.jdk.CollectionConverters._
 
-/** JSON (de)serialization of OME-Zarr metadata: root group attrs for
-  * v0.4 (Zarr v2 `.zattrs`) and v0.5 (Zarr v3 `zarr.json` `ome` key),
-  * plus per-array metadata documents.
+/** JSON (de)serialization of the OME-Zarr documents: root group attrs
+  * for v0.4 (Zarr v2 `.zattrs`) and v0.5 (Zarr v3 `zarr.json` `ome`
+  * key), omero rendering, and the Zarr group documents. Zarr array
+  * documents are [[graft.zarr.ZarrArray]]'s.
   *
   * Layouts mirror the reference writers
   * (ngff-zarr `py/ngff_zarr/to_ngff_zarr.py:399-443`) and reader
@@ -47,7 +48,7 @@ object ZarrJson {
     n
   }
 
-  def multiscalesNode(m: MultiscalesMeta): ObjectNode = {
+  private def multiscalesNode(m: MultiscalesMeta): ObjectNode = {
     val n = mapper.createObjectNode()
     val axes = n.putArray("axes")
     m.axes.foreach(a => axes.add(axisNode(a)))
@@ -85,7 +86,7 @@ object ZarrJson {
   }
 
   /** Root group attrs for one multiscales entry. */
-  def rootAttrs(m: MultiscalesMeta): String = {
+  def rootAttrs(m: MultiscalesMeta): ObjectNode = {
     val root = mapper.createObjectNode()
     if (m.version == "0.5") {
       val ome = root.putObject("ome")
@@ -96,87 +97,11 @@ object ZarrJson {
       root.putArray("multiscales").add(multiscalesNode(m))
       m.omero.foreach(o => root.set[ObjectNode]("omero", omeroNode(o)))
     }
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
-  }
-
-  /** Zarr v2 `.zarray` document. */
-  def zarrayV2(shape: Seq[Long], chunks: Seq[Int], dtype: String,
-      compressor: Option[String], dimensionSeparator: String = "/"): String = {
-    val n = mapper.createObjectNode()
-    n.put("zarr_format", 2)
-    val sh = n.putArray("shape"); shape.foreach(sh.add)
-    val ch = n.putArray("chunks"); chunks.foreach(x => ch.add(x))
-    n.put("dtype", Dtypes.zarrV2TypeStr(dtype))
-    compressor match {
-      case Some("gzip") =>
-        val c = n.putObject("compressor"); c.put("id", "gzip"); c.put("level", 5)
-      case Some("zstd") =>
-        val c = n.putObject("compressor"); c.put("id", "zstd"); c.put("level", 3)
-      case Some(b) if b == "blosc" || b.startsWith("blosc:") =>
-        // the shared parser throws on bad tokens HERE, before any
-        // store bytes are written, and keeps metadata in lockstep
-        // with what Codecs.compress will actually encode
-        val (cname, clevel, mode) = graft.zarr.Codecs.parseBloscId(b)
-        val c = n.putObject("compressor")
-        c.put("id", "blosc")
-        c.put("cname", cname)
-        c.put("clevel", clevel)
-        c.put("shuffle", graft.zarr.Codecs.shuffleV2(mode))
-        c.put("blocksize", 0)
-      case _ => n.putNull("compressor")
-    }
-    n.putNull("fill_value")
-    n.put("order", "C")
-    n.putNull("filters")
-    n.put("dimension_separator", dimensionSeparator)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)
-  }
-
-  /** Zarr v3 array `zarr.json` document. */
-  def zarrayV3(shape: Seq[Long], chunks: Seq[Int], dtype: String,
-      compressor: Option[String], dimensionNames: Seq[String]): String = {
-    val n = mapper.createObjectNode()
-    n.put("zarr_format", 3)
-    n.put("node_type", "array")
-    val sh = n.putArray("shape"); shape.foreach(sh.add)
-    n.put("data_type", Dtypes.normalize(dtype))
-    val grid = n.putObject("chunk_grid")
-    grid.put("name", "regular")
-    val gc = grid.putObject("configuration").putArray("chunk_shape")
-    chunks.foreach(x => gc.add(x))
-    val cke = n.putObject("chunk_key_encoding")
-    cke.put("name", "default")
-    cke.putObject("configuration").put("separator", "/")
-    n.put("fill_value", 0)
-    val codecs = n.putArray("codecs")
-    val bytes = codecs.addObject()
-    bytes.put("name", "bytes")
-    bytes.putObject("configuration").put("endian", "little")
-    compressor.foreach { c =>
-      val cn = codecs.addObject()
-      val cfg = if (c == "blosc" || c.startsWith("blosc:")) {
-        cn.put("name", "blosc")
-        val (cname, clevel, mode) = graft.zarr.Codecs.parseBloscId(c)
-        val b = cn.putObject("configuration")
-        b.put("cname", cname)
-        b.put("clevel", clevel)
-        b.put("shuffle", graft.zarr.Codecs.shuffleV3(mode))
-        b.put("typesize", Dtypes.itemSize(dtype))
-        b
-      } else {
-        cn.put("name", c)
-        cn.putObject("configuration")
-      }
-      if (c == "gzip") cfg.put("level", 5)
-      else if (c == "zstd") { cfg.put("level", 3); cfg.put("checksum", false) }
-    }
-    val dn = n.putArray("dimension_names")
-    dimensionNames.foreach(dn.add)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)
+    root
   }
 
   /** Zarr v2/v3 group document. */
-  def groupDoc(zarrFormat: Int, attrs: Option[JsonNode] = None): String = {
+  def groupDoc(zarrFormat: Int, attrs: Option[JsonNode] = None): ObjectNode = {
     val n = mapper.createObjectNode()
     if (zarrFormat == 3) {
       n.put("zarr_format", 3)
@@ -185,8 +110,11 @@ object ZarrJson {
     } else {
       n.put("zarr_format", 2)
     }
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)
+    n
   }
+
+  /** A document as stored: indented, the layout every writer uses. */
+  def pretty(n: JsonNode): String = mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)
 
   // ---- reading ----
 
@@ -229,8 +157,7 @@ object ZarrJson {
     * list; axes are reconstructed from the fixed tczyx dims
     * (`from_ngff_zarr.py:106-111,159-179`).
     */
-  def parseMultiscales(rootAttrsJson: String): MultiscalesMeta = {
-    val root = mapper.readTree(rootAttrsJson)
+  def parseMultiscales(root: JsonNode): MultiscalesMeta = {
     val version = detectVersion(root)
     val ms = multiscalesArray(root)
     require(ms.size() > 0, "no multiscales metadata found")
@@ -279,244 +206,39 @@ object ZarrJson {
     Omero(channels)
   }
 
-  /** Parse a Zarr v2 `.zarray` document. Numcodecs `filters` chains
-    * are handled separately — see [[parseFiltersV2]]; an unknown
-    * filter id refuses there at metadata time rather than decoding
-    * garbage.
+  // ---- array-document views for the benchmark's codec replay ----
+  // `omezarr_bench` (ZarrReplay) reads array documents through these
+  // names. Each is one `ZarrArray.parse`, so the rules live only there.
+
+  private def array(json: String, zarrFormat: Int) = {
+    val doc = mapper.readTree(json)
+    (doc, graft.zarr.ZarrArray.parse(doc, zarrFormat, ""))
+  }
+
+  /** A v2 `.zarray`: (shape, chunks, dtype as written, compressor id,
+    * dimension separator).
     */
   def parseZarrayV2(json: String): (Seq[Long], Seq[Int], String, Option[String], String) = {
-    val n = mapper.readTree(json)
-    val shape = n.get("shape").elements().asScala.map(_.asLong()).toSeq
-    val chunks = n.get("chunks").elements().asScala.map(_.asInt()).toSeq
-    val dtype = n.get("dtype").asText()
-    val comp = Option(n.get("compressor")).filter(!_.isNull).map(_.get("id").asText())
-    val sep = n.path("dimension_separator").asText(".")
-    (shape, chunks, dtype, comp, sep)
+    val (doc, a) = array(json, 2)
+    (a.shape, a.gridChunks, doc.get("dtype").asText(), a.compressor, a.separator)
   }
 
-  /** The v2 `filters` chain (encode order) — empty for v3 docs and
-    * filter-less v2 arrays. Unknown ids refuse here.
-    */
-  def parseFiltersV2(json: String): Seq[graft.zarr.NumcodecsFilters.V2Filter] =
-    graft.zarr.NumcodecsFilters.parse(mapper.readTree(json).path("filters"))
-
-  /** Zarr v3 consolidated metadata (the root group doc's
-    * `consolidated_metadata.metadata`, zarr-python 3 layout): node
-    * path → its full metadata document. Empty when absent — readers
-    * fall back to per-node GETs.
-    */
-  def parseConsolidatedV3(rootDoc: String): Map[String, String] = {
-    val n = mapper.readTree(rootDoc).path("consolidated_metadata").path("metadata")
-    if (n.isMissingNode || !n.isObject) Map.empty
-    else n.fields().asScala
-      .map(e => e.getKey -> mapper.writeValueAsString(e.getValue)).toMap
-  }
-
-  /** Zarr v2 consolidated metadata (`.zmetadata`): document key
-    * (e.g. "scale0/image/.zarray") → document.
-    */
-  def parseConsolidatedV2(zmetadata: String): Map[String, String] = {
-    val n = mapper.readTree(zmetadata).path("metadata")
-    if (n.isMissingNode || !n.isObject) Map.empty
-    else n.fields().asScala
-      .map(e => e.getKey -> mapper.writeValueAsString(e.getValue)).toMap
-  }
-
-  /** A v2 array's memory layout: "C" (default) or "F". F-order chunks
-    * are the C-order chunks of the dimension-reversed array — the
-    * readers express them through the same inverse-permute path as
-    * the v3 transpose codec.
-    */
-  def parseOrderV2(json: String): String = {
-    val o = mapper.readTree(json).path("order").asText("C")
-    require(o == "C" || o == "F", s"zarr v2 order '$o' unsupported (C/F)")
-    o
-  }
-
-  /** Parse a Zarr v3 array `zarr.json` document. Returns
-    * (shape, chunks, dtype, compressor, dimensionNames). For sharded
-    * arrays `chunks` is the SHARD shape; `sharding` carries the inner
-    * chunk shape + inner compressor.
+  /** A v3 array `zarr.json`: (shape, chunk grid — the shard shape when
+    * sharded, data type, per-chunk compressor, dimension names).
     */
   def parseZarrayV3(json: String): (Seq[Long], Seq[Int], String, Option[String], Seq[String]) = {
-    val n = mapper.readTree(json)
-    val shape = n.get("shape").elements().asScala.map(_.asLong()).toSeq
-    val gridName = n.get("chunk_grid").path("name").asText("regular")
-    require(gridName == "regular",
-      s"zarr v3 chunk_grid '$gridName' unsupported (regular)")
-    val chunks = n.get("chunk_grid").get("configuration").get("chunk_shape")
-      .elements().asScala.map(_.asInt()).toSeq
-    val dtype = n.get("data_type").asText()
-    val comp = n.path("codecs").elements().asScala
-      .map(_.get("name").asText()).find(c => c == "gzip" || c == "zstd" || c == "blosc")
-    val dimNames = n.path("dimension_names").elements().asScala.map(_.asText()).toSeq
-    (shape, chunks, dtype, comp, dimNames)
+    val (doc, a) = array(json, 3)
+    (a.shape, a.gridChunks, doc.get("data_type").asText(), a.compressor,
+      doc.path("dimension_names").elements().asScala.map(_.asText()).toSeq)
   }
 
-  /** Sharding info of a v3 array doc, if the sharding_indexed codec
-    * is present: (innerChunkShape, innerCompressor).
-    */
+  /** A sharded v3 array's (inner chunk shape, inner compressor). */
   def parseShardingV3(json: String): Option[(Seq[Int], Option[String])] = {
-    val n = mapper.readTree(json)
-    n.path("codecs").elements().asScala
-      .find(_.get("name").asText() == "sharding_indexed")
-      .map { c =>
-        val cfg = c.get("configuration")
-        val inner = cfg.get("chunk_shape").elements().asScala.map(_.asInt()).toSeq
-        val icomp = cfg.path("codecs").elements().asScala
-          .map(_.get("name").asText()).find(x => x == "gzip" || x == "zstd" || x == "blosc")
-        (inner, icomp)
-      }
+    val a = array(json, 3)._2
+    a.innerChunks.map(_ -> a.compressor)
   }
 
-  /** A parsed Zarr v3 codec chain: the optional `transpose`
-    * array→array codec's dimension order, the `bytes` array→bytes
-    * codec's endianness, and the bytes→bytes compressor (the existing
-    * name semantics). Codecs the engine doesn't implement throw here
-    * — refusing a store loudly at metadata-parse time, never decoding
-    * it wrong.
-    */
-  final case class V3CodecChain(
-      transposeOrder: Option[Seq[Int]],
-      bigEndian: Boolean,
-      compressor: Option[String])
-
-  private val knownCompressors = Set("gzip", "zstd", "blosc", "zlib")
-
-  /** Parse a v3 `codecs` array node into a [[V3CodecChain]]. The
-    * `bytes` codec's `endian` configuration is the ONLY endianness
-    * source in v3 (v3 dtype strings carry no byte-order prefix, unlike
-    * v2's `<f4`/`>f4`) — defaults to little when absent (legal for
-    * 1-byte dtypes, and the universal writer default otherwise).
-    *
-    * `rank` (array dimensionality, when the caller knows it) validates
-    * the transpose order: a malformed order — wrong length, repeated
-    * or out-of-range entries — throws HERE at metadata parse, never
-    * scrambling chunk data on executors. Chains with more than one
-    * compression codec also throw: the decode path applies exactly
-    * one, so accepting a stacked chain would silently misdecode.
-    */
-  def parseCodecChainV3(codecs: JsonNode, rank: Int = -1): V3CodecChain = {
-    var order: Option[Seq[Int]] = None
-    var big = false
-    var comp: Option[String] = None
-    var checksum = false
-    val els = codecs.elements().asScala.toSeq
-    els.zipWithIndex.foreach { case (c, i) =>
-      c.get("name").asText() match {
-        case "transpose" =>
-          val o = c.path("configuration").path("order")
-            .elements().asScala.map(_.asInt()).toSeq
-          require(o.sorted == o.indices.toList &&
-              (rank < 0 || o.length == rank),
-            s"zarr v3 transpose order $o is not a permutation of 0..${
-              (if (rank < 0) o.length else rank) - 1}")
-          // identity orders are legal no-ops; only keep real permutes
-          if (o.nonEmpty && o != o.indices.toSeq) order = Some(o)
-        case "bytes" | "endian" => // "endian" was the pre-1.0 spec name
-          big = c.path("configuration").path("endian").asText("little") == "big"
-        case "sharding_indexed" => // handled by parseShardingV3
-        case "crc32c" =>
-          // the checksum codec appends a 4-byte LE CRC-32C; decode
-          // verifies + strips it BEFORE decompression, so it must be
-          // the outermost (last-listed) bytes->bytes codec
-          require(i == els.length - 1,
-            "zarr v3 crc32c codec must be the last codec in the chain")
-          checksum = true
-        case name if knownCompressors(name) =>
-          require(comp.isEmpty, s"zarr v3 codec chain stacks compression codecs " +
-            s"(${comp.get} then $name) — the decode path applies exactly one")
-          comp = Some(name)
-        case other => throw new UnsupportedOperationException(
-          s"zarr v3 codec '$other' unsupported (transpose/bytes/" +
-            s"${knownCompressors.mkString("/")}/crc32c/sharding_indexed)")
-      }
-    }
-    // checksum rides the compressor id ("crc32c" / "crc32c:gzip") so
-    // every decode site keeps its Option[String] plumbing
-    val compEff =
-      if (checksum) Some(comp.fold("crc32c")(c => s"crc32c:$c")) else comp
-    V3CodecChain(order, big, compEff)
-  }
-
-  /** The array's `fill_value` as a double — the value a chunk whose
-    * object is ABSENT from the store holds (sparse stores legally
-    * omit uniform chunks; both zarr versions). Handles JSON numbers,
-    * booleans, the IEEE string forms ("NaN"/"Infinity"/"-Infinity"),
-    * and v2's `null` (unspecified → 0, zarr-python's effective
-    * default).
-    */
-  def parseFillValue(json: String): Double = {
-    val n = mapper.readTree(json).path("fill_value")
-    if (n.isMissingNode || n.isNull) 0.0
-    else if (n.isNumber) n.asDouble()
-    else if (n.isBoolean) { if (n.asBoolean()) 1.0 else 0.0 }
-    else n.asText() match {
-      case "NaN" => Double.NaN
-      case "Infinity" => Double.PositiveInfinity
-      case "-Infinity" => Double.NegativeInfinity
-      case other => throw new UnsupportedOperationException(
-        s"fill_value '$other' unsupported (number/bool/NaN/±Infinity)")
-    }
-  }
-
-  /** The v3 `chunk_key_encoding`: (name, separator). Defaults per
-    * spec — name `default` with '/', name `v2` with '.' (the encoding
-    * zarr-python emits for v2-converted stores).
-    */
-  def parseChunkKeyEncodingV3(json: String): (String, String) = {
-    val n = mapper.readTree(json).path("chunk_key_encoding")
-    val name = n.path("name").asText("default")
-    require(name == "default" || name == "v2",
-      s"zarr v3 chunk_key_encoding '$name' unsupported (default/v2)")
-    val sep = n.path("configuration").path("separator")
-      .asText(if (name == "v2") "." else "/")
-    (name, sep)
-  }
-
-  /** Top-level codec chain of a v3 array doc. For sharded arrays this
-    * is the chain OUTSIDE the shard; pair with [[parseShardingInnerV3]]
-    * for the per-chunk chain.
-    */
-  def parseCodecsV3(json: String): V3CodecChain = {
-    val n = mapper.readTree(json)
-    parseCodecChainV3(n.path("codecs"), n.path("shape").size())
-  }
-
-  /** The inner (per-chunk) codec chain of the sharding_indexed codec,
-    * when present.
-    */
-  def parseShardingInnerV3(json: String): Option[V3CodecChain] = {
-    val n = mapper.readTree(json)
-    n.path("codecs").elements().asScala
-      .find(_.get("name").asText() == "sharding_indexed")
-      .map(c => parseCodecChainV3(c.get("configuration").path("codecs"),
-        n.path("shape").size()))
-  }
-
-  /** Zarr v3 array doc with the sharding_indexed codec: the chunk
-    * grid advertises the SHARD shape; inner chunks live in the codec
-    * configuration.
-    */
-  def zarrayV3Sharded(shape: Seq[Long], shardShape: Seq[Int], innerChunks: Seq[Int],
-      dtype: String, compressor: Option[String], dimensionNames: Seq[String]): String = {
-    val n = mapper.createObjectNode()
-    n.put("zarr_format", 3)
-    n.put("node_type", "array")
-    val sh = n.putArray("shape"); shape.foreach(sh.add)
-    n.put("data_type", Dtypes.normalize(dtype))
-    val grid = n.putObject("chunk_grid")
-    grid.put("name", "regular")
-    val gc = grid.putObject("configuration").putArray("chunk_shape")
-    shardShape.foreach(x => gc.add(x))
-    val cke = n.putObject("chunk_key_encoding")
-    cke.put("name", "default")
-    cke.putObject("configuration").put("separator", "/")
-    n.put("fill_value", 0)
-    val codecs = n.putArray("codecs")
-    codecs.add(mapper.readTree(graft.zarr.Sharding.codecJson(innerChunks, compressor)))
-    val dn = n.putArray("dimension_names")
-    dimensionNames.foreach(dn.add)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)
-  }
+  /** A v3 array when sharded: its `compressor` is the inner chain's. */
+  def parseShardingInnerV3(json: String): Option[graft.zarr.ZarrArray] =
+    Some(array(json, 3)._2).filter(_.innerChunks.isDefined)
 }

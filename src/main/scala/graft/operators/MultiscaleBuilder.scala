@@ -31,19 +31,8 @@ object MultiscaleBuilder {
   final case class Level(meta: ImageMeta, chunks: Dataset[ChunkRow])
   final case class Multiscale(levels: Seq[Level], method: Method,
       omero: Option[Omero] = None) {
-    def metadata(name: String = "image", version: String = "0.4"): MultiscalesMeta = {
-      val axes = levels.head.meta.dims.map { d =>
-        Axis(d, axisType(d), levels.head.meta.axesUnits.get(d),
-          levels.head.meta.axesOrientations.get(d))
-      }
-      val datasets = levels.zipWithIndex.map { case (lvl, i) =>
-        DatasetMeta(s"scale$i/$name", Seq(
-          ScaleT(lvl.meta.dims.map(lvl.meta.scale)),
-          TranslationT(lvl.meta.dims.map(lvl.meta.translation))))
-      }
-      MultiscalesMeta(axes, datasets, version, Some(name),
-        Some(method.value), Some(method.metadata), omero)
-    }
+    def metadata(name: String = "image", version: String = "0.4"): MultiscalesMeta =
+      MultiscalesMeta.of(levels.map(_.meta), name, version, Some(method), omero)
   }
 
   /** Build the full pyramid. `scaleFactors`: either explicit per-level

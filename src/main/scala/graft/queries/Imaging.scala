@@ -512,8 +512,8 @@ object Imaging extends QModule {
       Hcs.toHcsZarr(storeDir, plate)
       val store = Hcs.openStore(storeDir)
       wells.foreach { case (nkey, _, _, p) =>
-        store.writeString(s"${p.split("/").head}/.zgroup", ZarrJson.groupDoc(2))
-        store.writeString(s"$p/.zgroup", ZarrJson.groupDoc(2))
+        store.writeString(s"${p.split("/").head}/.zgroup", ZarrJson.pretty(ZarrJson.groupDoc(2)))
+        store.writeString(s"$p/.zgroup", ZarrJson.pretty(ZarrJson.groupDoc(2)))
         store.writeString(s"$p/.zattrs", Hcs.wellAttrs(Well(Seq(
           WellImage("f0", Some((nkey % 2).toInt)),
           WellImage("f1", Some(((nkey + 1) % 2).toInt))))))

@@ -94,12 +94,7 @@ class OmeZarrWrite(path: String, options: Map[String, String],
   /** Driver-side metadata commit, after every task succeeded. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val store = new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession()))
-    val datasets = levels.zipWithIndex.map { case (m, i) =>
-      DatasetMeta(s"scale$i/$name", Seq(
-        ScaleT(dims.map(m.scale)), TranslationT(dims.map(m.translation))))
-    }
-    val meta = MultiscalesMeta(dims.map(d => Axis(d, axisType(d))), datasets, version, Some(name))
-    ZarrArray.metadataDocs(meta, levels, compressor)
+    ZarrArray.metadataDocs(MultiscalesMeta.of(levels, name, version), levels, compressor)
       .foreach { case (k, v) => store.writeString(k, v) }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.hcs.Hcs
 import graft.meta.Model._
-import graft.operators.{ChunkOps, MultiscaleBuilder}
+import graft.operators.ChunkOps
 
 /** Structured Streaming surface (SURVEY §2.9):
   *
@@ -773,18 +773,17 @@ object Streams {
         // last-writer-wins idempotent, replays rewrite identical
         // chunk objects), and a mid-batch failure replays the whole
         // batch either way.
-        val hconf = Some(graft.zarr.SerializableHadoopConf.fromActiveSession())
+        val hconf = graft.zarr.SerializableHadoopConf.broadcast()
         val pp = platePath
         val descriptors = uniq.mapPartitions { (it: Iterator[ArrivingField]) =>
-          val st = new graft.zarr.ZarrStore(pp, hconf)
+          val st = new graft.zarr.ZarrStore(pp, Some(hconf.value))
           it.map { f =>
             val meta = f.descriptor.meta
             val image = s"${f.wellPath}/${f.imagePath}"
             // the image's one-level v0.4 metadata tree, consolidated copy
             // included (task-private: no other field shares its keys)
             graft.zarr.ZarrArray.metadataDocs(
-              MultiscaleBuilder.Multiscale(Seq(MultiscaleBuilder.Level(meta, null)),
-                Method.ItkwasmBinShrink).metadata(),
+              MultiscalesMeta.of(Seq(meta), "image", "0.4", Some(Method.ItkwasmBinShrink)),
               Seq(meta), Some("zstd"))
               .foreach { case (k, v) => st.writeString(s"$image/$k", v) }
             ChunkOps.decompose(f.values, meta).foreach { c =>

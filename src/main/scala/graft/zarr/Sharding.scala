@@ -12,7 +12,8 @@ import graft.operators.NdKernels
   * trailing crc32c of the index. Index location: end.
   *
   * Executors build whole shards from their grouped inner chunks, so a
-  * shard is written exactly once by exactly one task.
+  * shard is written exactly once by exactly one task. The codec's
+  * `zarr.json` entry is written and parsed by [[ZarrArray]].
   */
 object Sharding {
 
@@ -91,44 +92,5 @@ object Sharding {
   def innerPosition(flat: Int, chunksPerShard: Seq[Int]): Seq[Int] = {
     var rem = flat
     NdKernels.strides(chunksPerShard.toArray).toSeq.map { s => val q = rem / s; rem %= s; q }
-  }
-
-  /** `zarr.json` codec entry for sharding_indexed. */
-  def codecJson(innerChunks: Seq[Int], innerCompressor: Option[String]): String = {
-    val mapper = graft.meta.ZarrJson.mapper
-    val n = mapper.createObjectNode()
-    n.put("name", "sharding_indexed")
-    val cfg = n.putObject("configuration")
-    val cs = cfg.putArray("chunk_shape"); innerChunks.foreach(c => cs.add(c))
-    val codecs = cfg.putArray("codecs")
-    val bytes = codecs.addObject()
-    bytes.put("name", "bytes")
-    bytes.putObject("configuration").put("endian", "little")
-    innerCompressor.foreach { c =>
-      val cn = codecs.addObject()
-      if (c == "blosc" || c.startsWith("blosc:")) {
-        cn.put("name", "blosc")
-        // shared parser: shard metadata stays in lockstep with the
-        // frames Codecs.compress writes, and typos throw before any
-        // store bytes land
-        val (cname, clevel, mode) = Codecs.parseBloscId(c)
-        val ccfg = cn.putObject("configuration")
-        ccfg.put("cname", cname)
-        ccfg.put("clevel", clevel)
-        ccfg.put("shuffle", Codecs.shuffleV3(mode))
-        ccfg.put("blocksize", 0)
-      } else {
-        cn.put("name", c)
-        val ccfg = cn.putObject("configuration")
-        if (c == "gzip") ccfg.put("level", 5)
-        else if (c == "zstd") { ccfg.put("level", 3); ccfg.put("checksum", false) }
-      }
-    }
-    val ic = cfg.putArray("index_codecs")
-    val ib = ic.addObject(); ib.put("name", "bytes")
-    ib.putObject("configuration").put("endian", "little")
-    ic.addObject().put("name", "crc32c")
-    cfg.put("index_location", "end")
-    mapper.writeValueAsString(n)
   }
 }

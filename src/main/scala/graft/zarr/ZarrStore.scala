@@ -61,8 +61,10 @@ object SerializableHadoopConf {
   * code path works for `file://`, `s3a://`, `gs://`, `abfs://`
   * (SURVEY S3): executors open the store independently, so chunk I/O
   * scales with the cluster, and the driver only touches metadata keys.
-  * Pass the driver's conf (`SerializableHadoopConf.fromActiveSession()`)
-  * through task closures so object-store credentials propagate.
+  * Ship the session's `SerializableHadoopConf.broadcast()`, taken on
+  * the driver, to the tasks and open the store there with its `value`:
+  * object-store credentials propagate, and no task closure carries the
+  * conf itself.
   */
 final class ZarrStore(val root: String, hconf: Option[SerializableHadoopConf] = None)
     extends Serializable {

@@ -14,6 +14,8 @@ import graft.meta.Model._
   */
 class JsonSchemaSpec extends AnyFunSuite {
 
+  private def tree(json: String) = ZarrJson.mapper.readTree(json)
+
   private val axes = Seq(
     Axis("y", "space", Some("micrometer")), Axis("x", "space", Some("micrometer")))
   private val ms = MultiscalesMeta(
@@ -49,22 +51,22 @@ class JsonSchemaSpec extends AnyFunSuite {
   }
 
   test("missing multiscales / empty datasets / missing axes") {
-    assert(Validation.validateSchema("""{}""", "0.4")
+    assert(Validation.validateSchema(tree("""{}"""), "0.4")
       .exists(_.message.contains("'multiscales'")))
-    assert(Validation.validateSchema(
+    assert(Validation.validateSchema(tree(
       """{"multiscales":[{"axes":[{"name":"y","type":"space"},{"name":"x","type":"space"}],
-         "datasets":[]}]}""", "0.4")
+         "datasets":[]}]}"""), "0.4")
       .exists(_.message.contains("minItems")))
-    assert(Validation.validateSchema(
+    assert(Validation.validateSchema(tree(
       """{"multiscales":[{"datasets":[{"path":"0","coordinateTransformations":
-         [{"type":"scale","scale":[1,1]}]}]}]}""", "0.4")
+         [{"type":"scale","scale":[1,1]}]}]}]}"""), "0.4")
       .exists(_.message.contains("'axes'")))
   }
 
   test("axes constraints: maxItems 5, spatial-count window via contains") {
-    def doc(axs: String) =
+    def doc(axs: String) = tree(
       s"""{"multiscales":[{"axes":$axs,"datasets":[
-          {"path":"0","coordinateTransformations":[{"type":"scale","scale":[1,1]}]}]}]}"""
+          {"path":"0","coordinateTransformations":[{"type":"scale","scale":[1,1]}]}]}]}""")
     val six = (1 to 6).map(i => s"""{"name":"d$i","type":"space"}""").mkString("[", ",", "]")
     assert(Validation.validateSchema(doc(six), "0.4").exists(_.message.contains("maxItems")))
     // four space axes exceed maxContains 3
@@ -85,9 +87,9 @@ class JsonSchemaSpec extends AnyFunSuite {
   }
 
   test("coordinateTransformations: scale required, at most one, rank >= 2") {
-    def doc(cts: String) =
+    def doc(cts: String) = tree(
       s"""{"multiscales":[{"axes":[{"name":"y","type":"space"},{"name":"x","type":"space"}],
-          "datasets":[{"path":"0","coordinateTransformations":$cts}]}]}"""
+          "datasets":[{"path":"0","coordinateTransformations":$cts}]}]}""")
     assert(Validation.validateSchema(doc("""[{"type":"translation","translation":[0,0]}]"""),
       "0.4").exists(_.message.contains("contains")))
     assert(Validation.validateSchema(
@@ -100,16 +102,16 @@ class JsonSchemaSpec extends AnyFunSuite {
   }
 
   test("version enum: 0.4 schema rejects other versions") {
-    val json = """{"multiscales":[{"version":"0.3",
+    val json = tree("""{"multiscales":[{"version":"0.3",
       "axes":[{"name":"y","type":"space"},{"name":"x","type":"space"}],
-      "datasets":[{"path":"0","coordinateTransformations":[{"type":"scale","scale":[1,1]}]}]}]}"""
+      "datasets":[{"path":"0","coordinateTransformations":[{"type":"scale","scale":[1,1]}]}]}]}""")
     assert(Validation.validateSchema(json, "0.4").exists(_.message.contains("enum")))
   }
 
   test("omero channels: window + color required") {
-    val json = """{"multiscales":[{"axes":[{"name":"y","type":"space"},{"name":"x","type":"space"}],
+    val json = tree("""{"multiscales":[{"axes":[{"name":"y","type":"space"},{"name":"x","type":"space"}],
       "datasets":[{"path":"0","coordinateTransformations":[{"type":"scale","scale":[1,1]}]}]}],
-      "omero":{"channels":[{"label":"c0"}]}}"""
+      "omero":{"channels":[{"label":"c0"}]}}""")
     val errs = Validation.validateSchema(json, "0.4")
     assert(errs.exists(_.message.contains("'window'")))
     assert(errs.exists(_.message.contains("'color'")))
@@ -124,24 +126,24 @@ class JsonSchemaSpec extends AnyFunSuite {
       name = Some("p"),
       acquisitions = Seq(PlateAcquisition(0, Some("a0"))),
       field_count = Some(1))
-    assert(Validation.validateSchema(plateAttrs(plate), "0.4", model = "plate") == Nil)
+    assert(Validation.validateSchema(tree(plateAttrs(plate)), "0.4", model = "plate") == Nil)
     val well = Well(Seq(WellImage("0", Some(0)), WellImage("1", Some(0))), "0.4")
-    assert(Validation.validateSchema(wellAttrs(well), "0.4", model = "well") == Nil)
+    assert(Validation.validateSchema(tree(wellAttrs(well)), "0.4", model = "well") == Nil)
     // well image paths must be relative alphanumerics; acquisition ids integers
     assert(Validation.validateSchema(
-      """{"well":{"images":[{"path":"../escape"}]}}""", "0.4", model = "well").nonEmpty)
-    assert(Validation.validateSchema(
+      tree("""{"well":{"images":[{"path":"../escape"}]}}"""), "0.4", model = "well").nonEmpty)
+    assert(Validation.validateSchema(tree(
       """{"plate":{"columns":[{"name":"no spaces"}],"rows":[{"name":"A"}],
-         "wells":[{"path":"A/1","rowIndex":0,"columnIndex":0}]}}""",
+         "wells":[{"path":"A/1","rowIndex":0,"columnIndex":0}]}}"""),
       "0.4", model = "plate").exists(_.message.contains("pattern")))
   }
 
   test("0.1 through 0.3 schemas load and validate a versioned doc") {
     // 0.1-0.3 have no axes objects (names only land in 0.3's list form)
-    val v01 = """{"multiscales":[{"datasets":[{"path":"0"}],"version":"0.1"}]}"""
+    val v01 = tree("""{"multiscales":[{"datasets":[{"path":"0"}],"version":"0.1"}]}""")
     assert(Validation.validateSchema(v01, "0.1") == Nil)
-    val v03 = """{"multiscales":[{"datasets":[{"path":"0"}],"version":"0.3",
-      "axes":["t","y","x"]}]}"""
+    val v03 = tree("""{"multiscales":[{"datasets":[{"path":"0"}],"version":"0.3",
+      "axes":["t","y","x"]}]}""")
     assert(Validation.validateSchema(v03, "0.3") == Nil)
   }
 
@@ -149,15 +151,15 @@ class JsonSchemaSpec extends AnyFunSuite {
     val schema = JsonSchema.loadRfc4Schema()
     val orientation = schema.get("$defs").get("AnatomicalOrientation")
     assert(JsonSchema.validate(orientation,
-      """{"type":"anatomical","value":"left-to-right"}""") == Nil)
-    assert(JsonSchema.validate(orientation, """{"type":"anatomical"}""")
+      tree("""{"type":"anatomical","value":"left-to-right"}""")) == Nil)
+    assert(JsonSchema.validate(orientation, tree("""{"type":"anatomical"}"""))
       .exists(_.message.contains("'value'")))
     assert(JsonSchema.validate(orientation,
-      """{"type":"anatomical","value":"x","extra":1}""")
+      tree("""{"type":"anatomical","value":"x","extra":1}"""))
       .exists(_.message.contains("additional property")))
     val values = schema.get("$defs").get("AnatomicalOrientationValues")
-    assert(JsonSchema.validate(values, "\"rostral-to-caudal\"") == Nil)
-    assert(JsonSchema.validate(values, "\"up-to-down\"").nonEmpty)
+    assert(JsonSchema.validate(values, tree("\"rostral-to-caudal\"")) == Nil)
+    assert(JsonSchema.validate(values, tree("\"up-to-down\"")).nonEmpty)
     // the enum in the vendored schema and the hand registry agree
     val enumVals = values.get("enum").elements()
     val fromSchema = Iterator.continually(enumVals)

@@ -16,9 +16,14 @@ class MetadataSpec extends AnyFunSuite {
     `type` = Some("itkwasm_bin_shrink"),
     metadata = Some(Method.ItkwasmBinShrink.metadata))
 
+  private def tree(json: String) = ZarrJson.mapper.readTree(json)
+
+  /** One array document through the one parser. */
+  private def array(json: String, zarrFormat: Int) =
+    graft.zarr.ZarrArray.parse(tree(json), zarrFormat, "a")
+
   test("v0.4 root attrs JSON round-trips") {
-    val json = ZarrJson.rootAttrs(ms)
-    val parsed = ZarrJson.parseMultiscales(json)
+    val parsed = ZarrJson.parseMultiscales(ZarrJson.rootAttrs(ms))
     assert(parsed.version == "0.4")
     assert(parsed.axes == axes)
     assert(parsed.datasets == ms.datasets)
@@ -29,7 +34,7 @@ class MetadataSpec extends AnyFunSuite {
   test("v0.5 root attrs nest under ome key and round-trip") {
     val v5 = ms.copy(version = "0.5")
     val json = ZarrJson.rootAttrs(v5)
-    assert(json.contains("\"ome\""))
+    assert(json.has("ome"))
     val parsed = ZarrJson.parseMultiscales(json)
     assert(parsed.version == "0.5")
     assert(parsed.datasets == ms.datasets)
@@ -37,7 +42,7 @@ class MetadataSpec extends AnyFunSuite {
 
   test("version detection: bare multiscales with no version → 0.4") {
     val json = """{"multiscales": [{"datasets": [{"path": "0"}]}]}"""
-    val parsed = ZarrJson.parseMultiscales(json)
+    val parsed = ZarrJson.parseMultiscales(tree(json))
     assert(parsed.version == "0.4")
     // v0.1-0.3 back-compat: fixed tczyx axes
     assert(parsed.axes.map(_.name) == Seq("t", "c", "z", "y", "x"))
@@ -56,7 +61,7 @@ class MetadataSpec extends AnyFunSuite {
       "omero":{"channels":[
         {"color":"FF0000","window":{"start":0,"end":100}},
         {"color":"00FF00","window":{}}]}}"""
-    val parsed = ZarrJson.parseMultiscales(json)
+    val parsed = ZarrJson.parseMultiscales(tree(json))
     assert(parsed.omero.get.channels.length == 1) // invalid channel skipped
     assert(parsed.omero.get.channels.head.window == OmeroWindow(0, 100, 0, 100))
   }
@@ -149,81 +154,86 @@ class MetadataSpec extends AnyFunSuite {
 
   test("v3 codec chain: parse, validation, and refusals") {
     def doc(codecs: String) =
-      s"""{"zarr_format":3,"node_type":"array","shape":[4,6],
-          "data_type":"float32","codecs":$codecs}"""
+      s"""{"zarr_format":3,"node_type":"array","shape":[4,6],"data_type":"float32",
+          "chunk_grid":{"name":"regular","configuration":{"chunk_shape":[2,3]}},
+          "codecs":$codecs}"""
+    def chain(codecs: String) = {
+      val a = array(doc(codecs), 3)
+      (a.transposeOrder, a.bigEndian, a.compressor)
+    }
     // full chain parses: transpose order, big endian, compressor
-    val c = ZarrJson.parseCodecsV3(doc(
+    assert(chain(
       """[{"name":"transpose","configuration":{"order":[1,0]}},
          {"name":"bytes","configuration":{"endian":"big"}},
-         {"name":"zlib","configuration":{}}]"""))
-    assert(c == ZarrJson.V3CodecChain(Some(Seq(1, 0)), bigEndian = true, Some("zlib")))
+         {"name":"zlib","configuration":{}}]""") == ((Some(Seq(1, 0)), true, Some("zlib"))))
     // identity transpose is a no-op, little endian default
-    assert(ZarrJson.parseCodecsV3(doc(
+    assert(chain(
       """[{"name":"transpose","configuration":{"order":[0,1]}},
-         {"name":"bytes","configuration":{"endian":"little"}}]"""))
-      == ZarrJson.V3CodecChain(None, bigEndian = false, None))
+         {"name":"bytes","configuration":{"endian":"little"}}]""") == ((None, false, None)))
     // malformed orders refuse at parse: repeated entry, wrong length
-    assertThrows[IllegalArgumentException](ZarrJson.parseCodecsV3(doc(
-      """[{"name":"transpose","configuration":{"order":[0,0]}},{"name":"bytes"}]""")))
-    assertThrows[IllegalArgumentException](ZarrJson.parseCodecsV3(doc(
-      """[{"name":"transpose","configuration":{"order":[1,2,0]}},{"name":"bytes"}]""")))
+    assertThrows[IllegalArgumentException](chain(
+      """[{"name":"transpose","configuration":{"order":[0,0]}},{"name":"bytes"}]"""))
+    assertThrows[IllegalArgumentException](chain(
+      """[{"name":"transpose","configuration":{"order":[1,2,0]}},{"name":"bytes"}]"""))
     // stacked compression codecs refuse (decode applies exactly one)
-    assertThrows[IllegalArgumentException](ZarrJson.parseCodecsV3(doc(
-      """[{"name":"bytes"},{"name":"zstd"},{"name":"gzip"}]""")))
+    assertThrows[IllegalArgumentException](chain(
+      """[{"name":"bytes"},{"name":"zstd"},{"name":"gzip"}]"""))
     // unknown codecs refuse loudly
-    val e = intercept[UnsupportedOperationException](ZarrJson.parseCodecsV3(doc(
-      """[{"name":"bytes"},{"name":"vlen-utf8"}]""")))
+    val e = intercept[UnsupportedOperationException](chain(
+      """[{"name":"bytes"},{"name":"vlen-utf8"}]"""))
     assert(e.getMessage.contains("vlen-utf8"))
     // crc32c checksum codec rides the compressor id, composed or alone
-    assert(ZarrJson.parseCodecsV3(doc(
-      """[{"name":"bytes"},{"name":"gzip"},{"name":"crc32c"}]""")).compressor
+    assert(chain("""[{"name":"bytes"},{"name":"gzip"},{"name":"crc32c"}]""")._3
       == Some("crc32c:gzip"))
-    assert(ZarrJson.parseCodecsV3(doc(
-      """[{"name":"bytes"},{"name":"crc32c"}]""")).compressor == Some("crc32c"))
+    assert(chain("""[{"name":"bytes"},{"name":"crc32c"}]""")._3 == Some("crc32c"))
     // crc32c anywhere but last refuses (decode strips it first)
-    assertThrows[IllegalArgumentException](ZarrJson.parseCodecsV3(doc(
-      """[{"name":"bytes"},{"name":"crc32c"},{"name":"gzip"}]""")))
+    assertThrows[IllegalArgumentException](chain(
+      """[{"name":"bytes"},{"name":"crc32c"},{"name":"gzip"}]"""))
   }
 
   test("foreign-store metadata hazards refuse loudly") {
+    def v2(extra: String) =
+      s"""{"zarr_format":2,"shape":[4,6],"chunks":[2,3],"dtype":"<f4","compressor":null$extra}"""
+    def v3(extra: String) =
+      s"""{"zarr_format":3,"node_type":"array","shape":[4],"data_type":"float32",
+          "chunk_grid":{"name":"regular","configuration":{"chunk_shape":[2]}},
+          "codecs":[{"name":"bytes"}]$extra}"""
     // v2 numcodecs filter chains parse into typed decode steps
     // (delta/fixedscaleoffset/quantize/astype/shuffle, round 5) —
     // UNKNOWN filter ids still refuse at metadata time, never
     // mid-decode on an executor
-    val filtered = """{"zarr_format":2,"shape":[4],"chunks":[4],"dtype":"<f4",
-      "compressor":null,"filters":[{"id":"delta","dtype":"<f4"}],"order":"C"}"""
-    ZarrJson.parseZarrayV2(filtered)
-    assert(ZarrJson.parseFiltersV2(filtered) ==
+    assert(array(v2(""","filters":[{"id":"delta","dtype":"<f4"}],"order":"C""""), 2).filters ==
       Seq(graft.zarr.NumcodecsFilters.DeltaF("<f4", "<f4")))
-    val e1 = intercept[UnsupportedOperationException](ZarrJson.parseFiltersV2(
-      """{"filters":[{"id":"vlen-utf8"}]}"""))
+    val e1 = intercept[UnsupportedOperationException](
+      array(v2(""","filters":[{"id":"vlen-utf8"}]"""), 2))
     assert(e1.getMessage.contains("vlen-utf8"))
     // null/empty filters stay fine
-    assert(ZarrJson.parseFiltersV2(
-      """{"zarr_format":2,"shape":[4],"chunks":[4],"dtype":"<f4",
-         "compressor":null,"filters":null}""") == Nil)
-    // order parses C/F, refuses anything else
-    assert(ZarrJson.parseOrderV2("""{"order":"F"}""") == "F")
-    assert(ZarrJson.parseOrderV2("""{}""") == "C")
-    assertThrows[IllegalArgumentException](ZarrJson.parseOrderV2("""{"order":"Z"}"""))
+    assert(array(v2(""","filters":null"""), 2).filters == Nil)
+    assert(array(v2(""), 2).filters == Nil)
+    // order parses C/F (F reads as the reversed-dims transpose),
+    // refuses anything else
+    assert(array(v2(""","order":"F""""), 2).transposeOrder == Some(Seq(1, 0)))
+    assert(array(v2(""), 2).transposeOrder.isEmpty)
+    assertThrows[IllegalArgumentException](array(v2(""","order":"Z""""), 2))
     // non-regular v3 chunk grids refuse
     val rect = """{"zarr_format":3,"node_type":"array","shape":[4],
       "data_type":"float32","chunk_grid":{"name":"rectilinear",
       "configuration":{"chunk_shape":[2]}},"codecs":[{"name":"bytes"}]}"""
-    val e2 = intercept[IllegalArgumentException](ZarrJson.parseZarrayV3(rect))
+    val e2 = intercept[IllegalArgumentException](array(rect, 3))
     assert(e2.getMessage.contains("rectilinear"))
     // v3 chunk_key_encoding: v2 name defaults to '.', unknown refuses
-    assert(ZarrJson.parseChunkKeyEncodingV3(
-      """{"chunk_key_encoding":{"name":"v2"}}""") == ("v2", "."))
-    assert(ZarrJson.parseChunkKeyEncodingV3("""{}""") == ("default", "/"))
-    assertThrows[IllegalArgumentException](ZarrJson.parseChunkKeyEncodingV3(
-      """{"chunk_key_encoding":{"name":"hex"}}"""))
+    val dotted = array(v3(""","chunk_key_encoding":{"name":"v2"}"""), 3)
+    assert((dotted.keyEncoding, dotted.separator) == (("v2", ".")))
+    val plain = array(v3(""), 3)
+    assert((plain.keyEncoding, plain.separator) == (("default", "/")))
+    assertThrows[IllegalArgumentException](
+      array(v3(""","chunk_key_encoding":{"name":"hex"}"""), 3))
     // fill_value forms
-    assert(ZarrJson.parseFillValue("""{"fill_value":7}""") == 7.0)
-    assert(ZarrJson.parseFillValue("""{"fill_value":null}""") == 0.0)
-    assert(ZarrJson.parseFillValue("""{}""") == 0.0)
-    assert(ZarrJson.parseFillValue("""{"fill_value":"NaN"}""").isNaN)
-    assert(ZarrJson.parseFillValue("""{"fill_value":"-Infinity"}""").isNegInfinity)
-    assert(ZarrJson.parseFillValue("""{"fill_value":true}""") == 1.0)
+    assert(array(v2(""","fill_value":7"""), 2).fillValue == 7.0)
+    assert(array(v2(""","fill_value":null"""), 2).fillValue == 0.0)
+    assert(array(v2(""), 2).fillValue == 0.0)
+    assert(array(v2(""","fill_value":"NaN""""), 2).fillValue.isNaN)
+    assert(array(v3(""","fill_value":"-Infinity""""), 3).fillValue.isNegInfinity)
+    assert(array(v3(""","fill_value":true"""), 3).fillValue == 1.0)
   }
 }

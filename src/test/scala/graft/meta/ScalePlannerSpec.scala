@@ -100,18 +100,4 @@ class ScalePlannerSpec extends AnyFunSuite {
       assert(spans == extent, s"extent drifted at factor $k")
     }
   }
-
-  test("memory usage matches reference exact values") {
-    // (4,4,4) uint8 chunks 2 → 64 bytes; z-constrained → 32
-    val i = ImageMeta(Seq("z", "y", "x"), Seq(4, 4, 4), Seq(2, 2, 2), "uint8",
-      Map("z" -> 1.0, "y" -> 1.0, "x" -> 1.0), Map("z" -> 0.0, "y" -> 0.0, "x" -> 0.0))
-    assert(ScalePlanner.memoryUsage(i) == 64L)
-    assert(ScalePlanner.memoryUsage(i, Set("z")) == 32L)
-  }
-
-  test("chunk alignment grows misaligned chunks to chunk*factor") {
-    val got = ScalePlanner.alignChunks(
-      Map("y" -> 65, "x" -> 64), Map("y" -> 64, "x" -> 64), Map("y" -> 2, "x" -> 2))
-    assert(got == Map("y" -> 130, "x" -> 64))
-  }
 }

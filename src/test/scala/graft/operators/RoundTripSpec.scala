@@ -65,10 +65,10 @@ class RoundTripSpec extends SparkSpec {
       chunksPerShard = Some(Seq(2, 2)))
     val doc = new String(Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/scale0/image/zarr.json")))
-    val (shape, shardShape, _, _, _) = graft.meta.ZarrJson.parseZarrayV3(doc)
-    assert(shape == Seq(256L, 256L))
-    assert(shardShape == Seq(128, 128)) // 64-chunk × 2 per shard
-    assert(graft.meta.ZarrJson.parseShardingV3(doc).get._1 == Seq(64, 64))
+    val arr = graft.zarr.ZarrArray.parse(graft.meta.ZarrJson.mapper.readTree(doc), 3, "scale0/image")
+    assert(arr.shape == Seq(256L, 256L))
+    assert(arr.gridChunks == Seq(128, 128)) // 64-chunk × 2 per shard
+    assert(arr.innerChunks.contains(Seq(64, 64)))
     // 2×2 shard objects on disk
     val shardFiles = new java.io.File(s"$dir/scale0/image/c").listFiles().flatMap(_.listFiles())
     assert(shardFiles.length == 4)
