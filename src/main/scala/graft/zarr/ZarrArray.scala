@@ -63,13 +63,25 @@ final case class ZarrArray(
       }.filter { case (_, idx) => ZarrStore.inArrayGrid(shape, chunks, idx) }
     }
 
-  /** Fetch one stored object and decode every chunk it holds →
-    * (chunk position, chunk bytes in `dtype`, clipped to the array).
-    * An absent object or a shard-index hole is a chunk of
-    * `fill_value` (sparse stores legally omit uniform chunks), so the
-    * rows are exactly [[slots]].
+  /** Whether `idx` names a chunk of this array: the array's rank, no
+    * negative entry, inside the chunk grid.
     */
-  def read(store: ZarrStore, obj: Seq[Int]): Iterator[(Seq[Int], Array[Byte])] = {
+  def holds(idx: Seq[Int]): Boolean =
+    idx.length == shape.length && idx.forall(_ >= 0) && ZarrStore.inArrayGrid(shape, chunks, idx)
+
+  /** Grid position of the stored object that holds chunk `idx`. */
+  def objectOf(idx: Seq[Int]): Seq[Int] =
+    if (innerChunks.isEmpty) idx else idx.zip(chunksPerShard).map { case (i, n) => i / n }
+
+  /** Fetch one stored object and decode the chunks it holds that
+    * `wanted` keeps → (chunk position, chunk bytes in `dtype`, clipped
+    * to the array). An absent object or a shard-index hole is a chunk
+    * of `fill_value` (sparse stores legally omit uniform chunks), so
+    * the rows are exactly the kept [[slots]]; the other slots of a
+    * shard are never decompressed.
+    */
+  def read(store: ZarrStore, obj: Seq[Int],
+      wanted: Seq[Int] => Boolean = _ => true): Iterator[(Seq[Int], Array[Byte])] = {
     val bytes = store.readBytesIfExists(
       ZarrStore.chunkKey(zarrFormat, path, obj, separator, keyEncoding))
     val encoded: Int => Option[Array[Byte]] = bytes match {
@@ -77,7 +89,7 @@ final case class ZarrArray(
       case Some(b) if innerChunks.isEmpty => _ => Some(b)
       case Some(b) => Sharding.parseShard(b, chunksPerShard.product).get
     }
-    slots(obj).map { case (f, idx) => idx -> decode(encoded(f), idx) }
+    slots(obj).collect { case (f, idx) if wanted(idx) => idx -> decode(encoded(f), idx) }
   }
 
   /** decompress → filters/decode → inverse transpose → clip. */
@@ -171,15 +183,19 @@ object ZarrArray {
   /** Parse one array document tree (v2 `.zarray` or v3 array
     * `zarr.json`) in one pass. Unknown codecs, filters, chunk grids,
     * key encodings, orders and fill values refuse here, at metadata
-    * time, never as misdecoded chunks on an executor.
+    * time, never as misdecoded chunks on an executor; a missing
+    * required key refuses with an `IllegalArgumentException` naming
+    * the key and the array.
     */
   def parse(doc: JsonNode, zarrFormat: Int, path: String): ZarrArray = {
     def ints(n: JsonNode) = n.elements().asScala.map(_.asInt()).toSeq
-    val shape = doc.get("shape").elements().asScala.map(_.asLong()).toSeq
+    def req(n: JsonNode, key: String, within: String) = required(n, key, within, path)
+    val shape = req(doc, "shape", "document").elements().asScala.map(_.asLong()).toSeq
     if (zarrFormat == 2) {
-      val chunks = ints(doc.get("chunks"))
-      val dt = doc.get("dtype").asText()
-      val compressor = Option(doc.get("compressor")).filter(!_.isNull).map(_.get("id").asText())
+      val chunks = ints(req(doc, "chunks", "document"))
+      val dt = req(doc, "dtype", "document").asText()
+      val compressor = Option(doc.get("compressor")).filter(!_.isNull)
+        .map(req(_, "id", "compressor").asText())
       val sep = doc.path("dimension_separator").asText(".")
       // F-order chunks are the C-order chunks of the dimension-reversed
       // array: the readers invert them like a v3 transpose
@@ -189,20 +205,22 @@ object ZarrArray {
         compressor, NumcodecsFilters.parse(doc.path("filters")),
         if (order == "F") Some(shape.indices.reverse) else None, fillValue(doc), sep, "default")
     } else {
-      val grid = doc.get("chunk_grid")
+      val grid = req(doc, "chunk_grid", "document")
       val gridName = grid.path("name").asText("regular")
       require(gridName == "regular", s"zarr v3 chunk_grid '$gridName' unsupported (regular)")
-      val gridChunks = ints(grid.get("configuration").get("chunk_shape"))
-      val dt = doc.get("data_type").asText()
+      val gridChunks = ints(req(req(grid, "configuration", "chunk_grid"), "chunk_shape",
+        "chunk_grid configuration"))
+      val dt = req(doc, "data_type", "document").asText()
       // endianness, compressor and transpose ride the codec chain — the
       // INNER chain when sharded. The outer chain always parses
       // (validating it); a transpose or compressor there would be
       // dropped when decode switches to the inner chain, so it refuses.
       val codecs = doc.path("codecs")
-      val outer = parseCodecChainV3(codecs, shape.length)
+      val outer = parseCodecChainV3(codecs, shape.length, path)
       val sharding = codecs.elements().asScala
-        .find(_.get("name").asText() == "sharding_indexed").map(_.get("configuration"))
-      val inner = sharding.map(c => parseCodecChainV3(c.path("codecs"), shape.length))
+        .find(_.get("name").asText() == "sharding_indexed")
+        .map(req(_, "configuration", "sharding_indexed codec"))
+      val inner = sharding.map(c => parseCodecChainV3(c.path("codecs"), shape.length, path))
       require(inner.isEmpty || (outer.transposeOrder.isEmpty && outer.compressor.isEmpty),
         "zarr v3 transpose or compressor OUTSIDE sharding_indexed is unsupported")
       val chain = inner.getOrElse(outer)
@@ -214,7 +232,8 @@ object ZarrArray {
         s"zarr v3 chunk_key_encoding '$keyEncoding' unsupported (default/v2)")
       val sep = cke.path("configuration").path("separator")
         .asText(if (keyEncoding == "v2") "." else "/")
-      ZarrArray(path, 3, shape, gridChunks, sharding.map(c => ints(c.get("chunk_shape"))),
+      ZarrArray(path, 3, shape, gridChunks,
+        sharding.map(c => ints(req(c, "chunk_shape", "sharding_indexed configuration"))),
         Dtypes.normalize(dt), chain.bigEndian, chain.compressor, Nil, chain.transposeOrder,
         fillValue(doc), sep, keyEncoding)
     }
@@ -246,14 +265,14 @@ object ZarrArray {
     * would silently misdecode. Codecs the engine doesn't implement
     * throw too — refusing a store loudly, never decoding it wrong.
     */
-  private def parseCodecChainV3(codecs: JsonNode, rank: Int): V3CodecChain = {
+  private def parseCodecChainV3(codecs: JsonNode, rank: Int, path: String): V3CodecChain = {
     var order: Option[Seq[Int]] = None
     var big = false
     var comp: Option[String] = None
     var checksum = false
     val els = codecs.elements().asScala.toSeq
     els.zipWithIndex.foreach { case (c, i) =>
-      c.get("name").asText() match {
+      required(c, "name", "codec entry", path).asText() match {
         case "transpose" =>
           val o = c.path("configuration").path("order")
             .elements().asScala.map(_.asInt()).toSeq
@@ -286,6 +305,14 @@ object ZarrArray {
       if (checksum) Some(comp.fold("crc32c")(c => s"crc32c:$c")) else comp
     V3CodecChain(order, big, compEff)
   }
+
+  /** Field `key` of `n`, which a document must carry: a missing or
+    * `null` one refuses naming the key, where it was looked for, and
+    * the array.
+    */
+  private def required(n: JsonNode, key: String, within: String, path: String): JsonNode =
+    Option(n.get(key)).filter(!_.isNull).getOrElse(throw new IllegalArgumentException(
+      s"zarr array '$path': $within has no '$key'"))
 
   /** The array's `fill_value` as a double — the value a chunk whose
     * object is ABSENT from the store holds (sparse stores legally

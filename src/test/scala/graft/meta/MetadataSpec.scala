@@ -236,4 +236,23 @@ class MetadataSpec extends AnyFunSuite {
     assert(array(v3(""","fill_value":"-Infinity""""), 3).fillValue.isNegInfinity)
     assert(array(v3(""","fill_value":true"""), 3).fillValue == 1.0)
   }
+
+  test("a document missing a required key refuses naming the key and the array") {
+    def refusal(json: String, zarrFormat: Int) =
+      intercept[IllegalArgumentException](array(json, zarrFormat)).getMessage
+    val v2NoShape = refusal("""{"zarr_format":2,"chunks":[2,3],"dtype":"<f4","compressor":null}""", 2)
+    assert(v2NoShape.contains("'shape'") && v2NoShape.contains("'a'"), v2NoShape)
+    val v2NoId = refusal(
+      """{"zarr_format":2,"shape":[4,6],"chunks":[2,3],"dtype":"<f4","compressor":{"level":5}}""", 2)
+    assert(v2NoId.contains("compressor") && v2NoId.contains("'id'") && v2NoId.contains("'a'"), v2NoId)
+    val v3NoConfig = refusal("""{"zarr_format":3,"node_type":"array","shape":[4],
+      "data_type":"float32","chunk_grid":{"name":"regular"},"codecs":[{"name":"bytes"}]}""", 3)
+    assert(v3NoConfig.contains("chunk_grid") && v3NoConfig.contains("'configuration'") &&
+      v3NoConfig.contains("'a'"), v3NoConfig)
+    val v3NoName = refusal("""{"zarr_format":3,"node_type":"array","shape":[4],
+      "data_type":"float32","chunk_grid":{"name":"regular","configuration":{"chunk_shape":[2]}},
+      "codecs":[{"name":"bytes"},{"configuration":{"level":3}}]}""", 3)
+    assert(v3NoName.contains("codec") && v3NoName.contains("'name'") && v3NoName.contains("'a'"),
+      v3NoName)
+  }
 }

@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.util.UUID
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import graft.SparkSpec
 import graft.meta.Model._
 import graft.meta.ScalePlanner
@@ -14,37 +10,6 @@ import graft.zarr.ZarrStore
   * and the cascade computes the same voxels as the whole-array kernels.
   */
 class FusedCascadeSpec extends SparkSpec {
-
-  /** Runs `body` under a fresh job group; returns its result with the
-    * jobs and stages submitted in that group. A marker job run
-    * afterwards bounds the listener's in-order events.
-    */
-  private def jobsAndStagesIn[T](body: => T): (T, Int, Int) = {
-    val sc = spark.sparkContext
-    val group = s"fused-cascade-${UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val stages = new ConcurrentLinkedQueue[String]()
-    def groupOf(p: java.util.Properties) =
-      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        groupOf(js.properties).foreach(jobs.add)
-      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
-        groupOf(ss.properties).foreach(stages.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "fused cascade")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(jobs.contains(marker), "the listener never saw the marker job")
-      (out, jobs.asScala.count(_ == group), stages.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def image(shape: Seq[Long], dims: Seq[String], chunks: Seq[Int],
       dtype: String, seed: Int, max: Int): (ImageMeta, Array[Double]) = {

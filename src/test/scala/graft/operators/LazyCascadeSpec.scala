@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.util.UUID
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkSpec
 import graft.meta.Model._
 import graft.zarr.ZarrStore
@@ -13,34 +9,6 @@ import graft.zarr.ZarrStore
   * and the levels stay Dataset caches that `unpersist` frees.
   */
 class LazyCascadeSpec extends SparkSpec {
-
-  /** Runs `body` under a fresh job group and returns its result with
-    * the number of jobs started in that group. Listener events arrive
-    * in order, so once a marker job run afterwards has been seen,
-    * every job of `body` has been seen too.
-    */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"lazy-cascade-${UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "lazy cascade")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(seen.contains(marker), "the listener never saw the marker job")
-      (out, seen.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Writes `vals` as a one-level v0.4 store and reads it back, so the
     * cascade starts from a `readMultiscales` base (an omezarr scan).
@@ -78,13 +46,13 @@ class LazyCascadeSpec extends SparkSpec {
       val base = storedBase(meta, vals)
       val sc = spark.sparkContext
       val before = sc.getPersistentRDDs.keySet
-      val (ms, buildJobs) = jobsIn(
+      val (ms, buildJobs, _) = jobsAndStagesIn(
         MultiscaleBuilder.toMultiscales(spark, base, Some(factors), method))
       try {
         assert(buildJobs == 0, s"toMultiscales ran $buildJobs Spark jobs")
         assert(ms.levels.length == 3)
         val dir = tempDir("lazy-out").toString + "/out.ome.zarr"
-        val (counts, writeJobs) = jobsIn(OmeZarrIO.writeMultiscales(spark, dir, ms,
+        val (counts, writeJobs, _) = jobsAndStagesIn(OmeZarrIO.writeMultiscales(spark, dir, ms,
           version = "0.5", chunksPerShard = Some(meta.dims.map(_ => 2))))
         assert(writeJobs == 1, s"the build and its write ran $writeJobs Spark jobs")
         assert((sc.getPersistentRDDs.keySet -- before).size == 2,

@@ -55,40 +55,18 @@ class OmeZarrIOSpec extends SparkSpec {
     // persisted levels: the write's own jobs are the only ones left
     ms.levels.foreach(_.chunks.persist().count())
     val want = ms.levels.map(l => ChunkOps.toArray(l.chunks, l.meta).toSeq)
-    val sc = spark.sparkContext
-    val group = "pyramid-write"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
     try {
       for ((version, cps) <- Seq("0.4" -> None, "0.5" -> Some(Seq(2, 2)))) {
-        jobs.set(0)
         val dir = tempDir("onejob").toString + "/img.zarr"
-        sc.setJobGroup(group, s"write v$version")
-        val counts =
-          try OmeZarrIO.writeMultiscales(spark, dir, ms, version = version,
-            chunksPerShard = cps)
-          finally sc.clearJobGroup()
+        val (counts, jobs, _) = jobsAndStagesIn(OmeZarrIO.writeMultiscales(spark, dir, ms,
+          version = version, chunksPerShard = cps))
         assert(counts == Seq(16L, 4L, 1L))
-        // listener events are async: poll until the job count settles
-        var last = -1
-        var waited = 0
-        while ((jobs.get() != last || jobs.get() == 0) && waited < 10000) {
-          last = jobs.get(); Thread.sleep(300); waited += 300
-        }
-        assert(jobs.get() == 1, s"v$version: ${jobs.get()} jobs put the pyramid's objects")
+        assert(jobs == 1, s"v$version: $jobs jobs put the pyramid's objects")
         val back = OmeZarrIO.readMultiscales(spark, dir, validate = true)
         assert(back.levels.map(_.meta.shape) == Seq(Seq(64L, 64L), Seq(32L, 32L), Seq(16L, 16L)))
         assert(back.levels.map(l => ChunkOps.toArray(l.chunks, l.meta).toSeq) == want)
       }
-    } finally {
-      sc.removeSparkListener(listener)
-      ms.levels.foreach(_.chunks.unpersist())
-    }
+    } finally ms.levels.foreach(_.chunks.unpersist())
   }
 
   test("v0.5 (zarr v3) write/read round-trip with c/ chunk keys") {

@@ -3,11 +3,14 @@ package graft.sources
 import graft.SparkSpec
 import graft.meta.Model._
 import graft.operators.{ChunkOps, MultiscaleBuilder, OmeZarrIO}
+import graft.zarr.ZarrStore
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -235,5 +238,157 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     val e = intercept[IllegalArgumentException](
       spark.read.format("omezarr").load(empty).collect())
     assert(e.getMessage.contains(s"no OME-Zarr metadata at $empty"))
+  }
+
+  /** A one-level store of `vals` (shape `shape`, chunks `chunks`):
+    * v0.4 plain, or v0.5 plain or sharded.
+    */
+  private def levelStore(prefix: String, shape: Seq[Long], chunks: Seq[Int], vals: Array[Double],
+      version: String, cps: Option[Seq[Int]]): String = {
+    val m = ImageMeta(Seq("y", "x"), shape, chunks, "uint16",
+      Map("y" -> 1.0, "x" -> 1.0), Map("y" -> 0.0, "x" -> 0.0))
+    val ms = MultiscaleBuilder.Multiscale(Seq(
+      MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, vals, m))), Method.ItkwasmBinShrink)
+    val dir = tempDir(prefix).toString + "/img.zarr"
+    OmeZarrIO.writeMultiscales(spark, dir, ms, version = version,
+      compressor = Some("zstd"), chunksPerShard = cps)
+    dir
+  }
+
+  /** Rows as comparable values, payload bytes included, in key order. */
+  private def canon(rows: Array[Row]): Seq[Seq[Any]] =
+    rows.toSeq.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case s: scala.collection.Seq[_] => s.toSeq
+      case v => v
+    }).sortBy(r => (r.head.asInstanceOf[Int], r(1).asInstanceOf[Seq[Int]].mkString(",")))
+
+  /** The scan the optimizer built for `df`. */
+  private def scanOf(df: DataFrame): OmeZarrScan =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case r: DataSourceV2ScanRelation => r.scan.asInstanceOf[OmeZarrScan]
+    }.get
+
+  private val keyStoreNames =
+    Seq("v0.4 plain", "v0.5 plain", "v0.5 sharded, clipped edges", "v0.5 sharded, sparse")
+
+  private lazy val keyStores: Map[String, String] = {
+    val plainVals = Array.tabulate(64 * 96)(i => (i % 4001).toDouble)
+    // 100×76 in 16² chunks, 2×2 per shard: 7×5 chunks in 4×3 shards,
+    // whose last row and column of shards hold slots past the array
+    val shardVals = Array.tabulate(100 * 76)(i => (i % 3001).toDouble)
+    val sparse = levelStore("dsv2keysparse", Seq(100, 76), Seq(16, 16), shardVals, "0.5",
+      Some(Seq(2, 2)))
+    // shard (1, 0) holds chunks (2..3, 0..1): absent, they read as fill
+    assert(new java.io.File(s"$sparse/scale0/image/c/1/0").delete())
+    keyStoreNames.zip(Seq(
+      storePath, // two levels: 2×2 chunks of 32², then one
+      levelStore("dsv2key05", Seq(64, 96), Seq(32, 32), plainVals, "0.5", None),
+      levelStore("dsv2keyshard", Seq(100, 76), Seq(16, 16), shardVals, "0.5", Some(Seq(2, 2))),
+      sparse)).toMap
+  }
+
+  private def key(k: Int*): Column = typedLit(k.toSeq)
+
+  /** Key predicates by name; the last three name no chunk of any store. */
+  private val keyPredicates: Seq[(String, Column)] = Seq(
+    "EqualTo" -> (col("chunk_idx") === key(1, 0)),
+    "EqualTo, scale" -> (col("scale") === 0 && col("chunk_idx") === key(1, 1)),
+    "In" -> col("chunk_idx").isin(key(0, 0), key(2, 1), key(6, 4), key(3, 2)),
+    "In, scale" -> (col("scale") === 0 &&
+      col("chunk_idx").isin(key(0, 1), key(3, 0), key(2, 3), key(6, 4))),
+    "two keys and a range" -> (col("scale") >= 0 && col("chunk_idx") === key(0, 1) &&
+      col("chunk_idx").isin(key(0, 1), key(1, 1))),
+    "out of the grid" -> (col("chunk_idx") === key(9, 9)),
+    "wrong rank" -> (col("scale") === 0 && col("chunk_idx").isin(key(0), key(0, 0, 0))),
+    "negative" -> (col("chunk_idx") === key(-1, 0)))
+
+  for (store <- keyStoreNames; (pred, where) <- keyPredicates) {
+    test(s"chunk_idx pushdown: $store, $pred, rows equal the unpushed filter's") {
+      val dir = keyStores(store)
+      val all = spark.read.format("omezarr").load(dir)
+      // the same predicate over the full scan's rows, through a local
+      // relation no filter pushes into
+      val unpushed = spark.createDataFrame(all.collect().toSeq.asJava, all.schema).where(where)
+      val pushed = all.where(where)
+      val want = canon(unpushed.collect())
+      assert(canon(pushed.collect()) == want)
+      val scan = scanOf(pushed)
+      assert(scan.pushedFilters.exists(_.references.contains("chunk_idx")), scan.pushedFilters)
+      assert(scan.estimateStatistics().numRows().getAsLong == want.size)
+      // data pruned: the same keys, no payload read
+      val meta = pushed.select("scale", "chunk_idx", "origin", "shape", "dtype")
+      assert(!scanOf(meta).readSchema().fieldNames.contains("data"))
+      assert(canon(meta.collect()) == want.map(_.take(5)))
+      assert(want.isEmpty == keyPredicates.takeRight(3).map(_._1).contains(pred), want)
+    }
+  }
+
+  test("chunk_idx keys leave no filter above the scan and plan only the named objects") {
+    val dir = keyStores("v0.5 sharded, clipped edges")
+    val df = spark.read.format("omezarr").load(dir)
+      .where(col("chunk_idx").isin(key(0, 0), key(1, 1), key(6, 4), key(9, 9)))
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case f: org.apache.spark.sql.execution.FilterExec => f }.isEmpty,
+      plan.toString)
+    // (0,0) and (1,1) share shard (0,0); (6,4) is shard (3,2); (9,9) is off the grid
+    val parts = plannedParts(df)
+    assert(parts.flatMap(_.objs) == Seq(Seq(0, 0), Seq(3, 2)), parts)
+    assert(df.collect().map(_.getAs[scala.collection.Seq[Int]]("chunk_idx").toSeq).toSet ==
+      Set(Seq(0, 0), Seq(1, 1), Seq(6, 4)))
+    // a scan without keys plans every object, as before
+    assert(plannedParts(spark.read.format("omezarr").load(dir)).flatMap(_.objs) ==
+      ZarrStore.gridPositions(Seq(4, 3)).toSeq)
+  }
+
+  test("a keyed read of one small object is a LocalTableScan that runs no Spark job") {
+    val dir = keyStores("v0.5 sharded, clipped edges")
+    val df = spark.read.format("omezarr").load(dir)
+      .where(col("scale") === 0 && col("chunk_idx") === key(6, 4))
+    val (rows, jobs, stages) = jobsAndStagesIn {
+      assert(df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+        df.queryExecution.executedPlan.toString)
+      df.collect()
+    }
+    assert(jobs == 0 && stages == 0, s"$jobs jobs, $stages stages")
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.getAs[scala.collection.Seq[Int]]("shape").toSeq == Seq(4, 12))
+    // the written chunk: rows 96..99, columns 64..75 of the volume
+    val written = for (y <- 96 until 100; x <- 64 until 76) yield ((y * 76 + x) % 3001).toDouble
+    assert(ZarrStore.decodeToDoubles(r.getAs[Array[Byte]]("data"), "uint16").toSeq == written)
+  }
+
+  test("a point read reads its object when planned: a re-collect returns the planned chunk") {
+    val vals = Array.tabulate(64 * 64)(i => (i % 509).toDouble)
+    val dir = levelStore("dsv2planned", Seq(64, 64), Seq(32, 32), vals, "0.4", None)
+    def point = spark.read.format("omezarr").load(dir)
+      .where(col("scale") === 0 && col("chunk_idx") === key(1, 1))
+    def payload(rows: Array[Row]) = rows.map(_.getAs[Array[Byte]]("data").toSeq).toSeq
+    val df = point
+    val first = df.collect()
+    assert(df.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+    // overwrite the store in place with other voxels
+    val m = ImageMeta(Seq("y", "x"), Seq(64, 64), Seq(32, 32), "uint16",
+      Map("y" -> 1.0, "x" -> 1.0), Map("y" -> 0.0, "x" -> 0.0))
+    val other = vals.map(_ + 1)
+    OmeZarrIO.writeMultiscales(spark, dir, MultiscaleBuilder.Multiscale(Seq(
+      MultiscaleBuilder.Level(m, ChunkOps.fromArray(spark, other, m))), Method.ItkwasmBinShrink),
+      version = "0.4", compressor = Some("zstd"))
+    assert(payload(df.collect()) == payload(first), "the planned Dataset re-read the store")
+    val fresh = payload(point.collect())
+    assert(fresh != payload(first))
+    assert(ZarrStore.decodeToDoubles(fresh.head.toArray, "uint16").toSeq ==
+      (for (y <- 32 until 64; x <- 32 until 64) yield other(y * 64 + x)))
+  }
+
+  test("a corrupt object fails a point read at planning, with the reader's typed error") {
+    val dir = levelStore("dsv2corrupt", Seq(64, 64), Seq(16, 16),
+      Array.tabulate(64 * 64)(i => (i % 97).toDouble), "0.5", Some(Seq(2, 2)))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/scale0/image/c/1/1"), Array[Byte](1, 2, 3))
+    val df = spark.read.format("omezarr").load(dir)
+      .where(col("scale") === 0 && col("chunk_idx") === key(2, 3))
+    val e = intercept[IllegalArgumentException](df.queryExecution.executedPlan)
+    assert(e.getMessage.contains("shard too small"), e.getMessage)
   }
 }
