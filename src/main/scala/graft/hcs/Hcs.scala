@@ -13,9 +13,14 @@ import scala.jdk.CollectionConverters._
   * (SURVEY S12/S13 — ngff-zarr `py/ngff_zarr/hcs.py:91-765`).
   *
   * The plate's wells and acquisitions become small dimension
-  * DataFrames joined to the image catalog — keyed lookup is a
-  * broadcast-joinable filter instead of the reference's linear scan +
-  * LRU cache (Spark's block manager caches hot metadata instead).
+  * DataFrames joined to the image catalog. A plate handle
+  * ([[HCSPlate]]) keeps only the `plate` document it was opened with
+  * and one store handle; every keyed lookup reads the store again:
+  * `getWell` is one get of the well document, `getImage` one metadata
+  * open whose levels plan from that open, so an image's metadata and
+  * pixels come from the same state of the store. The reference's LRU
+  * caches (`hcs.py:41-88`) are left out: on the plate benchmark's Zipf
+  * lookups they did not lower the lookup time (CHANGES.md).
   * `upsertWellsMeta` is the incremental at-least-once well-metadata
   * upsert the streaming ingest (`graft.streaming.Streams.hcsIngest`)
   * runs once per micro-batch.
@@ -29,15 +34,8 @@ object Hcs {
   def openStore(path: String): ZarrStore =
     new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession()))
 
-  /** Prefer this overload when a session is in hand — the active
-    * session may differ (multi-session apps, background threads).
-    */
-  def openStore(path: String, spark: SparkSession): ZarrStore =
-    new ZarrStore(path,
-      Some(new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)))
-
-
   final case class HCSPlate(store: String, plate: Plate) {
+    private lazy val root = openStore(store)
 
     /** Wells dimension table. */
     def wellsDf(spark: SparkSession): DataFrame = {
@@ -60,10 +58,8 @@ object Hcs {
     /** Image catalog: one row per (well, field image). */
     def imagesDf(spark: SparkSession): DataFrame = {
       import spark.implicits._
-      val store = Hcs.openStore(this.store, spark)
       plate.wells.flatMap { w =>
-        val well = readWellMeta(store, w.path)
-        well.toSeq.flatMap(_.images.map(img =>
+        readWellMeta(root, w.path).toSeq.flatMap(_.images.map(img =>
           (w.path, w.rowIndex, w.columnIndex, img.path,
             img.acquisition.map(_.toLong).getOrElse(-1L))))
       }.toDF("well_path", "row_index", "column_index", "image_path", "acquisition")
@@ -71,8 +67,7 @@ object Hcs {
 
     /** Keyed lookup by well path ("A/1"). */
     def getWell(path: String): Option[Well] =
-      if (!plate.wells.exists(_.path == path)) None
-      else readWellMeta(Hcs.openStore(store), path)
+      if (!plate.wells.exists(_.path == path)) None else readWellMeta(root, path)
 
     /** Keyed lookup by (rowIndex, columnIndex). */
     def getWell(rowIndex: Int, columnIndex: Int): Option[Well] =
@@ -162,10 +157,9 @@ object Hcs {
       w.path("version").asText("0.4"))
   }
 
-  private def readWellMeta(store: ZarrStore, wellPath: String): Option[Well] = {
-    val key = s"$wellPath/.zattrs"
-    if (store.exists(key)) Some(parseWell(store.readString(key))) else None
-  }
+  private def readWellMeta(store: ZarrStore, wellPath: String): Option[Well] =
+    store.readBytesIfExists(s"$wellPath/.zattrs")
+      .map(b => parseWell(new String(b, java.nio.charset.StandardCharsets.UTF_8)))
 
   // ---- write paths ----
 

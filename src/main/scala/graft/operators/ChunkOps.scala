@@ -24,7 +24,12 @@ import graft.zarr.ZarrStore
   */
 object ChunkOps {
 
-  final case class ChunkRow(chunkIdx: Seq[Int], origin: Seq[Long],
+  /** One chunk: its grid position, global origin, shape and payload.
+    * The fields carry the `omezarr` chunk table's column names, so a
+    * level read from a store is the scan's own columns, with no
+    * projection.
+    */
+  final case class ChunkRow(chunk_idx: Seq[Int], origin: Seq[Long],
       shape: Seq[Int], data: Array[Byte])
 
   /** A slice of a source chunk destined for (the possibly
@@ -62,7 +67,7 @@ object ChunkOps {
     spark.createDataset(rows).repartition(math.max(1, math.min((rows.size + 3) / 4, 32)))
   }
 
-  /** Collect a chunk table back to one C-order array (tests only). */
+  /** Collect a chunk table back to one C-order array on the driver. */
   def toArray(ds: Dataset[ChunkRow], meta: ImageMeta): Array[Double] = {
     val out = new Array[Double](meta.shape.product.toInt)
     val shape = meta.shape.map(_.toInt).toArray

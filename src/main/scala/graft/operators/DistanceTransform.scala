@@ -153,7 +153,7 @@ object DistanceTransform {
         }
         y += 1
       }
-      ChunkOps.ChunkRow(c.chunkIdx, c.origin, c.shape,
+      ChunkOps.ChunkRow(c.chunk_idx, c.origin, c.shape,
         ZarrStore.encodeFromDoubles(out, "float64"))
     }
 

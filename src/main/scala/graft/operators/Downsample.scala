@@ -243,7 +243,7 @@ object Downsample {
     val out = ds.map { c =>
       val vals = ZarrStore.decodeToDoubles(c.data, dtype)
       val up = NdKernels.upsampleNearest(vals, c.shape.toArray, factors)
-      ChunkRow(c.chunkIdx,
+      ChunkRow(c.chunk_idx,
         c.origin.zip(factors).map { case (o, k) => o * k },
         c.shape.zip(factors).map { case (s0, k) => s0 * k },
         ZarrStore.encodeFromDoubles(up, dtype))
@@ -364,7 +364,7 @@ object Downsample {
           if (blockShape0.toSeq == outCount) block
           else ChunkOps.sliceBlock(block, blockShape0, Array.fill(factors.length)(0), outCount.toArray)
         Some(ChunkRow(
-          chunk.chunkIdx,
+          chunk.chunk_idx,
           chunk.origin.zipWithIndex.map { case (o, d) => o / factors(d) },
           outCount,
           ZarrStore.encodeFromDoubles(clipped, dtype)))

@@ -191,7 +191,7 @@ object IntensityNorm {
       val m = bc.value
       var i = 0
       while (i < vals.length) { eq(i) = m.get(vals(i).toLong); i += 1 }
-      ChunkOps.ChunkRow(c.chunkIdx, c.origin, c.shape,
+      ChunkOps.ChunkRow(c.chunk_idx, c.origin, c.shape,
         ZarrStore.encodeFromDoubles(eq, outDtype))
     }
     (out, outMeta)
@@ -245,7 +245,7 @@ object IntensityNorm {
       val m = bc.value
       var i = 0
       while (i < vals.length) { eq(i) = m.get(vals(i).toLong); i += 1 }
-      ChunkOps.ChunkRow(c.chunkIdx, c.origin, c.shape,
+      ChunkOps.ChunkRow(c.chunk_idx, c.origin, c.shape,
         ZarrStore.encodeFromDoubles(eq, outDtype))
     }
     (out, outMeta)
@@ -274,7 +274,7 @@ object IntensityNorm {
         norm(i) = if (hi == lo) 0.0 else ((v - lo) * 1000L / (hi - lo)).toDouble
         i += 1
       }
-      ChunkOps.ChunkRow(c.chunkIdx, c.origin, c.shape,
+      ChunkOps.ChunkRow(c.chunk_idx, c.origin, c.shape,
         ZarrStore.encodeFromDoubles(norm, "uint16"))
     }
     (lo, hi, out, outMeta)

@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftext.TableFrames
 import graft.meta.Model._
 import graft.meta.Validation
+import graft.sources.OmeZarrTable
 import graft.zarr.{SerializableHadoopConf, Sharding, ZarrArray, ZarrStore}
 import ChunkOps.ChunkRow
 
@@ -17,10 +19,12 @@ import ChunkOps.ChunkRow
   * (S8). No pixel data ever moves through the driver.
   *
   * Read: the driver parses metadata only ([[ZarrArray.openPyramid]]);
-  * each level is the `spark.read.format("omezarr")` scan of its scale
-  * (`graft.sources.OmeZarrTableProvider`), whose partitions each hold a
-  * run of the level's stored chunk or shard objects, packed by Spark's
-  * file-split rule and fetched and decoded lazily by executors.
+  * each level is the `omezarr` scan of its scale
+  * (`graft.sources.OmeZarrTableProvider`) over the pyramid just opened,
+  * whose partitions each hold a run of the level's stored chunk or
+  * shard objects, packed by Spark's file-split rule and fetched and
+  * decoded lazily by executors. A level of one object is read on the
+  * driver instead, when its query is planned.
   */
 object OmeZarrIO {
 
@@ -64,9 +68,9 @@ object OmeZarrIO {
       val (fullChunks, dtype) = (lvl.meta.chunks, lvl.meta.dtype)
       lvl.chunks.rdd.map { c =>
         val (obj, slot) = chunksPerShard match {
-          case Some(cps) => (c.chunkIdx.zip(cps).map { case (i, n) => i / n },
-            Sharding.innerFlatIndex(c.chunkIdx.zip(cps).map { case (i, n) => i % n }, cps))
-          case None => (c.chunkIdx, 0)
+          case Some(cps) => (c.chunk_idx.zip(cps).map { case (i, n) => i / n },
+            Sharding.innerFlatIndex(c.chunk_idx.zip(cps).map { case (i, n) => i % n }, cps))
+          case None => (c.chunk_idx, 0)
         }
         ((l, obj), (slot, ZarrArray.encodeChunk(c.shape, c.data, fullChunks, dtype, compressor)))
       }
@@ -92,14 +96,21 @@ object OmeZarrIO {
 
   /** Read an OME-Zarr store → multiscale levels with lazy chunk
     * tables: the metadata open, then per level the `omezarr` scan of
-    * that scale projected to [[ChunkRow]]. `validate=true` runs
-    * structural + RFC4 validation (V1/V2).
+    * that scale over the pyramid just opened, with the [[ChunkRow]]
+    * columns. Building and planning a level open no metadata. A level
+    * of one stored object, no heavier than the scan's split size, is
+    * read when its query is planned, on the driver, and runs no Spark
+    * job; collecting the same Dataset again returns the rows read then.
+    * Every other level is an executor scan that reads its objects each
+    * time it runs. `validate=true` runs structural + RFC4 validation
+    * (V1/V2).
     */
   def readMultiscales(spark: SparkSession, path: String,
       validate: Boolean = false): MultiscaleBuilder.Multiscale = {
     import spark.implicits._
-    val (meta, arrays) = ZarrArray.openPyramid(
+    val pyramid @ (meta, arrays) = ZarrArray.openPyramid(
       new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession())), validate)
+    val table = TableFrames.of(spark, new OmeZarrTable(path, Some(pyramid)))
     val dims = meta.axes.map(_.name)
     val levels = meta.datasets.zip(arrays).map { case (d, (i, a)) =>
       val scale = d.coordinateTransformations.collectFirst { case ScaleT(s) => s }
@@ -111,8 +122,10 @@ object OmeZarrIO {
         name = meta.name.getOrElse("image"),
         axesUnits = meta.axes.flatMap(a => a.unit.map(a.name -> _)).toMap,
         axesOrientations = meta.axes.flatMap(a => a.orientation.map(a.name -> _)).toMap)
-      val chunks = spark.read.format("omezarr").load(path).where(col("scale") === i)
-        .select(col("chunk_idx").as("chunkIdx"), col("origin"), col("shape"), col("data"))
+      // the table's own columns in table order, so the plan keeps no
+      // projection above the scan
+      val chunks = table.where(col("scale") === i)
+        .select(col("chunk_idx"), col("origin"), col("shape"), col("data"))
         .as[ChunkRow]
       MultiscaleBuilder.Level(imgMeta, chunks)
     }

@@ -135,7 +135,7 @@ object RegionGraph {
     * the output is one exact row per region (n, sum, min, max of
     * intensity; integral dtypes keep everything in Long). The
     * two-volume join is the standard multi-channel pattern: ONE
-    * chunk-aligned equi-join on chunkIdx (the grids must match — no
+    * chunk-aligned equi-join on chunk_idx (the grids must match — no
     * voxel ever moves to meet its partner), a local joint pass
     * pre-aggregates per (chunk, label), and the only shuffle after
     * the join is the label-keyed re-aggregation over
@@ -152,9 +152,9 @@ object RegionGraph {
         s" vs ${intensityMeta.dims}/${intensityMeta.shape}/${intensityMeta.chunks}")
     val lDtype = labelMeta.dtype
     val iDtype = intensityMeta.dtype
-    val joined = labels.toDF().select(col("chunkIdx"), col("data").as("ldata"))
-      .join(intensity.toDF().select(col("chunkIdx"), col("data").as("idata")),
-        Seq("chunkIdx"))
+    val joined = labels.toDF().select(col("chunk_idx"), col("data").as("ldata"))
+      .join(intensity.toDF().select(col("chunk_idx"), col("data").as("idata")),
+        Seq("chunk_idx"))
       .select(col("ldata"), col("idata"))
       .as[(Array[Byte], Array[Byte])]
     joined.flatMap { case (ldata, idata) =>

@@ -50,7 +50,7 @@ object Restructure {
         }
         flat += 1
       }
-      ChunkRow(perm.map(c.chunkIdx).toSeq, perm.map(c.origin).toSeq,
+      ChunkRow(perm.map(c.chunk_idx).toSeq, perm.map(c.origin).toSeq,
         outShape.toSeq, ZarrStore.encodeFromDoubles(o, dtype))
     })
     (outMeta, out)
@@ -91,7 +91,7 @@ object Restructure {
         sliceShape(di) = 1
         val sliced = ChunkOps.sliceBlock(vals, c.shape.toArray, off, sliceShape)
         ChunkRow(
-          c.chunkIdx.patch(di, Nil, 1),
+          c.chunk_idx.patch(di, Nil, 1),
           c.origin.patch(di, Nil, 1),
           c.shape.patch(di, Nil, 1),
           ZarrStore.encodeFromDoubles(sliced, dtype))
@@ -102,7 +102,7 @@ object Restructure {
   /** P2 — region slice: restrict to a half-open voxel box. Chunks
     * outside prune away; edge chunks clip locally; a rechunk pass
     * restores the regular chunk grid (rebased origins no longer sit
-    * at chunkIdx·chunks, which every downstream consumer — the
+    * at chunk_idx·chunks, which every downstream consumer — the
     * writer, halo exchange — relies on).
     */
   def slice(spark: SparkSession, ds: Dataset[ChunkRow], meta: ImageMeta,
@@ -129,10 +129,10 @@ object Restructure {
         val off = Array.tabulate(nd)(d => (cl(d) - c.origin(d)).toInt)
         val pShape = Array.tabulate(nd)(d => (ch(d) - cl(d)).toInt)
         val sliced = ChunkOps.sliceBlock(vals, c.shape.toArray, off, pShape)
-        ChunkRow(c.chunkIdx, Array.tabulate(nd)(d => cl(d) - lo(d)).toSeq,
+        ChunkRow(c.chunk_idx, Array.tabulate(nd)(d => cl(d) - lo(d)).toSeq,
           pShape.toSeq, ZarrStore.encodeFromDoubles(sliced, dtype))
       })
-    // rechunk groups purely by origin, so the stale chunkIdx on the
+    // rechunk groups purely by origin, so the stale chunk_idx on the
     // intermediate rows never escapes
     ChunkOps.rechunk(spark, clipped,
       meta.copy(shape = outShape, chunks = outChunks), outChunks, force = true)

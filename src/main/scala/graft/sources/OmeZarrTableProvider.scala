@@ -16,6 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import graft.meta.Dtypes
+import graft.meta.Model.MultiscalesMeta
 import graft.zarr.{SerializableHadoopConf, ZarrArray, ZarrStore}
 
 import scala.jdk.CollectionConverters._
@@ -41,20 +42,33 @@ import scala.jdk.CollectionConverters._
   * selected, readers never fetch or decompress chunk payloads —
   * metadata-only queries cost metadata-only I/O.
   *
-  * Point reads: a keyed scan of at most one stored object no heavier
-  * than the scan's split size is an [[OmeZarrLocalScan]], which Spark
-  * plans as a `LocalTableScanExec`, so
-  * `WHERE scale = s AND chunk_idx = [...]` collects without a Spark
-  * job. Such a read fetches and decodes its object when the query is
+  * Point reads: a scan that keeps at most one stored object no
+  * heavier than the scan's split size is an [[OmeZarrLocalScan]], which
+  * Spark plans as a `LocalTableScanExec`, so it collects without a
+  * Spark job. A `load` scan is one only when it is keyed
+  * (`WHERE scale = s AND chunk_idx = [...]`); a scan over a pyramid
+  * that is already open (`OmeZarrIO.readMultiscales`) is one whenever
+  * it keeps one object, so a one-object level is read on the driver.
+  * The rules differ because a driver read moves the pixel read to
+  * planning. An unkeyed `load` keeps the usual scan contract: planning
+  * and `explain()` read no pixels, and each run reads the store's
+  * bytes as they are then; only a query that names its chunk trades
+  * that for a read with no Spark job. A `readMultiscales` level has
+  * fixed its metadata when the pyramid was opened, so reading its one
+  * object at planning keeps its pixels with the metadata they came
+  * with.
+  * Such a read fetches and decodes its object when the query is
   * planned (the `LocalScan` contract), not when it runs:
   *  - collecting the same Dataset again returns the rows read at
-  *    planning, even after the store was overwritten; a new `load`
-  *    reads the store again;
+  *    planning, even after the store was overwritten; a new `load` or
+  *    `readMultiscales` reads the store again;
   *  - `explain()` plans, so it reads the object too;
   *  - a corrupt object fails at planning with the reader's own typed
   *    error, not as a failed task.
-  * Every scan already fixes its metadata (levels, shapes, codecs) when
-  * it plans; an executor scan reads its chunk bytes each time it runs.
+  * Every scan fixes its metadata (levels, shapes, codecs) when it
+  * plans: a `load` scan opens the store's metadata once per plan, and
+  * a scan over an open pyramid uses that pyramid and opens nothing. An
+  * executor scan reads its chunk bytes each time it runs.
   */
 class OmeZarrTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "omezarr"
@@ -64,10 +78,13 @@ class OmeZarrTableProvider extends TableProvider with DataSourceRegister {
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new OmeZarrTable(properties.get("path"))
+    new OmeZarrTable(properties.get("path"), None)
 }
 
 object OmeZarrTable {
+  /** An opened pyramid, as `ZarrArray.openPyramid` returns it. */
+  type Pyramid = (MultiscalesMeta, Seq[(Int, ZarrArray)])
+
   val Schema: StructType = StructType(Seq(
     StructField("scale", IntegerType, nullable = false),
     StructField("chunk_idx", ArrayType(IntegerType), nullable = false),
@@ -77,7 +94,10 @@ object OmeZarrTable {
     StructField("data", BinaryType, nullable = false)))
 }
 
-class OmeZarrTable(path: String) extends Table
+/** The chunk table of the store at `path`. With `opened`, its scans
+  * plan from that pyramid instead of opening the store's metadata.
+  */
+class OmeZarrTable(path: String, opened: Option[OmeZarrTable.Pyramid]) extends Table
     with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
   require(path != null, "omezarr requires a path")
   override def name(): String = s"omezarr:$path"
@@ -86,7 +106,7 @@ class OmeZarrTable(path: String) extends Table
     Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new OmeZarrScanBuilder(path)
+    new OmeZarrScanBuilder(path, opened)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -129,7 +149,7 @@ final case class OmeZarrInputPartition(scale: Int, objs: Seq[Seq[Int]], array: Z
   }
 }
 
-class OmeZarrScanBuilder(path: String)
+class OmeZarrScanBuilder(path: String, opened: Option[OmeZarrTable.Pyramid])
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var pushed: Array[Filter] = Array.empty
@@ -148,7 +168,7 @@ class OmeZarrScanBuilder(path: String)
 
   override def pruneColumns(required: StructType): Unit = { requiredSchema = required }
 
-  override def build(): Scan = OmeZarrScan(path, pushed.toSeq, requiredSchema)
+  override def build(): Scan = OmeZarrScan(path, opened, pushed.toSeq, requiredSchema)
 }
 
 object OmeZarrScan {
@@ -214,13 +234,19 @@ object OmeZarrScan {
     * pass the split size, or at a level's end. Every object of a level
     * weighs the same, so the walk is a fixed group size per level.
     * Pushed `chunk_idx` keys keep only the objects that hold a named
-    * in-grid chunk, and only those chunks are read.
+    * in-grid chunk, and only those chunks are read. The levels come
+    * from `opened` when it is given; otherwise the store's metadata is
+    * opened here.
     */
-  def plan(path: String, filters: Seq[Filter]): Plan = {
+  def plan(path: String, opened: Option[OmeZarrTable.Pyramid], filters: Seq[Filter]): Plan = {
     val store = new ZarrStore(path, Some(SerializableHadoopConf.fromActiveSession()))
     val keep = (s: Int) => filters.forall(scalePredicate(_).forall(_(s)))
     val keys = filters.flatMap(chunkKeys).reduceOption(_ intersect _)
-    val levels = ZarrArray.openPyramid(store, scales = keep)._2.map { case (i, a) =>
+    val arrays = opened match {
+      case Some((_, all)) => all.filter { case (i, _) => keep(i) }
+      case None => ZarrArray.openPyramid(store, scales = keep)._2
+    }
+    val levels = arrays.map { case (i, a) =>
       keys.map(_.filter(a.holds)) match {
         case None => (i, a, a.objects.toVector, None)
         case Some(ks) =>
@@ -238,13 +264,16 @@ object OmeZarrScan {
     Plan(store, parts, maxSplit)
   }
 
-  /** The scan of `filters`: a keyed read of at most one stored object
-    * no heavier than the split size is an [[OmeZarrLocalScan]],
-    * planned at once; any other scan plans when Spark first asks.
+  /** The scan of `filters`: a read of at most one stored object no
+    * heavier than the split size is an [[OmeZarrLocalScan]], planned at
+    * once, when it is keyed or its pyramid is already open (why both:
+    * see [[OmeZarrTableProvider]]); any other scan plans when Spark
+    * first asks.
     */
-  def apply(path: String, filters: Seq[Filter], required: StructType): OmeZarrScan = {
-    lazy val planned = plan(path, filters)
-    if (filters.exists(chunkKeys(_).isDefined) && planned.small)
+  def apply(path: String, opened: Option[OmeZarrTable.Pyramid], filters: Seq[Filter],
+      required: StructType): OmeZarrScan = {
+    lazy val planned = plan(path, opened, filters)
+    if ((opened.isDefined || filters.exists(chunkKeys(_).isDefined)) && planned.small)
       new OmeZarrLocalScan(path, filters, required, planned)
     else new OmeZarrScan(path, filters, required, planned)
   }
@@ -297,8 +326,8 @@ class OmeZarrScan(path: String, val pushedFilters: Seq[Filter], required: Struct
     new OmeZarrReaderFactory(path, required, SerializableHadoopConf.broadcast())
 }
 
-/** A point read: a keyed scan of at most one stored object, no heavier
-  * than the split size, answered on the driver. Spark plans it as a
+/** A point read: a scan of at most one stored object, no heavier than
+  * the split size, answered on the driver. Spark plans it as a
   * `LocalTableScanExec`, so collecting it runs no Spark job; `rows()`
   * reads the object through the executor reader's own row builder
   * when the query is planned.

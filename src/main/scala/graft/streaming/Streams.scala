@@ -787,7 +787,7 @@ object Streams {
               Seq(meta), Some("zstd"))
               .foreach { case (k, v) => st.writeString(s"$image/$k", v) }
             ChunkOps.decompose(f.values, meta).foreach { c =>
-              st.writeBytes(graft.zarr.ZarrStore.chunkKey(2, s"$image/scale0/image", c.chunkIdx),
+              st.writeBytes(graft.zarr.ZarrStore.chunkKey(2, s"$image/scale0/image", c.chunk_idx),
                 graft.zarr.ZarrArray.encodeChunk(c.shape, c.data, meta.chunks, meta.dtype, Some("zstd")))
             }
             f.descriptor

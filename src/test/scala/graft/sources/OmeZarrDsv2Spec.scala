@@ -3,7 +3,8 @@ package graft.sources
 import graft.SparkSpec
 import graft.meta.Model._
 import graft.operators.{ChunkOps, MultiscaleBuilder, OmeZarrIO}
-import graft.zarr.ZarrStore
+import graft.zarr.{CountingRemoteFileSystem, ZarrStore}
+import graft.zarr.CountingRemoteFileSystem.{callsIn, isMetadata}
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
@@ -118,7 +119,7 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     val parts = plannedParts(df)
     assert(parts.flatMap(_.objs).size == 12)
     if (leafParallelism < 12) assert(parts.exists(_.objs.size > 1), parts.map(_.objs.size))
-    val b = new OmeZarrScanBuilder(dir)
+    val b = new OmeZarrScanBuilder(dir, None)
     b.pruneColumns(OmeZarrTable.Schema)
     val est = b.build().asInstanceOf[OmeZarrScan].estimateStatistics().numRows().getAsLong
     assert(df.count() == 35 && est == 35)
@@ -161,7 +162,7 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("scan statistics: payload pruning shrinks sizeInBytes; metadata join broadcasts") {
     // metadata-only projection reports orders less than the payload scan
     def stats(required: Seq[String]): Long = {
-      val b = new OmeZarrScanBuilder(storePath)
+      val b = new OmeZarrScanBuilder(storePath, None)
       b.pruneColumns(org.apache.spark.sql.types.StructType(
         OmeZarrTable.Schema.filter(f => required.contains(f.name))))
       b.build().asInstanceOf[OmeZarrScan].estimateStatistics().sizeInBytes().getAsLong
@@ -189,8 +190,8 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
     val (m1, ds1) = graft.operators.Downsample.step(spark, ds0, m0,
       Map("y" -> 2, "x" -> 2), Method.ItkwasmBinShrink)
     import spark.implicits._
-    val chunkDf = ds0.map(c => (0, c.chunkIdx, c.origin, c.shape, "uint16", c.data))
-      .union(ds1.map(c => (1, c.chunkIdx, c.origin, c.shape, "uint16", c.data)))
+    val chunkDf = ds0.map(c => (0, c.chunk_idx, c.origin, c.shape, "uint16", c.data))
+      .union(ds1.map(c => (1, c.chunk_idx, c.origin, c.shape, "uint16", c.data)))
       .toDF("scale", "chunk_idx", "origin", "shape", "dtype", "data")
     val dir = tempDir("dsv2w").toString + "/img.zarr"
     chunkDf.write.format("omezarr")
@@ -223,14 +224,69 @@ class OmeZarrDsv2Spec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("readMultiscales levels are the omezarr scan: one pushed-down BatchScan, no exchange") {
-    val lvl = OmeZarrIO.readMultiscales(spark, storePath).levels(1)
+    val ms = OmeZarrIO.readMultiscales(spark, storePath)
+    // level 0 holds four objects: an executor scan
+    val lvl = ms.levels.head
     val plan = lvl.chunks.queryExecution.executedPlan
     val scans = collect(plan) { case b: BatchScanExec => b }
     assert(scans.size == 1, plan.toString)
     val scan = scans.head.scan.asInstanceOf[OmeZarrScan]
     assert(scan.pushedFilters.exists(_.references.contains("scale")), plan.toString)
     assert(collect(plan) { case e: Exchange => e }.isEmpty, plan.toString)
-    assert(lvl.chunks.count() == 1)
+    assert(lvl.chunks.count() == 4)
+    // level 1 is one object, read on the driver: the bare local scan,
+    // with no projection above it
+    val one = ms.levels(1).chunks.queryExecution.executedPlan
+    assert(one.isInstanceOf[LocalTableScanExec], one.toString)
+    assert(one.output.map(_.name) == Seq("chunk_idx", "origin", "shape", "data"), one.toString)
+  }
+
+  /** `storeVals` written as at `storePath`, under `countfs://`: level 0
+    * holds four objects, level 1 one.
+    */
+  private lazy val countedPath: String = {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[CountingRemoteFileSystem].getName)
+    val dir = s"countfs://bucket${tempDir("dsv2count")}/img.zarr"
+    OmeZarrIO.writeMultiscales(spark, dir, OmeZarrIO.readMultiscales(spark, storePath),
+      version = "0.4")
+    dir
+  }
+
+  test("a readMultiscales level plans from its open pyramid: no metadata call, one object get") {
+    val ms = OmeZarrIO.readMultiscales(spark, countedPath)
+    val one = ms.levels(1)
+    val ((px, jobs, stages), calls) = callsIn(jobsAndStagesIn {
+      assert(one.chunks.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec])
+      ChunkOps.toArray(one.chunks, one.meta)
+    })
+    assert(jobs == 0 && stages == 0, s"$jobs jobs, $stages stages")
+    assert(!calls.exists(c => isMetadata(c._2)), calls)
+    assert(calls.count(_._1 == "open") == 1 && calls.map(_._2).distinct.size == 1, calls)
+    val want = OmeZarrIO.readMultiscales(spark, storePath).levels(1)
+    assert(px.toSeq == ChunkOps.toArray(want.chunks, want.meta).toSeq)
+    // a four-object level is still an executor scan, and opens no metadata either
+    val base = ms.levels.head
+    val (vals, baseCalls) = callsIn {
+      assert(collect(base.chunks.queryExecution.executedPlan) { case b: BatchScanExec => b }
+        .size == 1)
+      ChunkOps.toArray(base.chunks, base.meta)
+    }
+    assert(vals.toSeq == storeVals.toSeq)
+    assert(!baseCalls.exists(c => isMetadata(c._2)), baseCalls)
+    assert(baseCalls.count(_._1 == "open") == 4, baseCalls)
+  }
+
+  test("a format(omezarr).load scan opens the metadata once per plan and keeps none across loads") {
+    def rootOpens(calls: Seq[(String, String)]) =
+      calls.count { case (op, p) => op == "open" && p.endsWith("img.zarr/.zattrs") }
+    def level1 = spark.read.format("omezarr").load(countedPath).where(col("scale") === 1)
+    val (_, first) = callsIn(level1.collect())
+    val (_, second) = callsIn(level1.collect())
+    assert(rootOpens(first) == 1, first)
+    assert(rootOpens(second) == 1, second)
+    // an unkeyed one-object load stays an executor scan
+    assert(collect(level1.queryExecution.executedPlan) { case b: BatchScanExec => b }.size == 1)
   }
 
   test("a directory with no OME-Zarr metadata fails naming the path") {

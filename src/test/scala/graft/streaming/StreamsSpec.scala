@@ -530,6 +530,11 @@ class StreamsSpec extends SparkSpec {
 
     val img = Hcs.fromHcsZarr(dir).getImage(spark, "A/1", "0")
     assert(img.levels.head.meta.shape == Seq(1024L, 1024L))
+    // sixteen 256² objects: an executor scan, not a driver read
+    val plan = img.levels.head.chunks.queryExecution.sparkPlan
+    assert(plan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.isDefined, plan.toString)
     // spot-check content without a full driver materialization
     val vv = graft.operators.ChunkOps.voxelView(spark, img.levels.head.chunks,
       img.levels.head.meta)
