@@ -11,14 +11,18 @@ import ChunkOps.{ChunkRow, Piece}
 
 /** The pyramid build lifecycle (SURVEY §3.1): plan scales → cascade
   * downsample steps. The build is lazy, like the reference's task
-  * graph (`py/ngff_zarr/to_multiscales.py:251-418`): each level is
-  * RDD lineage over the previous level, wrapped as a Dataset and
-  * cached, and `toMultiscales` submits no Spark job. The first action
-  * fills the caches — a `writeMultiscales` computes the whole cascade
-  * in its one job — and each level then reads the cached previous
-  * level or its shuffle output, not the whole cascade (the Spark form
-  * of the reference's write-then-reread discipline, C4 —
-  * `to_ngff_zarr.py:930-979`).
+  * graph (`py/ngff_zarr/to_multiscales.py:251-418`): each level is RDD
+  * lineage over the previous level, and `toMultiscales` submits no
+  * Spark job and makes no Dataset. The next step and
+  * `writeMultiscales` read that lineage, so a build plus its write is
+  * one job over plain RDDs: each step reads the previous step's
+  * exchange output, which Spark keeps once the job has run, not the
+  * whole cascade (the Spark form of the reference's write-then-reread
+  * discipline, C4 — `to_ngff_zarr.py:930-979`). A chunk-local step
+  * with no re-block of its own (bin-shrink on aligned chunks, or the
+  * last stencil step when its output is already on the output grid)
+  * has no exchange output, so every consumer recomputes it from the
+  * nearest one.
   *
   * Each level is re-blocked to the output chunks. When the next step
   * is a stencil over exactly that grid, the re-block IS the next
@@ -28,7 +32,23 @@ import ChunkOps.{ChunkRow, Piece}
   */
 object MultiscaleBuilder {
 
-  final case class Level(meta: ImageMeta, chunks: Dataset[ChunkRow])
+  /** One pyramid level: its metadata and its chunk table. `rdd` is
+    * what the cascade's next step and `writeMultiscales` read. A level
+    * made from a Dataset (`Level(meta, ds)`) reads `ds.rdd`. A level
+    * the cascade built keeps the cascade's lineage RDD and makes its
+    * `chunks` Dataset only when first asked for it.
+    */
+  final class Level private[MultiscaleBuilder] (val meta: ImageMeta,
+      lineage: Option[RDD[ChunkRow]], table: () => Dataset[ChunkRow]) {
+    lazy val chunks: Dataset[ChunkRow] = table()
+    def rdd: RDD[ChunkRow] = lineage.getOrElse(chunks.rdd)
+  }
+
+  object Level {
+    def apply(meta: ImageMeta, chunks: Dataset[ChunkRow]): Level =
+      new Level(meta, None, () => chunks)
+  }
+
   final case class Multiscale(levels: Seq[Level], method: Method,
       omero: Option[Omero] = None) {
     def metadata(name: String = "image", version: String = "0.4"): MultiscalesMeta =
@@ -37,8 +57,10 @@ object MultiscaleBuilder {
 
   /** Build the full pyramid. `scaleFactors`: either explicit per-level
     * absolute factor maps, or None → the A1 planner decides. With
-    * `cache`, every level above the base is a `MEMORY_AND_DISK`
-    * Dataset cache that `Level.chunks.unpersist()` frees.
+    * `cache`, every level above the base persists its `chunks` Dataset
+    * `MEMORY_AND_DISK` when that Dataset is first made, so the cache
+    * fills on the first action on `chunks`, not in the write;
+    * `Level.chunks.unpersist()` frees it.
     */
   def toMultiscales(spark: SparkSession, base: Level,
       scaleFactors: Option[Seq[Map[String, Int]]] = None,
@@ -69,7 +91,7 @@ object MultiscaleBuilder {
     steps.zipWithIndex.foreach { case (dimFactors, i) =>
       val (m0, rows0) = fused match {
         case Some((s, ex)) => (s.out, s.run(ex))
-        case None => Downsample.stepRdd(previous.chunks.rdd, previous.meta, dimFactors, method)
+        case None => Downsample.stepRdd(previous.rdd, previous.meta, dimFactors, method)
       }
       // restore the configured output chunking: downsampling halves
       // chunk edges, the reference rechunks every level to out_chunks
@@ -88,11 +110,10 @@ object MultiscaleBuilder {
             math.max(1L, math.min(grid, spark.sparkContext.defaultParallelism.toLong)).toInt)
           ChunkOps.rechunkRdd(rows0, m0, targetChunks, part)._2
       }
-      // a Dataset over an RDD plans no exchange, so neither `.rdd` nor
-      // `persist` runs a job; the next step reads this cache (C4) or,
-      // fused, the same exchange
-      val ds = spark.createDataset(rows)
-      previous = Level(m, if (cache) ds.persist(StorageLevel.MEMORY_AND_DISK) else ds)
+      previous = new Level(m, Some(rows), () => {
+        val ds = spark.createDataset(rows)
+        if (cache) ds.persist(StorageLevel.MEMORY_AND_DISK) else ds
+      })
       levels += previous
     }
     Multiscale(levels.result(), method)

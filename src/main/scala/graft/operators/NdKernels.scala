@@ -446,76 +446,12 @@ object NdKernels {
     k
   }
 
-  /** Separable convolution along `dim` with edge clamping; returns a
-    * new array of the same shape. Iterates whole lines along the
-    * convolved dim with pure primitive index arithmetic (a per-voxel
-    * closure here costs ~8× on large blocks), and splits the interior
-    * from the clamped borders so the hot loop has no branches.
-    */
-  def convolve1d(in: Array[Double], shape: Array[Int], dim: Int,
-      kernel: Array[Double]): Array[Double] = {
-    val str = strides(shape)
-    val n = shape(dim)
-    val r = (kernel.length - 1) / 2
-    val out = new Array[Double](in.length)
-    val lineStride = str(dim)
-    val innerCount = lineStride // product of dims after `dim` (C-order)
-    val totalLines = in.length / n
-    var line = 0
-    while (line < totalLines) {
-      val base = (line / innerCount) * n * lineStride + (line % innerCount)
-      // clamped left border
-      var i = 0
-      val lo = math.min(r, n)
-      while (i < lo) {
-        var acc = 0.0
-        var t = -r
-        while (t <= r) {
-          var p = i + t
-          if (p < 0) p = 0
-          if (p >= n) p = n - 1
-          acc += kernel(t + r) * in(base + p * lineStride)
-          t += 1
-        }
-        out(base + i * lineStride) = acc
-        i += 1
-      }
-      // branch-free interior
-      i = r
-      val hi = n - r
-      while (i < hi) {
-        var acc = 0.0
-        var t = -r
-        val b0 = base + (i - r) * lineStride
-        while (t <= r) {
-          acc += kernel(t + r) * in(b0 + t * lineStride + r * lineStride)
-          t += 1
-        }
-        out(base + i * lineStride) = acc
-        i += 1
-      }
-      // clamped right border
-      i = math.max(hi, lo)
-      while (i < n) {
-        var acc = 0.0
-        var t = -r
-        while (t <= r) {
-          var p = i + t
-          if (p < 0) p = 0
-          if (p >= n) p = n - 1
-          acc += kernel(t + r) * in(base + p * lineStride)
-          t += 1
-        }
-        out(base + i * lineStride) = acc
-        i += 1
-      }
-      line += 1
-    }
-    out
-  }
-
   /** Separable Gaussian blur (nearest boundary) then stride sampling:
-    * output j = blurred(centerOff + j·k).
+    * output j = blurred(centerOff + j·k). Each 1-D pass convolves only
+    * the positions `centerOff(d) + j·factors(d)` that the later passes
+    * and the output read, so dims already passed shrink to `outShape`;
+    * the taps, their summation order and the border clamping are those
+    * of a blur over every voxel, so the samples are the same doubles.
     */
   def gaussianDownsample(in: Array[Double], shape: Array[Int], factors: Array[Int],
       sigma: Array[Double], radius: Array[Int], outShape: Array[Int],
@@ -523,20 +459,50 @@ object NdKernels {
     var cur = in
     var d = 0
     while (d < shape.length) {
-      if (radius(d) > 0 && sigma(d) > 0) {
-        cur = convolve1d(cur, shape, d, gaussianKernel(sigma(d), radius(d)))
-      }
+      cur = convolveSampled(cur, outShape.take(d) ++ shape.drop(d), d,
+        gaussianKernel(sigma(d), radius(d)), centerOff(d), factors(d), outShape(d))
       d += 1
     }
-    val inStr = strides(shape)
-    val out = new Array[Double](size(outShape))
-    foreachPos(outShape) { (flat, pos) =>
-      var idx = 0
-      var dd = 0
-      while (dd < shape.length) {
-        idx += (centerOff(dd) + pos(dd) * factors(dd)) * inStr(dd); dd += 1
+    if (roundInt) {
+      var i = 0
+      while (i < cur.length) { cur(i) = math.floor(cur(i) + 0.5); i += 1 }
+    }
+    cur
+  }
+
+  /** One pass of [[gaussianDownsample]] along `dim` of a C-order block
+    * of `shape`: output position j is Σ_t kernel(t)·in(clamp(off + j·step
+    * + t)), summed over t in order, for j < `m`. A one-tap kernel only
+    * samples. Runs whole rows of the dims after `dim` per tap, so the
+    * inner loop is contiguous and branch-free.
+    */
+  private def convolveSampled(in: Array[Double], shape: Array[Int], dim: Int,
+      kernel: Array[Double], off: Int, step: Int, m: Int): Array[Double] = {
+    val n = shape(dim)
+    val r = (kernel.length - 1) / 2
+    val inner = shape.drop(dim + 1).product
+    val outer = in.length / (n * inner)
+    val out = new Array[Double](outer * m * inner)
+    var o = 0
+    while (o < outer) {
+      var j = 0
+      while (j < m) {
+        val dst = (o * m + j) * inner
+        val c = off + j * step
+        if (r == 0) System.arraycopy(in, (o * n + c) * inner, out, dst, inner)
+        else {
+          var t = -r
+          while (t <= r) {
+            val w = kernel(t + r)
+            val src = (o * n + math.min(math.max(c + t, 0), n - 1)) * inner
+            var i = 0
+            while (i < inner) { out(dst + i) += w * in(src + i); i += 1 }
+            t += 1
+          }
+        }
+        j += 1
       }
-      out(flat) = if (roundInt) math.floor(cur(idx) + 0.5) else cur(idx)
+      o += 1
     }
     out
   }

@@ -38,8 +38,12 @@ object OmeZarrIO {
     * so each shard is built and written exactly once by one task. The
     * levels are unioned, so one `foreachPartition` puts every object
     * of the pyramid; its result stage adds each level's chunks to that
-    * level's accumulator, and the (possibly uncached) pipeline runs
-    * exactly once.
+    * level's accumulator, and the pipeline runs exactly once. Each
+    * level is read as its `Level.rdd`: a level the cascade built is
+    * read from its lineage, so the write makes no Dataset and fills no
+    * cache, and reads each level from the cascade's exchange outputs
+    * (a level without an exchange of its own recomputes its chunk-local
+    * step from the nearest one).
     *
     * `enabledRfcs`: RFC 4 anatomical-orientation metadata is STRIPPED
     * from the written axes unless 4 is enabled — the reference's
@@ -66,7 +70,7 @@ object OmeZarrIO {
     val accs = arrayPaths.map(p => sc.longAccumulator(s"chunks:$p"))
     val encoded = sc.union(ms.levels.zipWithIndex.map { case (lvl, l) =>
       val (fullChunks, dtype) = (lvl.meta.chunks, lvl.meta.dtype)
-      lvl.chunks.rdd.map { c =>
+      lvl.rdd.map { c =>
         val (obj, slot) = chunksPerShard match {
           case Some(cps) => (c.chunk_idx.zip(cps).map { case (i, n) => i / n },
             Sharding.innerFlatIndex(c.chunk_idx.zip(cps).map { case (i, n) => i % n }, cps))

@@ -92,15 +92,25 @@ final class ZarrStore(val root: String, hconf: Option[SerializableHadoopConf] = 
     */
   def size(key: String): Long = fs.getFileStatus(p(key)).getLen
 
+  /** The whole object, read to end of stream: one open, no status
+    * call. An object over the 2 GiB single-buffer limit is refused.
+    */
   def readBytes(key: String): Array[Byte] = {
     val in = fs.open(p(key))
     try {
-      val len = fs.getFileStatus(p(key)).getLen
-      require(len <= Int.MaxValue,
-        s"object $key is $len bytes — beyond the 2 GiB single-buffer limit")
-      val buf = new Array[Byte](len.toInt)
-      in.readFully(0, buf)
-      buf
+      var buf = new Array[Byte](1 << 16)
+      var n = 0
+      var r = 0
+      while (r >= 0) {
+        if (n == buf.length) {
+          require(n < ZarrStore.MaxObjectBytes,
+            s"object $key is $n bytes or more — beyond the 2 GiB single-buffer limit")
+          buf = java.util.Arrays.copyOf(buf, math.min(2L * n, ZarrStore.MaxObjectBytes.toLong).toInt)
+        }
+        r = in.read(buf, n, buf.length - n)
+        if (r > 0) n += r
+      }
+      if (n == buf.length) buf else java.util.Arrays.copyOf(buf, n)
     } finally in.close()
   }
 
@@ -155,6 +165,11 @@ final class ZarrStore(val root: String, hconf: Option[SerializableHadoopConf] = 
 }
 
 object ZarrStore {
+
+  /** The largest object [[ZarrStore.readBytes]] returns: the JVM's
+    * largest byte array.
+    */
+  private val MaxObjectBytes = Int.MaxValue - 8
 
   /** Chunk object key for one grid position.
     * Zarr v2: indices joined by the dimension separator ('.' default,

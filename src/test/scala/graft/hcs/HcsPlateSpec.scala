@@ -56,10 +56,12 @@ class HcsPlateSpec extends SparkSpec {
       ChunkOps.toArray(lvl.chunks, lvl.meta)
     })
     // every lookup reads the store again, each document and the one
-    // pixel object with a single open: planning the level re-opens nothing
+    // pixel object with a single open and no status call: planning the
+    // level re-opens nothing
     Seq.fill(2)(lookup()).foreach { case ((px, jobs, stages), calls) =>
       assert(jobs == 0 && stages == 0, s"$jobs jobs, $stages stages")
       assert(px.toSeq == values(64, 1).toSeq)
+      assert(!calls.exists(_._1 == "status"), calls)
       val wellDoc = calls.filter(_._2.endsWith("A/1/.zattrs"))
       assert(wellDoc.count(_._1 == "open") == 1 && !wellDoc.exists(_._1 == "exists"), calls)
       val opens = calls.filter(_._1 == "open").map(_._2)

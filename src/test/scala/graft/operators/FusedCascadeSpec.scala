@@ -45,6 +45,32 @@ class FusedCascadeSpec extends SparkSpec {
     } finally ms.levels.tail.foreach(_.chunks.unpersist(blocking = true))
   }
 
+  /** The gaussian by its definition, independent of
+    * `NdKernels.gaussianDownsample`: blur every voxel along each dim in
+    * turn (edge clamped, taps summed in order), then take every
+    * `factors(d)`-th voxel from 0, rounded to integers.
+    */
+  private def blurThenSample(in: Array[Double], shape: Array[Int], factors: Array[Int],
+      sigma: Array[Double], radius: Array[Int], outShape: Array[Int]): Array[Double] = {
+    val str = NdKernels.strides(shape)
+    val blurred = shape.indices.foldLeft(in) { (cur, d) =>
+      val k = NdKernels.gaussianKernel(sigma(d), radius(d))
+      val r = (k.length - 1) / 2
+      Array.tabulate(cur.length) { i =>
+        val p = i / str(d) % shape(d)
+        (-r to r).foldLeft(0.0) { (acc, t) =>
+          val q = math.min(math.max(p + t, 0), shape(d) - 1)
+          acc + k(t + r) * cur(i + (q - p) * str(d))
+        }
+      }
+    }
+    val outStr = NdKernels.strides(outShape)
+    Array.tabulate(outShape.product) { j =>
+      val at = outShape.indices.map(d => j / outStr(d) % outShape(d) * factors(d) * str(d)).sum
+      math.floor(blurred(at) + 0.5)
+    }
+  }
+
   /** The whole-array cascade: each level is the kernel over the whole
     * previous level (no chunks, so no halo and no radius cap),
     * stored in the image dtype.
@@ -61,8 +87,7 @@ class FusedCascadeSpec extends SparkSpec {
         case Method.ItkwasmGaussian =>
           val truncate = ScalePlanner.getTruncate(shape.map(_.toLong).toSeq, sigma.toSeq)
           val radius = ScalePlanner.gaussianBorder(sigma.toSeq, truncate).toArray
-          NdKernels.gaussianDownsample(in, shape, factors, sigma, radius, outShape, centerOff,
-            roundInt = true)
+          blurThenSample(in, shape, factors, sigma, radius, outShape)
         case Method.DaskImageMode =>
           NdKernels.modeCentered(in, shape, factors, outShape, centerOff)
         case Method.ItkwasmLabelImage =>

@@ -3,10 +3,12 @@ package graft.operators
 import graft.SparkSpec
 import graft.meta.Model._
 import graft.zarr.ZarrStore
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 
 /** The pyramid cascade is lazy: `toMultiscales` only builds lineage
-  * and submits no Spark job, a build plus its write runs as one job,
-  * and the levels stay Dataset caches that `unpersist` frees.
+  * and submits no Spark job, and a build plus its write runs as one
+  * job over the cascade's RDDs, filling no cache. A level's `chunks`
+  * Dataset is made and cached on first use, and `unpersist` frees it.
   */
 class LazyCascadeSpec extends SparkSpec {
 
@@ -45,6 +47,8 @@ class LazyCascadeSpec extends SparkSpec {
     test(s"$name: toMultiscales submits no job, and the build plus its write runs as one") {
       val base = storedBase(meta, vals)
       val sc = spark.sparkContext
+      val cacheManager = spark.sharedState.cacheManager
+      spark.catalog.clearCache() // so the cache manager holds only what this build caches
       val before = sc.getPersistentRDDs.keySet
       val (ms, buildJobs, _) = jobsAndStagesIn(
         MultiscaleBuilder.toMultiscales(spark, base, Some(factors), method))
@@ -55,8 +59,14 @@ class LazyCascadeSpec extends SparkSpec {
         val (counts, writeJobs, _) = jobsAndStagesIn(OmeZarrIO.writeMultiscales(spark, dir, ms,
           version = "0.5", chunksPerShard = Some(meta.dims.map(_ => 2))))
         assert(writeJobs == 1, s"the build and its write ran $writeJobs Spark jobs")
+        assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+          "the write should have persisted no RDD")
+        assert(cacheManager.isEmpty, "the write should have cached no level")
+        ms.levels.foreach(l => ChunkOps.toArray(l.chunks, l.meta))
         assert((sc.getPersistentRDDs.keySet -- before).size == 2,
-          "the write should have filled one cache per level above the base")
+          "reading the levels should have filled one cache per level above the base")
+        assert(ms.levels.map(l => cacheManager.lookupCachedData(l.chunks).isDefined) ==
+          Seq(false, true, true))
         val back = OmeZarrIO.readMultiscales(spark, dir)
         assert(back.levels.map(l => (l.meta.shape, l.meta.chunks)) ==
           ms.levels.map(l => (l.meta.shape, l.meta.chunks)))
