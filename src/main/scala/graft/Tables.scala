@@ -16,10 +16,4 @@ object Tables {
   /** Curried convenience: `val t = Tables.t(spark, dir); t("lineitem")` */
   def t(spark: SparkSession, dir: String): String => DataFrame =
     name => load(spark, dir, name)
-
-  /** Register every table as a temp view so `spark.sql` queries can use
-    * the same table names the DuckDB oracle sees.
-    */
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

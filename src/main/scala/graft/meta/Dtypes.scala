@@ -1,14 +1,12 @@
 package graft.meta
 
-import org.apache.spark.sql.types._
-
 /** Element-dtype registry: the write path's explicit numpy↔zarr map
-  * (ngff-zarr `py/ngff_zarr/to_ngff_zarr.py:89-117`) plus the JVM/
-  * Spark mapping decisions of SURVEY §1.2:
-  *  - unsigned ints decode into the next-wider signed Spark type
-  *    (uint64 → LongType, documented lossy above 2^63);
-  *  - float16 widens to FloatType in memory;
-  *  - complex64/128 become struct(re, im);
+  * (ngff-zarr `py/ngff_zarr/to_ngff_zarr.py:89-117`) plus the in-memory
+  * decisions of SURVEY §1.2:
+  *  - every real dtype decodes to Double voxel values
+  *    (`ZarrStore.decodeToDoubles`): unsigned ints and float16 widen
+  *    exactly, and int64/uint64 values beyond 2^53 round;
+  *  - complex64/128 become (re, im) columns (`ChunkOps.complexVoxelView`);
   *  - foreign endianness is normalized to little-endian on read
   *    (`py/ngff_zarr/from_ngff_zarr.py:127-131`).
   */
@@ -46,23 +44,6 @@ object Dtypes {
     case "int32" | "uint32" | "float32" => 4
     case "int64" | "uint64" | "float64" | "complex64" => 8
     case "complex128" => 16
-  }
-
-  /** Spark in-memory type; unsigned widens, float16 widens. */
-  def sparkType(dtype: String): DataType = normalize(dtype) match {
-    case "bool" => BooleanType
-    case "int8" => ByteType
-    case "int16" => ShortType
-    case "int32" => IntegerType
-    case "int64" => LongType
-    case "uint8" => ShortType
-    case "uint16" => IntegerType
-    case "uint32" => LongType
-    case "uint64" => LongType // documented: values ≥ 2^63 wrap
-    case "float16" | "float32" => FloatType
-    case "float64" => DoubleType
-    case "complex64" | "complex128" =>
-      StructType(Seq(StructField("re", DoubleType), StructField("im", DoubleType)))
   }
 
   /** Zarr v2 dtype string (numpy typestr, little-endian). */

@@ -62,9 +62,9 @@ import graft.zarr.{SerializableHadoopConf, ZarrStore}
 object DicomIO {
 
   private val ImplicitLE = "1.2.840.10008.1.2"
-  private val ExplicitLE = "1.2.840.10008.1.2.1"
+  private[operators] val ExplicitLE = "1.2.840.10008.1.2.1"
   private val ExplicitBE = "1.2.840.10008.1.2.2"
-  private val JpegBaseline = "1.2.840.10008.1.2.4.50"
+  private[operators] val JpegBaseline = "1.2.840.10008.1.2.4.50"
   private val JpegExtended12 = "1.2.840.10008.1.2.4.51"
   private val JpegLossless14 = "1.2.840.10008.1.2.4.57"
   private val JpegLosslessSv1 = "1.2.840.10008.1.2.4.70"
@@ -783,8 +783,8 @@ object DicomIO {
 
   // ---- minimal encoder (fixtures + synthetic gate payloads) ----
 
-  private def le16(v: Int): Array[Byte] = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-  private def le32(v: Long): Array[Byte] = Array(
+  private[operators] def le16(v: Int): Array[Byte] = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
+  private[operators] def le32(v: Long): Array[Byte] = Array(
     (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
     ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
   private def shortEl(g: Int, e: Int, vr: String, value: Array[Byte]): Array[Byte] = {
@@ -797,11 +797,12 @@ object DicomIO {
   private def asciiEl(g: Int, e: Int, vr: String, s: String) =
     shortEl(g, e, vr, s.getBytes("US-ASCII"))
 
-  /** Part 10 wrapper + common dataset elements shared by the three
-    * slice encoders; `pixelData` is the fully formed (7FE0,0010)
-    * element in whichever form the transfer syntax requires.
+  /** Part 10 wrapper + common dataset elements shared by the slice
+    * encoders here and the specs' fixture encoders; `pixelData` is the
+    * fully formed (7FE0,0010) element in whichever form the transfer
+    * syntax requires.
     */
-  private def buildSlice(ts: String, bits: Int, signed: Boolean,
+  private[operators] def buildSlice(ts: String, bits: Int, signed: Boolean,
       rows: Int, cols: Int, instanceNumber: Int, ippZ: Double,
       pixelSpacingRowCol: (Double, Double), sliceThickness: Double,
       pixelData: Array[Byte], samples: Int = 1,
@@ -832,35 +833,6 @@ object DicomIO {
     out.toByteArray
   }
 
-  /** One Explicit-VR-LE Part 10 slice with uint8 RGB pixels —
-    * interleaved (planar 0) or channel-planar (planar 1). `pixels` is
-    * always given interleaved [r,g,b, r,g,b, ...] y-major.
-    */
-  def encodeSliceRgb8(rows: Int, cols: Int, instanceNumber: Int, ippZ: Double,
-      pixelSpacingRowCol: (Double, Double), sliceThickness: Double,
-      pixels: Array[Byte], planar: Int = 0): Array[Byte] = {
-    require(pixels.length == rows * cols * 3, "pixels != rows*cols*3")
-    val body =
-      if (planar == 0) pixels
-      else {
-        val n = rows * cols
-        val out = new Array[Byte](pixels.length)
-        var c = 0
-        while (c < 3) {
-          var i = 0
-          while (i < n) { out(c * n + i) = pixels(i * 3 + c); i += 1 }
-          c += 1
-        }
-        out
-      }
-    val padded = if (body.length % 2 == 1) body :+ 0.toByte else body
-    val pd = le16(0x7fe0) ++ le16(0x0010) ++ "OB".getBytes("US-ASCII") ++
-      Array[Byte](0, 0) ++ le32(padded.length.toLong) ++ padded
-    buildSlice(ExplicitLE, bits = 8, signed = false, rows, cols,
-      instanceNumber, ippZ, pixelSpacingRowCol, sliceThickness, pd,
-      samples = 3, photometric = "RGB", planar = planar)
-  }
-
   /** One Explicit-VR-LE Part 10 slice with int16 pixels — the layout
     * every DICOM parser must accept. Used by the i68 gate and specs.
     */
@@ -880,7 +852,7 @@ object DicomIO {
     * Offset Table item, one fragment item per frame (even-padded),
     * sequence delimiter.
     */
-  private def encapsulate(fragments: Seq[Array[Byte]]): Array[Byte] = {
+  private[operators] def encapsulate(fragments: Seq[Array[Byte]]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write(le16(0x7fe0) ++ le16(0x0010) ++ "OB".getBytes("US-ASCII") ++
       Array[Byte](0, 0) ++ le32(0xffffffffL))
@@ -979,39 +951,6 @@ object DicomIO {
       encapsulate(Seq(jlo)))
   }
 
-  /** One JPEG-baseline COLOR Part 10 slice: interleaved RGB through
-    * the JDK JPEG writer (which emits the standard YCbCr stream —
-    * hence photometric YBR_FULL_422), encapsulated. Lossy — callers
-    * pin with bounded error on MCU-aligned uniform blocks.
-    */
-  def encodeSliceJpegRgb(rows: Int, cols: Int, instanceNumber: Int, ippZ: Double,
-      pixelSpacingRowCol: (Double, Double), sliceThickness: Double,
-      pixels: Array[Byte]): Array[Byte] = {
-    require(pixels.length == rows * cols * 3, "pixels != rows*cols*3")
-    val img = new java.awt.image.BufferedImage(cols, rows,
-      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
-    val raster = img.getRaster
-    var y = 0
-    while (y < rows) {
-      var x = 0
-      while (x < cols) {
-        var c = 0
-        while (c < 3) {
-          raster.setSample(x, y, c, pixels((y * cols + x) * 3 + c) & 0xff)
-          c += 1
-        }
-        x += 1
-      }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", bos)
-    buildSlice(JpegBaseline, bits = 8, signed = false, rows, cols,
-      instanceNumber, ippZ, pixelSpacingRowCol, sliceThickness,
-      encapsulate(Seq(bos.toByteArray)), samples = 3,
-      photometric = "YBR_FULL_422", planar = 0)
-  }
-
   /** One JPEG 2000 Lossless (.4.90) Part 10 slice with int16 pixels:
     * encoded as a SIGNED single component through [[Jpeg2kEncode]]
     * (reversible 5/3, 1 level, 4x4 code-blocks at gate sizes) — the
@@ -1061,30 +1000,5 @@ object DicomIO {
     head.write(tsEl)
     head.write(out.toByteArray)
     head.toByteArray
-  }
-
-  /** One JPEG-baseline Part 10 slice: 8-bit grayscale frame through
-    * the JDK JPEG writer, encapsulated. Lossy — callers pin decoded
-    * values with a bounded-error check, like the multimodal JPEG
-    * surface (m53).
-    */
-  def encodeSliceJpegBaseline(rows: Int, cols: Int, instanceNumber: Int, ippZ: Double,
-      pixelSpacingRowCol: (Double, Double), sliceThickness: Double,
-      pixels: Array[Byte]): Array[Byte] = {
-    require(pixels.length == rows * cols, "pixels != rows*cols")
-    val img = new java.awt.image.BufferedImage(cols, rows,
-      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var y = 0
-    while (y < rows) {
-      var x = 0
-      while (x < cols) { raster.setSample(x, y, 0, pixels(y * cols + x) & 0xff); x += 1 }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", bos)
-    buildSlice(JpegBaseline, bits = 8, signed = false, rows, cols,
-      instanceNumber, ippZ, pixelSpacingRowCol, sliceThickness,
-      encapsulate(Seq(bos.toByteArray)))
   }
 }

@@ -38,7 +38,6 @@ object Hdf5 {
 
   private val Undef = -1L // 0xFFFFFFFFFFFFFFFF as signed
 
-  final case class Attr(name: String, value: AttrValue)
   sealed trait AttrValue
   final case class ANums(v: Seq[Double]) extends AttrValue
   final case class AStr(v: String) extends AttrValue

@@ -120,16 +120,6 @@ object IntensityNorm {
       .toDF("t", "n0", "n1", "s0", "s1", "score_milli")
   }
 
-  /** The Otsu threshold: argmax of [[otsuTable]]'s score, smallest t
-    * on ties.
-    */
-  def otsuThreshold(spark: SparkSession, ds: Dataset[ChunkOps.ChunkRow],
-      meta: ImageMeta): Long = {
-    val top = otsuTable(spark, ds, meta)
-      .orderBy(col("score_milli").desc, col("t").asc).limit(1).collect()
-    top.head.getLong(0)
-  }
-
   /** ONE bounded value-domain histogram pass (≤65536 bins for the
     * integral dtypes): per-partition open hash → one tiny groupBy →
     * sorted (value, count) pairs on the driver. Shared by

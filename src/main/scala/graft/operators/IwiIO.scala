@@ -338,42 +338,6 @@ object IwiIO {
     com.github.luben.zstd.Zstd.compress(
       encodeIwiCbor(size, spacing, origin, componentType, values, components, name), 3)
 
-  /** Write the `.iwi` directory form: `index.json` plus
-    * `data/data.raw` (little-endian) and `data/direction.raw`
-    * (float64 identity).
-    */
-  def writeIwiDir(dir: java.nio.file.Path, size: Seq[Long], spacing: Seq[Double],
-      origin: Seq[Double], componentType: String, values: Array[Double],
-      components: Int = 1, name: String = "image"): Unit = {
-    val dim = size.length
-    require(writeTags.contains(componentType), s"componentType '$componentType' not writable")
-    require(values.length.toLong == size.product * components, "values != voxels × components")
-    java.nio.file.Files.createDirectories(dir.resolve("data"))
-    val index =
-      s"""{
-         |  "imageType": {
-         |    "dimension": $dim,
-         |    "componentType": "$componentType",
-         |    "pixelType": "${if (components > 1) "Vector" else "Scalar"}",
-         |    "components": $components
-         |  },
-         |  "name": "$name",
-         |  "origin": [${origin.mkString(", ")}],
-         |  "spacing": [${spacing.mkString(", ")}],
-         |  "direction": "data/direction.raw",
-         |  "size": [${size.mkString(", ")}],
-         |  "metadata": [],
-         |  "data": "data/data.raw"
-         |}
-         |""".stripMargin
-    java.nio.file.Files.write(dir.resolve("index.json"), index.getBytes("UTF-8"))
-    val dirBb = ByteBuffer.allocate(dim * dim * 8).order(ByteOrder.LITTLE_ENDIAN)
-    Array.tabulate(dim * dim)(i => if (i % (dim + 1) == 0) 1.0 else 0.0).foreach(dirBb.putDouble)
-    java.nio.file.Files.write(dir.resolve("data/direction.raw"), dirBb.array())
-    java.nio.file.Files.write(dir.resolve("data/data.raw"),
-      ZarrStore.encodeFromDoubles(values, componentType))
-  }
-
   /** Decode a zstd frame; uses the frame-header content size when
     * present, else streams.
     */

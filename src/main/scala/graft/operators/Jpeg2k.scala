@@ -945,12 +945,6 @@ object Jpeg2k {
       math.min(mh.yto + (q + 1) * mh.yt, mh.h))
   }
 
-  /** Tile pixel bounds (x0, x1, y0, y1) for external callers. */
-  private[operators] def tileBounds(mh: MainHeader, t: Int): (Int, Int, Int, Int) = {
-    val r = tileRect(mh, t)
-    (r.x0, r.x1, r.y0, r.y1)
-  }
-
   /** Parse the main header (SOC through the last marker before the
     * first SOT). Returns the header and the byte offset of the first
     * SOT. Throws rather than blocking when `data` is only a prefix

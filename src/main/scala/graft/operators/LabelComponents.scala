@@ -363,13 +363,6 @@ object LabelComponents {
     componentLabelsNd(spark, ds, meta, threshold)
   }
 
-  /** Per-voxel component labels (z, y, x, comp), 6-connectivity. */
-  def componentLabels3d(spark: SparkSession, ds: Dataset[ChunkOps.ChunkRow],
-      meta: ImageMeta, threshold: Double): DataFrame = {
-    require(meta.dims == Seq("z", "y", "x"), s"3D entry point, got ${meta.dims}")
-    componentLabelsNd(spark, ds, meta, threshold)
-  }
-
   /** Per-component geometric moments — the regionprops tier after
     * labeling: size, first moments, exact micro-unit centroids
     * (floor division), and RAW second moments. Raw moments are the
@@ -560,15 +553,6 @@ object LabelComponents {
   def areaOpen2d(spark: SparkSession, ds: Dataset[ChunkOps.ChunkRow],
       meta: ImageMeta, threshold: Double, minSize: Long): DataFrame = {
     require(meta.dims == Seq("y", "x"), s"2D entry point, got ${meta.dims}")
-    areaOpenNd(spark, ds, meta, threshold, minSize)
-  }
-
-  /** 3D (z, y, x) volume opening, 6-connectivity — despeckle for
-    * volumetric masks; same broadcast-semi-join shape as 2D.
-    */
-  def areaOpen3d(spark: SparkSession, ds: Dataset[ChunkOps.ChunkRow],
-      meta: ImageMeta, threshold: Double, minSize: Long): DataFrame = {
-    require(meta.dims == Seq("z", "y", "x"), s"3D entry point, got ${meta.dims}")
     areaOpenNd(spark, ds, meta, threshold, minSize)
   }
 

@@ -148,16 +148,6 @@ object TiffIO {
     "int16" -> "int16", "uint32" -> "uint32", "int32" -> "int32",
     "float" -> "float32", "double" -> "float64")
 
-  /** Parse the OME-XML ImageDescription. Secure parser configuration
-    * (no DOCTYPE) — the description is untrusted file content.
-    */
-  def parseOmeXml(xml: String): OmePixels = {
-    val images = parseOmeImages(xml)
-    require(images.length == 1,
-      s"expected one OME Image element, found ${images.length}")
-    images.head._1
-  }
-
   /** Parse ALL `Image` elements of a (possibly multi-series) OME-XML
     * document: per image, its `Pixels` metadata plus the IFD index
     * list its planes occupy, from the `TiffData` plane→IFD mappings
@@ -174,6 +164,7 @@ object TiffIO {
   def parseOmeImages(xml: String): Seq[(OmePixels, Seq[Int])] = {
     val dbf = javax.xml.parsers.DocumentBuilderFactory.newInstance()
     dbf.setNamespaceAware(true)
+    // no DOCTYPE: the description is untrusted file content
     dbf.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
     val doc = dbf.newDocumentBuilder().parse(
       new org.xml.sax.InputSource(new java.io.StringReader(xml)))

@@ -108,24 +108,4 @@ object HeavyHitters {
       .where(col("cnt") * (k + 1) > lit(totalGrams))
     counted.orderBy(col("cnt").desc, col("gram"))
   }
-
-  /** Reference single-pass form (the plan this operator replaces):
-    * full `GROUP BY gram` then the same threshold. Used by specs to
-    * prove the sketched path is exact.
-    */
-  private[graft] def heavyGramsNaive(docs: DataFrame, k: Int, n: Int,
-      textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val gramOrder = n
-    val grams = docs.select(col(textCol).cast("string")).as[String]
-      .flatMap { t =>
-        val ws = t.split(' ').filter(_.nonEmpty)
-        (0 to ws.length - gramOrder).map(i => ws.slice(i, i + gramOrder).mkString(" "))
-      }.toDF("gram")
-    val total = grams.count()
-    grams.groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
-      .where(col("cnt") * (k + 1) > lit(total))
-      .orderBy(col("cnt").desc, col("gram"))
-  }
 }

@@ -54,17 +54,9 @@ object Mixture {
       .select(col(domainCol), col("n_docs"), col("target_total"), col("p_milli"))
   }
 
-  /** Sample the corpus at the temperature rates: keep a row iff its
-    * id's milli-bucket clears its domain's acceptance rate.
-    */
-  def temperatureSample(docs: DataFrame, idCol: String = "doc_id",
-      domainCol: String = "source", targetMilli: Int = 500): DataFrame =
-    sampleAtRates(docs, temperatureRates(docs, domainCol, targetMilli),
-      idCol, domainCol)
-
-  /** Sample against precomputed rates (reuse when the caller already
-    * materialized [[temperatureRates]] — saves a second corpus count
-    * scan).
+  /** Sample the corpus at per-domain rates (usually
+    * [[temperatureRates]]): keep a row iff its id's milli-bucket clears
+    * its domain's acceptance rate `p_milli`.
     */
   def sampleAtRates(docs: DataFrame, rates: DataFrame,
       idCol: String = "doc_id", domainCol: String = "source"): DataFrame = {

@@ -47,15 +47,15 @@ object Mp3 {
 
   // Bitrate tables, kbps, index 1..14 (0 = free format, 15 = reserved):
   // ISO 11172-3 Table B.1 (MPEG-1) and 13818-3 Table B.1 (LSF).
-  private val BrV1L1 = Array(0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448)
-  private val BrV1L2 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384)
-  private val BrV1L3 = Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-  private val BrV2L1 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256)
-  private val BrV2L23 = Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
+  private[ops] val BrV1L1 = Array(0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448)
+  private[ops] val BrV1L2 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384)
+  private[ops] val BrV1L3 = Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
+  private[ops] val BrV2L1 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256)
+  private[ops] val BrV2L23 = Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
 
-  private val SrV1 = Array(44100, 48000, 32000)
-  private val SrV2 = Array(22050, 24000, 16000)
-  private val SrV25 = Array(11025, 12000, 8000)
+  private[ops] val SrV1 = Array(44100, 48000, 32000)
+  private[ops] val SrV2 = Array(22050, 24000, 16000)
+  private[ops] val SrV25 = Array(11025, 12000, 8000)
 
   /** CRC-16, polynomial 0x8005, init 0xFFFF (ISO 11172-3 §2.4.3.1's
     * `crc_check`): covers the last two header bytes plus, for Layer
@@ -83,7 +83,7 @@ object Mp3 {
     * 13818-3 LSF): the CRC span and the Xing-tag offset both hang off
     * this.
     */
-  private def sideInfoBytes(mpeg1: Boolean, channels: Int): Int =
+  private[ops] def sideInfoBytes(mpeg1: Boolean, channels: Int): Int =
     if (mpeg1) { if (channels == 1) 17 else 32 }
     else { if (channels == 1) 9 else 17 }
 
@@ -257,49 +257,6 @@ object Mp3 {
       val crc = crc16(f, Seq((2, 4), (siStart, siStart + si)))
       f(4) = ((crc >> 8) & 0xff).toByte
       f(5) = (crc & 0xff).toByte
-    }
-    f
-  }
-
-  /** A filler frame for any (version, layer) cell of the header
-    * matrix — no audio semantics, just a spec-correct header and the
-    * exact frame length the tables imply. Exists so fuzz specs can
-    * pin all six bitrate tables and all three frame-length formulas,
-    * not only the MPEG-1 Layer III cell [[silenceFrame]] covers.
-    * `version`: 1 = MPEG-1, 2 = MPEG-2, 25 = MPEG-2.5.
-    */
-  def fillerFrame(version: Int, layer: Int, bitrateIndex: Int, srIndex: Int,
-      mono: Boolean, padding: Boolean): Array[Byte] = {
-    require(Set(1, 2, 25)(version), s"version $version")
-    require(layer >= 1 && layer <= 3, s"layer $layer")
-    require(bitrateIndex >= 1 && bitrateIndex <= 14 && srIndex >= 0 && srIndex <= 2)
-    val mpeg1 = version == 1
-    val kbps = (layer, mpeg1) match {
-      case (1, true) => BrV1L1(bitrateIndex)
-      case (2, true) => BrV1L2(bitrateIndex)
-      case (3, true) => BrV1L3(bitrateIndex)
-      case (1, false) => BrV2L1(bitrateIndex)
-      case (_, false) => BrV2L23(bitrateIndex)
-    }
-    val sr = version match {
-      case 1 => SrV1(srIndex); case 2 => SrV2(srIndex); case _ => SrV25(srIndex)
-    }
-    val pad = if (padding) 1 else 0
-    val len = layer match {
-      case 1 => (12 * kbps * 1000 / sr + pad) * 4
-      case 2 => 144 * kbps * 1000 / sr + pad
-      case 3 => if (mpeg1) 144 * kbps * 1000 / sr + pad else 72 * kbps * 1000 / sr + pad
-    }
-    val f = Array.fill[Byte](len)(0x55)
-    val verBits = version match { case 1 => 3; case 2 => 2; case _ => 0 }
-    val layBits = 4 - layer // 3=I, 2=II, 1=III
-    f(0) = 0xff.toByte
-    f(1) = (0xe0 | (verBits << 3) | (layBits << 1) | 1).toByte // no CRC
-    f(2) = ((bitrateIndex << 4) | (srIndex << 2) | (pad << 1)).toByte
-    f(3) = (((if (mono) 3 else 0) << 6) | 0x04).toByte
-    if (layer == 3) { // zero the side info so it cannot sniff as a tag
-      val si = sideInfoBytes(mpeg1, if (mono) 1 else 2)
-      java.util.Arrays.fill(f, 4, 4 + si, 0.toByte)
     }
     f
   }

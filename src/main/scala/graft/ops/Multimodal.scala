@@ -477,18 +477,6 @@ object Multimodal {
       })
   }
 
-  /** "Resize"/re-chunk stub: demonstrates payload-transforming kernels
-    * (sample every `stride`-th byte — the frame-sampling analogue).
-    */
-  def frameSample(spark: SparkSession, media: DataFrame, stride: Int): DataFrame = {
-    import spark.implicits._
-    media.select(col("doc_id"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        (id, payload.indices.collect { case i if i % stride == 0 => payload(i) }.toArray)
-      })
-      .toDF("doc_id", "sampled")
-  }
-
   // ---- deterministic synthetic encoded payloads (gate inputs) ----
 
   /** A real P6 PPM blob per doc: 6×4 RGB, pixel byte i =

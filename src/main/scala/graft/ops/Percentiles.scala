@@ -93,27 +93,4 @@ object Percentiles {
       .groupBy(g, col("q"))
       .agg(min(col("_v")).as("value"))
   }
-
-  /** Single-window reference form (serializes each group through one
-    * task — the shape the two-phase algorithm replaces; kept as the
-    * verification kernel).
-    */
-  def windowDiscrete(df: DataFrame, groupCol: String, valueCol: String,
-      qs: Seq[Double]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val g = col(groupCol)
-    val w = Window.partitionBy(g).orderBy(col("_v"))
-    val wc = Window.partitionBy(g)
-    df.select(g, col(valueCol).cast("long").as("_v"))
-      .groupBy(g, col("_v")).agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(w))
-      .withColumn("cnt", sum(col("c")).over(wc))
-      .crossJoin(qs.toDF("q"))
-      .withColumn("rank",
-        expr("(CAST(round(q * 1e6) AS BIGINT) * cnt + 999999) div 1000000"))
-      .filter(col("cum") >= col("rank"))
-      .groupBy(g, col("q"))
-      .agg(min(col("_v")).as("value"))
-  }
 }

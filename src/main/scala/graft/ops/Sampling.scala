@@ -34,18 +34,4 @@ object Sampling {
     df.withColumn("sample_rank", row_number().over(w))
       .filter(col("sample_rank") <= quota)
   }
-
-  /** Proportional sample: keep a row iff the first 8 hex digits of
-    * its salted hash land under `fracMilli`/1000 of the 32-bit space.
-    * ZERO shuffles — a pushdown-friendly per-row predicate, the shape
-    * to reach for when the quota does not need to be exact. Expected
-    * (not exact) fraction; determinism is the same hash-rank story.
-    */
-  def byHashFraction(df: DataFrame, keyCol: String, fracMilli: Int,
-      salt: String = ""): DataFrame = {
-    require(fracMilli >= 0 && fracMilli <= 1000, s"fracMilli in [0,1000], got $fracMilli")
-    val bucket = conv(substring(hashKey(col(keyCol), salt), 1, 8), 16, 10)
-      .cast("long") % 1000
-    df.filter(bucket < fracMilli)
-  }
 }

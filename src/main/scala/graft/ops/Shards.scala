@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Shard = 56-bit md5 bucket mod nShards; within-shard order = (md5
   * hex of the id, id) — a deterministic permutation uncorrelated with
   * ingest order. One shuffle: repartition on the shard key +
-  * sort-within-partitions, then a partitioned write; no global sort,
+  * sort-within-partitions, then each task writes its shards; no global sort,
   * no driver state, shards stay balanced by hash uniformity at any
   * corpus size.
   */
@@ -38,16 +38,6 @@ object Shards {
     docs.withColumn("shard", (bucket56(idCol) % nShards).cast("int"))
       .withColumn("pos", row_number().over(w).cast("long"))
   }
-
-  /** Materialize the layout as parquet, one directory per shard
-    * (`shard=N/`), rows stored in shard order.
-    */
-  def writeShards(docs: DataFrame, path: String, idCol: String = "doc_id",
-      nShards: Int = 16): Unit =
-    shardPlan(docs, idCol, nShards)
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(path)
 
   // ---- WebDataset export (tar shards) ----
 

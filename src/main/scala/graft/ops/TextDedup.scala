@@ -21,18 +21,6 @@ object TextDedup {
   def words(text: Column): Column =
     filter(split(text, " "), w => w =!= "")
 
-  /** Distinct word k-shingles ("w1 w2 w3") of `text`. Documents with
-    * fewer than k words produce an empty set.
-    */
-  def wordShingles(text: Column, k: Int = 3): Column = {
-    val ws = words(text)
-    array_distinct(
-      when(size(ws) >= k,
-        transform(sequence(lit(0), size(ws) - k),
-          i => concat_ws(" ", (0 until k).map(j => element_at(ws, (i + j + 1).cast("int"))): _*)))
-        .otherwise(array().cast("array<string>")))
-  }
-
   /** Exact dedup: group identical texts by md5, keep the smallest id
     * as the canonical representative. One shuffle on the hash key.
     *
@@ -43,9 +31,10 @@ object TextDedup {
       .agg(count(lit(1)).as("n_copies"), min(col(idCol)).as("keeper_id"))
 
   /** (doc_id, distinct-shingle-array) computed in a typed JVM kernel —
-    * identical semantics to [[wordShingles]] (single-space split, drop
-    * empties, k-grams joined by one space, distinct) but without the
-    * per-position interpreted lambda chain.
+    * identical semantics to the Column-expression shingles `PropertySpec`
+    * checks it against (single-space split, drop empties, k-grams joined
+    * by one space, distinct) but without the per-position interpreted
+    * lambda chain.
     */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     val spark = docs.sparkSession
@@ -62,9 +51,9 @@ object TextDedup {
   }
 
   /** Distinct word k-shingles of one document — the per-row kernel
-    * behind [[shingleSets]], shared with the streaming operator.
+    * behind [[shingleSets]].
     */
-  private[graft] def shinglesOf(text: String, k: Int): Array[String] = {
+  private def shinglesOf(text: String, k: Int): Array[String] = {
     if (text == null) return Array.empty
     val ws = text.split(' ').filter(_.nonEmpty)
     if (ws.length < k) Array.empty
@@ -195,7 +184,7 @@ object TextDedup {
     })
 
   /** MinHash signature of one shingle set — the per-row kernel behind
-    * [[signaturesFromSets]], shared with the streaming operator.
+    * [[signaturesFromSets]].
     * Slot k minimizes the UNIVERSAL hash (a_k·x + b_k) mod 2³¹−1 over
     * x = (first 14 md5 hex chars of the shingle) mod 2³¹−1 — per-slot
     * independent constants, so slot agreements are ~independent
@@ -207,7 +196,7 @@ object TextDedup {
     * predicts ~3e-7.) All arithmetic stays exact in 62 bits, so the
     * d42 oracle replays it verbatim in SQL.
     */
-  private[graft] def signatureOfShingles(shingles: Array[String], n: Int,
+  private def signatureOfShingles(shingles: Array[String], n: Int,
       digest: java.security.MessageDigest): Array[Long] = {
     val (as, bs) = minHashConsts(n)
     val sig = Array.fill(n)(Long.MaxValue)
@@ -228,6 +217,18 @@ object TextDedup {
     }
     sig
   }
+
+  /** (doc_id, band, bucket) rows: bucket = xxhash64 of the band's
+    * signature slots (equality ≡ slot-tuple equality up to 64-bit
+    * collision). Shared by the self-join and cross-corpus LSH paths.
+    */
+  private def bandedRows(sig: DataFrame, numBands: Int,
+      rowsPerBand: Int): DataFrame =
+    sig.select(col("doc_id"),
+      posexplode(transform(sequence(lit(0), lit(numBands - 1)),
+        b => xxhash64(concat_ws(",",
+          (0 until rowsPerBand).map(r => element_at(col("sig"), (b * lit(rowsPerBand) + r + 1).cast("int"))): _*))))
+        .as(Seq("band", "bucket")))
 
   /** LSH banding over MinHash signatures: hash each band of
     * `rowsPerBand` signature slots, emit (band, bucket) keys, and
@@ -264,30 +265,10 @@ object TextDedup {
     * arms without anyone having to know its shape in advance.
     *
     * Output: distinct (doc_a, doc_b) candidate pairs, doc_a < doc_b —
-    * identical across the plain, explicit and auto paths.
-    */
-
-  /** (doc_id, band, bucket) rows: bucket = xxhash64 of the band's
-    * signature slots (equality ≡ slot-tuple equality up to 64-bit
-    * collision). Shared by the self-join and cross-corpus LSH paths.
-    */
-  private def bandedRows(sig: DataFrame, numBands: Int,
-      rowsPerBand: Int): DataFrame =
-    sig.select(col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(numBands - 1)),
-        b => xxhash64(concat_ws(",",
-          (0 until rowsPerBand).map(r => element_at(col("sig"), (b * lit(rowsPerBand) + r + 1).cast("int"))): _*))))
-        .as(Seq("band", "bucket")))
-
-  def lshCandidates(sig: DataFrame, numBands: Int = 16, rowsPerBand: Int = 4,
-      hotBucketThreshold: Int = 0, saltGroups: Int = 8): DataFrame =
-    lshCandidatesWithDecision(sig, numBands, rowsPerBand, hotBucketThreshold,
-      saltGroups)._1
-
-  /** [[lshCandidates]] plus whether the salted hot-bucket path armed.
-    * The arming decision rides in the return value — no shared
-    * mutable state, so concurrent callers in one session each see
-    * their own call's decision. (The armed result is
+    * identical across the plain, explicit and auto paths — and whether
+    * the salted hot-bucket path armed. The decision rides in the
+    * return value — no shared mutable state, so concurrent callers in
+    * one session each see their own call's decision. (The armed result is
     * localCheckpoint'ed to free the banded cache, which erases the
     * logical plan a caller could otherwise inspect — hence the
     * explicit flag.)

@@ -43,10 +43,6 @@ object TextStats {
     "fr" -> Seq("le", "la", "de", "et", "les", "des"),
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "wo3", "you3"))
 
-  /** Count of tokens of `text` that appear in `lex` (with multiplicity). */
-  def lexiconHits(text: Column, lex: Seq[String]): Column =
-    size(filter(words(text), w => w.isInCollection(lex)))
-
   /** Heuristic language ID: per-language stopword-hit scores, argmax
     * with first-in-`lexicons`-order tiebreak, "und" (undetermined)
     * when no lexicon hits at all. The text splits once; each lexicon

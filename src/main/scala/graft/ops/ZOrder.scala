@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) clustering: interleave the bits of two integer
@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * gives parquet row-group min/max ranges that are tight in every
   * interleaved dimension at once, so scans filtering on ANY of them
   * prune row groups — the OPTIMIZE ZORDER primitive of lakehouse
-  * engines, here as a plain column expression + range repartition.
+  * engines, here as a plain column expression that a caller sorts or
+  * range-partitions by.
   *
   * The interleave is a fixed fold of shift/mask built-ins, fully
   * inside whole-stage codegen (no UDF), and exactly reproducible in
@@ -44,21 +45,4 @@ object ZOrder {
   /** Two-column [[zValueN]]: bit i of x at position 2i, of y at 2i+1. */
   def zValue(x: Column, y: Column, bits: Int = 21): Column =
     zValueN(Seq(x, y), bits)
-
-  /** Cluster `df` for multi-dimensional data skipping: range-partition
-    * on the z-value of `dims` into `numPartitions` output splits and
-    * sort each split by it. One shuffle; downstream
-    * `df.write.parquet` produces one tight-z-range file per
-    * partition.
-    */
-  def clusterByN(df: DataFrame, dims: Seq[String],
-      numPartitions: Int, bits: Int = 21): DataFrame =
-    df.withColumn("__z", zValueN(dims.map(col), bits))
-      .repartitionByRange(numPartitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-
-  def clusterBy(df: DataFrame, xCol: String, yCol: String,
-      numPartitions: Int, bits: Int = 21): DataFrame =
-    clusterByN(df, Seq(xCol, yCol), numPartitions, bits)
 }

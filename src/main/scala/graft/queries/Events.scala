@@ -7,10 +7,10 @@ import graft.Tables
 
 /** Event-time windowing surface (SURVEY §2.7 streaming row): tumbling /
   * sliding / session windows and stateful-dedup semantics, expressed
-  * over the `events` table with Spark's `window()` / `session_window()`
-  * — the exact expressions the Structured Streaming path
-  * (graft.streaming) reuses; batch execution makes them
-  * oracle-checkable.
+  * over the `events` table with Spark's `window()` / `session_window()`,
+  * which run unchanged over a stream; batch execution makes them
+  * oracle-checkable. The interval joins (q57, q65) call the streaming
+  * operators of `graft.streaming.Streams` directly.
   *
   * `events.parquet` has shipped `ts` as either TIMESTAMP(NANOS)
   * (reads as raw long nanos under

@@ -221,8 +221,8 @@ object ZarrStore {
 
   /** Decode a raw (decompressed) chunk buffer into doubles. Handles
     * endianness normalization (P5) and unsigned widening; float16 is
-    * decoded bit-exactly. uint64 values above 2^63 lose precision in
-    * the double domain (documented in Dtypes).
+    * decoded bit-exactly. int64/uint64 values beyond 2^53 lose
+    * precision in the double domain (documented in Dtypes).
     */
   def decodeToDoubles(raw: Array[Byte], dtype: String, bigEndian: Boolean = false): Array[Double] = {
     val dt = Dtypes.normalize(dtype)

@@ -108,7 +108,6 @@ class MetadataSpec extends AnyFunSuite {
     assert(Dtypes.normalize("<u2") == "uint16")
     assert(Dtypes.normalize(">f4") == "float32")
     assert(Dtypes.itemSize("complex128") == 16)
-    assert(Dtypes.sparkType("uint16") == org.apache.spark.sql.types.IntegerType)
     assertThrows[IllegalArgumentException](Dtypes.normalize("str"))
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import DicomIOSpec._
 
 /** Constrained DICOM reader (DicomIO.scala) against committed
   * fixtures from `tools/make_dicom_fixture.py` — an INDEPENDENT
@@ -219,7 +220,7 @@ class DicomIOSpec extends SparkSpec {
     }
     for ((planar, name) <- Seq((0, "i.dcm"), (1, "p.dcm"))) {
       java.nio.file.Files.write(dir.resolve(name),
-        DicomIO.encodeSliceRgb8(NY, NX, 1, 0.0, (1.0, 1.0), 1.0, px, planar))
+        encodeSliceRgb8(NY, NX, 1, 0.0, (1.0, 1.0), 1.0, px, planar))
       assertRgb(DicomIO.read(spark, dir.resolve(name).toString))
     }
   }
@@ -238,7 +239,7 @@ class DicomIOSpec extends SparkSpec {
     }
     val f = tempFile("dcm_jpegrgb", ".dcm")
     java.nio.file.Files.write(f,
-      DicomIO.encodeSliceJpegRgb(rows, cols, 1, 0.0, (1.0, 1.0), 1.0, px))
+      encodeSliceJpegRgb(rows, cols, 1, 0.0, (1.0, 1.0), 1.0, px))
     val img = DicomIO.read(spark, f.toString)
     assert(img.meta.dims == Seq("x", "y", "z", "c"))
     assert(img.meta.shape == Seq(cols.toLong, rows.toLong, 1L, 3L))
@@ -298,7 +299,7 @@ class DicomIOSpec extends SparkSpec {
       val b = (p / (cols * 8)) * 2 + ((p % cols) / 8)
       (40 + b * 50).toByte
     }
-    val bytes = DicomIO.encodeSliceJpegBaseline(rows, cols, 1, 0.0, (1.0, 1.0), 1.0, px)
+    val bytes = encodeSliceJpegBaseline(rows, cols, 1, 0.0, (1.0, 1.0), 1.0, px)
     val f = tempFile("jb", ".dcm")
     java.nio.file.Files.write(f, bytes)
     val img = DicomIO.read(spark, f.toString)
@@ -356,5 +357,99 @@ class DicomIOSpec extends SparkSpec {
   test("not-DICOM payloads refuse with the magic error") {
     assert(intercept[IllegalArgumentException](
       DicomIO.parse(new Array[Byte](200))).getMessage.contains("DICM"))
+  }
+}
+
+/** Fixture encoders for the color and lossy-JPEG cases: Part 10
+  * slices built from [[DicomIO]]'s shared writer helpers.
+  */
+object DicomIOSpec {
+  import DicomIO._
+
+  /** One Explicit-VR-LE Part 10 slice with uint8 RGB pixels —
+    * interleaved (planar 0) or channel-planar (planar 1). `pixels` is
+    * always given interleaved [r,g,b, r,g,b, ...] y-major.
+    */
+  def encodeSliceRgb8(rows: Int, cols: Int, instanceNumber: Int, ippZ: Double,
+      pixelSpacingRowCol: (Double, Double), sliceThickness: Double,
+      pixels: Array[Byte], planar: Int = 0): Array[Byte] = {
+    require(pixels.length == rows * cols * 3, "pixels != rows*cols*3")
+    val body =
+      if (planar == 0) pixels
+      else {
+        val n = rows * cols
+        val out = new Array[Byte](pixels.length)
+        var c = 0
+        while (c < 3) {
+          var i = 0
+          while (i < n) { out(c * n + i) = pixels(i * 3 + c); i += 1 }
+          c += 1
+        }
+        out
+      }
+    val padded = if (body.length % 2 == 1) body :+ 0.toByte else body
+    val pd = le16(0x7fe0) ++ le16(0x0010) ++ "OB".getBytes("US-ASCII") ++
+      Array[Byte](0, 0) ++ le32(padded.length.toLong) ++ padded
+    buildSlice(ExplicitLE, bits = 8, signed = false, rows, cols,
+      instanceNumber, ippZ, pixelSpacingRowCol, sliceThickness, pd,
+      samples = 3, photometric = "RGB", planar = planar)
+  }
+
+  /** One JPEG-baseline COLOR Part 10 slice: interleaved RGB through
+    * the JDK JPEG writer (which emits the standard YCbCr stream —
+    * hence photometric YBR_FULL_422), encapsulated. Lossy — callers
+    * pin with bounded error on MCU-aligned uniform blocks.
+    */
+  def encodeSliceJpegRgb(rows: Int, cols: Int, instanceNumber: Int, ippZ: Double,
+      pixelSpacingRowCol: (Double, Double), sliceThickness: Double,
+      pixels: Array[Byte]): Array[Byte] = {
+    require(pixels.length == rows * cols * 3, "pixels != rows*cols*3")
+    val img = new java.awt.image.BufferedImage(cols, rows,
+      java.awt.image.BufferedImage.TYPE_3BYTE_BGR)
+    val raster = img.getRaster
+    var y = 0
+    while (y < rows) {
+      var x = 0
+      while (x < cols) {
+        var c = 0
+        while (c < 3) {
+          raster.setSample(x, y, c, pixels((y * cols + x) * 3 + c) & 0xff)
+          c += 1
+        }
+        x += 1
+      }
+      y += 1
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "jpg", bos)
+    buildSlice(JpegBaseline, bits = 8, signed = false, rows, cols,
+      instanceNumber, ippZ, pixelSpacingRowCol, sliceThickness,
+      encapsulate(Seq(bos.toByteArray)), samples = 3,
+      photometric = "YBR_FULL_422", planar = 0)
+  }
+
+  /** One JPEG-baseline Part 10 slice: 8-bit grayscale frame through
+    * the JDK JPEG writer, encapsulated. Lossy — callers pin decoded
+    * values with a bounded-error check, like the multimodal JPEG
+    * surface (m53).
+    */
+  def encodeSliceJpegBaseline(rows: Int, cols: Int, instanceNumber: Int, ippZ: Double,
+      pixelSpacingRowCol: (Double, Double), sliceThickness: Double,
+      pixels: Array[Byte]): Array[Byte] = {
+    require(pixels.length == rows * cols, "pixels != rows*cols")
+    val img = new java.awt.image.BufferedImage(cols, rows,
+      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    var y = 0
+    while (y < rows) {
+      var x = 0
+      while (x < cols) { raster.setSample(x, y, 0, pixels(y * cols + x) & 0xff); x += 1 }
+      y += 1
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "jpg", bos)
+    buildSlice(JpegBaseline, bits = 8, signed = false, rows, cols,
+      instanceNumber, ippZ, pixelSpacingRowCol, sliceThickness,
+      encapsulate(Seq(bos.toByteArray)))
   }
 }

@@ -58,9 +58,9 @@ class IntensityNormSpec extends SparkSpec {
     val vals = Array.tabulate(h * w) { i =>
       if (i % w < w / 2) (20 + (i % 2)).toDouble else (200 + (i % 3)).toDouble
     }
-    val multi = IntensityNorm.otsuThreshold(spark,
+    val multi = IntensityNormSpec.otsuThreshold(spark,
       ChunkOps.fromArray(spark, vals, meta(h, w, 8, 8)), meta(h, w, 8, 8))
-    val single = IntensityNorm.otsuThreshold(spark,
+    val single = IntensityNormSpec.otsuThreshold(spark,
       ChunkOps.fromArray(spark, vals, meta(h, w, 16, 16)), meta(h, w, 16, 16))
     assert(multi == single)
     // candidates are one-past-occupied values (gap-equivalent to the
@@ -208,5 +208,22 @@ class IntensityNormSpec extends SparkSpec {
     val (omF, outF) = Downsample.adaptiveThreshold(spark,
       ChunkOps.fromArray(spark, Array.fill(64)(7.0), mFlat), mFlat, radius = 1)
     assert(ChunkOps.toArray(outF, omF).forall(_ == 0.0))
+  }
+}
+
+object IntensityNormSpec {
+  import graft.meta.Model.ImageMeta
+  import org.apache.spark.sql.{Dataset, SparkSession}
+  import org.apache.spark.sql.functions.col
+  import IntensityNorm.otsuTable
+
+  /** The Otsu threshold: argmax of [[otsuTable]]'s score, smallest t
+    * on ties.
+    */
+  def otsuThreshold(spark: SparkSession, ds: Dataset[ChunkOps.ChunkRow],
+      meta: ImageMeta): Long = {
+    val top = otsuTable(spark, ds, meta)
+      .orderBy(col("score_milli").desc, col("t").asc).limit(1).collect()
+    top.head.getLong(0)
   }
 }

@@ -111,16 +111,6 @@ class IwiIOSpec extends SparkSpec {
     assert(values(img) == expected)
   }
 
-  test("writeIwiDir round-trips through the directory reader") {
-    val d = tempDir("iwi").resolve("rt.iwi")
-    IwiIO.writeIwiDir(d, Seq(NX, NY, NZ), Seq(0.5, 0.6, 0.7), Seq(1, 2, 3),
-      "float64", fortranOf(expected.toArray))
-    val img = IwiIO.read(spark, d.toString)
-    assert(img.meta.dtype == "float64")
-    assert(img.meta.scale == Map("x" -> 0.5, "y" -> 0.6, "z" -> 0.7))
-    assert(values(img) == expected)
-  }
-
   test("refuse-loudly: float128 tag, payload mismatch, type mismatch") {
     import graft.meta.Cbor
     import graft.meta.Cbor._

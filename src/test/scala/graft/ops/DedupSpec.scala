@@ -56,10 +56,11 @@ class DedupSpec extends SparkSpec {
     // g(g+1)/2 = 10 (lo, hi) task keys instead of 1 — no single task
     // enumerates all B²/2 pairs
     val sig = TextDedup.minHashSignatures(skewed)
-    val cands = TextDedup.lshCandidates(sig, hotBucketThreshold = 20, saltGroups = 4)
+    val cands = TextDedup.lshCandidatesWithDecision(sig, hotBucketThreshold = 20,
+      saltGroups = 4)._1
     assert(cands.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-      == TextDedup.lshCandidates(sig).select("doc_a", "doc_b").collect()
+      == TextDedup.lshCandidatesWithDecision(sig)._1.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet)
   }
 
@@ -88,11 +89,12 @@ class DedupSpec extends SparkSpec {
     assert(salted == plain, "min-band ownership changed the verified pair set")
     // candidate level too, so the verify stage can't mask a drift
     val sig = TextDedup.minHashSignatures(docs)
-    val salCands = TextDedup.lshCandidates(sig, hotBucketThreshold = 20, saltGroups = 4)
+    val salCands = TextDedup.lshCandidatesWithDecision(sig, hotBucketThreshold = 20,
+        saltGroups = 4)._1
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(salCands.length == salCands.toSet.size,
       "duplicate candidate rows escaped the distinct")
-    assert(salCands.toSet == TextDedup.lshCandidates(sig)
+    assert(salCands.toSet == TextDedup.lshCandidatesWithDecision(sig)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet,
       "salted candidate set diverged from the plain path")
   }

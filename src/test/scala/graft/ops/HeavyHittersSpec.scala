@@ -35,7 +35,7 @@ class HeavyHittersSpec extends SparkSpec {
     for (k <- Seq(10, 200)) {
       val fast = HeavyHitters.heavyGrams(docs, k = k, n = 2)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val slow = HeavyHitters.heavyGramsNaive(docs, k = k, n = 2)
+      val slow = HeavyHittersSpec.heavyGramsNaive(docs, k = k, n = 2)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(fast == slow, s"k=$k sketched != naive")
       // at k=200 the threshold drops below the planted boilerplate
@@ -54,5 +54,30 @@ class HeavyHittersSpec extends SparkSpec {
       case Array((c1, g1), (c2, g2)) => c1 > c2 || (c1 == c2 && g1 < g2)
       case _ => true
     })
+  }
+}
+
+object HeavyHittersSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  /** Reference single-pass form (the plan this operator replaces):
+    * full `GROUP BY gram` then the same threshold — the reference
+    * this spec proves the sketched path exact against.
+    */
+  def heavyGramsNaive(docs: DataFrame, k: Int, n: Int,
+      textCol: String = "text"): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val gramOrder = n
+    val grams = docs.select(col(textCol).cast("string")).as[String]
+      .flatMap { t =>
+        val ws = t.split(' ').filter(_.nonEmpty)
+        (0 to ws.length - gramOrder).map(i => ws.slice(i, i + gramOrder).mkString(" "))
+      }.toDF("gram")
+    val total = grams.count()
+    grams.groupBy(col("gram")).agg(count(lit(1)).as("cnt"))
+      .where(col("cnt") * (k + 1) > lit(total))
+      .orderBy(col("cnt").desc, col("gram"))
   }
 }

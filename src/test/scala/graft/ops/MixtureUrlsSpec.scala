@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Mixture (temperature sampling) and Urls (canonicalization/dedup)
@@ -87,9 +88,11 @@ class MixtureUrlsSpec extends SparkSpec {
 
   test("sampling is a pure function of the id (stable across reruns)") {
     val df = (0 until 500).map(i => (i.toLong, s"s${i % 3}")).toDF("doc_id", "source")
-    val a = Mixture.temperatureSample(df).select("doc_id").as[Long].collect().sorted
-    val b = Mixture.temperatureSample(df.repartition(7)).select("doc_id")
-      .as[Long].collect().sorted
+    def sample(d: DataFrame) =
+      Mixture.sampleAtRates(d, Mixture.temperatureRates(d))
+        .select("doc_id").as[Long].collect().sorted
+    val a = sample(df)
+    val b = sample(df.repartition(7))
     assert(a.nonEmpty && a.sameElements(b))
   }
 

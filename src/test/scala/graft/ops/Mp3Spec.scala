@@ -120,7 +120,7 @@ class Mp3Spec extends AnyFunSuite {
       val nFrames = 1 + rnd.nextInt(5)
       val brIdxs = Seq.fill(nFrames)(1 + rnd.nextInt(14))
       val payload = brIdxs.map(bi =>
-        Mp3.fillerFrame(version, layer, bi, sri, mono, padding = rnd.nextBoolean()))
+        Mp3Spec.fillerFrame(version, layer, bi, sri, mono, padding = rnd.nextBoolean()))
         .reduce(_ ++ _)
       val info = Mp3.parse(payload)
       val vGroup = if (version == 1) 1 else 2
@@ -144,5 +144,52 @@ class Mp3Spec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](
       Multimodal.decodeAudio(Mp3.id3v2(4) ++ f))
     assert(e2.getMessage.contains("out of scope"))
+  }
+}
+
+object Mp3Spec {
+  import Mp3._
+
+  /** A filler frame for any (version, layer) cell of the header
+    * matrix — no audio semantics, just a spec-correct header and the
+    * exact frame length the tables imply. Exists so fuzz specs can
+    * pin all six bitrate tables and all three frame-length formulas,
+    * not only the MPEG-1 Layer III cell [[silenceFrame]] covers.
+    * `version`: 1 = MPEG-1, 2 = MPEG-2, 25 = MPEG-2.5.
+    */
+  def fillerFrame(version: Int, layer: Int, bitrateIndex: Int, srIndex: Int,
+      mono: Boolean, padding: Boolean): Array[Byte] = {
+    require(Set(1, 2, 25)(version), s"version $version")
+    require(layer >= 1 && layer <= 3, s"layer $layer")
+    require(bitrateIndex >= 1 && bitrateIndex <= 14 && srIndex >= 0 && srIndex <= 2)
+    val mpeg1 = version == 1
+    val kbps = (layer, mpeg1) match {
+      case (1, true) => BrV1L1(bitrateIndex)
+      case (2, true) => BrV1L2(bitrateIndex)
+      case (3, true) => BrV1L3(bitrateIndex)
+      case (1, false) => BrV2L1(bitrateIndex)
+      case (_, false) => BrV2L23(bitrateIndex)
+    }
+    val sr = version match {
+      case 1 => SrV1(srIndex); case 2 => SrV2(srIndex); case _ => SrV25(srIndex)
+    }
+    val pad = if (padding) 1 else 0
+    val len = layer match {
+      case 1 => (12 * kbps * 1000 / sr + pad) * 4
+      case 2 => 144 * kbps * 1000 / sr + pad
+      case 3 => if (mpeg1) 144 * kbps * 1000 / sr + pad else 72 * kbps * 1000 / sr + pad
+    }
+    val f = Array.fill[Byte](len)(0x55)
+    val verBits = version match { case 1 => 3; case 2 => 2; case _ => 0 }
+    val layBits = 4 - layer // 3=I, 2=II, 1=III
+    f(0) = 0xff.toByte
+    f(1) = (0xe0 | (verBits << 3) | (layBits << 1) | 1).toByte // no CRC
+    f(2) = ((bitrateIndex << 4) | (srIndex << 2) | (pad << 1)).toByte
+    f(3) = (((if (mono) 3 else 0) << 6) | 0x04).toByte
+    if (layer == 3) { // zero the side info so it cannot sniff as a tag
+      val si = sideInfoBytes(mpeg1, if (mono) 1 else 2)
+      java.util.Arrays.fill(f, 4, 4 + si, 0.toByte)
+    }
+    f
   }
 }

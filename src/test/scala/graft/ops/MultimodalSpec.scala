@@ -20,14 +20,6 @@ class MultimodalSpec extends SparkSpec {
     assert(feats.filter(col("n_bytes") =!= 16).count() == 0)
   }
 
-  test("frame sampling halves payload with stride 2") {
-    val docs = Tables.load(spark, sfDir, "documents").limit(5)
-    val sampled = Multimodal.frameSample(spark, Multimodal.syntheticMedia(docs), 2)
-    sampled.collect().foreach { r =>
-      assert(r.getAs[Array[Byte]]("sampled").length == 8)
-    }
-  }
-
   test("PPM decode: P6 header with comments, pixel parity") {
     val header = "P6\n# a comment\n3 2\n255\n".getBytes("US-ASCII")
     val body = Array.tabulate[Byte](18)(i => (i * 10).toByte)

@@ -11,7 +11,7 @@ class PercentilesSpec extends SparkSpec {
     val df = rows.toDF("g", "v").repartition(3)
     val got = Percentiles.twoPhaseDiscrete(df, "g", "v", qs, bw)
       .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getLong(2)).toMap
-    val want = Percentiles.windowDiscrete(df, "g", "v", qs)
+    val want = PercentilesSpec.windowDiscrete(df, "g", "v", qs)
       .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getLong(2)).toMap
     (got, want)
   }
@@ -74,5 +74,33 @@ class PercentilesSpec extends SparkSpec {
     val rows = Seq("x" -> 1L, "x" -> 2L, "x" -> 3L)
     val e = intercept[IllegalArgumentException](run(rows, Seq(1.0 / 3.0), bw = 16))
     assert(e.getMessage.contains("micro"))
+  }
+}
+
+object PercentilesSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.expressions.Window
+
+  /** Single-window reference form (serializes each group through one
+    * task — the shape the two-phase algorithm replaces; kept as the
+    * verification kernel).
+    */
+  def windowDiscrete(df: DataFrame, groupCol: String, valueCol: String,
+      qs: Seq[Double]): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val g = col(groupCol)
+    val w = Window.partitionBy(g).orderBy(col("_v"))
+    val wc = Window.partitionBy(g)
+    df.select(g, col(valueCol).cast("long").as("_v"))
+      .groupBy(g, col("_v")).agg(count(lit(1)).as("c"))
+      .withColumn("cum", sum(col("c")).over(w))
+      .withColumn("cnt", sum(col("c")).over(wc))
+      .crossJoin(qs.toDF("q"))
+      .withColumn("rank",
+        expr("(CAST(round(q * 1e6) AS BIGINT) * cnt + 999999) div 1000000"))
+      .filter(col("cum") >= col("rank"))
+      .groupBy(g, col("q"))
+      .agg(min(col("_v")).as("value"))
   }
 }

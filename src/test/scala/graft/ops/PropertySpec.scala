@@ -41,7 +41,7 @@ class PropertySpec extends SparkSpec {
     val df = texts.toDF("doc_id", "text")
     for (k <- Seq(2, 3, 5)) {
       val viaColumn = df.select(col("doc_id"),
-          TextDedup.wordShingles(col("text"), k).as("sh"))
+          PropertySpec.wordShingles(col("text"), k).as("sh"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toList).toMap
       val viaKernel = TextDedup.shingleSets(df, "doc_id", "text", k)
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toList).toMap
@@ -268,5 +268,22 @@ class PropertySpec extends SparkSpec {
         assert(sumAlloc > budget - 2L * out.length,
           s"feasible budget $budget left ${budget - sumAlloc} unplaced (cap $cap)")
     }
+  }
+}
+
+object PropertySpec {
+  import org.apache.spark.sql.Column
+  import TextDedup.words
+
+  /** Distinct word k-shingles ("w1 w2 w3") of `text`. Documents with
+    * fewer than k words produce an empty set.
+    */
+  def wordShingles(text: Column, k: Int = 3): Column = {
+    val ws = words(text)
+    array_distinct(
+      when(size(ws) >= k,
+        transform(sequence(lit(0), size(ws) - k),
+          i => concat_ws(" ", (0 until k).map(j => element_at(ws, (i + j + 1).cast("int"))): _*)))
+        .otherwise(array().cast("array<string>")))
   }
 }

@@ -39,19 +39,4 @@ class SamplingSpec extends SparkSpec {
     ranks.foreach(r => assert(
       r.getAs[scala.collection.Seq[Int]]("rks").sorted.toSeq == Seq(1, 2, 3, 4, 5)))
   }
-
-  test("byHashFraction: deterministic subset, zero shuffles, frac-monotone") {
-    val a = Sampling.byHashFraction(df(4), "id", 300).select("id").as[Long].collect().toSet
-    val b = Sampling.byHashFraction(df(7), "id", 300).select("id").as[Long].collect().toSet
-    assert(a == b, "fraction sample depends on partitioning")
-    val wider = Sampling.byHashFraction(df(4), "id", 700).select("id").as[Long].collect().toSet
-    assert(a.subsetOf(wider), "raising the fraction must only ADD rows")
-    assert(Sampling.byHashFraction(df(4), "id", 0).count() == 0)
-    assert(Sampling.byHashFraction(df(4), "id", 1000).count() == 100)
-    // plan is a pure filter: no exchange anywhere
-    val plan = Sampling.byHashFraction(df(4), "id", 300).queryExecution
-      .executedPlan.toString
-    assert(!plan.contains("Exchange") || plan.contains("RoundRobin"),
-      s"fraction sample should not shuffle beyond the input repartition:\n$plan")
-  }
 }

@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Shards — deterministic training-shard layout: plan stability under
-  * partitioning, balanced assignment, and the parquet writer
-  * round-trip (shard directories on disk match the plan exactly).
+  * partitioning, balanced assignment, and the tar writer round-trip
+  * (members on disk follow the plan exactly).
   */
 class ShardsSpec extends SparkSpec {
 
@@ -27,27 +27,6 @@ class ShardsSpec extends SparkSpec {
     }
     // hash balance: no shard more than 2x the mean at 1000 rows
     assert(byShard.values.map(_.size).max < 2 * 1000 / 8)
-  }
-
-  test("writeShards round-trips: shard dirs match the plan, order preserved") {
-    val df = (0L until 300L).toDF("doc_id")
-      .withColumn("text", concat(lit("doc"), col("doc_id")))
-    val path = tempDir("shards").toString + "/out"
-    Shards.writeShards(df, path, nShards = 4)
-    val back = spark.read.parquet(path)
-    assert(back.count() == 300)
-    val plan = Shards.shardPlan(df, nShards = 4)
-      .select("doc_id", "shard", "pos").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val got = back.select(col("doc_id"), col("shard").cast("int"), col("pos"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(got == plan)
-    // payload columns survive
-    assert(back.filter(col("doc_id") === 7L).select("text").head.getString(0) == "doc7")
-    // physical layout: one directory per shard
-    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("shard=")).sorted
-    assert(dirs.toSeq == (0 until 4).map(i => s"shard=$i"))
   }
 
   test("tar shards round-trip in plan order, byte-deterministically") {

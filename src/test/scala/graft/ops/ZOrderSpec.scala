@@ -32,24 +32,4 @@ class ZOrderSpec extends SparkSpec {
     val expected = java.lang.Long.parseLong("101110011", 2)
     assert(z == expected, s"got ${z.toBinaryString}")
   }
-
-  test("clusterBy yields non-overlapping z ranges per output partition") {
-    val df = spark.range(4096).select(
-      (col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))
-    val clustered = ZOrder.clusterBy(df, "x", "y", numPartitions = 8)
-    val ranges = clustered
-      .select(ZOrder.zValue(col("x"), col("y")).as("z"))
-      .withColumn("pid", spark_partition_id())
-      .groupBy("pid").agg(min("z").as("lo"), max("z").as("hi"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._2)
-    assert(ranges.map(_._4).sum == 4096)
-    // range partitioning: each partition's z interval is disjoint, so a
-    // z-range predicate (equivalently a filter on either dimension)
-    // prunes whole partitions/files by min-max stats
-    ranges.sliding(2).foreach {
-      case Array(a, b) => assert(a._3 <= b._2, s"overlap: $a vs $b")
-      case _ =>
-    }
-  }
 }
